@@ -10,8 +10,11 @@ Reference: OsmToNetexApp.main parses -osmFile/-netexOutputFile/-targetEntity
 
 Reads documents (or OSM XML), runs the conversion + tile index, commits the
 outputs to the snapshot catalog with lineage columns, optionally renders the
-fixture XML.  Default output name mirrors the reference's
-``<input>_yyyyMMddHHmmss.xml`` convention (OsmToNetexApp.java:64).
+fixture XML (every zone).  Default output name mirrors the reference's
+``<input>_yyyyMMddHHmmss.xml`` convention (OsmToNetexApp.java:64).  The
+conversion's checkpoints (plans/netex.py) feed the tile index, the commits
+and the render, and are released before returning, so a caller's long-lived
+session keeps no storage from the job.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from ..operators import extract, tiling
+from ..operators import tiling
 from ..session import get_spark
 from ..sources import documents as docs_src, osm_xml
 from ..sources.catalog import SnapshotCatalog
@@ -53,50 +56,39 @@ def main(argv: list[str] | None = None) -> dict:
 
     if args.input_format == "documents":
         documents = docs_src.read_documents(spark, args.input)
-        result = netex.convert_documents(documents, args.target)
-        nodes = extract.extract_nodes(documents)
-        tiles = tiling.document_tile_assign(nodes, resolutions=tuple(args.tile_res))
-        tiles_snap = catalog.commit(
-            tiles.withColumn("run_tag", F.lit(args.run_tag)), "tile_index", mode="append"
-        )
+        result = netex.convert_documents(documents, args.target, generated_from=args.input)
+        tiles = tiling.document_tile_assign(result.nodes, resolutions=tuple(args.tile_res))
     else:
         nodes, ways, rels = osm_xml.read_osm(spark, args.input)
-        from ..operators import assemble, zones as zones_op
+        result = netex.convert_extracted(nodes, ways, rels, args.target, generated_from=args.input)
+        tiles = None  # XML nodes carry no doc_id
 
-        asm = assemble.assemble_poslist(ways, nodes, broadcast_nodes=True)
-        zdf = zones_op.map_zones(asm, args.target)
-        groups = None
-        if args.target == "FareZone" and rels.limit(1).count() > 0:
-            groups = zones_op.map_groups(rels, zdf.select("way_id", "zone_id"))
-        result = netex.ConversionResult(zones=zdf.drop("way_id"), groups=groups, envelope={})
+    try:
         tiles_snap = None
-
-    zones_snap = catalog.commit(
-        result.zones.withColumn("run_tag", F.lit(args.run_tag)), "zones", mode="append"
-    )
-    groups_snap = None
-    if result.groups is not None:
-        groups_snap = catalog.commit(
-            result.groups.withColumn("run_tag", F.lit(args.run_tag)), "groups", mode="append"
+        if tiles is not None:
+            tiles_snap = catalog.commit(
+                tiles.withColumn("run_tag", F.lit(args.run_tag)), "tile_index", mode="append"
+            )
+        zones_snap = catalog.commit(
+            result.zones.withColumn("run_tag", F.lit(args.run_tag)), "zones", mode="append"
         )
+        groups_snap = None
+        if result.groups is not None:
+            groups_snap = catalog.commit(
+                result.groups.withColumn("run_tag", F.lit(args.run_tag)), "groups", mode="append"
+            )
 
-    xml_path = None
-    if args.xml_out:
-        xml_path = (
-            f"{args.input.rstrip('/')}_{time.strftime('%Y%m%d%H%M%S')}.xml"
-            if args.xml_out == "@auto"
-            else args.xml_out
-        )
-        if not result.envelope:
-            result.envelope = {
-                "publication_timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
-                "description": f"Generated from {args.input}",
-                "participant_ref": "osm_to_netex_spark",
-                "site_frame_id": f"OSM:SiteFrame:{int(time.time() * 1000)}",
-                "version": "1",
-            }
-        with open(xml_path, "w") as fh:
-            fh.write(netex.render_netex_xml(result))
+        xml_path = None
+        if args.xml_out:
+            xml_path = (
+                f"{args.input.rstrip('/')}_{time.strftime('%Y%m%d%H%M%S')}.xml"
+                if args.xml_out == "@auto"
+                else args.xml_out
+            )
+            with open(xml_path, "w") as fh:
+                fh.write(netex.render_netex_xml(result))
+    finally:
+        result.release()
 
     out = {
         "zones_snapshot": zones_snap,

@@ -8,6 +8,18 @@ envelope carries only nondeterministic metadata the reference's own golden
 test ignores (OsmToNetexTransformerTest.java:21-23), so the engine represents
 it as a driver-side metadata dict and renders XML only for fixture parity at
 test scale.
+
+Where the conversion materialises, and why: each strict check, catalog
+commit and XML render is a Spark action, and on a lazy plan every action
+re-executes the whole scan → ``from_json`` → J2 join → groupBy lineage (one
+job run read its corpus ~16 times).  ``convert_extracted`` therefore
+checkpoints each intermediate once, in executor storage, before anything
+reads it: the extracted nodes, ways and relations; the assembled ways; the
+mapped zones; the groups.  The strict checks (unresolved refs, duplicate
+node ids, required tags, enums, the relation probe, GroupOfTariffZoneId) and
+every later commit and render then read those checkpoints, in the same order
+and with the same errors as before.  ``ConversionResult.release`` drops the
+checkpoints; a caller that keeps its session running calls it when done.
 """
 
 from __future__ import annotations
@@ -27,6 +39,31 @@ class ConversionResult:
     groups: DataFrame | None
     # W1 envelope metadata (nondeterministic fields, excluded from parity)
     envelope: dict = field(default_factory=dict)
+    # the materialised nodes, for callers that index them (the job's tile
+    # index)
+    nodes: DataFrame | None = None
+    # checkpointed frames this result keeps in executor storage
+    held: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Drop every checkpoint this result holds; its frames are unusable
+        afterwards."""
+        _release(self.held)
+
+
+def _materialise(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """Compute df once into executor storage, cutting its lineage, so later
+    actions read the stored rows instead of re-executing the plan."""
+    ck = df.localCheckpoint(eager=True)
+    held.append(ck)
+    return ck
+
+
+def _release(held: list[DataFrame]) -> None:
+    # a checkpointed frame's plan is the LogicalRDD over the stored RDD
+    for df in held:
+        df._jdf.queryExecution().logical().rdd().unpersist(True)
+    held.clear()
 
 
 def convert_documents(
@@ -37,24 +74,60 @@ def convert_documents(
     broadcast_nodes: bool = True,
     strict: bool = True,
 ) -> ConversionResult:
-    """documents → ZONES (+ GROUPS for FareZone with relations present).
+    """documents → ZONES (+ GROUPS for FareZone with relations present)."""
+    return convert_extracted(
+        extract.extract_nodes(documents),
+        extract.extract_ways(documents),
+        extract.extract_relations(documents),
+        target_entity,
+        generated_from=generated_from,
+        participant_ref=participant_ref,
+        broadcast_nodes=broadcast_nodes,
+        strict=strict,
+    )
+
+
+def convert_extracted(
+    nodes: DataFrame,
+    ways: DataFrame,
+    relations: DataFrame,
+    target_entity: str,
+    generated_from: str = "documents",
+    participant_ref: str = "osm_to_netex_spark",
+    broadcast_nodes: bool = True,
+    strict: bool = True,
+) -> ConversionResult:
+    """(nodes, ways, relations) → ZONES (+ GROUPS), each intermediate
+    computed once (module docstring).  The inputs come from documents
+    (``convert_documents``) or from OSM XML (``sources.osm_xml.read_osm``).
 
     D2 branch (OsmToNetexTransformer.java:133-150): groups are emitted only on
     the FareZone path and only when relations exist (checked with a limit(1)
-    probe, not a full count).
+    probe, not a full count), so relations are materialised only for
+    FareZone.  On any error the checkpoints taken so far are released.
     """
-    nodes = extract.extract_nodes(documents)
-    ways = extract.extract_ways(documents)
-    relations = extract.extract_relations(documents)
+    held: list[DataFrame] = []
+    try:
+        nodes = _materialise(nodes, held)
+        ways = _materialise(ways, held)
+        is_fare = target_entity == "FareZone"
+        if is_fare:
+            relations = _materialise(relations, held)
 
-    assembled = assemble.assemble_poslist(
-        ways, nodes, broadcast_nodes=broadcast_nodes, strict=strict
-    )
-    zdf = zones.map_zones(assembled, target_entity, strict=strict)
+        assembled = _materialise(
+            assemble.assemble_poslist(ways, nodes, broadcast_nodes=broadcast_nodes, strict=strict),
+            held,
+        )
+        zdf = _materialise(zones.map_zones(assembled, target_entity, strict=strict), held)
 
-    groups = None
-    if target_entity == "FareZone" and relations.limit(1).count() > 0:
-        groups = zones.map_groups(relations, zdf.select("way_id", "zone_id"))
+        groups = None
+        if is_fare and relations.limit(1).count() > 0:
+            groups = _materialise(
+                zones.map_groups(relations, zdf.select("way_id", "zone_id")), held
+            )
+    except BaseException:
+        _release(held)
+        raise
 
     envelope = {
         "publication_timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
@@ -63,7 +136,9 @@ def convert_documents(
         "site_frame_id": f"OSM:SiteFrame:{int(time.time() * 1000)}",
         "version": zones.DEFAULT_VERSION,
     }
-    return ConversionResult(zones=zdf.drop("way_id"), groups=groups, envelope=envelope)
+    return ConversionResult(
+        zones=zdf.drop("way_id"), groups=groups, envelope=envelope, nodes=nodes, held=held
+    )
 
 
 def validate_zones_output(zones: DataFrame) -> DataFrame:
@@ -121,7 +196,7 @@ def conversion_metrics(documents: DataFrame) -> DataFrame:
     )
 
 
-def render_netex_xml(result: ConversionResult, max_rows: int = 10000) -> str:
+def render_netex_xml(result: ConversionResult, max_rows: int | None = None) -> str:
     """Fixture-parity XML render (driver-side, test scale only).
 
     Mirrors the marshal layout (NetexHelper.java:61-78): PublicationDelivery →
@@ -129,8 +204,18 @@ def render_netex_xml(result: ConversionResult, max_rows: int = 10000) -> str:
     with GML polygons whose posList is the flat lat-lon list in nd order.
     Doubles are rendered with Python repr (shortest round-trip), matching
     Java's Double.toString for fixture doubles (SURVEY §7 hard part b).
+
+    Every zone is rendered.  ``max_rows`` is a guard on the driver-side
+    collect: more zones than that raise instead of being dropped.
     """
-    rows = result.zones.limit(max_rows).collect()
+    if max_rows is None:
+        rows = result.zones.collect()
+    else:
+        rows = result.zones.limit(max_rows + 1).collect()
+        if len(rows) > max_rows:
+            raise ValueError(
+                f"more than max_rows={max_rows} zones; rendering them would drop zones"
+            )
     kind = rows[0]["zone_kind"] if rows else "TariffZone"
     container = {
         "TariffZone": "tariffZones",

@@ -1,11 +1,15 @@
 """Refined cover, salted joins, CLI job — the scale-hardening layer."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.functions import geo
 from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import skew
+
+SMALLOSM = os.path.join(os.path.dirname(__file__), "fixtures", "smallosm.xml")
 
 
 @pytest.fixture(scope="module")
@@ -103,7 +107,7 @@ def test_cli_job_osm_xml(spark, tmp_path):
     out = str(tmp_path / "wh2")
     res = job.main(
         [
-            "--input", "/root/reference/smallosm.xml",
+            "--input", SMALLOSM,
             "--input-format", "osm-xml",
             "--target", "TariffZone",
             "--output", out,

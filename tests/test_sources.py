@@ -1,12 +1,15 @@
 """OSM XML source + corpus determinism + media plumbing."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import extract, media
 from osm_to_netex_spark.plans import netex
 from osm_to_netex_spark.sources import documents as docs_src, osm_xml
 
-SMALLOSM = "/root/reference/smallosm.xml"
+# the reference smallosm.xml, as encoded by sources.documents.smallosm_document
+SMALLOSM = os.path.join(os.path.dirname(__file__), "fixtures", "smallosm.xml")
 
 
 def test_osm_xml_source_matches_document_encoding(spark):
