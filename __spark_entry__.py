@@ -16,12 +16,13 @@ other streaming query is arrival-order-independent and value-gated.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from osm_to_netex_spark.plans import queries as Q  # noqa: E402
 

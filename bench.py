@@ -64,20 +64,20 @@ def prepare_corpus(spark, path: str, n_docs=N_DOCS, n_zones=N_ZONES, n_points=N_
 
 def build_flagship(spark, corpus_path: str):
     """Stored corpus → extract → tile-assign (res 7-9) + assemble → PIP,
-    declared as ONE DataFrame action over ONE node scan.
+    declared as ONE DataFrame action over ONE corpus scan.
 
-    The node side is parsed exactly once, with the slim struct schema
+    One span scan parses node AND way spans with the slim struct schema
     (id, lat, lon, tags.entity, tags.id — the JSON reader skips every other
-    tag key instead of materializing the full map), and persisted at
-    MEMORY_AND_DISK; both node consumers — the assembly join side and the
-    PIP probe side — read the cached parse.  The tile-assign checksum rides
-    that same single pass as a CollectMetrics observation placed BEFORE the
-    stop-point filter, so every node's six cells (hex+quad, res 7-9) are
-    computed and bit_xor-folded during cache materialization.  Corpus
-    passes per run: 1 (the default fused branch parses node AND way spans
-    in the same scan; session-3 shape was 2, round-2 3, round-1 4).  A bare
-    count() would let Catalyst prune the cell expressions; the checksum
-    forces them (bit_xor, not sum: packed cell ids overflow a sum).
+    tag key instead of materializing the full map) and persists the parse at
+    MEMORY_AND_DISK ($SPARK_GRAFT_FUSE_PERSIST=0 recomputes it instead; the
+    scaling decomposition uses that); both node consumers — the assembly
+    join side and the PIP probe side — read the cached parse.  The
+    tile-assign checksum rides that same single pass as a CollectMetrics
+    observation placed BEFORE the stop-point filter, so every node's six
+    cells (hex+quad, res 7-9) are computed and bit_xor-folded during cache
+    materialization.  A bare count() would let Catalyst prune the cell
+    expressions; the checksum forces them (bit_xor, not sum: packed cell
+    ids overflow a sum).
 
     Scale note (10^12 docs): the cached projection is ~40 B/node —
     disk-backed distributed storage a 1000-executor cluster absorbs — and
@@ -98,50 +98,8 @@ def build_flagship(spark, corpus_path: str):
     from osm_to_netex_spark.sources import documents as docs_src
 
     corpus = docs_src.read_documents(spark, corpus_path)
-    if os.environ.get("SPARK_GRAFT_FUSE_WAYS", "1") != "0":
-        # single-pass fusion: ONE span scan parses node AND way spans into
-        # the cached slim projection — the way side no longer re-reads the
-        # corpus (passes per run: 1, down from 2)
-        both = extract.extract_nodes_ways_slim(corpus, tag_fields=("entity", "id"))
-        staged, hex_cols = geo.hex_cells_staged(both, "lat", "lon", (7, 8, 9))
-        for r in (7, 8, 9):
-            staged = staged.withColumn(
-                f"__quadc{r}", F.expr(geo.quad_cell("lat", "lon", r, SPARK))
-            )
-        cells = " ^ ".join(hex_cols + [f"__quadc{r}" for r in (7, 8, 9)])
-        obs = Observation("tiles")
-        cached = (
-            staged.observe(
-                obs,
-                F.expr(f"bit_xor({cells})").alias("chk"),
-                F.count("lat").alias("n"),
-            )
-            .drop(*hex_cols, "__quadc7", "__quadc8", "__quadc9")
-        )
-        if os.environ.get("SPARK_GRAFT_FUSE_PERSIST", "1") != "0":
-            cached = cached.persist(StorageLevel.MEMORY_AND_DISK)
-        nodes_c = cached.where(F.col("kind") == "osm_node")
-        ways = cached.where(F.col("kind") == "osm_way").selectExpr(
-            "way_id", "nd_refs", "doc_id",
-            # assemble's interface carries way tags; the flagship never
-            # consumes them, so the slim parse skips them entirely
-            "cast(null as map<string,string>) as tags",
-        )
-        asm = assemble.assemble_poslist(ways, nodes_c, strict=False, broadcast_ways=True)
-        polys = asm.selectExpr("cast(way_id as string) as zone_id", "pos_list")
-        pts = nodes_c.where(F.col("entity").isNotNull()).select(
-            F.col("tag_id").alias("point_id"), "lat", "lon"
-        )
-        bound = pip.bind_points_to_polygons(pts, polys, res=12, scheme="quad")
-        pip_stats = bound.agg(
-            F.lit("pip").alias("phase"), F.lit(0).cast("long").alias("chk"),
-            F.count("*").alias("n"),
-        )
-        return pip_stats, obs, cached
-
-    nodes = extract.extract_nodes_slim(corpus, tag_fields=("entity", "id"))
-
-    staged, hex_cols = geo.hex_cells_staged(nodes, "lat", "lon", (7, 8, 9))
+    both = extract.extract_nodes_ways_slim(corpus, tag_fields=("entity", "id"))
+    staged, hex_cols = geo.hex_cells_staged(both, "lat", "lon", (7, 8, 9))
     for r in (7, 8, 9):
         staged = staged.withColumn(f"__quadc{r}", F.expr(geo.quad_cell("lat", "lon", r, SPARK)))
     cells = " ^ ".join(hex_cols + [f"__quadc{r}" for r in (7, 8, 9)])
@@ -150,20 +108,26 @@ def build_flagship(spark, corpus_path: str):
         staged.observe(
             obs,
             F.expr(f"bit_xor({cells})").alias("chk"),
-            F.count(F.lit(1)).alias("n"),
+            F.count("lat").alias("n"),
         )
         .drop(*hex_cols, "__quadc7", "__quadc8", "__quadc9")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-    ways = extract.extract_ways(corpus)
+    if os.environ.get("SPARK_GRAFT_FUSE_PERSIST", "1") != "0":
+        cached = cached.persist(StorageLevel.MEMORY_AND_DISK)
+    nodes_c = cached.where(F.col("kind") == "osm_node")
+    ways = cached.where(F.col("kind") == "osm_way").selectExpr(
+        "way_id", "nd_refs", "doc_id",
+        # assemble's interface carries way tags; the flagship never
+        # consumes them, so the slim parse skips them entirely
+        "cast(null as map<string,string>) as tags",
+    )
     # ways (zones) are the dimension; the node table is corpus-sized —
     # broadcast the exploded way refs, stream the (cached) nodes.  The
     # assembled polygon set (the PIP build side) is itself tiny and lands
     # in a broadcast exchange.
-    asm = assemble.assemble_poslist(ways, cached, strict=False, broadcast_ways=True)
+    asm = assemble.assemble_poslist(ways, nodes_c, strict=False, broadcast_ways=True)
     polys = asm.selectExpr("cast(way_id as string) as zone_id", "pos_list")
-    pts = cached.where(F.col("entity").isNotNull()).select(
+    pts = nodes_c.where(F.col("entity").isNotNull()).select(
         F.col("tag_id").alias("point_id"), "lat", "lon"
     )
     bound = pip.bind_points_to_polygons(pts, polys, res=12, scheme="quad")
@@ -300,6 +264,31 @@ def run_flagship_at(cores: int, n_docs: int, corpus_path: str, warm_path: str) -
     return _stats(_measure_times(cores, corpus_path, warm_path), n_docs)
 
 
+def materialize(df) -> None:
+    """Run `df` to a noop sink: every output column is computed.  A bare
+    count() lets Catalyst prune the projections it does not need, so some
+    plans would time little more than a table scan."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, builder, sf_dir: str) -> float:
+    """Seconds to build and materialise `builder(spark, sf_dir)` once,
+    after one untimed warm run that pays the Catalyst codegen compile
+    (5-10 s).  Caller-owned caches are released after each run."""
+    from osm_to_netex_spark.operators.dedup import unpersist_intermediates
+
+    warm = builder(spark, sf_dir)
+    materialize(warm)
+    unpersist_intermediates(warm)
+    t0 = time.perf_counter()
+    # a fresh plan: re-running `warm` would reuse AQE's materialised stages
+    timed = builder(spark, sf_dir)
+    materialize(timed)
+    dt = time.perf_counter() - t0
+    unpersist_intermediates(timed)
+    return dt
+
+
 def per_query_timings() -> dict:
     """Per-query rows at $SPARK_GRAFT_SF_DIR — run AFTER the flagship
     measurement: r4 shipped a headline sampled behind the 222-query
@@ -310,320 +299,8 @@ def per_query_timings() -> dict:
     spark = get_spark(cores=CPUS, extra_conf={"spark.ui.showConsoleProgress": "false"})
     from osm_to_netex_spark.plans import queries as Q
 
-    bench_queries = [
-        "tile_assign",
-        "polyfill",
-        "kring",
-        "pip",
-        "knn",
-        "raster_zonal",
-        "assemble_poslist",
-        "dedup_exact",
-        "minhash_lsh_pairs",
-        "simhash",
-        "textstats",
-        "embedding_topk",
-        "events_window",
-        "cell_rollup",
-        "events_sessionize",
-        "events_asof",
-        "range_join",
-        "zone_stats",
-        "hll_distinct",
-        "stratified_sample",
-        "snap_join",
-        "adaptive_cells",
-        "idw",
-        "pagerank",
-        "cover_compact",
-        "top_terms",
-        "decontaminate",
-        "repetition",
-        "line_intersect",
-        "smooth_density",
-        "dbscan",
-        "chunk_spans",
-        "trend_fit",
-        "funnel",
-        "gap_fill",
-        "grid_bfs",
-        "hist_quantiles",
-        "anomaly",
-        "winsorize",
-        "redact_pii",
-        "incremental_rollup",
-        "hll_setops",
-        "corridor_join",
-        "bpe_pairs",
-        "cdc_apply",
-        "scd2",
-        "triangles",
-        "eqfreq_bins",
-        "fuzzy_match",
-        "skyline",
-        "interval_merge",
-        "frequent_pairs",
-        "token_drift",
-        "sssp",
-        "star_rollup",
-        "hull",
-        "hilbert_key",
-        "rolling_stats",
-        "nb_langid",
-        "ridge_fit",
-        "cosine_pairs_capped",  # max_df guardrail ON: standalone scale posture (uncapped exact row stays oracle-gated)
-        "hotspot",
-        "line_dedup",
-        "map_match",
-        "moran",
-        "mk_trend",
-        "dsir",
-        "lm_score",
-        "ripley_k",
-        "tpch_q1",
-        "tpch_q3",
-        "tpch_q18",
-        "tpch_q4",
-        "tpch_q12",
-        "hausdorff_join",
-        "lexdiv",
-        "zone_stats_sph",
-        "ring_validity",
-        "ring_repair",
-        "od_matrix",
-        "corpus_shuffle",
-        "stay_points",
-        "dup_spans",
-        "pack_sequences",
-        "encounters",
-        "dissolve",
-        "span_corruption",
-        "speed_filter",
-        "geofence",
-        "dtw_join",
-        "bpe_encode",
-        "geometric_median",
-        "resample",
-        "pyramid",
-        "media_phash_pairs",
-        "semdedup",
-        "pq_adc",
-        "temperature_mix",
-        "cell_boundary",
-        "rrf_hybrid",
-        "flow_rose",
-        "profile",
-        "tile_cut",
-        "contour",
-        "headways",
-        "gravity_ipf",
-        "ann_recall",
-        "rendezvous",
-        "service_area",
-        "pq_recall",
-        "lsh_recall",
-        "zone_dwell",
-        "cluster_cohesion",
-        "linear_ref",
-        "zipf_fit",
-        "k_core",
-        "label_prop",
-        "pmi_cooc",
-        "ngram_overlap",
-        "cusum",
-        "hard_negatives",
-        "kanon",
-        "keep_best",
-        "robust_anomaly",
-        "label_point",
-        "pip_best",
-        "span_profile",
-        "decayed_density",
-        "ab_test",
-        "clustering_coeff",
-        "hyperanf",
-        "logreg",
-        "target_encode",
-        "tpch_q7",
-        "tpch_q10",
-        "locate_along",
-        "g_function",
-        "benford",
-        "sn_blocking",
-        "haar_energy",
-        "modularity",
-        "containment_capped",  # max_df guardrail ON (see cosine_pairs_capped)
-        "zorder_ranges",
-        "churn_labels",
-        "matryoshka_recall",
-        "ndcg",
-        "autocorr",
-        "logreg_calibration",
-        "weighted_median",
-        "theil_sen",
-        "stump",
-        "kaplan_meier",
-        "gini",
-        "poisson_bootstrap",
-        "stationary",
-        "seasonal",
-        "peaks",
-        "cell_entropy",
-        "skew_report",
-        "lsh_band_stats",
-        "ks_drift",
-        "cramers_v",
-        "term_mi",
-        # r4: previously-untimed registry rows (tests/test_bench_coverage.py
-        # now pins bench coverage of the whole registry)
-        "bloom",
-        "bm25_topk",
-        "cms_frequencies",
-        "cohort",
-        "corpus_split",
-        "curate_corpus",
-        "dedup_groups",
-        "embedding_near_dup",
-        "embedding_topk_ivf",
-        "events_quantiles",
-        "events_rollup",
-        "geohash",
-        "kmeans",
-        "media_meta",
-        "minhash_signatures",
-        "ngram_jaccard",
-        "pip_celljoin",
-        "poly_overlap",
-        "polyfill_refined",
-        "quantile_rank",
-        "return_gaps",
-        "radius_join",
-        "simplify",
-        "transitions",
-        "trips",
-        "turn_points",
-        "weighted_sample",
-        "zorder_key",
-        # r4 additions
-        "spearman",
-        "mannwhitney",
-        "jsd_drift",
-        "gearys_c",
-        "link_predict",
-        "media_context",
-        "f_function",
-        "clark_evans",
-        "quadrat",
-        "radius_gyration",
-        "bearing_stats",
-        "mmr_rerank",
-        "pca_top",
-        "feature_hash",
-        "l_diversity",
-        "edr_join",
-        "centrography",
-        "kruskal_wallis",
-        "emerging_hotspots",
-        "auc_roc",
-        "isotonic_calibration",
-        "item_cf",
-        "tfidf_topk",
-        "simhash_pairs",
-        "rocchio_expand",
-        "burstiness",
-        "raster_slope",
-        "zonal_majority",
-        "tpch_q5",
-        "l_moments",
-        "vocab_richness",
-        "embedding_near_dup_ensemble",
-        "embedding_recall",
-        "frechet_join",
-        "st_dbscan",
-        "rbo_eval",
-        "leakage_safe_split",
-        "line_raster",
-        "tpch_q6",
-        "tpch_q14",
-        "tpch_q17",
-        "tpch_q15",
-        "tpch_q2",
-        "tpch_q8",
-        "tpch_q9",
-        "tpch_q11",
-        "tpch_q13",
-        "tpch_q16",
-        "tpch_q19",
-        "tpch_q20",
-        "tpch_q21",
-        "tpch_q22",
-        "hillshade",
-        "flow_dir",
-        "flow_accum",
-        "harmonic_centrality",
-        "exp_smooth",
-        "viewshed",
-        "cost_distance",
-        "rake_keyphrases",
-        "sprt",
-        "json_extract_stats",
-        "way_split",
-        "local_moran",
-        "compaction_plan",
-        "hbos_outliers",
-        "path_trigrams",
-        "cuped",
-        "eb_shrinkage",
-        "t_closeness",
-        "areal_interp",
-        "spatial_structure",
-        "embedding_drift",
-        "bq_search",
-        "densify",
-        "strahler",
-        "watershed",
-        "terrain_indices",
-        "brier_decomp",
-        "edge_profiles",
-        "novelty_curve",
-        "mutual_knn",
-        "spatial_qa",
-        "lcp_path",
-        "langid_confusion",
-        "pareto_abc",
-        "anisotropy",
-        "rich_club",
-        "degree_assortativity",
-        "power_analysis",
-        "quantile_norm",
-        "hits_scores",
-        "median_polish",
-        "forecast_backtest",
-        "facility_select",
-        "location_quotient",
-        "beta_diversity",
-        "user_streaks",
-        "attribution",
-        "polyline_encode",
-        "polyline_roundtrip",
-        "kendall_tau",
-        "match_quality",
-        "cdc_chunks",
-        "cdc_dedup_pairs",
-    ]
-    from osm_to_netex_spark.operators.dedup import unpersist_intermediates
-
-    timings = {}
-    for name in bench_queries:
-        builder, _ = Q.QUERIES[name]
-        warm = builder(spark, SF_DIR)
-        warm.count()  # warm: Catalyst codegen compile is 5-10 s
-        unpersist_intermediates(warm)  # release caller-owned caches per run
-        t0 = time.perf_counter()
-        timed = builder(spark, SF_DIR)
-        timed.count()  # steady state (fresh plan, warm codegen cache)
-        timings[name] = round(time.perf_counter() - t0, 3)
-        unpersist_intermediates(timed)
+    names = [n for n in Q.QUERIES if n not in Q.BENCH_EXCLUDED]
+    timings = {n: round(time_query(spark, Q.QUERIES[n][0], SF_DIR), 3) for n in names}
     spark.stop()
     return timings
 

@@ -572,34 +572,6 @@ def quad_cell_col(lat: str, lon: str, res: int) -> Column:
     return F.expr(quad_cell(lat, lon, res, SPARK))
 
 
-def hex_cell_col(lat: str, lon: str, res: int) -> Column:
-    return F.expr(hex_cell(lat, lon, res, SPARK))
-
-
-def quad_cover_bbox_col(pos_list: str, res: int) -> Column:
-    return F.expr(quad_cover_bbox(pos_list, res, SPARK))
-
-
-def hex_cover_bbox_col(pos_list: str, res: int) -> Column:
-    return F.expr(hex_cover_bbox(pos_list, res, SPARK))
-
-
-def hex_kring_col(cell: str, res: int, k: int) -> Column:
-    return F.expr(hex_kring(cell, res, k, SPARK))
-
-
-def quad_kring_col(cell: str, res: int, k: int) -> Column:
-    return F.expr(quad_kring(cell, res, k, SPARK))
-
-
-def point_in_polygon_col(lat: str, lon: str, pos_list: str) -> Column:
-    return F.expr(point_in_polygon(lat, lon, pos_list, SPARK))
-
-
-def haversine_m_col(lat1: str, lon1: str, lat2: str, lon2: str) -> Column:
-    return F.expr(haversine_m(lat1, lon1, lat2, lon2, SPARK))
-
-
 def poly_area_sph_m2(pl: str, d: str) -> str:
     """Unsigned GEODESIC polygon area in m² (spherical-excess shoelace, the
     turf.js/Karney small-polygon form): A = R²/2 · |Σ (λ_{i+1} − λ_i) ·

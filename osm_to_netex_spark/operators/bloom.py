@@ -77,10 +77,3 @@ def bloom_probe(
         key, "coalesce(might_contain, false) as might_contain"
     )
 
-
-def bloom_build_sql(d: str, keys_sql: str, key: str, m_bits: int, k_hashes: int) -> str:
-    parts = " union all ".join(
-        f"select {bit_expr(key, s, m_bits, d)} as bit from __bf_keys"
-        for s in range(k_hashes)
-    )
-    return f"(with __bf_keys as ({keys_sql}) select distinct bit from ({parts}))"

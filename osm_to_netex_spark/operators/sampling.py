@@ -53,13 +53,6 @@ def assign_split(
     return docs.withColumn("split", F.expr(split_expr(id_col, splits, SPARK)))
 
 
-def sample_pred(id_col: str, fraction: float, d: str = SPARK, salt: str = "samp") -> str:
-    """Deterministic Bernoulli-sample predicate: keeps ~`fraction` of rows,
-    the SAME rows on every run and at every parallelism."""
-    u = prand(concat_str([f"'{salt}:'", id_col], d), d)
-    return f"({u} < {flit(fraction)})"
-
-
 def stratified_sample(
     docs: DataFrame,
     strata_col: str,

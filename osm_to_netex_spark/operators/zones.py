@@ -13,7 +13,8 @@ Row-for-row reproduction of the reference's mapper semantics
   lang='name' — reproduced verbatim;
 * ValidBetween conditional (:221-227, :320-326): both dates iff to>from,
   from-only iff to missing, else dropped; unparseable dates are ignored
-  (to_date → null matches "log and skip");
+  (try_to_date → null matches "log and skip"; plain to_date raises under
+  ANSI mode);
 * ids (M4): codespace:Class:reference for generic zones (:337-339),
   FareZone tag ``id`` verbatim (:238), polygon id "GEN-PolygonType"+wayId
   (:265), tzMapping fallback codespace:TariffZone:privateCode (:241-249);
@@ -58,8 +59,8 @@ def _eq(key: str) -> str:
     return f"element_at(tags, '{key}')"
 
 
-_VALID_FROM = f"to_date({_eq('valid_from')}, 'yyyy-MM-dd')"
-_VALID_TO = f"to_date({_eq('valid_to')}, 'yyyy-MM-dd')"
+_VALID_FROM = f"try_to_date({_eq('valid_from')}, 'yyyy-MM-dd')"
+_VALID_TO = f"try_to_date({_eq('valid_to')}, 'yyyy-MM-dd')"
 # ValidBetween conditional (M5)
 _VF_OUT = (
     f"CASE WHEN {_VALID_FROM} IS NOT NULL AND {_VALID_TO} IS NOT NULL "

@@ -83,8 +83,16 @@ def corpus_ctes() -> str:
     )"""
 
 
-_VF = f"try_cast({_eq('valid_from')} as date)"
-_VT = f"try_cast({_eq('valid_to')} as date)"
+def _strict_date(key: str) -> str:
+    """Spark's try_to_date(v, 'yyyy-MM-dd'): exactly yyyy-MM-dd, else null.
+    A bare try_cast also accepts '2024-1-5', padding and time suffixes."""
+    v = _eq(key)
+    iso = "'[0-9]{4}-[0-9]{2}-[0-9]{2}'"
+    return f"try_cast(case when regexp_full_match({v}, {iso}) then {v} end as date)"
+
+
+_VF = _strict_date("valid_from")
+_VT = _strict_date("valid_to")
 # M5 ValidBetween conditional (OsmToNetexMapper.java:221-227,320-326)
 _VF_OUT = (
     f"case when {_VF} is not null and {_VT} is not null and {_VT} > {_VF} "

@@ -7683,9 +7683,41 @@ _DRIVER_WINDOW = [
 ]
 
 
+# name -> why bench.py's per-query loop skips it; every other registry query
+# gets a timing row
+BENCH_EXCLUDED = {
+    # conversion pipeline: fixture-corpus queries (tests/fixtures/), timed
+    # end to end by perfbench's convert_netex workload
+    "zone_mapping": "timed end to end by perfbench convert_netex",
+    "convert_tariffzone": "timed end to end by perfbench convert_netex",
+    "convert_farezone": "timed end to end by perfbench convert_netex",
+    "convert_farezone_groups": "timed end to end by perfbench convert_netex",
+    "doc_tile_assign": "timed end to end by perfbench convert_netex",
+    "conversion_metrics": "timed end to end by perfbench convert_netex",
+    # exact Θ(Σ df²) verifiers: bench runs the capped scale-posture rows
+    # (cosine_pairs_capped / containment_capped); uncapped rows stay in
+    # the oracle suite as the LSH-shard verifiers (SCALE.md)
+    "cosine_pairs": "capped variant benched",
+    "containment": "capped variant benched",
+    # streaming queries: micro-batch trigger latency dominates any sf0.1
+    # timing (they measure the trigger, not the operator); correctness is
+    # oracle/pytest-gated, throughput posture documented in SCALE.md
+    "streaming_dedup": "trigger-latency-dominated",
+    "streaming_sessions": "trigger-latency-dominated",
+    "streaming_topk": "trigger-latency-dominated",
+    "streaming_interval_join": "trigger-latency-dominated",
+    "streaming_tiles": "trigger-latency-dominated",
+    "streaming_trend": "trigger-latency-dominated",
+    "streaming_hist": "trigger-latency-dominated",
+    "stream_enrich": "trigger-latency-dominated",
+}
+
+
 def _rotate_registry() -> None:
     missing = [k for k in _DRIVER_WINDOW if k not in QUERIES]
     assert not missing, f"_DRIVER_WINDOW names unknown queries: {missing}"
+    stale = [k for k in BENCH_EXCLUDED if k not in QUERIES]
+    assert not stale, f"BENCH_EXCLUDED names unknown queries: {stale}"
     rest = [k for k in QUERIES if k not in set(_DRIVER_WINDOW)]
     ordered = {k: QUERIES[k] for k in (*_DRIVER_WINDOW, *rest)}
     QUERIES.clear()

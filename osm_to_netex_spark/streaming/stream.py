@@ -59,8 +59,7 @@ def run_stream_to_parquet(
     checkpoint_path: str,
     await_seconds: float | None = None,
 ):
-    """Append-mode sink with exactly-once file commit via the checkpoint dir;
-    watermark bounds state for the windowed per-cell counts variant."""
+    """Append-mode sink with exactly-once file commit via the checkpoint dir."""
     q = (
         assigned.withWatermark("ingest_ts", "30 seconds")
         .writeStream.format("parquet")
@@ -73,16 +72,6 @@ def run_stream_to_parquet(
     if await_seconds is not None:
         q.awaitTermination(await_seconds)
     return q
-
-
-def streaming_cell_counts(assigned: DataFrame) -> DataFrame:
-    """Stateful windowed aggregation: docs per quad cell per 1-min window
-    (watermarked, late data within 30s merges)."""
-    return (
-        assigned.withWatermark("ingest_ts", "30 seconds")
-        .groupBy(F.window("ingest_ts", "1 minute"), F.col("quad_cell"))
-        .agg(F.approx_count_distinct("doc_id").alias("n_docs"))
-    )
 
 
 def streaming_cell_sessions(

@@ -1,14 +1,15 @@
 """The conversion computes each intermediate once (plans/netex.py): strict
 errors still fire, in the reference's order, from the checkpoints; the job
 releases what it checkpointed; outputs are those of the lazy pipeline; the
-XML render never drops zones."""
+XML render never drops zones; unparseable dates are skipped, not fatal."""
 
 import hashlib
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from osm_to_netex_spark.plans import job, netex
+from osm_to_netex_spark.plans import convert_queries as CQ, job, netex
 from osm_to_netex_spark.plans.convert_queries import FIXTURE_CORPUS
 from osm_to_netex_spark.sources.catalog import SnapshotCatalog
 
@@ -102,6 +103,30 @@ def test_render_never_drops_zones(spark):
             netex.render_netex_xml(res, max_rows=31)
     finally:
         res.release()
+
+
+@pytest.mark.parametrize("bad", ["not-a-date", "2021-2-1"])
+def test_unparseable_valid_from_is_skipped(spark, tmp_path, monkeypatch, bad):
+    """Every fixture zone that carries a valid_from gets an unparseable one:
+    all zones are kept, none has a ValidBetween (the reference logs and skips
+    the date), and the DuckDB oracle agrees row for row.  '2021-2-1' is one
+    a lenient date cast would accept."""
+    out = str(tmp_path / "corpus")
+    path = f"{out}/*.parquet"  # a glob both engines read
+    _rewrite(
+        "osm_way", _WAY,
+        "named_struct('id', p.id, 'nd_refs', p.nd_refs, 'tags', transform_values("
+        f"p.tags, (k, v) -> CASE WHEN k = 'valid_from' THEN '{bad}' ELSE v END))",
+    )(spark.read.parquet(FIXTURE_CORPUS)).write.parquet(out)
+    spans = spark.read.parquet(path).selectExpr("explode(spans) as s")
+    assert spans.where(f"s.text like '%\"valid_from\":\"{bad}\"%'").count() == 8
+
+    monkeypatch.setattr(CQ, "FIXTURE_CORPUS", path)
+    got = [tuple(r) for r in CQ.q_convert_farezone(spark, "").collect()]
+    assert len(got) == 32
+    assert {r[-3:-1] for r in got} == {(None, None)}  # (valid_from, valid_to)
+    want = duckdb.sql(CQ.q_convert_farezone_oracle()).fetchall()
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 def _digest(df):

@@ -7,7 +7,7 @@ import shutil
 import subprocess
 import zipfile
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE = os.path.join(REPO, "tests/fixtures/convert_corpus.parquet")
 
 

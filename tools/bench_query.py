@@ -2,14 +2,14 @@
 
 Usage:
     python tools/bench_query.py <sf_dir> <name> [<name> ...]
-    python tools/bench_query.py <sf_dir> --new <git-ref>   # names added since ref
 
-Mirrors bench.py's per-query protocol exactly (warm run compiles codegen,
-then one timed fresh plan; caller-owned caches released between runs) so
-a reading here predicts the full-bench row.  Landing recipe step: no
-operator ships without a recorded timing from this tool at sf0.1 —
-lsh_band_stats reached the round-3 driver at 172.7 s because the last
-five commits never saw a bench (VERDICT r3 "What's wrong" #1/#2).
+Times each query with bench.time_query, the timer of bench.py's per-query
+rows (warm run compiles codegen, then one timed fresh plan materialised to
+a noop sink; caller-owned caches released between runs), so a reading here
+predicts the full-bench row.  Landing recipe step: no operator ships
+without a recorded timing from this tool at sf0.1 — lsh_band_stats reached
+the round-3 benchmark at 172.7 s because the last five commits never saw a
+bench (VERDICT r3 "What's wrong" #1/#2).
 
 Budget: warn when a query exceeds SPARK_GRAFT_QUERY_BUDGET seconds
 (default 15 s — generous; the production median at sf0.1 is <1 s) and
@@ -20,54 +20,24 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query  # noqa: E402
 from osm_to_netex_spark.session import get_spark  # noqa: E402
 
 BUDGET = float(os.environ.get("SPARK_GRAFT_QUERY_BUDGET", "15"))
-
-
-def names_added_since(ref: str) -> list[str]:
-    """Registry names whose QUERIES[...] assignment is new since <ref>.
-
-    Diffs the WHOLE plans/ package, not just queries.py — round-4 queries
-    register from queries_r4.py-style modules, and a queries.py-only diff
-    silently reported 'no new registry queries' for exactly that pattern
-    (ADVICE r4), defeating the guard."""
-    diff = subprocess.run(
-        ["git", "diff", ref, "--", "osm_to_netex_spark/plans/"],
-        capture_output=True, text=True, check=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ).stdout
-    out = []
-    for line in diff.splitlines():
-        if line.startswith("+") and "QUERIES[" in line and "=" in line:
-            name = line.split("QUERIES[", 1)[1].split("]", 1)[0].strip("\"'")
-            if name and not name.startswith("+"):
-                out.append(name)
-    return sorted(set(out))
 
 
 def main() -> int:
     if len(sys.argv) < 3:
         print(__doc__)
         return 2
-    sf_dir = sys.argv[1]
-    if sys.argv[2] == "--new":
-        names = names_added_since(sys.argv[3] if len(sys.argv) > 3 else "HEAD~1")
-        if not names:
-            print("no new registry queries since ref")
-            return 0
-    else:
-        names = sys.argv[2:]
+    sf_dir, names = sys.argv[1], sys.argv[2:]
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(cores=cpus, extra_conf={"spark.ui.showConsoleProgress": "false"})
-    from osm_to_netex_spark.operators.dedup import unpersist_intermediates
     from osm_to_netex_spark.plans import queries as Q
 
     timings: dict[str, float] = {}
@@ -78,14 +48,7 @@ def main() -> int:
             over.append(name)
             continue
         builder = Q.QUERIES[name][0] if name in Q.QUERIES else Q.ROWS_ONLY[name]
-        warm = builder(spark, sf_dir)
-        warm.count()
-        unpersist_intermediates(warm)
-        t0 = time.perf_counter()
-        timed = builder(spark, sf_dir)
-        timed.count()
-        dt = round(time.perf_counter() - t0, 3)
-        unpersist_intermediates(timed)
+        dt = round(time_query(spark, builder, sf_dir), 3)
         timings[name] = dt
         flag = "  OVER-BUDGET" if dt > BUDGET else ""
         print(f"{name:26s} {dt:8.3f} s{flag}")

@@ -13,10 +13,11 @@ Usage: python tools/exp_polyfill_explode.py [sf_dir] [n_iters]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_to_netex_spark.functions import geo  # noqa: E402
 from osm_to_netex_spark.functions.portable import SPARK  # noqa: E402

@@ -18,10 +18,12 @@ Usage: python tools/explain_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from osm_to_netex_spark.session import get_spark  # noqa: E402
 
@@ -314,7 +316,7 @@ def main():
         print(f"{name:24s} {status}")
         sections.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(
             "# Physical plans — headline queries (sf0.001, local[8])\n\n"
             "Generated by `python tools/explain_plans.py`; assertions in the\n"
