@@ -38,17 +38,23 @@ def _ranked(cand: DataFrame, k: int) -> DataFrame:
     return cand.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
+def _cross_ranked(q: DataFrame, s: DataFrame, k: int) -> DataFrame:
+    cand = q.crossJoin(s).withColumn(
+        "dist_m", F.expr(haversine_m("qlat", "qlon", "slat", "slon", SPARK))
+    )
+    return _ranked(cand, k).select("quay_id", "stop_id", "dist_m", "rn")
+
+
 def knn_brute_force(
     quays: DataFrame,
     stops: DataFrame,
     k: int = 3,
     quay_id: str = "quay_id",
     stop_id: str = "stop_id",
-    broadcast_stops: bool = True,
 ) -> DataFrame:
-    """(quay_id, stop_id, dist_m, rn) — exact.  Broadcast the stop side only
-    when it is a dimension table; otherwise an unbroadcast cross join (the
-    caller is responsible for keeping the quay side small in that case)."""
+    """(quay_id, stop_id, dist_m, rn) — exact.  The stop side is a dimension
+    table and is broadcast; corpus-sized stops go through knn_cell_pruned
+    with stops_are_dimension=False."""
     q = quays.select(
         F.col(quay_id).alias("quay_id"),
         F.col("lat").alias("qlat"),
@@ -59,11 +65,7 @@ def knn_brute_force(
         F.col("lat").alias("slat"),
         F.col("lon").alias("slon"),
     )
-    side = F.broadcast(s) if broadcast_stops else s
-    cand = q.crossJoin(side).withColumn(
-        "dist_m", F.expr(haversine_m("qlat", "qlon", "slat", "slon", SPARK))
-    )
-    return _ranked(cand, k).select("quay_id", "stop_id", "dist_m", "rn")
+    return _cross_ranked(q, F.broadcast(s), k)
 
 
 def _guarantee_m(scheme: str, res: int, ring: int) -> float:
@@ -165,15 +167,9 @@ def knn_cell_pruned(
             if r == 0:
                 break
 
-    fallback = knn_brute_force(
-        rest.select("quay_id", F.col("qlat").alias("lat"), F.col("qlon").alias("lon")),
-        stops.select(F.col(stop_id).alias("stop_id"), "lat", "lon"),
-        k,
-        "quay_id",
-        "stop_id",
-        broadcast_stops=stops_are_dimension,
-    )
-    return out.unionByName(fallback.select("quay_id", "stop_id", "dist_m", "rn"))
+    # post-escalation stragglers only: unbroadcast unless stops are a dimension
+    fallback = _cross_ranked(rest, F.broadcast(s_pts) if stops_are_dimension else s_pts, k)
+    return out.unionByName(fallback)
 
 
 def knn_collect(knn: DataFrame) -> DataFrame:

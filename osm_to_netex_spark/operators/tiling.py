@@ -73,8 +73,8 @@ def cover_cells(
     a very large generated tree (bbox reductions + packed-cell enumeration in
     one nested transform/flatten), and its FIXED cost — Catalyst analysis +
     Janino whole-stage-codegen compile, re-paid per fresh plan — dominates
-    the query at test scale (measured 3.9s vs 1.15s at sf0.1,
-    tools/exp_polyfill_explode.py).  Staging the bbox → axial/grid bounds as
+    the query at test scale (3.9s vs 1.15s at sf0.1, an A/B of the two
+    forms on the same polygons).  Staging the bbox → axial/grid bounds as
     four scalar columns and enumerating cells with two explode(sequence())
     projections keeps every expression small; the per-row work is identical
     and stays whole-stage-codegen'd.  At the 10^9-doc design point both forms

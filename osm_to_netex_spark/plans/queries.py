@@ -164,8 +164,8 @@ def q_polyfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Built through tiling.cover_cells (staged bounds + explode(sequence)) —
     row-identical to the single cover-expression form but ~3.4x faster at
-    sf0.1 because the mega-expression's Catalyst/Janino fixed cost is gone
-    (measured in tools/exp_polyfill_explode.py; BASELINE.md caveat)."""
+    sf0.1 (3.9 s vs 1.15 s) because the mega-expression's Catalyst/Janino
+    fixed cost is gone (BASELINE.md caveat)."""
     from ..operators.tiling import cover_cells
 
     register_geometry_views(spark, sf_dir)
@@ -2762,7 +2762,8 @@ def _ab_test_sql(d: str) -> str:
     (the deterministic assignment an experimentation platform uses), Welch
     z on the 1e-6-quantized outcome — exact integer moments (n, Σx, Σx²)
     per arm, then ONE fixed float sequence for the z, quantized to 1e-9 so
-    the significance flag is a stable integer compare.
+    the significance flag is a stable integer compare.  Σx² is summed as
+    decimal(38, 0): at sf0.1 it passes int64.
 
     Scale: one scan + one (type, arm) map-side-combined aggregate; the
     pivot to arm columns is a 2-row-per-type self-join on the dimension."""
@@ -2787,7 +2788,7 @@ def _ab_test_sql(d: str) -> str:
             select event_type, arm,
                    cast(count(*) as bigint) as n,
                    cast(sum(xq) as bigint) as sx,
-                   cast(sum(xq * xq) as bigint) as sxx
+                   cast(sum(cast(xq as decimal(38, 0)) * xq) as decimal(38, 0)) as sxx
             from q group by event_type, arm
         ),
         m as (

@@ -2086,11 +2086,10 @@ def _l_moments_sql(d: str) -> str:
     double expression.
 
     Scale: one rank window per group + one groupBy — single event_type
-    shuffle.  Σ i³·x_cents ≤ n⁴·max_cents ≈ 10¹⁶·2·10⁴ exceeds int64 at
-    n=10⁵ — so the window is per GROUP (n≈2·10⁴: Σ ≤ 3·10²¹?  No: per
-    group n≈2·10⁴ ⇒ n³·max_cents·n = 1.6·10¹⁷·… — bounds actually pinned
-    by the dtype audit at every SF; b3's worst term (i−1)(i−2)(i−3)·x ≈
-    8·10¹² per row, Σ over 2·10⁴ rows ≈ 1.6·10¹⁷ < 9.2·10¹⁸ ✓)."""
+    shuffle.  The b1..b3 numerators are summed as decimal(38, 0):
+    Σ i³·x_cents ≈ n⁴·max_cents / 4 overflows int64 once a group holds
+    ~10⁵ rows (it does at sf0.1), and stays below 10³⁸ until ~10⁸ rows
+    per group; the cast to double is unchanged."""
     return """
         with base as (
             select event_type,
@@ -2107,10 +2106,12 @@ def _l_moments_sql(d: str) -> str:
         pwm as (
             select event_type,
                    cast(count(*) as bigint) as n,
-                   cast(sum(xc) as bigint) as s0,
-                   cast(sum((i - 1) * xc) as bigint) as s1,
-                   cast(sum((i - 1) * (i - 2) * xc) as bigint) as s2,
-                   cast(sum((i - 1) * (i - 2) * (i - 3) * xc) as bigint) as s3
+                   cast(sum(xc) as decimal(38, 0)) as s0,
+                   cast(sum(cast(i - 1 as decimal(38, 0)) * xc) as decimal(38, 0)) as s1,
+                   cast(sum(cast(i - 1 as decimal(38, 0)) * (i - 2) * xc)
+                        as decimal(38, 0)) as s2,
+                   cast(sum(cast(i - 1 as decimal(38, 0)) * (i - 2) * (i - 3) * xc)
+                        as decimal(38, 0)) as s3
             from ranked group by event_type
         ),
         b as (

@@ -22,7 +22,7 @@ DEFAULT_CONF = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    "spark.driver.memory": "8g",
 }
 
 
@@ -34,15 +34,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a session.
 
-    ``cores``: int n → ``local[n]``; "*" → all; None → $SPARK_GRAFT_CPUS or "*".
+    ``cores``: n → ``local[n]``; None → the CPUs in this process's affinity
+    mask (run under ``taskset`` to use fewer).
     ``shuffle_partitions`` defaults to 2× cores (AQE coalesces down).
     """
-    if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cores = len(os.sched_getaffinity(0)) if cores is None else int(cores)
     master = f"local[{cores}]"
     if shuffle_partitions is None:
-        ncores = os.cpu_count() if cores == "*" else int(cores)
-        shuffle_partitions = max(8, 2 * int(ncores))
+        shuffle_partitions = max(8, 2 * cores)
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)

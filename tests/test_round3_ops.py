@@ -395,13 +395,9 @@ def test_decayed_density_python_replay(spark):
     assert got == {c: (a, b) for c, (a, b) in want.items()}
 
 
-def test_ab_test_welch_replay(spark):
+def _ab_test_replay(got, ev):
     import hashlib
 
-    from osm_to_netex_spark.plans import queries as Q
-
-    got = {r["event_type"]: r for r in Q.q_ab_test(spark, SF).collect()}
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     arms = defaultdict(lambda: ([], []))
     for r in ev:
         h = int(hashlib.md5(f"ab:{int(r['user_id'])}".encode()).hexdigest()[:15], 16)
@@ -418,6 +414,29 @@ def test_ab_test_welch_replay(spark):
         z = (ma - mb) / math.sqrt(va / len(a) + vb / len(b))
         assert int(r["welch_z_q9"]) == math.floor(z * 1e9 + 0.5)
         assert bool(r["significant"]) == (abs(math.floor(z * 1e9 + 0.5)) > 1959963985)
+
+
+def test_ab_test_welch_replay(spark):
+    from osm_to_netex_spark.plans import queries as Q
+
+    got = {r["event_type"]: r for r in Q.q_ab_test(spark, SF).collect()}
+    _ab_test_replay(got, spark.read.parquet(f"{SF}/events.parquet").collect())
+
+
+def test_ab_test_sum_of_squares_past_int64(spark):
+    """Outcomes quantize to 2^32 and 2^33, so x² alone is up to 2^66 and Σx²
+    passes int64, as at sf0.1; the moments must stay exact.  Powers of two
+    keep every float step of the replay equal to Spark's."""
+    from osm_to_netex_spark.plans import queries as Q
+
+    ev = spark.range(200).selectExpr(
+        "'click' as event_type", "id as user_id",
+        "4294.967296e0 * cast(1 + id % 2 as double) as value",
+    )
+    ev.createOrReplaceTempView("events")
+    got = {r["event_type"]: r for r in spark.sql(Q._ab_test_sql(SPARK)).collect()}
+    assert set(got) == {"click"}
+    _ab_test_replay(got, ev.collect())
 
 
 def test_clustering_coeff_python_replay(spark, docs):

@@ -974,10 +974,7 @@ def test_zonal_majority_is_modal_band(spark):
         assert got[z] == (-best[1], best[0])
 
 
-def test_l_moments_matches_python_replay(spark):
-    rows = spark.read.parquet(f"{SF}/events.parquet").select(
-        "event_type", "value", "event_id"
-    ).collect()
+def _l_moments_replay(rows) -> dict:
     per = defaultdict(list)
     for r in rows:
         per[r["event_type"]].append(
@@ -1001,6 +998,31 @@ def test_l_moments_matches_python_replay(spark):
             round((6 * b2 - 6 * b1 + b0) / l2, 9),
             round((20 * b3 - 30 * b2 + 12 * b1 - b0) / l2, 9),
         )
+    return want
+
+
+def test_l_moments_sums_past_int64(spark):
+    """10^5 events of one type: Σ (i-1)(i-2)(i-3)·x_cents is ~10²³, past
+    int64, as at sf0.1; the query must stay exact, not raise an overflow."""
+    from osm_to_netex_spark.functions.portable import SPARK
+    from osm_to_netex_spark.plans.queries_r4 import _l_moments_sql
+
+    events = spark.range(100_000).selectExpr(
+        "'a' as event_type", "cast(id % 997 as double) / 10.0 as value", "id as event_id"
+    )
+    events.createOrReplaceTempView("events")
+    got = spark.sql(_l_moments_sql(SPARK)).collect()
+    want = _l_moments_replay(events.collect())["a"]
+    assert len(got) == 1 and int(got[0]["n"]) == want[0]
+    for a, b in zip([got[0][c] for c in ("l1", "l2", "t3", "t4")], want[1:]):
+        assert a == pytest.approx(b, abs=1e-8)
+
+
+def test_l_moments_matches_python_replay(spark):
+    rows = spark.read.parquet(f"{SF}/events.parquet").select(
+        "event_type", "value", "event_id"
+    ).collect()
+    want = _l_moments_replay(rows)
     got = {
         r["event_type"]: (int(r["n"]), r["l1"], r["l2"], r["t3"], r["t4"])
         for r in Q.QUERIES["l_moments"][0](spark, SF).collect()

@@ -121,13 +121,15 @@ def test_flagship_observation_covers_all_nodes(spark, tmp_path):
     """The bench flagship folds the tile-assign checksum into the PIP node
     scan as a CollectMetrics observation; the stop-point filter must stay
     ABOVE it, so the observed row count equals the full node count (every
-    node's six cells are actually computed)."""
+    node's six cells are actually computed).  The corpus mix is derived
+    from n_docs, so the stored corpus holds exactly n_docs documents."""
     import bench
     from osm_to_netex_spark.operators import extract
     from osm_to_netex_spark.sources import documents as docs_src
 
     path = str(tmp_path / "flag")
-    bench.prepare_corpus(spark, path, n_docs=2000, n_zones=40, n_points=1200)
+    bench.prepare_corpus(spark, path, n_docs=2000)
+    assert docs_src.read_documents(spark, path).count() == 2000
     df, obs, cached = bench.build_flagship(spark, path)
     rows = df.collect()
     n_nodes = extract.extract_nodes(docs_src.read_documents(spark, path)).count()
