@@ -27,6 +27,7 @@ from __future__ import annotations
 import socket
 import time
 from dataclasses import dataclass, field
+from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
 
@@ -196,6 +197,14 @@ def conversion_metrics(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text(v) -> str:
+    return escape(str(v))
+
+
+def _attr(v) -> str:
+    return escape(str(v), {'"': "&quot;"})
+
+
 def render_netex_xml(result: ConversionResult, max_rows: int | None = None) -> str:
     """Fixture-parity XML render (driver-side, test scale only).
 
@@ -204,6 +213,8 @@ def render_netex_xml(result: ConversionResult, max_rows: int | None = None) -> s
     with GML polygons whose posList is the flat lat-lon list in nd order.
     Doubles are rendered with Python repr (shortest round-trip), matching
     Java's Double.toString for fixture doubles (SURVEY §7 hard part b).
+
+    Text and attribute values are XML-escaped, as JAXB marshals them.
 
     Every zone is rendered.  ``max_rows`` is a guard on the driver-side
     collect: more zones than that raise instead of being dropped.
@@ -230,21 +241,21 @@ def render_netex_xml(result: ConversionResult, max_rows: int | None = None) -> s
     parts = [
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>',
         '<PublicationDelivery xmlns="http://www.netex.org.uk/netex">',
-        f'  <PublicationTimestamp>{result.envelope["publication_timestamp"]}</PublicationTimestamp>',
-        f'  <ParticipantRef>{result.envelope["participant_ref"]}</ParticipantRef>',
-        f'  <Description>{result.envelope["description"]}</Description>',
+        f'  <PublicationTimestamp>{_text(result.envelope["publication_timestamp"])}</PublicationTimestamp>',
+        f'  <ParticipantRef>{_text(result.envelope["participant_ref"])}</ParticipantRef>',
+        f'  <Description>{_text(result.envelope["description"])}</Description>',
         "  <dataObjects>",
-        f'    <SiteFrame version="1" id="{result.envelope["site_frame_id"]}">',
+        f'    <SiteFrame version="1" id="{_attr(result.envelope["site_frame_id"])}">',
         f"      <{container}>",
     ]
     for r in rows:
-        parts.append(f'        <{kind} version="{r["version"]}" id="{r["zone_id"]}">')
+        parts.append(f'        <{kind} version="{_attr(r["version"])}" id="{_attr(r["zone_id"])}">')
         if r["name"] is not None:
-            parts.append(f'          <Name lang="{r["name_lang"]}">{r["name"]}</Name>')
+            parts.append(f'          <Name lang="{_attr(r["name_lang"])}">{_text(r["name"])}</Name>')
         pos = " ".join(fmt_d(v) for v in r["pos_list"])
         parts += [
             "          <gml:Polygon xmlns:gml=\"http://www.opengis.net/gml/3.2\" "
-            f'gml:id="{r["polygon_id"]}">',
+            f'gml:id="{_attr(r["polygon_id"])}">',
             "            <gml:exterior><gml:LinearRing>",
             f'              <gml:posList>{pos}</gml:posList>',
             "            </gml:LinearRing></gml:exterior>",

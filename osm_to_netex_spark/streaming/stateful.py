@@ -46,28 +46,15 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _rank_and_register(doc_id: str) -> tuple[int, int]:
-    """(register index, rank) from md5 — deterministic across engines/runs.
-    Scalar reference implementation; the hot path is _merge_batch."""
-    h = int.from_bytes(hashlib.md5(str(doc_id).encode()).digest()[:8], "big")
-    reg = h & (N_REGISTERS - 1)
-    rest = h >> _REG_BITS
-    # rank = 1-based position of the first set bit in a 58-bit stream
-    rank = 1
-    while rank < 58 and not (rest & 1):
-        rest >>= 1
-        rank += 1
-    return reg, rank
-
-
 def _merge_batch(regs: np.ndarray, doc_ids) -> None:
     """Fold a batch of doc ids into the register array, numpy-vectorized.
 
-    md5 is per-string (the only per-element Python left); the bit math —
-    register index, lowest-set-bit rank, element-wise register max — runs as
-    array ops over the whole Arrow batch.  Identical results to the scalar
-    reference: rank = 1-based index of the first set bit of the 58-bit
-    stream, capped at 58 (rest == 0).
+    Each id's md5 (first 8 bytes, big-endian) gives its register (the low
+    register bits) and its rank: the 1-based index of the first set bit of
+    the remaining 58-bit stream, capped at 58 (rest == 0).  md5 is
+    per-string (the only per-element Python left); the bit math —
+    register index, lowest-set-bit rank, element-wise register max — runs
+    as array ops over the whole Arrow batch.
     """
     n = len(doc_ids)
     if n == 0:

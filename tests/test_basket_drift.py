@@ -36,7 +36,7 @@ def test_token_drift_zero_when_identical(spark):
              n_chars=7) for i in range(8)]
     )
     docs.createOrReplaceTempView("documents")
-    from osm_to_netex_spark.plans.queries import _token_drift_sql
+    from osm_to_netex_spark.plans.queries.text import _token_drift_sql
     from osm_to_netex_spark.functions.portable import SPARK
 
     rows = spark.sql(_token_drift_sql(SPARK)).collect()

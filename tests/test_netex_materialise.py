@@ -4,6 +4,7 @@ releases what it checkpointed; outputs are those of the lazy pipeline; the
 XML render never drops zones; unparseable dates are skipped, not fatal."""
 
 import hashlib
+import xml.etree.ElementTree as ET
 
 import duckdb
 import pytest
@@ -103,6 +104,24 @@ def test_render_never_drops_zones(spark):
             netex.render_netex_xml(res, max_rows=31)
     finally:
         res.release()
+
+
+def test_render_escapes_names(spark):
+    """A zone name holding XML metacharacters renders well-formed XML and
+    round-trips as the <Name> text."""
+    name = "Tog & Buss <sone>"
+    corpus = _rewrite(
+        "osm_way", _WAY,
+        "named_struct('id', p.id, 'nd_refs', p.nd_refs, 'tags', transform_values("
+        f"p.tags, (k, v) -> CASE WHEN startswith(k, 'name') THEN '{name}' ELSE v END))",
+    )(spark.read.parquet(FIXTURE_CORPUS))
+    res = netex.convert_documents(corpus, "TariffZone")
+    try:
+        root = ET.fromstring(netex.render_netex_xml(res))
+    finally:
+        res.release()
+    names = [e.text for e in root.iter("{http://www.netex.org.uk/netex}Name")]
+    assert names and set(names) == {name}
 
 
 @pytest.mark.parametrize("bad", ["not-a-date", "2021-2-1"])

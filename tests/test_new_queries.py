@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import dedup, media, similarity
-from osm_to_netex_spark.plans import queries as Q
+from osm_to_netex_spark.plans.queries import (
+    retrieval as RETRIEVAL,
+    stats as STATS,
+    streaming as STREAMING,
+    text as TEXT,
+)
 from osm_to_netex_spark.sources import documents as docs_src
 
 SF = "/root/testdata/sf0.001"
@@ -26,9 +31,9 @@ def _duck(sf_dir, sql):
 def test_ngram_jaccard_matches_duckdb_oracle(spark):
     got = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in Q.q_ngram_jaccard(spark, SF).collect()
+        for r in TEXT.q_ngram_jaccard(spark, SF).collect()
     }
-    want = {tuple(r) for r in _duck(SF, Q.q_ngram_jaccard_oracle())}
+    want = {tuple(r) for r in _duck(SF, TEXT.q_ngram_jaccard_oracle())}
     assert got == want
 
 
@@ -49,8 +54,8 @@ def test_ngram_jaccard_finds_planted_near_dup(spark):
 
 
 def test_ivf_topk_matches_duckdb_oracle(spark):
-    got = {tuple(r) for r in Q.q_embed_topk_ivf(spark, SF).collect()}
-    want = {tuple(r) for r in _duck(SF, Q.q_embed_topk_ivf_oracle())}
+    got = {tuple(r) for r in RETRIEVAL.q_embed_topk_ivf(spark, SF).collect()}
+    want = {tuple(r) for r in _duck(SF, RETRIEVAL.q_embed_topk_ivf_oracle())}
     assert got == want
 
 
@@ -88,7 +93,7 @@ def test_media_real_decode_falls_back_to_stub_for_non_pnm(spark):
 
 
 def test_streaming_tiles_matches_batch(spark):
-    out = Q.q_streaming_tiles(spark, SF)
+    out = STREAMING.q_streaming_tiles(spark, SF)
     rows = {r.quad_cell: r.n_docs for r in out.collect()}
     assert rows and sum(rows.values()) > 0
     # batch equivalent over the same deterministic corpus
@@ -191,7 +196,7 @@ def test_date_interval_join_equals_naive(spark):
 def test_cms_overestimates_and_bounds(spark):
     """CMS property: estimate >= exact for every key, and error bounded in
     practice on the fixture (4x256 registers, 10k events, ~150 users)."""
-    rows = Q.q_cms_frequencies(spark, SF).collect()
+    rows = STATS.q_cms_frequencies(spark, SF).collect()
     assert rows
     for r in rows:
         assert r["cms_est"] >= r["exact_n"]

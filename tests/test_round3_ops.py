@@ -251,14 +251,14 @@ def test_keep_best_one_survivor_per_group(spark):
 
 
 def test_robust_anomaly_matches_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     out = {
         (r["event_type"], int(r["event_id"])): (
             int(r["robust_z_q9"]),
             bool(r["outlier"]),
         )
-        for r in Q.q_robust_anomaly(spark, SF).collect()
+        for r in STATS.q_robust_anomaly(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_type = defaultdict(list)
@@ -290,12 +290,12 @@ def test_robust_anomaly_matches_python_replay(spark):
 
 def test_label_point_center_inside_and_positive_clearance(spark):
     from osm_to_netex_spark.functions import geo
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import spatial as SPATIAL
 
-    out = Q.q_label_point(spark, SF)
+    out = SPATIAL.q_label_point(spark, SF)
     rows = out.collect()
     assert len(rows) == 10  # every sf0.001 zone gets a label point
-    clat, clon = geo.quad_cell_center("label_cell", Q._LABEL_RES, "spark")
+    clat, clon = geo.quad_cell_center("label_cell", SPATIAL._LABEL_RES, "spark")
     joined = (
         out.join(spark.table("geo_polys"), "zone_id")
         .selectExpr(
@@ -311,11 +311,11 @@ def test_label_point_center_inside_and_positive_clearance(spark):
 
 
 def test_pip_best_single_smallest_zone(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import spatial as SPATIAL
     from osm_to_netex_spark.functions import geo
 
-    best = {r["point_id"]: r["zone_id"] for r in Q.q_pip_best(spark, SF).collect()}
-    allm = Q.q_pip(spark, SF).collect()
+    best = {r["point_id"]: r["zone_id"] for r in SPATIAL.q_pip_best(spark, SF).collect()}
+    allm = SPATIAL.q_pip(spark, SF).collect()
     areas = {
         r["zone_id"]: abs(float(r["a2"]))
         for r in spark.table("geo_polys")
@@ -332,10 +332,10 @@ def test_pip_best_single_smallest_zone(spark):
 
 
 def test_span_profile_counts_and_runs(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import text as TEXT
     from osm_to_netex_spark.plans.convert_queries import FIXTURE_CORPUS
 
-    out = {r["doc_id"]: r for r in Q.q_span_profile(spark, SF).collect()}
+    out = {r["doc_id"]: r for r in TEXT.q_span_profile(spark, SF).collect()}
     docs = spark.read.parquet(FIXTURE_CORPUS).collect()
     assert len(out) == len(docs) > 0
     for d in docs:
@@ -361,15 +361,15 @@ def test_span_profile_counts_and_runs(spark):
 def test_decayed_density_python_replay(spark):
     import hashlib
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 
     got = {
         int(r["cell"]): (int(r["n_events"]), int(r["decayed_q9"]))
-        for r in Q.q_decayed_density(spark, SF).collect()
+        for r in SPATIAL.q_decayed_density(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     # replay: hash location -> res-12 quad cell, ln2/86400 decay from max ts
-    LAT_LO, LAT_HI, LON_LO, LON_HI = Q.BBOX
+    LAT_LO, LAT_HI, LON_LO, LON_HI = CORPUS.BBOX
 
     def pr(key):
         h = int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
@@ -417,9 +417,9 @@ def _ab_test_replay(got, ev):
 
 
 def test_ab_test_welch_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    got = {r["event_type"]: r for r in Q.q_ab_test(spark, SF).collect()}
+    got = {r["event_type"]: r for r in STATS.q_ab_test(spark, SF).collect()}
     _ab_test_replay(got, spark.read.parquet(f"{SF}/events.parquet").collect())
 
 
@@ -427,24 +427,24 @@ def test_ab_test_sum_of_squares_past_int64(spark):
     """Outcomes quantize to 2^32 and 2^33, so x² alone is up to 2^66 and Σx²
     passes int64, as at sf0.1; the moments must stay exact.  Powers of two
     keep every float step of the replay equal to Spark's."""
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     ev = spark.range(200).selectExpr(
         "'click' as event_type", "id as user_id",
         "4294.967296e0 * cast(1 + id % 2 as double) as value",
     )
     ev.createOrReplaceTempView("events")
-    got = {r["event_type"]: r for r in spark.sql(Q._ab_test_sql(SPARK)).collect()}
+    got = {r["event_type"]: r for r in spark.sql(STATS._ab_test_sql(SPARK)).collect()}
     assert set(got) == {"click"}
     _ab_test_replay(got, ev.collect())
 
 
 def test_clustering_coeff_python_replay(spark, docs):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import graph as GRAPH
 
     got = {
         int(r["doc_id"]): (int(r["n_triangles"]), int(r["degree"]), int(r["cc_q9"]))
-        for r in Q.q_clustering_coeff(spark, SF).collect()
+        for r in GRAPH.q_clustering_coeff(spark, SF).collect()
     }
     adj = _und_edges(spark, docs)
     for v, ns in adj.items():
@@ -482,9 +482,9 @@ def test_hyperanf_monotone_and_depth0_is_one(spark, docs):
 
 
 def test_logreg_gd_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    r = Q.q_logreg(spark, SF).collect()[0]
+    r = STATS.q_logreg(spark, SF).collect()[0]
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     data = [
         ([float(e["embedding"][j]) for j in range(4)], float(int(e["label"]) % 2))
@@ -517,9 +517,9 @@ def test_logreg_gd_python_replay(spark):
 
 
 def test_target_encode_smoothing(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = Q.q_target_encode(spark, SF).collect()
+    rows = STATS.q_target_encode(spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     g_sy = sum(int(d["n_chars"]) for d in docs)
     g_n = len(docs)
@@ -539,11 +539,11 @@ def test_turn_points_angle_threshold(spark):
     replayed in Python from the same hash coordinates."""
     import hashlib
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import trajectory as TRAJECTORY
 
     got = {
         (int(r["user_id"]), int(r["event_id"])): (int(r["dot_q"]), int(r["a2"]), int(r["b2"]))
-        for r in Q.q_turn_points(spark, SF).collect()
+        for r in TRAJECTORY.q_turn_points(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
 
@@ -574,10 +574,10 @@ def test_turn_points_angle_threshold(spark):
 def test_return_gaps_vs_sessionize(spark):
     """n_sessions must agree with the gated sessionize query; gaps must be
     positive and bounded below by the 30-min break rule."""
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rg = {int(r["user_id"]): r for r in Q.q_return_gaps(spark, SF).collect()}
-    sess = Q.q_events_sessionize(spark, SF).collect()
+    rg = {int(r["user_id"]): r for r in STATS.q_return_gaps(spark, SF).collect()}
+    sess = STATS.q_events_sessionize(spark, SF).collect()
     n_sess = Counter(int(r["user_id"]) for r in sess)
     for uid, r in rg.items():
         assert int(r["n_sessions"]) == n_sess[uid]
@@ -588,9 +588,9 @@ def test_return_gaps_vs_sessionize(spark):
 
 
 def test_quantile_rank_uniform(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = Q.q_quantile_rank(spark, SF).collect()
+    rows = STATS.q_quantile_rank(spark, SF).collect()
     by_type = defaultdict(list)
     for r in rows:
         by_type[r["event_type"]].append(int(r["qrank_q9"]))
@@ -604,9 +604,9 @@ def test_locate_along_endpoints_and_monotone(spark):
     """The located point must sit ON its segment (convex combination), the
     chainage targets must be ordered with f, and f=0.5 of a 2-point ring
     degenerates to the midpoint."""
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import spatial as SPATIAL
 
-    rows = Q.q_locate_along(spark, SF).collect()
+    rows = SPATIAL.q_locate_along(spark, SF).collect()
     assert len(rows) == 30  # 10 zones x 3 fractions
     polys = {r["zone_id"]: list(r["pos_list"]) for r in spark.table("geo_polys").collect()}
     by_zone = defaultdict(dict)
@@ -627,9 +627,9 @@ def test_locate_along_endpoints_and_monotone(spark):
 
 
 def test_g_function_vs_brute_python(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import spatial as SPATIAL
 
-    got = {float(r["r_m"]): (int(r["n_points"]), int(r["n_within"])) for r in Q.q_g_function(spark, SF).collect()}
+    got = {float(r["r_m"]): (int(r["n_points"]), int(r["n_within"])) for r in SPATIAL.q_g_function(spark, SF).collect()}
     pts = [(int(r["point_id"]), float(r["lat"]), float(r["lon"])) for r in spark.table("geo_points").collect()]
 
     def hav(a, b):
@@ -652,9 +652,9 @@ def test_g_function_vs_brute_python(spark):
 
 
 def test_benford_digits_partition(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = Q.q_benford(spark, SF).collect()
+    rows = STATS.q_benford(spark, SF).collect()
     li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
     want = Counter(
         str(math.floor(float(r["l_extendedprice"]) * 100 + 0.5))[0]
@@ -669,9 +669,9 @@ def test_benford_digits_partition(spark):
 
 
 def test_sn_blocking_window_property(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import text as TEXT
 
-    rows = Q.q_sn_blocking(spark, SF).collect()
+    rows = TEXT.q_sn_blocking(spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     import re as _re
 
@@ -690,11 +690,11 @@ def test_sn_blocking_window_property(spark):
 
 
 def test_haar_energy_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         int(r["user_id"]): (int(r["energy_l1"]), int(r["energy_l2"]), int(r["energy_l3"]), int(r["total_q3"]))
-        for r in Q.q_haar_energy(spark, SF).collect()
+        for r in STATS.q_haar_energy(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
@@ -724,14 +724,14 @@ def test_haar_energy_python_replay(spark):
 
 def test_modularity_python_replay(spark, docs):
     from osm_to_netex_spark.operators import graph
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import graph as GRAPH
 
     got = {
         int(r["community"]): (
             int(r["n_nodes"]), int(r["intra_edges"]),
             int(r["degree_sum"]), int(r["m_edges"]), int(r["num_term"]),
         )
-        for r in Q.q_modularity(spark, SF).collect()
+        for r in GRAPH.q_modularity(spark, SF).collect()
     }
     lbl = {
         int(r["doc_id"]): int(r["community"])
@@ -791,12 +791,12 @@ def test_zorder_ranges_cover_exactly(spark):
     """The merged ranges must partition each zone's morton key set exactly:
     total cells preserved, ranges disjoint, and keys inside a range are
     wall-to-wall consecutive."""
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import spatial as SPATIAL
     from osm_to_netex_spark.functions import geo
     from osm_to_netex_spark.sources import layout
 
     ranges = defaultdict(list)
-    for r in Q.q_zorder_ranges(spark, SF).collect():
+    for r in SPATIAL.q_zorder_ranges(spark, SF).collect():
         ranges[r["zone_id"]].append((int(r["z_lo"]), int(r["z_hi"]), int(r["n_cells"])))
     ix, iy = geo.quad_unpack("cell", 9, "spark")
     keys = defaultdict(set)
@@ -823,9 +823,9 @@ def test_zorder_ranges_cover_exactly(spark):
 
 
 def test_churn_labels_no_future_leakage(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = Q.q_churn_labels(spark, SF).collect()
+    rows = STATS.q_churn_labels(spark, SF).collect()
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
     for r in ev:
@@ -855,9 +855,9 @@ def test_churn_labels_no_future_leakage(spark):
 
 
 def test_matryoshka_recall_degrades_with_truncation(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import retrieval as RETRIEVAL
 
-    rows = Q.q_matryoshka_recall(spark, SF).collect()
+    rows = RETRIEVAL.q_matryoshka_recall(spark, SF).collect()
     by_dim = defaultdict(list)
     for r in rows:
         assert 0.0 <= float(r["recall"]) <= 1.0
@@ -871,12 +871,12 @@ def test_matryoshka_recall_degrades_with_truncation(spark):
 
 
 def test_ndcg_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import retrieval as RETRIEVAL
     from osm_to_netex_spark.operators import retrieval
 
-    r = Q.q_ndcg(spark, SF).collect()[0]
+    r = RETRIEVAL.q_ndcg(spark, SF).collect()[0]
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    bm = retrieval.bm25_topk(docs, Q._BM25_TERMS, k=15).collect()
+    bm = retrieval.bm25_topk(docs, RETRIEVAL._BM25_TERMS, k=15).collect()
     texts = {int(d["doc_id"]): d["text"] for d in docs.collect()}
     import re as _re
 
@@ -884,7 +884,7 @@ def test_ndcg_python_replay(spark):
     rels = []
     for d in ranked:
         toks = [t for t in _re.split(r"[^a-z0-9]+", texts[int(d["doc_id"])].lower()) if t]
-        rels.append(min(3, sum(1 for t in toks if t in Q._BM25_TERMS)))
+        rels.append(min(3, sum(1 for t in toks if t in RETRIEVAL._BM25_TERMS)))
 
     def dcg(rs):
         return sum(
@@ -898,11 +898,11 @@ def test_ndcg_python_replay(spark):
 
 
 def test_autocorr_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         (int(r["user_id"]), int(r["lag_h"])): (int(r["n"]), int(r["autocorr_q9"]))
-        for r in Q.q_autocorr(spark, SF).collect()
+        for r in STATS.q_autocorr(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     hourly = Counter()
@@ -929,11 +929,11 @@ def test_autocorr_python_replay(spark):
 def test_logreg_calibration_consistency(spark):
     """Bins partition the corpus; positive rates and mean predictions are
     internally consistent with the gated logreg accuracy row."""
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    bins = Q.q_logreg_calibration(spark, SF).collect()
+    bins = STATS.q_logreg_calibration(spark, SF).collect()
     total = sum(int(r["n"]) for r in bins)
-    logreg = Q.q_logreg(spark, SF).collect()[0]
+    logreg = STATS.q_logreg(spark, SF).collect()[0]
     assert total == int(logreg["n"])
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n_pos = emb.where("label % 2 = 1").count()
@@ -946,11 +946,11 @@ def test_logreg_calibration_consistency(spark):
 
 
 def test_weighted_median_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         r["l_returnflag"]: (int(r["wmedian_q2"]), int(r["total_weight"]))
-        for r in Q.q_weighted_median(spark, SF).collect()
+        for r in STATS.q_weighted_median(spark, SF).collect()
     }
     li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
     by_flag = defaultdict(Counter)
@@ -972,11 +972,11 @@ def test_weighted_median_python_replay(spark):
 
 
 def test_theil_sen_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         int(r["user_id"]): (int(r["ts_slope_q6_per_h"]), int(r["n_slopes"]))
-        for r in Q.q_theil_sen(spark, SF).collect()
+        for r in STATS.q_theil_sen(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
@@ -1002,14 +1002,14 @@ def test_theil_sen_python_replay(spark):
 
 
 def test_stump_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         int(r["feature_idx"]): (
             int(r["threshold_q6"]), int(r["ig_q9"]),
             int(r["n_left"]), int(r["n_right"]),
         )
-        for r in Q.q_stump(spark, SF).collect()
+        for r in STATS.q_stump(spark, SF).collect()
     }
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
 
@@ -1052,11 +1052,11 @@ def test_stump_python_replay(spark):
 
 
 def test_kaplan_meier_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         int(r["dur_h"]): (int(r["d_events"]), int(r["n_risk"]), float(r["survival"]))
-        for r in Q.q_kaplan_meier(spark, SF).collect()
+        for r in STATS.q_kaplan_meier(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     spans = defaultdict(lambda: [None, None])
@@ -1086,9 +1086,9 @@ def test_kaplan_meier_python_replay(spark):
 
 
 def test_gini_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = Q.q_gini(spark, SF).collect()
+    rows = STATS.q_gini(spark, SF).collect()
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     cnt = Counter(int(r["user_id"]) for r in ev)
     xs = [c for _, c in sorted(cnt.items(), key=lambda t: (t[1], t[0]))]
@@ -1108,14 +1108,14 @@ def test_gini_python_replay(spark):
 def test_poisson_bootstrap_python_replay(spark):
     import hashlib
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         r["event_type"]: (
             int(r["n_reps"]), int(r["boot_min_q6"]),
             int(r["boot_max_q6"]), int(r["boot_mean_q6"]),
         )
-        for r in Q.q_poisson_bootstrap(spark, SF).collect()
+        for r in STATS.q_poisson_bootstrap(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     THS = [424136118829305344, 848272237658610688, 1060340297073263360,
@@ -1151,11 +1151,11 @@ def test_poisson_bootstrap_python_replay(spark):
 
 
 def test_stationary_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         r["event_type"]: int(r["stationary_q9"])
-        for r in Q.q_stationary(spark, SF).collect()
+        for r in STATS.q_stationary(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
@@ -1183,11 +1183,11 @@ def test_stationary_python_replay(spark):
 
 
 def test_seasonal_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
         (r["event_type"], int(r["hod"])): (int(r["n_events"]), int(r["seasonal_idx_q9"]))
-        for r in Q.q_seasonal(spark, SF).collect()
+        for r in STATS.q_seasonal(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     per = defaultdict(lambda: [0, set()])
@@ -1208,9 +1208,9 @@ def test_seasonal_python_replay(spark):
 
 
 def test_peaks_are_gated_local_maxima(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    got = {(r["event_type"], int(r["hour"])) for r in Q.q_peaks(spark, SF).collect()}
+    got = {(r["event_type"], int(r["hour"])) for r in STATS.q_peaks(spark, SF).collect()}
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     hourly = defaultdict(Counter)
     for r in ev:
@@ -1238,14 +1238,14 @@ def test_peaks_are_gated_local_maxima(spark):
 def test_cell_entropy_python_replay(spark):
     import hashlib
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 
     got = {
         int(r["cell"]): (int(r["n_events"]), int(r["n_types"]), int(r["h_q9"]))
-        for r in Q.q_cell_entropy(spark, SF).collect()
+        for r in SPATIAL.q_cell_entropy(spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
-    LAT_LO, LAT_HI, LON_LO, LON_HI = Q.BBOX
+    LAT_LO, LAT_HI, LON_LO, LON_HI = CORPUS.BBOX
 
     def pr(key):
         return int(hashlib.md5(key.encode()).hexdigest()[:15], 16) / float(1 << 60)
@@ -1273,10 +1273,10 @@ def test_cell_entropy_python_replay(spark):
 
 
 def test_skew_report_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import spatial as SPATIAL
     from osm_to_netex_spark.functions import geo
 
-    r = Q.q_skew_report(spark, SF).collect()[0]
+    r = SPATIAL.q_skew_report(spark, SF).collect()[0]
     cells = Counter(
         int(x["c"])
         for x in spark.sql(
@@ -1298,9 +1298,9 @@ def test_lsh_band_stats_consistent_with_pairs(spark):
     count == the gated minhash_lsh_pairs row count at the same threshold,
     and candidates >= verified."""
     from osm_to_netex_spark.operators import dedup
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import text as TEXT
 
-    r = Q.q_lsh_band_stats(spark, SF).collect()[0]
+    r = TEXT.q_lsh_band_stats(spark, SF).collect()[0]
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pairs = dedup.minhash_lsh_pairs(docs, n_perm=16, bands=4, jaccard_threshold=0.4)
     n_pairs = pairs.count()
@@ -1312,11 +1312,11 @@ def test_lsh_band_stats_consistent_with_pairs(spark):
 
 
 def test_ks_drift_python_replay(spark):
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import text as TEXT
 
     got = {
         r["source"]: (int(r["n_source"]), int(r["n_corpus"]), int(r["ks_d_q9"]))
-        for r in Q.q_ks_drift(spark, SF).collect()
+        for r in TEXT.q_ks_drift(spark, SF).collect()
     }
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     vals = sorted({int(d["n_chars"]) for d in docs})
@@ -1338,9 +1338,9 @@ def test_ks_drift_python_replay(spark):
 def test_cramers_v_python_replay(spark):
     import hashlib
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import stats as STATS
 
-    r = Q.q_cramers_v(spark, SF).collect()[0]
+    r = STATS.q_cramers_v(spark, SF).collect()[0]
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     cells = Counter()
     for e in ev:
@@ -1366,9 +1366,9 @@ def test_cramers_v_python_replay(spark):
 def test_term_mi_python_replay(spark):
     import re as _re
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import text as TEXT
 
-    got = [(r["term"], int(r["mi_q9"])) for r in Q.q_term_mi(spark, SF).collect()]
+    got = [(r["term"], int(r["mi_q9"])) for r in TEXT.q_term_mi(spark, SF).collect()]
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     nd = len(docs)
     pres = defaultdict(set)

@@ -11,6 +11,11 @@ from collections import Counter, defaultdict
 import pytest
 
 from osm_to_netex_spark.plans import queries as Q
+from osm_to_netex_spark.plans.queries import (
+    corpus as CORPUS,
+    spatial as SPATIAL,
+    trajectory as TRAJECTORY,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -138,7 +143,7 @@ def _quad_ixy(lat: float, lon: float, res: int) -> tuple[int, int]:
 
 
 def test_gearys_c_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     pts = [(r["lat"], r["lon"]) for r in spark.table("geo_points").collect()]
     cells = Counter(_quad_ixy(la, lo, 11) for la, lo in pts)
     num = w = 0
@@ -164,7 +169,7 @@ def test_link_predict_matches_python_replay(spark):
     from osm_to_netex_spark.functions.portable import SPARK
     from osm_to_netex_spark.operators.graph import edges_sql
 
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     raw = spark.sql(f"select * from ({edges_sql(SPARK)})").collect()
     und = {tuple(sorted((int(r["src"]), int(r["dst"])))) for r in raw
            if r["src"] != r["dst"]}
@@ -234,7 +239,7 @@ def _haversine_m(lat1, lon1, lat2, lon2):
 
 
 def test_quadrat_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     pts = [(r["lat"], r["lon"]) for r in spark.table("geo_points").collect()]
     cells = Counter(_quad_ixy(la, lo, 13) for la, lo in pts)
     n = len(pts)
@@ -253,7 +258,7 @@ def test_quadrat_matches_python_replay(spark):
 
 
 def test_clark_evans_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     pts = [(r["point_id"], r["lat"], r["lon"]) for r in spark.table("geo_points").collect()]
     nn_um = {}
     for pid, la, lo in pts:
@@ -271,7 +276,7 @@ def test_clark_evans_matches_python_replay(spark):
     m_per_deg = 111194.92664455873
     lats = [p[1] for p in pts]; lons = [p[2] for p in pts]
     dy = (max(lats) - min(lats)) * m_per_deg
-    dx = (max(lons) - min(lons)) * m_per_deg * Q.COSLAT0
+    dx = (max(lons) - min(lons)) * m_per_deg * CORPUS.COSLAT0
     dens = n_all / (dy * dx)
     r_index = mean_nn / (0.5 / math.sqrt(dens))
     row = Q.QUERIES["clark_evans"][0](spark, SF).collect()[0]
@@ -282,9 +287,9 @@ def test_clark_evans_matches_python_replay(spark):
 
 
 def test_f_function_matches_python_replay(spark):
-    from osm_to_netex_spark.plans.queries_r4 import _F_GRID, _F_RADII
+    from osm_to_netex_spark.plans.queries.spatial import _F_GRID, _F_RADII
 
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     pts = [(r["lat"], r["lon"]) for r in spark.table("geo_points").collect()]
     lat_lo, lat_hi = min(p[0] for p in pts), max(p[0] for p in pts)
     lon_lo, lon_hi = min(p[1] for p in pts), max(p[1] for p in pts)
@@ -318,8 +323,8 @@ def test_f_function_matches_python_replay(spark):
 
 
 def test_radius_gyration_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
-    spark.sql(f"create or replace temp view geo_traj as {Q.traj_sql('spark')}")
+    CORPUS.register_geometry_views(spark, SF)
+    spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
         fixes[int(r["traj_id"])].append((r["lat"], r["lon"]))
@@ -344,8 +349,8 @@ def test_radius_gyration_matches_python_replay(spark):
 
 
 def test_bearing_stats_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
-    spark.sql(f"create or replace temp view geo_traj as {Q.traj_sql('spark')}")
+    CORPUS.register_geometry_views(spark, SF)
+    spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
         fixes[int(r["traj_id"])].append((int(r["step"]), r["lat"], r["lon"]))
@@ -355,7 +360,7 @@ def test_bearing_stats_matches_python_replay(spark):
         sx = sy = n = 0
         for (_, la1, lo1), (_, la2, lo2) in zip(fl, fl[1:]):
             dy = la2 - la1
-            dx = (lo2 - lo1) * Q.COSLAT0
+            dx = (lo2 - lo1) * CORPUS.COSLAT0
             l2 = dx * dx + dy * dy
             if l2 <= 0:
                 continue
@@ -419,7 +424,7 @@ def test_mmr_rerank_matches_python_replay(spark):
 
 
 def test_pca_top_matches_python_replay(spark):
-    from osm_to_netex_spark.plans.queries_r4 import _PCA_ROUNDS
+    from osm_to_netex_spark.plans.queries.retrieval import _PCA_ROUNDS
 
     rows = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     xq = {}
@@ -523,8 +528,8 @@ def _edr_python(A, B, eps_mm):
 
 def test_edr_join_matches_python_replay(spark):
     SF01 = "/root/testdata/sf0.01"
-    Q.register_geometry_views(spark, SF01)
-    spark.sql(f"create or replace temp view geo_traj as {Q.traj_sql('spark')}")
+    CORPUS.register_geometry_views(spark, SF01)
+    spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
         fixes[int(r["traj_id"])].append((int(r["step"]), r["lat"], r["lon"]))
@@ -555,7 +560,7 @@ def test_edr_robust_where_dtw_is_not():
 
 
 def test_centrography_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     pts = [(r["lat"], r["lon"]) for r in spark.table("geo_points").collect()]
     n = len(pts)
     clat = sum(int(math.floor(la * 1e9 + 0.5)) for la, _ in pts) / n / 1e9
@@ -563,7 +568,7 @@ def test_centrography_matches_python_replay(spark):
     M = 111194.92664455873
     sxx = syy = sxy = 0
     for la, lo in pts:
-        dx = (lo - clon) * Q.COSLAT0 * M
+        dx = (lo - clon) * CORPUS.COSLAT0 * M
         dy = (la - clat) * M
         sxx += int(math.floor(dx * dx * 1e3 + 0.5))
         syy += int(math.floor(dy * dy * 1e3 + 0.5))
@@ -690,8 +695,8 @@ def test_isotonic_calibration_matches_python_pava(spark):
 
 
 def test_emerging_hotspots_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
-    pts = spark.sql(Q._mk_points_sql("spark")).collect()
+    CORPUS.register_geometry_views(spark, SF)
+    pts = spark.sql(SPATIAL._mk_points_sql("spark")).collect()
     T, HOT = 8, 1282000
     counts = Counter()
     for r in pts:
@@ -811,7 +816,7 @@ def test_simhash_pairs_blocked_equals_brute(spark):
     blocked-join output == brute all-pairs Hamming filter."""
     from osm_to_netex_spark.functions import text as tx
 
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     fp = tx.simhash64("text", "spark")
     fps = {
         int(r["doc_id"]): int(r["fp"])
@@ -918,19 +923,19 @@ def test_rocchio_expand_matches_python_replay(spark):
 
 
 def test_raster_slope_matches_python_replay(spark):
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     ras = {
         (int(r["ix"]), int(r["iy"])): r["value"]
         for r in spark.sql(
             "with r as ("
-            + __import__("osm_to_netex_spark.plans.queries_r4", fromlist=["x"])._raster_cte("spark")
+            + __import__("osm_to_netex_spark.plans.queries.terrain", fromlist=["x"])._raster_cte("spark")
             + ") select ix, iy, value from r"
         ).collect()
     }
     n = 2 ** 12
     M = 111194.92664455873
     cy = 180.0 / n * M
-    cx = 360.0 / n * M * Q.COSLAT0
+    cx = 360.0 / n * M * CORPUS.COSLAT0
     want = {}
     for (ix, iy), v in ras.items():
         try:
@@ -953,8 +958,8 @@ def test_raster_slope_matches_python_replay(spark):
 def test_zonal_majority_is_modal_band(spark):
     """The reported band is the modal band: no other band in the zone's
     cover has a higher cell count (ties break to the lower band)."""
-    Q.register_geometry_views(spark, SF)
-    from osm_to_netex_spark.plans.queries_r4 import _raster_cte, _zonal_majority_sql
+    CORPUS.register_geometry_views(spark, SF)
+    from osm_to_netex_spark.plans.queries.terrain import _raster_cte, _zonal_majority_sql
 
     full = spark.sql(
         "with " + _zonal_majority_sql("spark").replace(
@@ -1005,7 +1010,7 @@ def test_l_moments_sums_past_int64(spark):
     """10^5 events of one type: Σ (i-1)(i-2)(i-3)·x_cents is ~10²³, past
     int64, as at sf0.1; the query must stay exact, not raise an overflow."""
     from osm_to_netex_spark.functions.portable import SPARK
-    from osm_to_netex_spark.plans.queries_r4 import _l_moments_sql
+    from osm_to_netex_spark.plans.queries.stats import _l_moments_sql
 
     events = spark.range(100_000).selectExpr(
         "'a' as event_type", "cast(id % 997 as double) / 10.0 as value", "id as event_id"

@@ -11,7 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import dedup
-from osm_to_netex_spark.plans import queries_r5 as R5
+from osm_to_netex_spark.plans.queries import (
+    retrieval as RETRIEVAL,
+    spatial as SPATIAL,
+    stats as STATS,
+    text as TEXT,
+    trajectory as TRAJECTORY,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -86,7 +92,7 @@ def test_ensemble_matches_python_replay(spark):
 
 
 def test_recall_row_invariants(spark):
-    row = R5.q_embed_recall(spark, SF).collect()[0]
+    row = RETRIEVAL.q_embed_recall(spark, SF).collect()[0]
     assert row["n_exact"] >= row["n_hit_ensemble"] >= row["n_hit_single"] >= 0
     assert 0.0 <= row["recall_single"] <= row["recall_ensemble"] <= 1.0
     # verified candidates are a subset of the exact pair set, so within
@@ -97,7 +103,7 @@ def test_recall_row_invariants(spark):
         emb, dim=64, n_bits=BITS, n_seeds=SEEDS, cos_threshold=THRESHOLD
     )
     n_ens = ens.where(
-        (F.col("id_a") % R5._RECALL_MOD == 0) & (F.col("id_b") % R5._RECALL_MOD == 0)
+        (F.col("id_a") % RETRIEVAL._RECALL_MOD == 0) & (F.col("id_b") % RETRIEVAL._RECALL_MOD == 0)
     ).count()
     dedup.unpersist_intermediates(ens)
     assert n_ens == row["n_hit_ensemble"]
@@ -108,25 +114,25 @@ def test_rbo_matches_python_replay(spark):
     rankings: truncated RBO@k = (1-p) Σ_{d=1..k} p^(d-1) X_d / d with X_d =
     |A_1..d ∩ B_1..d|, quantized per DEPTH term like the SQL."""
     from osm_to_netex_spark.operators import retrieval
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import corpus as CORPUS
 
-    Q.register_geometry_views(spark, SF)
-    bm = retrieval.bm25_topk(spark.table("documents"), Q._BM25_TERMS, k=R5._RBO_K)
+    CORPUS.register_geometry_views(spark, SF)
+    bm = retrieval.bm25_topk(spark.table("documents"), RETRIEVAL._BM25_TERMS, k=RETRIEVAL._RBO_K)
     a_ranked = [
         r["doc_id"]
         for r in sorted(bm.collect(), key=lambda r: (-r["score"], r["doc_id"]))
     ]
-    tf_r = spark.sql(R5._tf_topk_sql("spark"))
+    tf_r = spark.sql(RETRIEVAL._tf_topk_sql("spark"))
     b_by_rank = {r["rb"]: r["doc_id"] for r in tf_r.collect()}
     b_ranked = [b_by_rank[d] for d in sorted(b_by_rank)]
 
-    p, k = R5._RBO_P, R5._RBO_K
+    p, k = RETRIEVAL._RBO_P, RETRIEVAL._RBO_K
     want = 0
     for d in range(1, k + 1):
         x_d = len(set(a_ranked[:d]) & set(b_ranked[:d]))
         want += x_d * int(math.floor((1.0 - p) * p ** (d - 1) / d * 1e12 + 0.5))
 
-    row = R5.q_rbo_eval(spark, SF).collect()[0]
+    row = RETRIEVAL.q_rbo_eval(spark, SF).collect()[0]
     assert row["rbo_q12"] == want
     assert row["n_a"] == len(a_ranked) and row["n_b"] == len(b_ranked)
     assert row["n_overlap"] == len(set(a_ranked) & set(b_ranked))
@@ -142,7 +148,7 @@ def test_leakage_safe_split_invariants(spark):
 
     from osm_to_netex_spark.operators import sampling
 
-    rows = R5.q_leakage_safe_split(spark, SF).collect()
+    rows = TEXT.q_leakage_safe_split(spark, SF).collect()
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert len(rows) == n_docs
     by_group = defaultdict(set)
@@ -173,9 +179,9 @@ def test_line_raster_matches_python_replay(spark):
     segment's bbox cover and endpoints' cells are always emitted."""
     from collections import defaultdict
 
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import corpus as CORPUS
 
-    res = R5._LR_RES
+    res = SPATIAL._LR_RES
     n = 2 ** res
     cw, ch = 360.0 / n, 180.0 / n
 
@@ -184,7 +190,7 @@ def test_line_raster_matches_python_replay(spark):
         iy = min(max(int(math.floor((lat + 90.0) / 180.0 * n)), 0), n - 1)
         return ix, iy
 
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     polys = spark.table("geo_polys").collect()
     per_cell = defaultdict(lambda: [0, set()])
     for r in polys:
@@ -214,7 +220,7 @@ def test_line_raster_matches_python_replay(spark):
                         per_cell[key][1].add(r["zone_id"])
     got = {
         r["cell"]: (r["n_segs"], r["n_zones"])
-        for r in R5.q_line_raster(spark, SF).collect()
+        for r in SPATIAL.q_line_raster(spark, SF).collect()
     }
     want = {k: (v[0], len(v[1])) for k, v in per_cell.items()}
     assert got == want
@@ -241,7 +247,7 @@ def test_attribution_matches_python_replay(spark):
     by_user = {}
     for r in rows:
         by_user.setdefault(r["user_id"], []).append(r)
-    win = R5._ATTR_WIN_US
+    win = STATS._ATTR_WIN_US
     want = {}
     for u, evs in by_user.items():
         touches = [
@@ -266,7 +272,7 @@ def test_attribution_matches_python_replay(spark):
             r["first_touch"], r["first_ts_us"],
             r["last_touch"], r["last_ts_us"], r["n_touches"],
         )
-        for r in R5.q_attribution(spark, SF).collect()
+        for r in STATS.q_attribution(spark, SF).collect()
     }
     assert got == want
     assert any(v[0] != "none" for v in got.values())
@@ -291,19 +297,19 @@ def test_polyline_encode_matches_canonical_algorithm(spark):
     """The query's strings equal the canonical Google polyline encoder run
     in Python on the same rings — including the algorithm's published
     worked example."""
-    from osm_to_netex_spark.plans import queries as Q
+    from osm_to_netex_spark.plans.queries import corpus as CORPUS
 
     assert _py_polyline([(38.5, -120.2), (40.7, -120.95), (43.252, -126.453)]) == (
         "_p~iF~ps|U_ulLnnqC_mqNvxq`@"
     )
-    Q.register_geometry_views(spark, SF)
+    CORPUS.register_geometry_views(spark, SF)
     rings = {
         r["zone_id"]: list(r["pos_list"])
         for r in spark.table("geo_polys").collect()
     }
     got = {
         r["zone_id"]: (r["n_pts"], r["polyline"])
-        for r in R5.q_polyline_encode(spark, SF).collect()
+        for r in SPATIAL.q_polyline_encode(spark, SF).collect()
     }
     assert set(got) == set(rings)
     for zid, pl in rings.items():
@@ -312,7 +318,7 @@ def test_polyline_encode_matches_canonical_algorithm(spark):
 
 
 def test_polyline_roundtrip_exact_inverse(spark):
-    rows = R5.q_polyline_roundtrip(spark, SF).collect()
+    rows = SPATIAL.q_polyline_roundtrip(spark, SF).collect()
     assert rows and all(r["max_abs_err"] == 0 for r in rows)
 
 
@@ -351,7 +357,7 @@ def test_kendall_matches_python_replay(spark):
         want[s] = (n, c - d, round((c - d) / den, 9) if den else None)
     got = {
         r["source"]: (r["n"], r["c_minus_d"], r["tau_b"])
-        for r in R5.q_kendall(spark, SF).collect()
+        for r in STATS.q_kendall(spark, SF).collect()
     }
     assert set(got) == set(want)
     for s in want:
@@ -365,10 +371,9 @@ def test_match_quality_invariants(spark):
     count replayed in Python from the map_match output, totals agree."""
     from collections import defaultdict
 
-    from osm_to_netex_spark.plans import queries as Q
 
     mm = defaultdict(list)
-    for r in Q.q_map_match(spark, SF).collect():
+    for r in TRAJECTORY.q_map_match(spark, SF).collect():
         mm[r["traj_id"]].append((r["step"], r["zone_id"], r["seg_idx"], r["emis_mm"]))
     want = {}
     for t, steps in mm.items():
@@ -383,7 +388,7 @@ def test_match_quality_invariants(spark):
     got = {
         r["traj_id"]: (r["n_steps"], r["total_emis_mm"], r["n_switches"],
                        r["mean_emis_mm"])
-        for r in R5.q_match_quality(spark, SF).collect()
+        for r in TRAJECTORY.q_match_quality(spark, SF).collect()
     }
     assert got == want
 
@@ -403,7 +408,7 @@ def test_cdc_chunks_matches_python_replay_and_cdc_property(spark):
     }
 
     def chunks_of(text):
-        w, mask = R5._CDC_W, R5._CDC_MASK
+        w, mask = TEXT._CDC_W, TEXT._CDC_MASK
         bnd = [
             i for i in range(w, len(text) + 1)
             if _phash60_py(text[i - w : i]) % mask == 0
@@ -428,7 +433,7 @@ def test_cdc_chunks_matches_python_replay_and_cdc_property(spark):
         sum(1 for v in by_hash.values() if len(v) > 1),
         round(sum(ln for ln, _ in all_chunks) / len(all_chunks), 6),
     )
-    row = R5.q_cdc_chunks(spark, SF).collect()[0]
+    row = TEXT.q_cdc_chunks(spark, SF).collect()[0]
     assert (row["n_chunks"], row["n_distinct"], row["n_cross_doc"],
             row["mean_len"]) == want
 
@@ -461,7 +466,7 @@ def test_cdc_pairs_finds_planted_shared_passage(spark):
     )
     out = {
         (r["doc_a"], r["doc_b"]): r["n_shared"]
-        for r in spark.sql(R5._cdc_pairs_sql("spark")).collect()
+        for r in spark.sql(TEXT._cdc_pairs_sql("spark")).collect()
     }
     spark.catalog.dropTempView("documents")
     assert ("a", "b") in out and out[("a", "b")] >= 2

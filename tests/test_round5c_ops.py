@@ -13,7 +13,12 @@ import pyarrow.parquet as pq
 
 from osm_to_netex_spark.operators.graph import K_LINKS, HUB_MOD
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5c as R5C
+from osm_to_netex_spark.plans.queries import (
+    corpus as CORPUS,
+    graph as GRAPH,
+    stats as STATS,
+    terrain as TERRAIN,
+)
 
 SF = "/root/testdata/sf0.001"
 RES = 12
@@ -24,12 +29,12 @@ def _phash60(s: str) -> int:
 
 
 def _raster() -> dict[tuple[int, int], float]:
-    """Python replica of queries_r4._raster_cte's synthesized elevations."""
+    """Python replica of terrain._raster_cte's synthesized elevations."""
     n = 2**RES
-    iy_lo = int((Q.LAT_LO + 90.0) / 180.0 * n)
-    iy_hi = int((Q.LAT_HI + 90.0) / 180.0 * n)
-    ix_lo = int((Q.LON_LO + 180.0) / 360.0 * n)
-    ix_hi = int((Q.LON_HI + 180.0) / 360.0 * n)
+    iy_lo = int((CORPUS.LAT_LO + 90.0) / 180.0 * n)
+    iy_hi = int((CORPUS.LAT_HI + 90.0) / 180.0 * n)
+    ix_lo = int((CORPUS.LON_LO + 180.0) / 360.0 * n)
+    ix_hi = int((CORPUS.LON_HI + 180.0) / 360.0 * n)
     out = {}
     for iy in range(iy_lo, iy_hi + 1):
         for ix in range(ix_lo, ix_hi + 1):
@@ -44,7 +49,7 @@ def test_hillshade_matches_python_replay(spark):
         for r in Q.QUERIES["hillshade"][0](spark, SF).collect()
     }
     ras = _raster()
-    cx, cy = R5C._cell_sizes()
+    cx, cy = TERRAIN._cell_sizes()
     alt = math.radians(45.0)
     az = math.radians(315.0)
     sin_alt = math.sin(alt)
@@ -78,7 +83,7 @@ def test_hillshade_matches_python_replay(spark):
 def _python_flow_dir() -> dict[tuple[int, int], int]:
     ras = _raster()
     best = {}
-    offs = R5C._d8_offsets()
+    offs = TERRAIN._d8_offsets()
     for (ix, iy), v in ras.items():
         packed = None
         n_nb = 0
@@ -112,8 +117,8 @@ def test_flow_accum_matches_python_walk(spark):
     fdir = _python_flow_dir()
     step = {
         (ix, iy): (
-            ix + R5C._d8_offsets()[d][1],
-            iy + R5C._d8_offsets()[d][2],
+            ix + TERRAIN._d8_offsets()[d][1],
+            iy + TERRAIN._d8_offsets()[d][2],
         )
         for (ix, iy), d in fdir.items()
         if d >= 0
@@ -138,7 +143,7 @@ def test_flow_accum_strictly_descending_paths():
     for (ix, iy), d in fdir.items():
         if d < 0:
             continue
-        _, dx, dy, _ = R5C._d8_offsets()[d]
+        _, dx, dy, _ = TERRAIN._d8_offsets()[d]
         assert ras[(ix + dx, iy + dy)] < ras[(ix, iy)]
 
 
@@ -163,11 +168,11 @@ def test_harmonic_centrality_matches_python_bfs(spark):
                 adj[dst].add(doc_id)
     want = {}
     for src in docs:
-        if src % R5C._HC_MOD != 0:
+        if src % GRAPH._HC_MOD != 0:
             continue
         dist = {src: 0}
         frontier = [src]
-        for dd in range(1, R5C._HC_ROUNDS + 1):
+        for dd in range(1, GRAPH._HC_ROUNDS + 1):
             nxt = []
             for u in frontier:
                 for v in adj[u]:
@@ -177,7 +182,7 @@ def test_harmonic_centrality_matches_python_bfs(spark):
             frontier = nxt
         want[src] = (
             len(dist) - 1,
-            sum(R5C._HC_W[dd] for dd in dist.values() if dd > 0),
+            sum(GRAPH._HC_W[dd] for dd in dist.values() if dd > 0),
         )
     assert got == want
 
@@ -197,7 +202,7 @@ def test_exp_smooth_matches_sequential_recurrence(spark):
     want = {}
     for uid, rows in by_user.items():
         rows.sort(key=lambda e: (e["ts"], e["event_id"]))
-        window = rows[-R5C._ES_M:]
+        window = rows[-STATS._ES_M:]
         xq = [math.floor(e["value"] * 1.0e6 + 0.5) for e in window]
         m = len(xq)
         # closed form

@@ -11,8 +11,11 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5c as R5C
-from osm_to_netex_spark.plans import queries_r5d as R5D
+from osm_to_netex_spark.plans.queries import (
+    stats as STATS,
+    terrain as TERRAIN,
+    text as TEXT,
+)
 
 from tests.test_round5c_ops import _raster  # noqa: F401  (shared replica)
 
@@ -20,7 +23,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _observer():
-    ix_lo, ix_hi, iy_lo, iy_hi = R5D._grid_bounds()
+    ix_lo, ix_hi, iy_lo, iy_hi = TERRAIN._grid_bounds()
     return (ix_lo + ix_hi) // 2, (iy_lo + iy_hi) // 2
 
 
@@ -52,8 +55,8 @@ def test_viewshed_matches_python_los(spark):
     }
     ras = _raster()
     ox, oy = _observer()
-    cx_m, cy_m = R5C._cell_sizes()
-    z_obs = ras[(ox, oy)] + R5D._OBS_H
+    cx_m, cy_m = TERRAIN._cell_sizes()
+    z_obs = ras[(ox, oy)] + TERRAIN._OBS_H
 
     def dist(jx, jy):
         return math.sqrt(
@@ -83,7 +86,7 @@ def test_cost_distance_matches_python_dijkstra(spark):
     }
     ras = _raster()
     src = min(ras, key=lambda c: (ras[c], c[0], c[1]))
-    offs = R5C._d8_offsets()
+    offs = TERRAIN._d8_offsets()
     dist = {src: 0}
     pq_ = [(0, src)]
     while pq_:
@@ -111,7 +114,7 @@ def test_rake_matches_python_replay(spark):
     for r in Q.QUERIES["rake_keyphrases"][0](spark, SF).collect():
         got[r["doc_id"]][r["rk"]] = (r["phrase"], r["score_q6"])
     docs = pq.read_table(f"{SF}/documents.parquet").to_pylist()
-    stop = set(R5D._RAKE_STOP)
+    stop = set(TEXT._RAKE_STOP)
     want = defaultdict(dict)
     for doc in docs:
         toks = [t for t in re.split(r"[^a-z0-9]+", doc["text"].lower()) if t]
@@ -135,7 +138,7 @@ def test_rake_matches_python_replay(spark):
             for ph in phrases
         ]
         scored.sort(key=lambda x: (-x[1], x[0]))
-        for rk, (ph, sc) in enumerate(scored[: R5D._RAKE_TOPK], 1):
+        for rk, (ph, sc) in enumerate(scored[: TEXT._RAKE_TOPK], 1):
             want[doc["doc_id"]][rk] = (ph, sc)
     assert dict(got) == dict(want)
 
@@ -157,10 +160,10 @@ def test_sprt_matches_python_walk(spark):
         rows.sort(key=lambda e: (e["ts"], e["event_id"]))
         llr, h1, h0 = 0, None, None
         for i, e in enumerate(rows, 1):
-            llr += R5D._L1_Q9 if e["value"] > R5D._SPRT_THRESH else R5D._L0_Q9
-            if llr >= R5D._A_Q9 and h1 is None:
+            llr += STATS._L1_Q9 if e["value"] > STATS._SPRT_THRESH else STATS._L0_Q9
+            if llr >= STATS._A_Q9 and h1 is None:
                 h1 = i
-            if llr <= R5D._B_Q9 and h0 is None:
+            if llr <= STATS._B_Q9 and h0 is None:
                 h0 = i
         big = 1 << 62
         dec = (

@@ -6,9 +6,7 @@ import math
 from collections import defaultdict
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5c as R5C
-from osm_to_netex_spark.plans import queries_r5d as R5D
-from osm_to_netex_spark.plans import queries_r5e as R5E
+from osm_to_netex_spark.plans.queries import terrain as TERRAIN
 
 from tests.test_round5c_ops import _raster  # noqa: F401
 
@@ -16,15 +14,15 @@ SF = "/root/testdata/sf0.001"
 
 
 def _python_ways():
-    ix_lo, ix_hi, iy_lo, iy_hi = R5D._grid_bounds()
+    ix_lo, ix_hi, iy_lo, iy_hi = TERRAIN._grid_bounds()
     ways = {}
     for iy in range(iy_lo, iy_hi + 1):
-        if iy % R5E._WS_H_EVERY == 0:
+        if iy % TERRAIN._WS_H_EVERY == 0:
             ways[10000 + iy] = [
                 iy * 100000 + ix for ix in range(ix_lo, ix_hi + 1)
             ]
     for ix in range(ix_lo, ix_hi + 1):
-        if ix % R5E._WS_V_EVERY == 0:
+        if ix % TERRAIN._WS_V_EVERY == 0:
             ways[20000 + ix] = [
                 iy * 100000 + ix for iy in range(iy_lo, iy_hi + 1)
             ]
@@ -69,7 +67,7 @@ def test_local_moran_matches_python_replay(spark):
     ras = {c: math.floor(v * 1.0e3 + 0.5) for c, v in _raster().items()}
     n, s = len(ras), sum(ras.values())
     z = {c: v * n - s for c, v in ras.items()}
-    offs = [(dx, dy) for _, dx, dy, _ in R5C._d8_offsets()]
+    offs = [(dx, dy) for _, dx, dy, _ in TERRAIN._d8_offsets()]
     want = {}
     for (ix, iy), zc in z.items():
         nbs = [

@@ -9,7 +9,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5f as R5F
+from osm_to_netex_spark.plans.queries import stats as STATS, tpch as TPCH
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,7 +32,7 @@ def test_compaction_plan_matches_python_replay(spark):
         bins = defaultdict(list)
         for doc in rows:
             b = len(doc["text"])
-            bins[cum // R5F._CP_TARGET].append((doc["doc_id"], b))
+            bins[cum // TPCH._CP_TARGET].append((doc["doc_id"], b))
             cum += b
         for bid, files in bins.items():
             want[(src, bid)] = (
@@ -81,7 +81,7 @@ def test_hbos_matches_python_replay(spark):
         for eid, vb, hb, db in feats
     ]
     scored.sort(key=lambda x: (-x[1], x[0]))
-    assert got == scored[: R5F._HBOS_TOPK]
+    assert got == scored[: STATS._HBOS_TOPK]
 
 
 def test_path_trigrams_matches_python_replay(spark):
@@ -102,5 +102,5 @@ def test_path_trigrams_matches_python_replay(spark):
     want = sorted(
         ((t1, t2, t3, n) for (t1, t2, t3), n in counts.items()),
         key=lambda x: (-x[3], x[0], x[1], x[2]),
-    )[: R5F._PT_TOPK]
+    )[: STATS._PT_TOPK]
     assert got == want

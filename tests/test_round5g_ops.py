@@ -9,7 +9,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5g as R5G
+from osm_to_netex_spark.plans.queries import stats as STATS
 
 SF = "/root/testdata/sf0.001"
 
@@ -85,7 +85,7 @@ def test_eb_shrinkage_matches_python_replay(spark):
     agg = defaultdict(lambda: [0, 0])
     for e in ev:
         agg[e["user_id"]][0] += 1
-        agg[e["user_id"]][1] += 1 if e["value"] > R5G._CONV_THRESH else 0
+        agg[e["user_id"]][1] += 1 if e["value"] > STATS._CONV_THRESH else 0
     rated = {u: (n, x, _tdiv(x * 1000000, n)) for u, (n, x) in agg.items()}
     g = len(rated)
     sr = sum(r[2] for r in rated.values())

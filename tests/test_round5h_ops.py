@@ -8,7 +8,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5h as R5H
+from osm_to_netex_spark.plans.queries import stats as STATS
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,7 +35,7 @@ def test_t_closeness_matches_python_replay(spark):
             abs(seg_counts.get(s, 0) * big_n - g * n_c)
             for s, g in glob.items()
         )
-        t_close = 1 if num * R5H._TC_T_DEN <= R5H._TC_T_NUM * 2 * n_c * big_n else 0
+        t_close = 1 if num * STATS._TC_T_DEN <= STATS._TC_T_NUM * 2 * n_c * big_n else 0
         want[qi] = (n_c, num, t_close)
     assert got == want
     # the audit must see both compliant and violating classes at sf0.001

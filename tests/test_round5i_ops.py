@@ -3,7 +3,7 @@ spatial structure functions (semivariogram + Moran correlogram).
 """
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5i as R5I
+from osm_to_netex_spark.plans.queries import terrain as TERRAIN
 
 from tests.test_round5c_ops import _raster
 
@@ -26,10 +26,10 @@ def test_spatial_structure_matches_python_replay(spark):
     ctr = {c: v - mean_t for c, v in ras.items()}
     scc = sum(c * c for c in ctr.values())
     want = {}
-    for h in range(1, R5I._SS_MAX_LAG + 1):
+    for h in range(1, TERRAIN._SS_MAX_LAG + 1):
         dsq = cc = np = 0
         for (ix, iy), v in ras.items():
-            for dx, dy in R5I._ring_offsets(h):
+            for dx, dy in TERRAIN._ring_offsets(h):
                 o = (ix + dx, iy + dy)
                 if o in ras:
                     np += 1

@@ -8,7 +8,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5j as R5J
+from osm_to_netex_spark.plans.queries import retrieval as RETRIEVAL, spatial as SPATIAL
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,7 +22,7 @@ def test_embedding_drift_matches_python_replay(spark):
         (r["label_a"], r["label_b"]): r["centroid_cos"]
         for r in Q.QUERIES["embedding_drift"][0](spark, SF).collect()
     }
-    sums = defaultdict(lambda: [0] * R5J._DRIFT_DIM)
+    sums = defaultdict(lambda: [0] * RETRIEVAL._DRIFT_DIM)
     for e in _embs():
         for i, v in enumerate(e["embedding"]):
             sums[e["label"]][i] += math.floor(float(v) * 1.0e3 + 0.5)
@@ -64,7 +64,7 @@ def test_bq_search_matches_python_replay(spark):
         return dot / (math.sqrt(na) * math.sqrt(nb))
 
     want = {}
-    queries = [vid for vid in embs if vid % R5J._BQ_QUERY_MOD == 0]
+    queries = [vid for vid in embs if vid % RETRIEVAL._BQ_QUERY_MOD == 0]
     for qid in queries:
         qlo, qhi = sig[qid]
         ham = sorted(
@@ -74,19 +74,19 @@ def test_bq_search_matches_python_replay(spark):
                 if tid != qid
             )
         )
-        short = [tid for _, tid in ham[: R5J._BQ_SHORTLIST]]
+        short = [tid for _, tid in ham[: RETRIEVAL._BQ_SHORTLIST]]
         rerank = sorted(
             short,
             key=lambda t: (-round(cos(embs[qid], embs[t]), 6), t),
-        )[: R5J._BQ_K]
+        )[: RETRIEVAL._BQ_K]
         brute = sorted(
             (t for t in embs if t != qid),
             key=lambda t: (-round(cos(embs[qid], embs[t]), 6), t),
-        )[: R5J._BQ_K]
+        )[: RETRIEVAL._BQ_K]
         want[qid] = len(set(rerank) & set(brute))
     assert got == want
     # BQ on sign bits should recover most of the exact top-10
-    assert sum(got.values()) >= 0.5 * R5J._BQ_K * len(queries)
+    assert sum(got.values()) >= 0.5 * RETRIEVAL._BQ_K * len(queries)
 
 
 def test_densify_matches_python_replay(spark):
@@ -112,7 +112,7 @@ def test_densify_matches_python_replay(spark):
             )
         )
 
-    step_mm = int(R5J._DN_STEP_M * 1000)
+    step_mm = int(SPATIAL._DN_STEP_M * 1000)
     want = {}
     for r in rows:
         pl = r["pos_list"]

@@ -5,7 +5,7 @@ Strahler stream order, watershed basin labeling.
 from collections import defaultdict
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5c as R5C
+from osm_to_netex_spark.plans.queries import terrain as TERRAIN
 
 from tests.test_round5c_ops import _python_flow_dir
 
@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 def _flow_step():
     fdir = _python_flow_dir()
-    offs = R5C._d8_offsets()
+    offs = TERRAIN._d8_offsets()
     return fdir, {
         (ix, iy): (ix + offs[d][1], iy + offs[d][2])
         for (ix, iy), d in fdir.items()

@@ -8,8 +8,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5c as R5C
-from osm_to_netex_spark.plans import queries_r5l as R5L
+from osm_to_netex_spark.plans.queries import stats as STATS, terrain as TERRAIN
 
 from tests.test_round5c_ops import _raster
 
@@ -22,7 +21,7 @@ def test_terrain_indices_match_python_replay(spark):
         for r in Q.QUERIES["terrain_indices"][0](spark, SF).collect()
     }
     ras = {c: math.floor(v * 1.0e3 + 0.5) for c, v in _raster().items()}
-    offs = [(dx, dy) for _, dx, dy, _ in R5C._d8_offsets()]
+    offs = [(dx, dy) for _, dx, dy, _ in TERRAIN._d8_offsets()]
     want = {}
     for (ix, iy), v in ras.items():
         nbs = [
@@ -62,15 +61,15 @@ def test_brier_decomp_matches_python_replay(spark):
     agg = defaultdict(lambda: [0, 0])
     for e in ev:
         agg[e["user_id"]][0] += 1
-        agg[e["user_id"]][1] += 1 if e["value"] > R5L._CONV_THRESH else 0
+        agg[e["user_id"]][1] += 1 if e["value"] > STATS._CONV_THRESH else 0
     p_q3 = {u: _tdiv(x * 1000, n) for u, (n, x) in agg.items()}
     bins = defaultdict(lambda: [0, 0, 0])  # n_k, sp, sy
     for e in ev:
         p = p_q3[e["user_id"]]
-        b = min(_tdiv(p, 100), R5L._BR_BINS - 1)
+        b = min(_tdiv(p, 100), STATS._BR_BINS - 1)
         bins[b][0] += 1
         bins[b][1] += p
-        bins[b][2] += 1 if e["value"] > R5L._CONV_THRESH else 0
+        bins[b][2] += 1 if e["value"] > STATS._CONV_THRESH else 0
     n = sum(v[0] for v in bins.values())
     y_all = sum(v[2] for v in bins.values())
     y_q6 = _tdiv(y_all * 1000000, n)

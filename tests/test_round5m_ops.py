@@ -8,7 +8,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5m as R5M
+from osm_to_netex_spark.plans.queries import text as TEXT
 
 from tests.test_round5c_ops import _raster
 from tests.test_round5e_ops import _python_ways
@@ -61,7 +61,7 @@ def test_novelty_curve_matches_python_replay(spark):
     per_doc = {}
     for doc in docs:
         toks = [t for t in re.split(r"[^a-z0-9]+", doc["text"].lower()) if t]
-        k = R5M._NV_SHINGLE
+        k = TEXT._NV_SHINGLE
         per_doc[doc["doc_id"]] = {
             " ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)
         }

@@ -7,7 +7,7 @@ import math
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5n as R5N
+from osm_to_netex_spark.plans.queries import retrieval as RETRIEVAL
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,7 +20,7 @@ def test_mutual_knn_matches_python_replay(spark):
     embs = {
         e["vec_id"]: [float(v) for v in e["embedding"]]
         for e in pq.read_table(f"{SF}/embeddings.parquet").to_pylist()
-        if e["vec_id"] % R5N._MK_MOD == 0
+        if e["vec_id"] % RETRIEVAL._MK_MOD == 0
     }
 
     def cos(a, b):
@@ -40,7 +40,7 @@ def test_mutual_knn_matches_python_replay(spark):
         ranked = sorted(
             ((round(cos(v, embs[t]), 6), t) for t in embs if t != src),
             key=lambda x: (-x[0], x[1]),
-        )[: R5N._MK_K]
+        )[: RETRIEVAL._MK_K]
         topk[src] = {t: c for c, t in ranked}
     want = {}
     for a, nbrs in topk.items():

@@ -9,7 +9,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5c as R5C
+from osm_to_netex_spark.plans.queries import terrain as TERRAIN
 
 from tests.test_round5c_ops import _raster
 
@@ -26,7 +26,7 @@ def test_lcp_path_matches_python_dijkstra_backtrack(spark):
     ]
     ras = _raster()
     src = min(ras, key=lambda c: (ras[c], c[0], c[1]))
-    offs = R5C._d8_offsets()
+    offs = TERRAIN._d8_offsets()
     dist = {src: 0}
     pq_ = [(0, src)]
     while pq_:

@@ -10,7 +10,7 @@ import pyarrow.parquet as pq
 
 from osm_to_netex_spark.operators.graph import HUB_MOD, K_LINKS
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5q as R5Q
+from osm_to_netex_spark.plans.queries import stats as STATS, terrain as TERRAIN
 
 from tests.test_round5c_ops import _raster
 
@@ -45,7 +45,7 @@ def test_anisotropy_matches_python_replay(spark):
     }
     ras = {c: math.floor(v * 1.0e3 + 0.5) for c, v in _raster().items()}
     want = defaultdict(lambda: [0, 0])
-    for h in range(1, R5Q._AN_MAX_LAG + 1):
+    for h in range(1, TERRAIN._AN_MAX_LAG + 1):
         for dx in range(-h, h + 1):
             for dy in range(-h, h + 1):
                 if max(abs(dx), abs(dy)) != h:
@@ -120,14 +120,14 @@ def test_power_analysis_matches_python_replay(spark):
     agg = defaultdict(list)
     for e in ev:
         agg[e["event_type"]].append(math.floor(e["value"] * 1.0e3 + 0.5))
-    z2 = (R5Q._PW_Z_ALPHA + R5Q._PW_Z_BETA) ** 2
+    z2 = (STATS._PW_Z_ALPHA + STATS._PW_Z_BETA) ** 2
     want = {}
     for et, xs in agg.items():
         n, sx = len(xs), sum(xs)
         sxx = sum(x * x for x in xs)
         var = (sxx - sx * sx / n) / (n - 1)
         mean = sx / n
-        delta = mean * (R5Q._PW_MDE_PCT / 100.0)
+        delta = mean * (STATS._PW_MDE_PCT / 100.0)
         want[et] = (n, math.ceil(2.0 * z2 * var / (delta * delta)))
     assert got == want
     # sanity: detecting a smaller relative effect on noisier data needs

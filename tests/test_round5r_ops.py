@@ -10,7 +10,7 @@ import pyarrow.parquet as pq
 
 from osm_to_netex_spark.operators.graph import HUB_MOD, K_LINKS
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5r as R5R
+from osm_to_netex_spark.plans.queries import graph as GRAPH
 
 SF = "/root/testdata/sf0.001"
 
@@ -73,10 +73,10 @@ def test_hits_matches_python_replay(spark):
             dst = _phash60(f"lnk:{doc_id}:{j}") % mod
             if dst != doc_id:
                 edges.add((doc_id, dst))
-    S = R5R._HITS_SCALE
+    S = GRAPH._HITS_SCALE
     h = {d: S for d in docs}
     a = {}
-    for _ in range(R5R._HITS_ROUNDS):
+    for _ in range(GRAPH._HITS_ROUNDS):
         raw_a = defaultdict(int)
         for u, v in edges:
             raw_a[v] += h.get(u, 0)
@@ -96,4 +96,4 @@ def test_hits_matches_python_replay(spark):
     # the deliberate in-degree skew (HUB_MOD) must surface as high
     # authority on the hub set
     top_auth = max(want.values(), key=lambda x: x[1])[1]
-    assert top_auth == R5R._HITS_SCALE
+    assert top_auth == GRAPH._HITS_SCALE

@@ -6,7 +6,7 @@ import math
 from collections import defaultdict
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5t as R5T
+from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,9 +24,9 @@ def test_facility_select_matches_python_greedy(spark):
         for r in spark.sql("select point_id, lat, lon from geo_points")
         .collect()
     ]
-    n = 2**R5T._FS_RES
-    m_deg = R5T._M_PER_DEG
-    coslat = Q.COSLAT0
+    n = 2**SPATIAL._FS_RES
+    m_deg = CORPUS._M_PER_DEG
+    coslat = CORPUS.COSLAT0
 
     def cell(lat, lon):
         return (
@@ -36,7 +36,7 @@ def test_facility_select_matches_python_greedy(spark):
 
     cover = defaultdict(set)
     cand = {cell(lat, lon) for _, lat, lon in pts}
-    r2_mm2 = int(R5T._FS_RADIUS_M**2 * 1.0e6)
+    r2_mm2 = int(SPATIAL._FS_RADIUS_M**2 * 1.0e6)
     for pid, lat, lon in pts:
         px, py = cell(lat, lon)
         for cx, cy in cand:
@@ -50,7 +50,7 @@ def test_facility_select_matches_python_greedy(spark):
                 cover[(cx, cy)].add(pid)
     covered = set()
     want = []
-    for rank in range(1, R5T._FS_K + 1):
+    for rank in range(1, SPATIAL._FS_K + 1):
         best = max(
             cover.items(),
             key=lambda kv: (len(kv[1] - covered), -kv[0][0], -kv[0][1]),

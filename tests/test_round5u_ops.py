@@ -9,7 +9,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans import queries_r5u as R5U
+from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,20 +20,20 @@ def _phash60(s: str) -> int:
 
 def _cells():
     ev = pq.read_table(f"{SF}/events.parquet").to_pylist()
-    n = 2**R5U._LQ_RES
+    n = 2**SPATIAL._LQ_RES
     counts = defaultdict(int)
     for e in ev:
         eid = e["event_id"]
-        lat = Q.LAT_LO + (_phash60(f"tr:lat:{eid}") / 2.0**60) * (
-            Q.LAT_HI - Q.LAT_LO
+        lat = CORPUS.LAT_LO + (_phash60(f"tr:lat:{eid}") / 2.0**60) * (
+            CORPUS.LAT_HI - CORPUS.LAT_LO
         )
-        lon = Q.LON_LO + (_phash60(f"tr:lon:{eid}") / 2.0**60) * (
-            Q.LON_HI - Q.LON_LO
+        lon = CORPUS.LON_LO + (_phash60(f"tr:lon:{eid}") / 2.0**60) * (
+            CORPUS.LON_HI - CORPUS.LON_LO
         )
         ix = int(math.floor((lon + 180.0) / 360.0 * n))
         iy = int(math.floor((lat + 90.0) / 180.0 * n))
         # functions/geo.py quad_pack layout: res·2^58 + iy·2^29 + ix
-        cell = R5U._LQ_RES * 2**58 + iy * 2**29 + ix
+        cell = SPATIAL._LQ_RES * 2**58 + iy * 2**29 + ix
         counts[(cell, e["event_type"])] += 1
     return counts
 

@@ -1,12 +1,12 @@
 """Histogram quantile sketch + z-score anomaly: semantics on testdata."""
 
-from osm_to_netex_spark.plans import queries as Q
+from osm_to_netex_spark.plans.queries import stats as STATS, text as TEXT, tpch as TPCH
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_hist_quantiles_bracket_exact(spark):
-    rows = Q.q_hist_quantiles(spark, SF).collect()
+    rows = STATS.q_hist_quantiles(spark, SF).collect()
     assert len(rows) == 5  # one per event_type
     for r in rows:
         # estimates must be finite, ordered, and within one bucket width of
@@ -21,7 +21,7 @@ def test_hist_quantiles_bracket_exact(spark):
 
 
 def test_anomaly_flags_are_3_sigma(spark):
-    out = Q.q_anomaly(spark, SF).collect()
+    out = STATS.q_anomaly(spark, SF).collect()
     assert all(abs(r.z) > 3.0 for r in out)
     # the synthetic value distribution is heavy-tailed → outliers exist
     assert len(out) > 0
@@ -31,7 +31,7 @@ def test_anomaly_flags_are_3_sigma(spark):
 
 
 def test_winsorize_bounds_and_clipping(spark):
-    rows = Q.q_winsorize(spark, SF).collect()
+    rows = STATS.q_winsorize(spark, SF).collect()
     assert all(0.0 <= r.scaled <= 1.0 for r in rows)
     # the tails must actually clip: some rows at exactly 0 and exactly 1
     assert any(r.scaled == 0.0 for r in rows)
@@ -39,7 +39,7 @@ def test_winsorize_bounds_and_clipping(spark):
 
 
 def test_incremental_rollup_merge_equals_full(spark):
-    rows = Q.q_incremental_rollup(spark, SF).collect()
+    rows = STATS.q_incremental_rollup(spark, SF).collect()
     assert len(rows) == 5
     for r in rows:
         assert r.n_merged == r.n_full
@@ -64,13 +64,13 @@ def test_bpe_pairs_reference(spark):
         for i in range(len(w) - 1):
             counts[w[i:i+2]] += f
     expect = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
-    got = [(r.pair, r.pair_count) for r in Q.q_bpe_pairs(spark, SF).collect()]
+    got = [(r.pair, r.pair_count) for r in TEXT.q_bpe_pairs(spark, SF).collect()]
     assert got == expect
 
 
 def test_cdc_scd2_consistency(spark):
-    cdc = {r.k: r for r in Q.q_cdc_apply(spark, SF).collect()}
-    scd = Q.q_scd2(spark, SF).collect()
+    cdc = {r.k: r for r in TPCH.q_cdc_apply(spark, SF).collect()}
+    scd = TPCH.q_scd2(spark, SF).collect()
     # deleted keys (key % 7 == 0 with multi-version) are absent from the
     # applied state but present in history
     hist_keys = {r.k for r in scd}
@@ -85,7 +85,7 @@ def test_cdc_scd2_consistency(spark):
 
 
 def test_eqfreq_bins_are_balanced(spark):
-    rows = Q.q_eqfreq_bins(spark, SF).collect()
+    rows = STATS.q_eqfreq_bins(spark, SF).collect()
     import collections
     per = collections.Counter((r.event_type, r.bucket) for r in rows)
     by_type = collections.defaultdict(list)
@@ -98,7 +98,7 @@ def test_eqfreq_bins_are_balanced(spark):
 
 
 def test_cohort_and_transitions_shape(spark):
-    coh = Q.q_cohort(spark, SF).collect()
+    coh = STATS.q_cohort(spark, SF).collect()
     # offset 0 row exists for every cohort and counts all its users
     by_cohort = {}
     for r in coh:
@@ -107,7 +107,7 @@ def test_cohort_and_transitions_shape(spark):
         assert 0 in offs
         assert all(offs[0] >= n for o, n in offs.items())  # retention <= cohort size
 
-    tr = Q.q_transitions(spark, SF).collect()
+    tr = STATS.q_transitions(spark, SF).collect()
     n_events = spark.read.parquet(f"{SF}/events.parquet").count()
     n_users = spark.read.parquet(f"{SF}/events.parquet").select("user_id").distinct().count()
     # each user's chain has len-1 transitions
@@ -130,7 +130,7 @@ def test_rolling_stats_frame_boundary(spark):
         "event_id", "cast(ts as timestamp_ntz) as ts", "user_id",
         "event_type", "value", "props"
     ).createOrReplaceTempView("events")
-    rows = {r.event_id: r for r in spark.sql(Q._rolling_stats_sql("spark")).collect()}
+    rows = {r.event_id: r for r in spark.sql(STATS._rolling_stats_sql("spark")).collect()}
     assert rows[2].n_1h == 2 and rows[2].sum_1h_q == 3_750_000
     assert rows[3].n_1h == 2 and rows[3].sum_1h_q == 6_250_000
     assert rows[4].n_1h == 1 and rows[4].sum_1h_q == 7_000_000

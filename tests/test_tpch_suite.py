@@ -1,4 +1,4 @@
-"""TPC-H completion shapes (queries_r5b) vs exact Python replays
+"""TPC-H completion shapes (plans/queries/tpch.py) vs exact Python replays
 (LANDING.md step 5): oracle agreement proves cross-engine consistency;
 these replays prove the math on the sf0.001 corpus with plain Python —
 no SQL engine on the replay side.

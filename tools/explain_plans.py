@@ -293,7 +293,6 @@ def main():
     # explain("formatted") prints the fully-resolved static plan with
     # [codegen id] annotations instead of an unexecuted AdaptiveSparkPlan
     spark = get_spark(
-        cores=8,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.adaptive.enabled": "false",
@@ -318,7 +317,7 @@ def main():
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(
-            "# Physical plans — headline queries (sf0.001, local[8])\n\n"
+            f"# Physical plans — headline queries (sf0.001, {spark.sparkContext.master})\n\n"
             "Generated by `python tools/explain_plans.py`; assertions in the\n"
             "same file gate pushdown / broadcast / codegen / no-row-Python.\n\n"
             + "\n".join(sections)

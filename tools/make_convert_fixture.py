@@ -37,7 +37,7 @@ def main() -> None:
     from osm_to_netex_spark.session import get_spark
     from osm_to_netex_spark.sources import documents as docs_src
 
-    spark = get_spark(cores=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     corpus = docs_src.synthesize_corpus(spark, **PARAMS)
     tmp = tempfile.mkdtemp(prefix="convert_fixture_")
     corpus.coalesce(1).write.mode("overwrite").parquet(tmp)
