@@ -3,7 +3,8 @@
 Prints ONE JSON line:
   {"metric": "...", "value": <docs/sec flagship>, "unit": "docs/sec",
    "queries": {...per-query seconds...}, "sf": <sf>,
-   "host": {"cpus": 32, "mem_available_gb": ..., "gb_per_core": 0.75},
+   "host": {"cpus": 32, "mem_available_gb": ..., "gb_per_core": 0.75,
+            "spark": "4.1.2", "java": "...", "git_sha": "...", "git_dirty": false},
    "scaling": {"cores_lo": 2, "docs_per_sec_lo": ..., "cores_hi": 8,
                "docs_per_sec_hi": ..., "efficiency": ...}
               | {"skipped": "<reason>"}}
@@ -32,7 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from osm_to_netex_spark.session import get_spark  # noqa: E402
-from perfbench.harness import mem_available_bytes  # noqa: E402
+from perfbench.harness import host_facts, mem_available_bytes  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = sorted(os.sched_getaffinity(0))
@@ -272,19 +273,24 @@ def time_query(spark, builder, sf_dir: str) -> float:
     return dt
 
 
-def per_query_timings() -> dict:
+def per_query_timings(spark) -> dict:
     """Per-query rows at $SPARK_GRAFT_SF_DIR — run AFTER the flagship
     measurement: r4 shipped a headline sampled behind the 222-query
     phase and read 542.8k vs 590-608k flagship-only on the same day
     (VERDICT r4 task 3); the driver headline now reads clean.
     """
-    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     from osm_to_netex_spark.plans import queries as Q
 
     names = [n for n in Q.QUERIES if n not in Q.BENCH_EXCLUDED]
-    timings = {n: round(time_query(spark, Q.QUERIES[n][0], SF_DIR), 3) for n in names}
-    spark.stop()
-    return timings
+    return {n: round(time_query(spark, Q.QUERIES[n][0], SF_DIR), 3) for n in names}
+
+
+def provenance(spark, host: dict) -> dict:
+    """What produced the numbers: the session's Spark and Java versions and
+    this checkout's git sha and dirty flag (the facts perfbench records)."""
+    plan = {"cores": host["cpus"], "mem_available_gb": host["mem_available_gb"], "heap_gb": None}
+    facts = host_facts(plan, [], spark)
+    return {k: facts[k] for k in ("spark", "java", "git_sha", "git_dirty")}
 
 
 def main():
@@ -341,7 +347,10 @@ def main():
         )
 
     # per-query rows AFTER the headline/scaling measurements
-    timings = per_query_timings()
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
+    host.update(provenance(spark, host))
+    timings = per_query_timings(spark)
+    spark.stop()
 
     print(json.dumps({
         "metric": "docs/sec flagship: synthetic interleaved corpus -> extract -> "

@@ -168,24 +168,31 @@ def document_tile_assign(
 
     Input: extract.extract_nodes output (doc_id, lat, lon, …).
     Output: (doc_id, res, h3_cells, s2_cells) with sorted distinct cells.
+
+    One pass and one shuffle for all resolutions: each node's hex cells
+    (staged form, geo.hex_cells_staged) and quad cells are computed once,
+    exploded to one (res, hc, qc) struct per resolution, and grouped by
+    (doc_id, res).
     """
-    out = None
-    for r in resolutions:
-        per_res = (
-            documents_nodes.select(
-                "doc_id",
-                F.lit(r).alias("res"),
-                F.expr(geo.hex_cell("lat", "lon", r, SPARK)).alias("hc"),
-                F.expr(geo.quad_cell("lat", "lon", r, SPARK)).alias("qc"),
-            )
-            .groupBy("doc_id", "res")
-            .agg(
-                F.array_sort(F.collect_set("hc")).alias("h3_cells"),
-                F.array_sort(F.collect_set("qc")).alias("s2_cells"),
-            )
+    staged, hex_cols = geo.hex_cells_staged(
+        documents_nodes.select("doc_id", "lat", "lon"), "lat", "lon", resolutions
+    )
+    per_res = F.array(*[
+        F.struct(
+            F.lit(r).alias("res"),
+            F.col(h).alias("hc"),
+            geo.quad_cell_col("lat", "lon", r).alias("qc"),
         )
-        out = per_res if out is None else out.unionByName(per_res)
-    return out
+        for r, h in zip(resolutions, hex_cols)
+    ])
+    return (
+        staged.select("doc_id", F.explode(per_res).alias("c"))
+        .groupBy("doc_id", F.col("c.res").alias("res"))
+        .agg(
+            F.array_sort(F.collect_set("c.hc")).alias("h3_cells"),
+            F.array_sort(F.collect_set("c.qc")).alias("s2_cells"),
+        )
+    )
 
 
 def compact_cover(

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .checks import Check
+
 TARGETS = ("TariffZone", "FareZone", "TopographicPlace")  # D1 dispatch set
 DEFAULT_VERSION = "1"
 
@@ -77,10 +79,10 @@ _NAME = _last_match_prefix("name")
 _NAME_LANG = f"substring_index({_last_key_prefix('name')}, ':', -1)"
 
 
-def validate_required(assembled: DataFrame, target_entity: str) -> DataFrame:
-    """V1 — (way_id, missing_tag) rows for every required tag absent.
+def required_tags_check(target_entity: str) -> Check:
+    """V1 — offenders (way_id, missing_tag), one per required tag absent.
 
-    Callers fail the job when nonempty, mirroring checkTagErrors
+    The job fails when there are any, mirroring checkTagErrors
     (OsmToNetexMapper.java:351-357) which throws one exception carrying all
     suppressed errors.
     """
@@ -95,48 +97,59 @@ def validate_required(assembled: DataFrame, target_entity: str) -> DataFrame:
             "codespace": _eq("codespace"),
             "reference": _last_match_prefix("reference"),
         }
-    checks = None
-    for tag, expr in required.items():
-        miss = assembled.where(F.expr(expr).isNull()).select(
-            "way_id", F.lit(tag).alias("missing_tag")
-        )
-        checks = miss if checks is None else checks.unionByName(miss)
-    return checks
+    return Check(
+        "Some required tags are missing: {}",
+        20,
+        tuple(
+            (F.expr(expr).isNull(), ("way_id", F.lit(tag).alias("missing_tag")))
+            for tag, expr in required.items()
+        ),
+    )
 
 
-def validate_enums(assembled: DataFrame) -> DataFrame:
-    """FareZone enum validation — (way_id, tag, bad_value) rows for every
+def enum_check() -> Check:
+    """FareZone enum validation — offenders (way_id, tag, bad_value), one per
     zoneTopology/scopingMethod value outside the NeTEx enumeration.
 
     The reference throws from ``fromValue`` (OsmToNetexMapper.java:161,165-166)
     on the first offender; here offenders are accumulated V1-style so one job
     reports them all.
     """
-    checks = None
+    rules = []
     for tag, allowed in (
         ("zoneTopology", ZONE_TOPOLOGY_VALUES),
         ("scopingMethod", SCOPING_METHOD_VALUES),
     ):
         val = _last_match_prefix(tag)
         in_set = ", ".join(f"'{v}'" for v in allowed)
-        bad = assembled.where(
-            F.expr(f"{val} IS NOT NULL AND NOT ({val} IN ({in_set}))")
-        ).select("way_id", F.lit(tag).alias("tag"), F.expr(val).alias("bad_value"))
-        checks = bad if checks is None else checks.unionByName(bad)
+        rules.append((
+            F.expr(f"{val} IS NOT NULL AND NOT ({val} IN ({in_set}))"),
+            ("way_id", F.lit(tag).alias("tag"), F.expr(val).alias("bad_value")),
+        ))
+    return Check(
+        "Invalid enum tag values (reference fromValue throws, "
+        "OsmToNetexMapper.java:161,165-166): {}",
+        20,
+        tuple(rules),
+    )
+
+
+def tag_checks(target_entity: str) -> list[Check]:
+    """The strict checks over the assembled ways, in the order they fire."""
+    checks = [required_tags_check(target_entity)]
+    if target_entity == "FareZone":
+        checks.append(enum_check())
     return checks
 
 
+def validate_enums(assembled: DataFrame) -> DataFrame:
+    """(way_id, tag, bad_value) rows for every out-of-enum FareZone value."""
+    return enum_check().offenders(assembled)
+
+
 def check_required(assembled: DataFrame, target_entity: str) -> None:
-    offenders = validate_required(assembled, target_entity).limit(20).collect()
-    if offenders:
-        raise ValueError(f"Some required tags are missing: {offenders}")
-    if target_entity == "FareZone":
-        bad = validate_enums(assembled).limit(20).collect()
-        if bad:
-            raise ValueError(
-                f"Invalid enum tag values (reference fromValue throws, "
-                f"OsmToNetexMapper.java:161,165-166): {bad}"
-            )
+    for check in tag_checks(target_entity):
+        check.enforce(assembled)
 
 
 def map_zones(assembled: DataFrame, target_entity: str, strict: bool = True) -> DataFrame:
@@ -199,6 +212,18 @@ def map_zones(assembled: DataFrame, target_entity: str, strict: bool = True) -> 
     )
 
 
+def group_id_check() -> Check:
+    """M6 — offenders: tagged relations without a GroupOfTariffZoneId,
+    which the reference requires and throws on (OsmToNetexMapper.java:381-410),
+    reported as whole relation rows.  The conversion runs it before
+    ``map_groups``."""
+    return Check(
+        "Missing tag or tag value: GroupOfTariffZoneId ({})",
+        5,
+        ((F.col("tags").isNotNull() & F.expr(_eq("GroupOfTariffZoneId")).isNull(), ("*",)),),
+    )
+
+
 def map_groups(relations: DataFrame, zones_by_way: DataFrame) -> DataFrame:
     """J3/M6 — relations → GroupOfTariffZones rows.
 
@@ -211,11 +236,6 @@ def map_groups(relations: DataFrame, zones_by_way: DataFrame) -> DataFrame:
     broadcast when small), and re-assembled with array_sort by position — the
     same order-preservation discipline as J2.
     """
-    has_group_id = relations.where(F.col("tags").isNotNull())
-    missing = has_group_id.where(F.expr(_eq("GroupOfTariffZoneId")).isNull()).limit(5).collect()
-    if missing:
-        raise ValueError(f"Missing tag or tag value: GroupOfTariffZoneId ({missing})")
-
     exploded = relations.select(
         "rel_id", "tags", F.posexplode("members").alias("mpos", "m")
     ).select("rel_id", "tags", "mpos", F.col("m.ref").alias("ref"))

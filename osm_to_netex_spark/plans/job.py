@@ -95,7 +95,7 @@ def main(argv: list[str] | None = None) -> dict:
         "groups_snapshot": groups_snap,
         "tiles_snapshot": tiles_snap,
         "xml_out": xml_path,
-        "n_zones": catalog.read("zones").count(),
+        "n_zones": catalog.count_rows("zones"),
     }
     print(out)
     if not preexisting:  # don't tear down a caller's session (tests, notebooks)

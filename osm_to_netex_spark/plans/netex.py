@@ -15,11 +15,17 @@ re-executes the whole scan → ``from_json`` → J2 join → groupBy lineage (on
 job run read its corpus ~16 times).  ``convert_extracted`` therefore
 checkpoints each intermediate once, in executor storage, before anything
 reads it: the extracted nodes, ways and relations; the assembled ways; the
-mapped zones; the groups.  The strict checks (unresolved refs, duplicate
-node ids, required tags, enums, the relation probe, GroupOfTariffZoneId) and
-every later commit and render then read those checkpoints, in the same order
-and with the same errors as before.  ``ConversionResult.release`` drops the
-checkpoints; a caller that keeps its session running calls it when done.
+mapped zones; the groups.  Each job is fixed cost too (planning, codegen,
+task serialisation), so the strict checks ride those checkpoint passes as
+observed offender counts instead of running their own actions: unresolved
+refs on the assembly pass, required tags and enums on the zones pass (over
+the assembled rows), the relation count and GroupOfTariffZoneId on the
+relations pass.  Offender rows are collected only when a count is non-zero,
+to build the same message; the checks fire in the lazy pipeline's order —
+ref, duplicate node id (its own aggregation: a distinct-style aggregate
+cannot be observed), tag, enum, group.  ``ConversionResult.release`` drops
+the checkpoints; a caller that keeps its session running calls it when
+done.
 """
 
 from __future__ import annotations
@@ -29,7 +35,8 @@ import time
 from dataclasses import dataclass, field
 from xml.sax.saxutils import escape
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from ..operators import assemble, extract, zones
 
@@ -58,6 +65,24 @@ def _materialise(df: DataFrame, held: list[DataFrame]) -> DataFrame:
     ck = df.localCheckpoint(eager=True)
     held.append(ck)
     return ck
+
+
+def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """df with named aggregates observed on whichever pass computes it;
+    read them from the Observation after that pass."""
+    obs = Observation()
+    return df.observe(obs, *[m.alias(k) for k, m in metrics.items()]), obs
+
+
+def _lossy_count(obs: Observation, name: str) -> int | None:
+    """A count observed below a shuffle, or None when the pass lost it: AQE
+    drops a stage whose shuffle output is empty (no refs, or none resolved),
+    and the stage's observed metrics with it.  The check then runs its
+    offender query."""
+    try:
+        return obs.get[name]
+    except Py4JJavaError:
+        return None
 
 
 def _release(held: list[DataFrame]) -> None:
@@ -99,12 +124,13 @@ def convert_extracted(
     strict: bool = True,
 ) -> ConversionResult:
     """(nodes, ways, relations) → ZONES (+ GROUPS), each intermediate
-    computed once (module docstring).  The inputs come from documents
-    (``convert_documents``) or from OSM XML (``sources.osm_xml.read_osm``).
+    computed once and checked on the pass that computes it (module
+    docstring).  The inputs come from documents (``convert_documents``) or
+    from OSM XML (``sources.osm_xml.read_osm``).
 
     D2 branch (OsmToNetexTransformer.java:133-150): groups are emitted only on
-    the FareZone path and only when relations exist (checked with a limit(1)
-    probe, not a full count), so relations are materialised only for
+    the FareZone path and only when relations exist (a count observed while
+    the relations are checkpointed), so relations are materialised only for
     FareZone.  On any error the checkpoints taken so far are released.
     """
     held: list[DataFrame] = []
@@ -113,16 +139,30 @@ def convert_extracted(
         ways = _materialise(ways, held)
         is_fare = target_entity == "FareZone"
         if is_fare:
-            relations = _materialise(relations, held)
+            group_check = zones.group_id_check()
+            observed, rel_obs = _observe(relations, rows=F.count(F.lit(1)), bad=group_check.count())
+            relations = _materialise(observed, held)
 
-        assembled = _materialise(
-            assemble.assemble_poslist(ways, nodes, broadcast_nodes=broadcast_nodes, strict=strict),
-            held,
+        ref_check = assemble.unresolved_refs()
+        joined = assemble.join_refs(ways, nodes, broadcast_nodes=broadcast_nodes)
+        observed, ref_obs = _observe(joined, bad=ref_check.count())
+        assembled = _materialise(assemble.pack_poslist(observed), held)
+        if strict:
+            ref_check.enforce(joined, _lossy_count(ref_obs, "bad"))
+            assemble.check_unique_nodes(nodes)
+
+        tag_checks = zones.tag_checks(target_entity)
+        observed, tag_obs = _observe(
+            assembled, **{f"bad{i}": c.count() for i, c in enumerate(tag_checks)}
         )
-        zdf = _materialise(zones.map_zones(assembled, target_entity, strict=strict), held)
+        zdf = _materialise(zones.map_zones(observed, target_entity, strict=False), held)
+        if strict:
+            for i, check in enumerate(tag_checks):
+                check.enforce(assembled, tag_obs.get[f"bad{i}"])
 
         groups = None
-        if is_fare and relations.limit(1).count() > 0:
+        if is_fare and rel_obs.get["rows"] > 0:
+            group_check.enforce(relations, rel_obs.get["bad"])
             groups = _materialise(
                 zones.map_groups(relations, zdf.select("way_id", "zone_id")), held
             )
@@ -152,8 +192,6 @@ def validate_zones_output(zones: DataFrame) -> DataFrame:
     closure) whose first (lat, lon) pair equals its last.  Returns
     (zone_id, violation) rows; empty ⇔ the output marshals cleanly.
     """
-    from pyspark.sql import functions as F
-
     checks = F.expr(
         """filter(array(
              CASE WHEN zone_id IS NULL THEN 'null_zone_id' END,
@@ -184,8 +222,6 @@ def conversion_metrics(documents: DataFrame) -> DataFrame:
     """A1 — count/log aggregation (OsmToNetexTransformer.java:69-70,100):
     per-kind span counts + doc count in ONE pass (single partial-aggregated
     job, not three .count() actions)."""
-    from pyspark.sql import functions as F
-
     return documents.select(
         F.explode_outer("spans").alias("span")
     ).agg(

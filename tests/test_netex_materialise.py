@@ -1,9 +1,11 @@
 """The conversion computes each intermediate once (plans/netex.py): strict
-errors still fire, in the reference's order, from the checkpoints; the job
-releases what it checkpointed; outputs are those of the lazy pipeline; the
-XML render never drops zones; unparseable dates are skipped, not fatal."""
+errors still fire, in the reference's order, from the checkpoint passes; the
+job releases what it checkpointed and runs only the jobs its outputs need;
+outputs are those of the lazy pipeline; the XML render never drops zones;
+unparseable dates are skipped, not fatal."""
 
 import hashlib
+import uuid
 import xml.etree.ElementTree as ET
 
 import duckdb
@@ -55,12 +57,19 @@ unresolved_ref = _rewrite(
     "named_struct('id', p.id, 'nd_refs', concat(p.nd_refs, array(987654321987L)), 'tags', p.tags)",
 )
 missing_tag = _drop_tag("osm_way", _WAY, "privateCode")
+missing_reference = _drop_tag("osm_way", _WAY, "reference")
 no_group_id = _drop_tag("osm_relation", _REL, "GroupOfTariffZoneId")
 
 
 def duplicate_node(corpus):
     return corpus.select(
         "doc_id", F.expr("concat(spans, filter(spans, s -> s.kind = 'osm_node'))").alias("spans")
+    )
+
+
+def no_nodes(corpus):
+    return corpus.select(
+        "doc_id", F.expr("filter(spans, s -> s.kind != 'osm_node')").alias("spans")
     )
 
 
@@ -72,26 +81,34 @@ def _persisted(spark) -> set:
 
 
 @pytest.mark.parametrize(
-    "patches, error",
+    "target, patches, error",
     [
-        ([unresolved_ref], "unresolved nd refs"),
-        ([duplicate_node], "duplicate node ids"),
-        ([missing_tag], "required tags are missing"),
-        ([no_group_id], "GroupOfTariffZoneId"),
+        ("FareZone", [unresolved_ref], "unresolved nd refs"),
+        ("FareZone", [duplicate_node], "duplicate node ids"),
+        ("FareZone", [missing_tag], "required tags are missing"),
+        ("FareZone", [no_group_id], "GroupOfTariffZoneId"),
         # the first failing check wins, in the lazy pipeline's order
-        ([missing_tag, unresolved_ref], "unresolved nd refs"),
-        ([no_group_id, duplicate_node], "duplicate node ids"),
-        ([no_group_id, missing_tag], "required tags are missing"),
+        ("FareZone", [missing_tag, unresolved_ref], "unresolved nd refs"),
+        ("FareZone", [no_group_id, duplicate_node], "duplicate node ids"),
+        ("FareZone", [no_group_id, missing_tag], "required tags are missing"),
+        # the TariffZone required-tag set, observed on the same pass
+        ("TariffZone", [missing_reference], "required tags are missing"),
+        # no ref resolves: AQE drops the empty assembly stage with its
+        # observed count, and the check falls back to its offender query
+        ("TariffZone", [no_nodes], "unresolved nd refs"),
     ],
-    ids=["ref", "dup", "tag", "group", "tag+ref", "group+dup", "group+tag"],
+    ids=[
+        "ref", "dup", "tag", "group", "tag+ref", "group+dup", "group+tag",
+        "tariff-tag", "tariff-no-nodes",
+    ],
 )
-def test_strict_errors_survive_materialisation(spark, patches, error):
+def test_strict_errors_survive_materialisation(spark, target, patches, error):
     corpus = spark.read.parquet(FIXTURE_CORPUS)
     for patch in patches:
         corpus = patch(corpus)
     held = _persisted(spark)
     with pytest.raises(ValueError, match=error):
-        netex.convert_documents(corpus, "FareZone", strict=True)
+        netex.convert_documents(corpus, target, strict=True)
     assert _persisted(spark) <= held  # a failed conversion holds nothing
 
 
@@ -179,3 +196,36 @@ def test_job_releases_checkpoints_and_output_is_stable(spark, tmp_path):
     assert {t: _digest(cat.read(t)) for t in PINNED} == PINNED
     assert out["n_zones"] == 32
     assert xml.read_text().count("<gml:Polygon ") == 32
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs fn starts, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_happy_path_runs_only_output_jobs(spark, tmp_path):
+    """The strict checks ride the checkpoint passes, the tile index is one
+    shuffle for all resolutions and the zone count comes from parquet
+    footers, so a conversion runs only the jobs that produce its outputs
+    (31 and 13 jobs when each check ran its own actions)."""
+    argv = [
+        "--input", FIXTURE_CORPUS,
+        "--target", "FareZone",
+        "--output", str(tmp_path / "wh"),
+        "--xml-out", str(tmp_path / "out.xml"),
+        "--cores", "4",
+    ]
+    assert _jobs(spark, lambda: job.main(argv)) <= 17
+    assert _jobs(
+        spark,
+        lambda: netex.convert_documents(spark.read.parquet(FIXTURE_CORPUS), "TariffZone").release(),
+    ) <= 9

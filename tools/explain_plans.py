@@ -92,9 +92,11 @@ CHECKS = {
         ["BatchEvalPython", "CartesianProduct"],
     ),
     # overlap join: cell equi-join prefilter — the exact predicate must never
-    # drive a cartesian/BNLJ plan
+    # drive a cartesian/BNLJ plan.  The candidate-pair distinct sits behind
+    # a lazy localCheckpoint barrier (operators/overlap.py), so explain shows
+    # it as a Scan ExistingRDD; the two ring join-backs are broadcast
     "poly_overlap": (
-        ["[codegen id", "HashAggregate"],
+        ["[codegen id", "Scan ExistingRDD", "BroadcastHashJoin"],
         ["BatchEvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
     # curation composes 4 stages into one plan — everything stays JVM-side
