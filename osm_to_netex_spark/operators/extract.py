@@ -9,6 +9,7 @@ shuffle.  Works on a document table of any size; nothing touches the driver.
 
 from __future__ import annotations
 
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, functions as F
 
 from .. import schemas
@@ -40,30 +41,40 @@ def extract_nodes(documents: DataFrame) -> DataFrame:
     )
 
 
-def extract_node_coords(documents: DataFrame) -> DataFrame:
-    """nodes(node_id, lat, lon) only — for consumers that never touch tags
-    (the J2 assembly join side).  Parsing the tags map for corpus-sized node
-    tables costs ~2x the coordinate parse; the optimizer's JSON-schema
-    pruning does not reliably drop map-typed fields, so the slim schema is
-    explicit here."""
-    import pyspark.sql.types as T
-
-    slim = T.StructType(
+def _slim_node_schema(tag_fields: tuple[str, ...]) -> T.StructType:
+    """The node payload as the slim extractors parse it: id, lat, lon and,
+    when asked for, a FIXED set of tag keys as a struct, so the JSON reader
+    skips every other key instead of materializing the tags map."""
+    tags = [T.StructField(k, T.StringType()) for k in tag_fields]
+    return T.StructType(
         [
             T.StructField("id", T.LongType()),
             T.StructField("lat", T.DoubleType()),
             T.StructField("lon", T.DoubleType()),
         ]
+        + ([T.StructField("tags", T.StructType(tags))] if tag_fields else [])
     )
-    return (
-        _spans(documents, "osm_node")
-        .select("doc_id", F.from_json("payload", slim).alias("n"))
-        .select(
-            F.col("n.id").alias("node_id"),
-            F.col("n.lat").alias("lat"),
-            F.col("n.lon").alias("lon"),
-        )
-    )
+
+
+def _slim_node_cols(tag_fields: tuple[str, ...]) -> list:
+    """(node_id, lat, lon, <tag_fields…>) from the parsed struct ``n``;
+    the ``id`` tag becomes ``tag_id`` (it collides with the node id)."""
+    return [
+        F.col("n.id").alias("node_id"),
+        F.col("n.lat").alias("lat"),
+        F.col("n.lon").alias("lon"),
+    ] + [
+        F.col(f"n.tags.{k}").alias("tag_id" if k == "id" else k) for k in tag_fields
+    ]
+
+
+def extract_node_coords(documents: DataFrame) -> DataFrame:
+    """nodes(node_id, lat, lon) only — for consumers that never touch tags
+    (the J2 assembly join side).  Parsing the tags map for corpus-sized node
+    tables costs ~2x the coordinate parse; the optimizer's JSON-schema
+    pruning does not reliably drop map-typed fields, so the slim schema is
+    explicit."""
+    return extract_nodes_slim(documents)
 
 
 def extract_nodes_slim(documents: DataFrame, tag_fields: tuple[str, ...] = ()) -> DataFrame:
@@ -74,36 +85,10 @@ def extract_nodes_slim(documents: DataFrame, tag_fields: tuple[str, ...] = ()) -
     other key instead of materializing the whole map (~2x cheaper on
     tag-heavy corpora).  Requested tag columns are named after the key,
     except ``id`` → ``tag_id`` (collides with the node id)."""
-    import pyspark.sql.types as T
-
-    slim = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("lon", T.DoubleType()),
-        ]
-        + (
-            [
-                T.StructField(
-                    "tags",
-                    T.StructType([T.StructField(k, T.StringType()) for k in tag_fields]),
-                )
-            ]
-            if tag_fields
-            else []
-        )
-    )
-    out_cols = [
-        F.col("n.id").alias("node_id"),
-        F.col("n.lat").alias("lat"),
-        F.col("n.lon").alias("lon"),
-    ] + [
-        F.col(f"n.tags.{k}").alias("tag_id" if k == "id" else k) for k in tag_fields
-    ]
     return (
         _spans(documents, "osm_node")
-        .select("doc_id", F.from_json("payload", slim).alias("n"))
-        .select(*out_cols)
+        .select("doc_id", F.from_json("payload", _slim_node_schema(tag_fields)).alias("n"))
+        .select(*_slim_node_cols(tag_fields))
     )
 
 
@@ -213,19 +198,6 @@ def extract_nodes_ways_slim(
     slim projection lets the assembly's way side, its node side AND the PIP
     probe all read one scan — the previous shape re-read the whole corpus
     just to pull the (tiny) way spans."""
-    import pyspark.sql.types as T
-
-    slim = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField(
-                "tags",
-                T.StructType([T.StructField(k, T.StringType()) for k in tag_fields]),
-            ),
-        ]
-    )
     way_slim = T.StructType(
         [
             T.StructField("id", T.LongType()),
@@ -240,7 +212,7 @@ def extract_nodes_ways_slim(
             F.col("span.kind").alias("kind"),
             F.when(
                 F.col("span.kind") == "osm_node",
-                F.from_json(F.col("span.text"), slim),
+                F.from_json(F.col("span.text"), _slim_node_schema(tag_fields)),
             ).alias("n"),
             F.when(
                 F.col("span.kind") == "osm_way",
@@ -248,16 +220,10 @@ def extract_nodes_ways_slim(
             ).alias("w"),
         )
     )
-    tag_cols = [
-        F.col(f"n.tags.{k}").alias("tag_id" if k == "id" else k) for k in tag_fields
-    ]
     return sp.select(
         "doc_id",
         "kind",
-        F.col("n.id").alias("node_id"),
-        F.col("n.lat").alias("lat"),
-        F.col("n.lon").alias("lon"),
-        *tag_cols,
+        *_slim_node_cols(tag_fields),
         F.col("w.id").alias("way_id"),
         F.col("w.nd_refs").alias("nd_refs"),
     )

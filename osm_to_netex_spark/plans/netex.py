@@ -96,8 +96,6 @@ def convert_documents(
     documents: DataFrame,
     target_entity: str,
     generated_from: str = "documents",
-    participant_ref: str = "osm_to_netex_spark",
-    broadcast_nodes: bool = True,
     strict: bool = True,
 ) -> ConversionResult:
     """documents → ZONES (+ GROUPS for FareZone with relations present)."""
@@ -107,8 +105,6 @@ def convert_documents(
         extract.extract_relations(documents),
         target_entity,
         generated_from=generated_from,
-        participant_ref=participant_ref,
-        broadcast_nodes=broadcast_nodes,
         strict=strict,
     )
 
@@ -119,8 +115,6 @@ def convert_extracted(
     relations: DataFrame,
     target_entity: str,
     generated_from: str = "documents",
-    participant_ref: str = "osm_to_netex_spark",
-    broadcast_nodes: bool = True,
     strict: bool = True,
 ) -> ConversionResult:
     """(nodes, ways, relations) → ZONES (+ GROUPS), each intermediate
@@ -132,6 +126,9 @@ def convert_extracted(
     the FareZone path and only when relations exist (a count observed while
     the relations are checkpointed), so relations are materialised only for
     FareZone.  On any error the checkpoints taken so far are released.
+
+    The J2 ref join always broadcasts the checkpointed nodes, and the
+    envelope's ParticipantRef is always ``osm_to_netex_spark``.
     """
     held: list[DataFrame] = []
     try:
@@ -144,7 +141,7 @@ def convert_extracted(
             relations = _materialise(observed, held)
 
         ref_check = assemble.unresolved_refs()
-        joined = assemble.join_refs(ways, nodes, broadcast_nodes=broadcast_nodes)
+        joined = assemble.join_refs(ways, nodes, broadcast_nodes=True)
         observed, ref_obs = _observe(joined, bad=ref_check.count())
         assembled = _materialise(assemble.pack_poslist(observed), held)
         if strict:
@@ -173,7 +170,7 @@ def convert_extracted(
     envelope = {
         "publication_timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "description": f"Generated from {generated_from} on {socket.gethostname()}",
-        "participant_ref": participant_ref,
+        "participant_ref": "osm_to_netex_spark",
         "site_frame_id": f"OSM:SiteFrame:{int(time.time() * 1000)}",
         "version": zones.DEFAULT_VERSION,
     }

@@ -10,10 +10,9 @@ on a directory layout:
         snapshots/<snapshot_id>/part-*.parquet    (immutable data files)
         _meta/v<N>.json                           (snapshot log, atomic rename)
 
-When a real Iceberg catalog is configured (``spark.sql.catalog.*``), pass
-``format="iceberg"`` and the same API delegates to it.  Readers always pin a
-snapshot id first, so concurrent appends never tear a read — the property the
-resume/lineage plan (plans.lineage) relies on.
+Every commit writes parquet; there is no Iceberg delegation.  Readers always
+pin a snapshot id first, so concurrent appends never tear a read — the
+property the resume/lineage plan (plans.lineage) relies on.
 """
 
 from __future__ import annotations
@@ -27,15 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class SnapshotCatalog:
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
-        if fmt == "iceberg":  # delegate to a configured Iceberg catalog
-            try:
-                spark.read.format("iceberg")
-            except Exception as exc:  # pragma: no cover - env without jars
-                raise RuntimeError("iceberg runtime not available") from exc
 
     # -- metadata -----------------------------------------------------------
     def _meta_dir(self, table: str) -> str:

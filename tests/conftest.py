@@ -23,3 +23,14 @@ def corpus(spark):
     ).cache()
     df.count()
     return df
+
+
+@pytest.fixture
+def fresh_views(spark):
+    """Registry tests replace the memoized sf temp views (`documents`,
+    `events`, …) with tiny synthetic tables; reset register_geometry_views'
+    memo around each test so every test, in any order, re-registers the real
+    sf tables.  Modules opt in with ``pytest.mark.usefixtures``."""
+    spark._graft_geo_views = None
+    yield
+    spark._graft_geo_views = None

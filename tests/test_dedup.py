@@ -1,11 +1,12 @@
 """Dedup / similarity / textstats over planted fixtures and testdata."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import dedup, similarity, textstats
-
-SF = "/root/testdata/sf0.001"
+from tests.support import BITS, SEEDS, SF, THRESHOLD, phash60
 
 
 @pytest.fixture(scope="module")
@@ -327,3 +328,80 @@ def test_bloom_no_false_negatives_and_bounded_fp(spark):
             fp += 1
     assert fp < 40  # ~1% slack over the ~0.2% expectation
     bits.unpersist()
+
+
+def _plane(seed_tag: str, h: int, i: int) -> float:
+    return phash60(f"pl{seed_tag}:{h}:{i}") / 2.0**60 - 0.5
+
+
+def _bucket(vec, seed_tag: str) -> int:
+    acc = 0
+    for h in range(BITS):
+        dot = 0.0
+        for i, x in enumerate(vec, start=1):
+            dot = dot + float(x) * _plane(seed_tag, h, i)
+        if dot > 0.0:
+            acc += 1 << h
+    return acc
+
+
+def _cos(a, b) -> float:
+    dot = 0.0
+    for x, y in zip(a, b):
+        dot = dot + float(x) * float(y)
+    na = math.sqrt(sum(float(x) * float(x) for x in a))
+    nb = math.sqrt(sum(float(y) * float(y) for y in b))
+    return dot / (na * nb)
+
+
+def _round6(x: float) -> float:
+    # Spark F.round = HALF_UP (away from zero), not Python's banker's round
+    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
+
+
+def test_ensemble_matches_python_replay(spark):
+    rows = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in rows}
+    # python replay: per-seed buckets, union candidates, exact verify
+    want = set()
+    for s in range(SEEDS):
+        tag = dedup._seed_tag(s)
+        buckets: dict[int, list[int]] = {}
+        for vid, v in vecs.items():
+            buckets.setdefault(_bucket(v, tag), []).append(vid)
+        for members in buckets.values():
+            members = sorted(members)
+            for i, a in enumerate(members):
+                for b in members[i + 1 :]:
+                    if _round6(_cos(vecs[a], vecs[b])) >= THRESHOLD:
+                        want.add((a, b))
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    out = dedup.embedding_near_dup_ensemble(
+        emb, dim=64, n_bits=BITS, n_seeds=SEEDS, cos_threshold=THRESHOLD
+    )
+    got = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    dedup.unpersist_intermediates(out)
+    assert got == want
+
+    # seed 0 IS the single-seed operator's plane set → ensemble ⊇ single
+    single = dedup.embedding_near_dup(emb, dim=64, n_bits=BITS, cos_threshold=THRESHOLD)
+    sgl = {(r["id_a"], r["id_b"]) for r in single.collect()}
+    dedup.unpersist_intermediates(single)
+    assert sgl <= got
+
+
+def test_ngram_jaccard_finds_planted_near_dup(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon zeta", "en"),
+            (2, "alpha beta gamma delta epsilon eta", "en"),
+            (3, "unrelated words entirely different text here", "en"),
+            (4, "alpha beta gamma delta epsilon zeta", "no"),  # other block
+        ],
+        "doc_id long, text string, lang string",
+    )
+    pairs = dedup.ngram_jaccard_pairs(docs, n_shingle=3, threshold=0.3, prefilter_key="lang")
+    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    assert (1, 2) in got
+    assert all(a != 4 and b != 4 for a, b in got)  # blocking respected

@@ -1,10 +1,10 @@
 """DSIR importance weights: exact pure-python replay, target-vs-off-target
 ordering, empty docs, partition invariance."""
 
-import hashlib
 import math
 
 from osm_to_netex_spark.operators import sampling
+from tests.support import phash60
 
 B = 64
 Q = 1_000_000_000
@@ -28,7 +28,7 @@ def _feats(t):
 
 
 def _bucket(g):  # functions.portable.phash60 % B
-    return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
+    return phash60(g) % B
 
 
 def _python_reference():

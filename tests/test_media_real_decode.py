@@ -2,6 +2,8 @@
 the mapInPandas batch (real_decode=True) against COMMITTED fixture files, is
 byte-exact vs an independent pure-Python replay, falls back to the labeled
 stub for non-PNM payloads, and shares one phash quantizer with the SQL path.
+Decode and resize are deterministic across partitionings, and resize
+matches a NumPy reference.
 """
 
 import hashlib
@@ -11,6 +13,7 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from osm_to_netex_spark.operators import media
+from osm_to_netex_spark.sources import documents as docs_src
 
 P6 = "tests/fixtures/sample_p6.ppm"
 P5 = "tests/fixtures/sample_p5.pgm"
@@ -118,3 +121,67 @@ def test_phash_from_features_shared_across_paths(spark, corpus):
     assert media.phash_from_features(r["features"]) == media.phash_from_features(
         ref_feats
     )
+
+
+def test_media_pipeline_deterministic_across_partitionings(spark):
+    corpus = docs_src.synthesize_corpus(
+        spark, n_docs=200, n_zones=8, n_groups=2, n_points=60
+    )
+    refs = media.extract_media_refs(corpus)
+    f1 = media.decode_media(refs.repartition(2)).collect()
+    f2 = media.decode_media(refs.repartition(13)).collect()
+    key = lambda r: (r.doc_id, r.media_ref)  # noqa: E731
+    assert sorted(map(key, f1)) == sorted(map(key, f2))
+    d1 = {key(r): (r.format, r.width, r.height, r.n_frames, list(r.features)) for r in f1}
+    d2 = {key(r): (r.format, r.width, r.height, r.n_frames, list(r.features)) for r in f2}
+    assert d1 == d2
+    assert all(len(v[4]) == media.FEATURE_DIM for v in d1.values())
+
+
+def test_media_real_decode_falls_back_to_stub_for_non_pnm(spark):
+    corpus = docs_src.synthesize_corpus(spark, n_docs=50, n_zones=4, n_groups=2, n_points=20)
+    refs = media.extract_media_refs(corpus).limit(3)
+    real = sorted(tuple(r) for r in media.decode_media(refs, real_decode=True).collect())
+    stub = sorted(tuple(r) for r in media.decode_media(refs).collect())
+    assert real == stub and len(real) > 0
+
+
+def test_resize_media_matches_numpy_reference(spark):
+    import hashlib
+
+    import numpy as np
+
+    from osm_to_netex_spark.operators import media
+
+    from osm_to_netex_spark.plans.convert_queries import FIXTURE_CORPUS
+
+    corpus = spark.read.parquet(FIXTURE_CORPUS).limit(40)
+    feats = media.decode_media(media.extract_media_refs(corpus))
+    resized = media.resize_media(feats, target_w=128, target_h=96)
+    rows = {r.media_ref: r for r in resized.collect()}
+    assert rows and all(r.width == 128 and r.height == 96 for r in rows.values())
+    # reference: re-derive one row end-to-end from the payload hash
+    ref, row = next(iter(rows.items()))
+    h = hashlib.sha256(f"blob:{ref}".encode()).digest()
+    base = (
+        np.frombuffer(h[: media.FEATURE_DIM * 2], dtype=np.uint16).astype(np.float32)
+        / np.float32(65535.0)
+    )
+    expect = np.interp(
+        np.linspace(0.0, 1.0, num=media.FEATURE_DIM),
+        np.linspace(0.0, 1.0, num=len(base)),
+        base.astype(np.float64),
+    ).astype(np.float32)
+    assert np.array_equal(np.asarray(row.features, dtype=np.float32), expect)
+
+
+def test_resize_partition_invariant(spark):
+    from osm_to_netex_spark.operators import media
+    from osm_to_netex_spark.plans.convert_queries import FIXTURE_CORPUS
+
+    corpus = spark.read.parquet(FIXTURE_CORPUS).limit(60)
+    feats = media.decode_media(media.extract_media_refs(corpus))
+    a = {(r.media_ref, tuple(r.features)) for r in media.resize_media(feats).collect()}
+    b = {(r.media_ref, tuple(r.features))
+         for r in media.resize_media(feats.repartition(7)).collect()}
+    assert a == b and len(a) > 0

@@ -10,7 +10,7 @@ import wave
 import numpy as np
 
 from osm_to_netex_spark.operators import media
-from tests.test_media_jpeg import encode_jpeg
+from tests.support import encode_jpeg
 
 
 def _wav_bytes(samples: np.ndarray, rate: int, n_ch: int, width: int = 2) -> bytes:

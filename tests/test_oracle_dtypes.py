@@ -15,8 +15,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests.support import SF
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -30,7 +29,7 @@ def con():
     for t in TABLES:
         c.sql(
             f"create or replace view {t} as "
-            f"select * from read_parquet('{SF_DIR}/{t}.parquet')"
+            f"select * from read_parquet('{SF}/{t}.parquet')"
         )
     return c
 

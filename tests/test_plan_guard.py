@@ -14,8 +14,7 @@ run.
 import pytest
 
 from osm_to_netex_spark.plans import queries as Q
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests.support import SF
 
 
 # Largest legitimate plan measured ~1.1 MB (the convert pipeline's tag
@@ -29,7 +28,7 @@ PLAN_SIZE_LIMIT = 4_000_000
 @pytest.mark.parametrize("name", sorted(Q.QUERIES))
 def test_plan_has_no_python_and_no_cartesian(spark, name):
     builder, _oracle = Q.QUERIES[name]
-    df = builder(spark, SF_DIR)
+    df = builder(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
     assert "ArrowEvalPython" not in plan, f"{name}: Python eval in a SQL query"

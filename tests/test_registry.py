@@ -13,6 +13,7 @@ from osm_to_netex_spark.plans.convert_queries import CONVERT_QUERIES
 
 ROOT = Q.__name__  # osm_to_netex_spark.plans.queries
 PKG = Path(Q.__file__).parent
+TESTS = Path(__file__).parent
 
 
 def _imports_root(node: ast.AST) -> bool:
@@ -41,3 +42,35 @@ def test_domain_queries_sum_to_the_registry():
 
 def test_driver_window_leads_the_registry():
     assert list(Q.QUERIES)[:50] == Q._DRIVER_WINDOW
+
+
+def _imported_test_modules(tree: ast.AST) -> list[str]:
+    """Import targets naming a test module: ``tests.test_x``, ``test_x`` or
+    ``.test_x``, with or without a trailing member."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            targets = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = "." * node.level + (node.module or "")
+            targets = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        for target in targets:
+            parts = target.lstrip(".").split(".")
+            if parts[0] == "tests":
+                parts = parts[1:]
+            if parts and parts[0].startswith("test_"):
+                out.append(target)
+    return out
+
+
+def test_no_test_module_imports_another():
+    """The tests follow the registry's layout: shared helpers live in
+    tests/support.py and shared fixtures in conftest.py, so no test module
+    imports another."""
+    found = {
+        path.name: _imported_test_modules(ast.parse(path.read_text()))
+        for path in sorted(TESTS.glob("*.py"))
+    }
+    assert not {k: v for k, v in found.items() if v}

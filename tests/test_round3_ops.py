@@ -6,22 +6,15 @@ import math
 from collections import Counter, defaultdict
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import curation, graph, similarity, temporal, textstats
+from tests.support import SF, phash60
 
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(autouse=True)
-def _fresh_views(spark):
-    """Some tests here replace the memoized `documents`/`events` temp views
-    with tiny synthetic tables; reset register_geometry_views' memo so every
-    test (in any order) re-registers the real sf tables."""
-    spark._graft_geo_views = None
-    yield
-    spark._graft_geo_views = None
+# some tests replace the memoized `documents`/`events` temp views with tiny
+# synthetic tables
+pytestmark = pytest.mark.usefixtures("fresh_views")
 
 
 @pytest.fixture(scope="module")
@@ -359,8 +352,6 @@ def test_span_profile_counts_and_runs(spark):
 
 
 def test_decayed_density_python_replay(spark):
-    import hashlib
-
     from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 
     got = {
@@ -372,7 +363,7 @@ def test_decayed_density_python_replay(spark):
     LAT_LO, LAT_HI, LON_LO, LON_HI = CORPUS.BBOX
 
     def pr(key):
-        h = int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
+        h = phash60(key)
         return h / float(1 << 60)
 
     us = {int(r["event_id"]): int(r["ts"].timestamp() * 1e6) for r in ev}
@@ -396,11 +387,10 @@ def test_decayed_density_python_replay(spark):
 
 
 def _ab_test_replay(got, ev):
-    import hashlib
 
     arms = defaultdict(lambda: ([], []))
     for r in ev:
-        h = int(hashlib.md5(f"ab:{int(r['user_id'])}".encode()).hexdigest()[:15], 16)
+        h = phash60(f"ab:{int(r['user_id'])}")
         arm = (h % (1 << 60)) % 2
         arms[r["event_type"]][arm].append(
             math.floor(float(r["value"]) * 1e6 + 0.5)
@@ -537,8 +527,6 @@ def test_target_encode_smoothing(spark):
 def test_turn_points_angle_threshold(spark):
     """Every reported corner must exceed 45 deg by the exact integer test,
     replayed in Python from the same hash coordinates."""
-    import hashlib
-
     from osm_to_netex_spark.plans.queries import trajectory as TRAJECTORY
 
     got = {
@@ -548,7 +536,7 @@ def test_turn_points_angle_threshold(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
 
     def pr(key):
-        return int(hashlib.md5(key.encode()).hexdigest()[:15], 16) / float(1 << 60)
+        return phash60(key) / float(1 << 60)
 
     tracks = defaultdict(list)
     for r in ev:
@@ -1106,8 +1094,6 @@ def test_gini_python_replay(spark):
 
 
 def test_poisson_bootstrap_python_replay(spark):
-    import hashlib
-
     from osm_to_netex_spark.plans.queries import stats as STATS
 
     got = {
@@ -1122,7 +1108,7 @@ def test_poisson_bootstrap_python_replay(spark):
            1131029650211480960, 1148701988496035328]
 
     def w(eid, rep):
-        h = int(hashlib.md5(f"boot:{eid}:{rep}".encode()).hexdigest()[:15], 16) % (1 << 60)
+        h = phash60(f"boot:{eid}:{rep}") % (1 << 60)
         for k, t in enumerate(THS):
             if h < t:
                 return k
@@ -1236,8 +1222,6 @@ def test_peaks_are_gated_local_maxima(spark):
 
 
 def test_cell_entropy_python_replay(spark):
-    import hashlib
-
     from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 
     got = {
@@ -1248,7 +1232,7 @@ def test_cell_entropy_python_replay(spark):
     LAT_LO, LAT_HI, LON_LO, LON_HI = CORPUS.BBOX
 
     def pr(key):
-        return int(hashlib.md5(key.encode()).hexdigest()[:15], 16) / float(1 << 60)
+        return phash60(key) / float(1 << 60)
 
     n = 2**11
     mix = defaultdict(Counter)
@@ -1336,15 +1320,13 @@ def test_ks_drift_python_replay(spark):
 
 
 def test_cramers_v_python_replay(spark):
-    import hashlib
-
     from osm_to_netex_spark.plans.queries import stats as STATS
 
     r = STATS.q_cramers_v(spark, SF).collect()[0]
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     cells = Counter()
     for e in ev:
-        h = int(hashlib.md5(f"seg:{int(e['user_id'])}".encode()).hexdigest()[:15], 16)
+        h = phash60(f"seg:{int(e['user_id'])}")
         cells[(e["event_type"], (h % (1 << 60)) % 4)] += 1
     rows = Counter(); cols = Counter()
     for (et, sg), o in cells.items():

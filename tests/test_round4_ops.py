@@ -16,15 +16,11 @@ from osm_to_netex_spark.plans.queries import (
     spatial as SPATIAL,
     trajectory as TRAJECTORY,
 )
+from tests.support import SF
 
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(autouse=True)
-def _fresh_views(spark):
-    spark._graft_geo_views = None
-    yield
-    spark._graft_geo_views = None
+# some tests replace the memoized `documents`/`events` temp views with tiny
+# synthetic tables
+pytestmark = pytest.mark.usefixtures("fresh_views")
 
 
 def _tokens(text: str) -> list[str]:
