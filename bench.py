@@ -33,7 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from osm_to_netex_spark.session import get_spark  # noqa: E402
-from perfbench.harness import host_facts, mem_available_bytes  # noqa: E402
+from perfbench.harness import host_facts, materialize, mem_available_bytes  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = sorted(os.sched_getaffinity(0))
@@ -246,13 +246,6 @@ def _stats(times: list[float], n_docs: int) -> dict:
         "secs_min": round(dt_min, 3),
         "docs_per_sec_best": round(n_docs / dt_min, 1),
     }
-
-
-def materialize(df) -> None:
-    """Run `df` to a noop sink: every output column is computed.  A bare
-    count() lets Catalyst prune the projections it does not need, so some
-    plans would time little more than a table scan."""
-    df.write.format("noop").mode("overwrite").save()
 
 
 def time_query(spark, builder, sf_dir: str) -> float:

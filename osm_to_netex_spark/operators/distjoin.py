@@ -30,16 +30,22 @@ Strategy (exact, no quadratic term):
 Every per-row expression is small (today's cover_cells lesson: staged scalar
 columns + explode(sequence), never a mega-HOF), so the plan compiles fast
 and stays inside whole-stage codegen.
+
+The segment joins (``seg_candidates``, ``snap_join``, ``corridor_join``,
+``line_intersection_join``) filter on segment-bbox cells from
+``tiling.quad_bbox_cover``, whose docstring holds their completeness
+argument.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import geo
-from ..functions.portable import SPARK, flit, haversine_m
+from ..functions.portable import SPARK, flit, haversine_m, let_, round_half
+from .tiling import quad_bbox_cover
 
 
 def _lon_halfwidth_deg(lat_col: str, radius_m: float) -> str:
@@ -163,8 +169,6 @@ def seg_dist_m(plat: str, plon: str, ay: str, ax: str, by: str, bx: str, d: str)
     # t = clamp(-(a·(b-a))/|b-a|², 0, 1); degenerate zero-length segment → t=0
     t = f"least(1.0e0, greatest(0.0e0, coalesce((-(({axp})*{dx} + ({ayp})*{dy})) / nullif({len2}, 0.0e0), 0.0e0)))"
     bind = {"t": t, "ax": axp, "ay": ayp, "dx": dx, "dy": dy}
-    from ..functions.portable import let_
-
     v = "__sg"
     body = (
         f"sqrt(({v}.ax + {v}.t * {v}.dx) * ({v}.ax + {v}.t * {v}.dx) + "
@@ -185,72 +189,52 @@ def seg_candidates(
 ) -> DataFrame:
     """All (point, segment) pairs within ``radius_m`` of the planar snap
     metric — (``*id_cols``, __lid, seg_idx, __d).  The complete-prefilter
-    candidate engine shared by ``snap_join`` (argmin consumer) and
-    ``mapmatch.map_match`` (Viterbi consumer).
+    candidate engine shared by ``snap_join`` (argmin consumer),
+    ``corridor_join`` (all pairs) and ``mapmatch.map_match`` (Viterbi
+    consumer).
 
     Shape: segments are exploded ONCE from the packed pos_list, each emitting
-    the cells of its bbox padded by the radius bounds (Δlat = r/M_PER_DEG;
-    Δlon from the band's min cosine — conservative for the planar metric, so
-    no true candidate is lost); points carry a single cell.  One equi-join on
-    the cell, exact seg_dist_m refine.  No cartesian term anywhere; fan-out
-    is segment-bbox cells, bounded for street-scale segments."""
+    the cells of its bbox padded by the radius (``tiling.quad_bbox_cover``
+    says why no true candidate is lost); points carry a single cell, so a
+    (point, segment) pair meets in one cell at most.  One equi-join on the
+    cell, exact seg_dist_m refine.  No cartesian term anywhere; fan-out is
+    segment-bbox cells, bounded for street-scale segments."""
     if id_cols is None:
         id_cols = ["point_id"]
-    n = 2**res
-    cell_h, cell_w = 180.0 / n, 360.0 / n
-    r_deg = radius_m / geo.M_PER_DEG
-    ky = int(r_deg / cell_h) + 1
+    pairs = _seg_cell_pairs(points, lines, radius_m, res, id_cols, line_id, pos_list)
+    return _within(pairs, radius_m).select(
+        *id_cols, F.col("__s_id").alias("__lid"), F.col("__s_seg").alias("seg_idx"), "__d"
+    )
 
-    segs = lines.selectExpr(
-        f"{line_id} as __lid",
-        f"{pos_list} as __pl",
-        f"explode(sequence(1, size({pos_list}) div 2 - 1)) as __i",
-    ).selectExpr(
-        "__lid",
-        "__i as seg_idx",
-        "element_at(__pl, cast(2*__i - 1 as int)) as __ay",
-        "element_at(__pl, cast(2*__i as int)) as __ax",
-        "element_at(__pl, cast(2*__i + 1 as int)) as __by",
-        "element_at(__pl, cast(2*__i + 2 as int)) as __bx",
-    )
-    # padded bbox in cell coords; lon pad uses the min cosine over the
-    # segment's reachable lat band (clamped off the pole)
-    lat_lo = f"(least(__ay, __by) - {flit(r_deg)})"
-    lat_hi = f"(greatest(__ay, __by) + {flit(r_deg)})"
-    cosmin = f"cos(radians(least(89.0e0, greatest(abs(__ay), abs(__by)) + {flit(r_deg)})))"
-    lon_pad = f"({flit(r_deg)} / {cosmin})"
-    lon_lo = f"(least(__ax, __bx) - {lon_pad})"
-    lon_hi = f"(greatest(__ax, __bx) + {lon_pad})"
-    ix_lo, iy_lo = geo.quad_ixy(lat_lo, lon_lo, res, SPARK)
-    ix_hi, iy_hi = geo.quad_ixy(lat_hi, lon_hi, res, SPARK)
-    seg_cells = (
-        segs.selectExpr(
-            "__lid", "seg_idx", "__ay", "__ax", "__by", "__bx",
-            f"{ix_lo} as __ixl", f"{ix_hi} as __ixh",
-            f"explode(sequence({iy_lo}, {iy_hi})) as __cy",
-        )
-        .selectExpr(
-            "__lid", "seg_idx", "__ay", "__ax", "__by", "__bx", "__cy",
-            "explode(sequence(__ixl, __ixh)) as __cx",
-        )
-        .selectExpr(
-            "__lid", "seg_idx", "__ay", "__ax", "__by", "__bx",
-            geo.quad_pack("__cx", "__cy", res) + " as __cell",
-        )
-    )
+
+def _seg_cell_pairs(
+    points: DataFrame,
+    lines: DataFrame,
+    radius_m: float,
+    res: int,
+    id_cols: list[str],
+    line_id: str,
+    pos_list: str,
+) -> DataFrame:
+    """Unrefined (``*id_cols``, __plat, __plon, __s_id, __s_seg, __sy1,
+    __sx1, __sy2, __sx2) rows: each point with every segment whose
+    radius-padded bbox cover holds the point's cell."""
+    segs = _segments(lines, line_id, pos_list, "__s")
+    seg_cells = _seg_bbox_cells(segs, "__s", res, radius_m / geo.M_PER_DEG)
     pts = points.select(
         *[F.col(c) for c in id_cols],
         F.col("lat").alias("__plat"),
         F.col("lon").alias("__plon"),
         F.expr(geo.quad_cell("lat", "lon", res, SPARK)).alias("__cell"),
     )
-    dist = seg_dist_m("__plat", "__plon", "__ay", "__ax", "__by", "__bx", SPARK)
-    return (
-        pts.join(seg_cells, "__cell")
-        .withColumn("__d", F.expr(dist))
-        .where(F.col("__d") <= F.lit(float(radius_m)))
-        .select(*id_cols, "__lid", "seg_idx", "__d")
-    )
+    return pts.join(seg_cells, "__cell").drop("__cell")
+
+
+def _within(pairs: DataFrame, radius_m: float) -> DataFrame:
+    """The exact refine: ``pairs`` with their seg_dist_m as __d, kept
+    where it is <= ``radius_m``."""
+    dist = seg_dist_m("__plat", "__plon", "__sy1", "__sx1", "__sy2", "__sx2", SPARK)
+    return pairs.withColumn("__d", F.expr(dist)).where(F.col("__d") <= F.lit(float(radius_m)))
 
 
 def snap_join(
@@ -347,20 +331,20 @@ def _segments(lines: DataFrame, line_id: str, pos_list: str, p: str) -> DataFram
     )
 
 
-def _seg_bbox_cells(segs: DataFrame, p: str, res: int) -> DataFrame:
-    """Cells of each segment's (unpadded) bbox — any point ON the segment
-    lies in the bbox, so two intersecting segments always share ≥1 cell."""
-    ix_lo, iy_lo = geo.quad_ixy(f"least({p}y1, {p}y2)", f"least({p}x1, {p}x2)", res, SPARK)
-    ix_hi, iy_hi = geo.quad_ixy(f"greatest({p}y1, {p}y2)", f"greatest({p}x1, {p}x2)", res, SPARK)
-    keep = [f"{p}_id", f"{p}_seg", f"{p}y1", f"{p}x1", f"{p}y2", f"{p}x2"]
-    return (
-        segs.selectExpr(
-            *keep,
-            f"{ix_lo} as __ixl", f"{ix_hi} as __ixh",
-            f"explode(sequence({iy_lo}, {iy_hi})) as __cy",
-        )
-        .selectExpr(*keep, "__cy", "explode(sequence(__ixl, __ixh)) as __cx")
-        .selectExpr(*keep, geo.quad_pack("__cx", "__cy", res) + " as __cell")
+def _seg_bbox_cells(segs: DataFrame, p: str, res: int, pad_deg: float = 0.0) -> DataFrame:
+    """Cells of each segment's bbox, padded by ``pad_deg`` degrees
+    (``tiling.quad_bbox_cover``).  Unpadded, any point ON the segment lies
+    in the bbox, so two intersecting segments always share ≥1 cell."""
+    return quad_bbox_cover(
+        segs,
+        [f"{p}_id", f"{p}_seg", f"{p}y1", f"{p}x1", f"{p}y2", f"{p}x2"],
+        (
+            f"least({p}y1, {p}y2)", f"greatest({p}y1, {p}y2)",
+            f"least({p}x1, {p}x2)", f"greatest({p}x1, {p}x2)",
+        ),
+        res,
+        pad_deg,
+        "__cell",
     )
 
 
@@ -438,66 +422,18 @@ def corridor_join(
     """ALL (point, segment) pairs within ``radius_m`` — snap_join without
     the argmin: the corridor / route-buffer workload (every stop within R of
     any segment of a route).  Same provably-complete padded-bbox cell
-    prefilter and exact planar metric; the result is the brute cross join's
-    rows, reached through a cell equi-join.  Dedup on (point, line, seg)
-    removes multi-cell candidates BEFORE the distance evaluation."""
-    n = 2**res
-    cell_h = 180.0 / n
-    r_deg = radius_m / geo.M_PER_DEG
-    ky = int(r_deg / cell_h) + 1  # noqa: F841 (documented parallel to snap_join)
-    segs = lines.selectExpr(
-        f"{line_id} as __lid",
-        f"{pos_list} as __pl",
-        f"explode(sequence(1, size({pos_list}) div 2 - 1)) as __i",
-    ).selectExpr(
-        "__lid",
-        "__i as seg_idx",
-        "element_at(__pl, cast(2*__i - 1 as int)) as __ay",
-        "element_at(__pl, cast(2*__i as int)) as __ax",
-        "element_at(__pl, cast(2*__i + 1 as int)) as __by",
-        "element_at(__pl, cast(2*__i + 2 as int)) as __bx",
-    )
-    lat_lo = f"(least(__ay, __by) - {flit(r_deg)})"
-    lat_hi = f"(greatest(__ay, __by) + {flit(r_deg)})"
-    cosmin = f"cos(radians(least(89.0e0, greatest(abs(__ay), abs(__by)) + {flit(r_deg)})))"
-    lon_pad = f"({flit(r_deg)} / {cosmin})"
-    lon_lo = f"(least(__ax, __bx) - {lon_pad})"
-    lon_hi = f"(greatest(__ax, __bx) + {lon_pad})"
-    ix_lo, iy_lo = geo.quad_ixy(lat_lo, lon_lo, res, SPARK)
-    ix_hi, iy_hi = geo.quad_ixy(lat_hi, lon_hi, res, SPARK)
-    seg_cells = (
-        segs.selectExpr(
-            "__lid", "seg_idx", "__ay", "__ax", "__by", "__bx",
-            f"{ix_lo} as __ixl", f"{ix_hi} as __ixh",
-            f"explode(sequence({iy_lo}, {iy_hi})) as __cy",
-        )
-        .selectExpr(
-            "__lid", "seg_idx", "__ay", "__ax", "__by", "__bx", "__cy",
-            "explode(sequence(__ixl, __ixh)) as __cx",
-        )
-        .selectExpr(
-            "__lid", "seg_idx", "__ay", "__ax", "__by", "__bx",
-            geo.quad_pack("__cx", "__cy", res) + " as __cell",
-        )
-    )
-    pts = points.select(
-        F.col(point_id).alias("__pid"),
-        F.col("lat").alias("__plat"),
-        F.col("lon").alias("__plon"),
-        F.expr(geo.quad_cell("lat", "lon", res, SPARK)).alias("__cell"),
-    )
-    dist = seg_dist_m("__plat", "__plon", "__ay", "__ax", "__by", "__bx", SPARK)
-    return (
-        pts.join(seg_cells, "__cell")
-        .dropDuplicates(["__pid", "__lid", "seg_idx"])
-        .withColumn("__d", F.expr(dist))
-        .where(F.col("__d") <= F.lit(float(radius_m)))
-        .select(
-            F.col("__pid").alias(point_id),
-            F.col("__lid").alias(line_id),
-            "seg_idx",
-            F.round("__d", 6).alias("dist_m"),
-        )
+    prefilter and exact planar metric as ``seg_candidates``; the result is
+    the brute cross join's rows, reached through a cell equi-join."""
+    pairs = _seg_cell_pairs(points, lines, radius_m, res, [point_id], line_id, pos_list)
+    # a (point, segment) pair meets in one cell, so the dedup drops no row
+    # of distinct inputs; its shuffle keeps the refine out of the cell
+    # join's condition, where Catalyst would push it: 4.9-6.5 s with it,
+    # 9.3-12.2 s without, at sf0.1 on 4 vCPUs
+    return _within(pairs.dropDuplicates([point_id, "__s_id", "__s_seg"]), radius_m).select(
+        point_id,
+        F.col("__s_id").alias(line_id),
+        F.col("__s_seg").alias("seg_idx"),
+        F.round("__d", 6).alias("dist_m"),
     )
 
 
@@ -537,14 +473,10 @@ def linear_reference(
     One extra broadcastable join over snap_join's plan: the per-segment
     prefix table is lines-sized; the corpus-side snap output never
     reshuffles (join key = its groupBy key)."""
-    from ..functions.portable import haversine_m, round_half
-
     snapped = snap_join(points, lines, radius_m, res, point_id, line_id, pos_list)
     seg_len = round_half(
         f"({haversine_m('sy1', 'sx1', 'sy2', 'sx2', SPARK)}) * 1000.0e0", SPARK
     )
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("s_id").orderBy("s_seg")
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import geo
-from ..functions.portable import SPARK
+from ..functions.portable import SPARK, flit
 
 
 def assign_point_cells(
@@ -54,6 +54,53 @@ def polyfill(
     for r in resolutions:
         out = out.withColumn(f"cells_r{r}", F.expr(fn(pos_list, r, SPARK)))
     return out
+
+
+def quad_bbox_cover(
+    df: DataFrame,
+    keep: list[str],
+    bbox: tuple[str, str, str, str],
+    res: int,
+    pad_deg: float,
+    cell_col: str,
+) -> DataFrame:
+    """(keep…, cell_col) rows, one per quad cell at ``res`` that meets a
+    row's ``bbox`` (lat_lo, lat_hi, lon_lo, lon_hi column expressions),
+    padded first by ``pad_deg`` degrees when that is positive.
+
+    The cell filter of every filter-and-refine join, and why it is
+    complete.  With ``pad_deg`` = R / M_PER_DEG, a point within R metres
+    of the bbox lies inside the padded bbox: its latitude is at most
+    ``pad_deg`` away (the meridian bound), its longitude at most
+    ``pad_deg / cos φ``, φ its own latitude.  φ lies in the band |φ| <=
+    max(|lat_lo|, |lat_hi|) + ``pad_deg``, so the lon pad divides by the
+    band's min cosine, clamped at 89° to stay finite (a band that passes
+    89° is not covered, nor is a pair across ±180°: the grid does not
+    wrap).  Rectangles that meet share a cell, so a cell join of a padded
+    cover with an unpadded one loses no pair within R, and the exact
+    refine restores precision.
+
+    Staged scalar bounds and two explode(sequence()) projections, never
+    one cover HOF (cover_cells' docstring for why)."""
+    la_lo, la_hi, lo_lo, lo_hi = bbox
+    if pad_deg > 0.0:
+        pad = flit(pad_deg)
+        cosmin = f"cos(radians(least(89.0e0, greatest(abs({la_lo}), abs({la_hi})) + {pad})))"
+        lon_pad = f"({pad} / {cosmin})"
+        la_lo, la_hi = f"({la_lo} - {pad})", f"({la_hi} + {pad})"
+        lo_lo, lo_hi = f"({lo_lo} - {lon_pad})", f"({lo_hi} + {lon_pad})"
+    ix_lo, iy_lo = geo.quad_ixy(la_lo, lo_lo, res, SPARK)
+    ix_hi, iy_hi = geo.quad_ixy(la_hi, lo_hi, res, SPARK)
+    return (
+        df.selectExpr(
+            *keep,
+            f"{ix_lo} as __ix_lo",
+            f"{ix_hi} as __ix_hi",
+            f"explode(sequence({iy_lo}, {iy_hi})) as __iy",
+        )
+        .selectExpr(*keep, "__iy", "explode(sequence(__ix_lo, __ix_hi)) as __ix")
+        .selectExpr(*keep, geo.quad_pack("__ix", "__iy", res) + f" as {cell_col}")
+    )
 
 
 def cover_cells(
@@ -94,21 +141,8 @@ def cover_cells(
         f"array_max({lons}) as __lon_hi",
     )
     if scheme == "quad":
-        ix_lo, iy_lo = geo.quad_ixy("__lat_lo", "__lon_lo", res, SPARK)
-        ix_hi, iy_hi = geo.quad_ixy("__lat_hi", "__lon_hi", res, SPARK)
-        return (
-            staged.selectExpr(
-                id_col,
-                *kept,
-                f"{ix_lo} as __ix_lo",
-                f"{ix_hi} as __ix_hi",
-                f"explode(sequence({iy_lo}, {iy_hi})) as __iy",
-            )
-            .selectExpr(id_col, *kept, "__iy", "explode(sequence(__ix_lo, __ix_hi)) as __ix")
-            .selectExpr(
-                id_col, *kept, geo.quad_pack("__ix", "__iy", res) + f" as {cell_col}"
-            )
-        )
+        bbox = ("__lat_lo", "__lat_hi", "__lon_lo", "__lon_hi")
+        return quad_bbox_cover(staged, [id_col, *kept], bbox, res, 0.0, cell_col)
     # hex: axial bounds from the 4 bbox corners, padded 1 ring (same formula
     # as hex_cover_bbox — the q/r extrema over a lat/lon rect sit at corners)
     corners = [

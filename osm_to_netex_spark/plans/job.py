@@ -6,7 +6,7 @@ Reference: OsmToNetexApp.main parses -osmFile/-netexOutputFile/-targetEntity
     spark-submit --py-files engine.zip -m osm_to_netex_spark.plans.job \
         --input /path/docs_parquet --input-format documents|osm-xml \
         --target TopographicPlace --output /warehouse --run-tag r1 \
-        [--xml-out out.xml] [--resume]
+        [--xml-out out.xml] [--tile-res 7 8 9] [--cores N]
 
 Reads documents (or OSM XML), runs the conversion + tile index, commits the
 outputs to the snapshot catalog with lineage columns, optionally renders the

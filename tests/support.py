@@ -15,7 +15,12 @@ import numpy as np
 
 from osm_to_netex_spark.operators import media
 
-SF = "/root/testdata/sf0.001"
+# the generated scale-factor corpora (TESTDATA.md); no other test module
+# names this directory
+TESTDATA = "/root/testdata"
+SF = f"{TESTDATA}/sf0.001"
+SF0_01 = f"{TESTDATA}/sf0.01"
+SF0_1 = f"{TESTDATA}/sf0.1"
 
 # seed-ensemble embedding near-dup parameters (dedup.embedding_near_dup_ensemble)
 BITS = 4

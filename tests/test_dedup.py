@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import dedup, similarity, textstats
-from tests.support import BITS, SEEDS, SF, THRESHOLD, phash60
+from tests.support import BITS, SEEDS, SF, SF0_01, SF0_1, THRESHOLD, phash60
 
 
 @pytest.fixture(scope="module")
@@ -121,7 +121,7 @@ def test_auto_n_bits_bounds_buckets(spark):
     assert dedup.auto_n_bits(10**6, target_bucket_size=1000) == 10
     assert dedup.auto_n_bits(10**12, target_bucket_size=1000) == 30  # cap
 
-    emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF0_1}/embeddings.parquet")
     n = emb.count()
     target = 64
     bits = dedup.auto_n_bits(n, target_bucket_size=target)
@@ -268,7 +268,7 @@ def test_stratified_sample_subset_and_deterministic(spark, docs):
 def test_weighted_sample_partition_invariant_and_biased(spark):
     from osm_to_netex_spark.operators import sampling
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    docs = spark.read.parquet(f"{SF0_01}/documents.parquet")
     a = {
         (r["doc_id"], r["lang"], r["rank"])
         for r in sampling.weighted_sample(docs, 20, stratum_col="lang").collect()
@@ -297,7 +297,7 @@ def test_weighted_sample_global_topk_plan(spark):
     full sort of the corpus)."""
     from osm_to_netex_spark.operators import sampling
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     df = sampling.weighted_sample(docs, 10)
     import io
     from contextlib import redirect_stdout

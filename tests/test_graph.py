@@ -4,8 +4,7 @@ the deliberately skewed hub set must actually concentrate rank."""
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import graph
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests.support import SF
 
 
 def _ranks(spark, docs, n_iter=3):
@@ -16,7 +15,7 @@ def _ranks(spark, docs, n_iter=3):
 
 
 def test_pagerank_partition_invariance(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     a = _ranks(spark, docs)
     b = _ranks(spark, docs.repartition(13, "doc_id"))
     c = _ranks(spark, docs.coalesce(1))
@@ -24,7 +23,7 @@ def test_pagerank_partition_invariance(spark):
 
 
 def test_pagerank_hubs_concentrate_rank(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     pr = graph.pagerank(spark, docs, n_iter=3)
     row = pr.select(
         F.avg(F.when(F.col("doc_id") < graph.HUB_MOD, F.col("pagerank"))).alias("hub"),

@@ -10,6 +10,7 @@ from pathlib import Path
 
 from osm_to_netex_spark.plans import queries as Q
 from osm_to_netex_spark.plans.convert_queries import CONVERT_QUERIES
+from tests.support import TESTDATA
 
 ROOT = Q.__name__  # osm_to_netex_spark.plans.queries
 PKG = Path(Q.__file__).parent
@@ -74,3 +75,14 @@ def test_no_test_module_imports_another():
         for path in sorted(TESTS.glob("*.py"))
     }
     assert not {k: v for k, v in found.items() if v}
+
+
+def test_testdata_paths_live_in_support():
+    """The testdata directory is named once, in tests/support.py; every
+    other test module reaches a corpus through its constants."""
+    named = [
+        path.name
+        for path in sorted(TESTS.glob("*.py"))
+        if path.name != "support.py" and TESTDATA in path.read_text()
+    ]
+    assert not named

@@ -6,6 +6,7 @@ import math
 import pytest
 
 from osm_to_netex_spark.operators import retrieval
+from tests.support import SF
 
 
 def _py_bm25(corpus, terms, k1=1.2, b=0.75):
@@ -50,7 +51,7 @@ def test_bm25_matches_pure_python(spark):
 def test_bm25_topk_is_take_ordered_not_global_sort(spark):
     """The global top-k must compile to TakeOrderedAndProject (per-partition
     top-k + driver merge), not a full sort shuffle."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = retrieval.bm25_topk(docs, ["spark", "join"], k=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 

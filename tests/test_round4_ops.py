@@ -16,7 +16,7 @@ from osm_to_netex_spark.plans.queries import (
     spatial as SPATIAL,
     trajectory as TRAJECTORY,
 )
-from tests.support import SF
+from tests.support import SF, SF0_01
 
 # some tests replace the memoized `documents`/`events` temp views with tiny
 # synthetic tables
@@ -523,8 +523,7 @@ def _edr_python(A, B, eps_mm):
 
 
 def test_edr_join_matches_python_replay(spark):
-    SF01 = "/root/testdata/sf0.01"
-    CORPUS.register_geometry_views(spark, SF01)
+    CORPUS.register_geometry_views(spark, SF0_01)
     spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
@@ -541,7 +540,7 @@ def test_edr_join_matches_python_replay(spark):
                 want[(a, b)] = e
     got = {
         (int(r["traj_a"]), int(r["traj_b"])): int(r["edr"])
-        for r in Q.QUERIES["edr_join"][0](spark, SF01).collect()
+        for r in Q.QUERIES["edr_join"][0](spark, SF0_01).collect()
     }
     assert got == want and len(got) > 0
 

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_to_netex_spark.operators import assemble, extract, knn, pip, raster, tiling, zones
+from tests.support import SF
 
 
 @pytest.fixture(scope="module")
@@ -300,13 +301,10 @@ def test_seg_dist_geometry_cases(spark):
     assert abs(rows["degen"] - 1.0 * g.M_PER_DEG) < 1e-6
 
 
-def test_snap_join_equals_brute(spark, geo_fixture):
-    """Cell-pruned snap must equal the brute per-point argmin exactly."""
+def _brute_seg_pairs(pts, zdf, radius_m):
+    """(point_id, zone_id, seg_idx, dist) for every point × polyline segment
+    pair within ``radius_m``: the cross join with no cell filter."""
     from osm_to_netex_spark.operators import distjoin
-
-    zdf, pts = geo_fixture
-    snapped = distjoin.snap_join(pts, zdf, radius_m=3000.0, res=10)
-    got = {(r["point_id"], r["zone_id"], r["seg_idx"]) for r in snapped.collect()}
 
     segs = zdf.selectExpr(
         "zone_id",
@@ -321,11 +319,22 @@ def test_snap_join_equals_brute(spark, geo_fixture):
         "element_at(pl, cast(2*i + 2 as int)) as bx",
     )
     d = distjoin.seg_dist_m("lat", "lon", "ay", "ax", "by", "bx", "spark")
-    brute = (
+    return (
         pts.crossJoin(segs)
         .selectExpr("point_id", "zone_id", "seg_idx", f"{d} as dist")
-        .where(F.col("dist") <= 3000.0)
+        .where(F.col("dist") <= radius_m)
     )
+
+
+def test_snap_join_equals_brute(spark, geo_fixture):
+    """Cell-pruned snap must equal the brute per-point argmin exactly."""
+    from osm_to_netex_spark.operators import distjoin
+
+    zdf, pts = geo_fixture
+    snapped = distjoin.snap_join(pts, zdf, radius_m=3000.0, res=10)
+    got = {(r["point_id"], r["zone_id"], r["seg_idx"]) for r in snapped.collect()}
+
+    brute = _brute_seg_pairs(pts, zdf, 3000.0)
     from pyspark.sql import Window
 
     w = Window.partitionBy("point_id").orderBy("dist", "zone_id", "seg_idx")
@@ -336,6 +345,25 @@ def test_snap_join_equals_brute(spark, geo_fixture):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_corridor_join_equals_brute(spark, geo_fixture):
+    """Cell-pruned corridor join must return exactly the brute rows within
+    R: every pair, each once, with the same rounded distance."""
+    from osm_to_netex_spark.operators import distjoin
+
+    zdf, pts = geo_fixture
+    got = [
+        (r["point_id"], r["zone_id"], r["seg_idx"], r["dist_m"])
+        for r in distjoin.corridor_join(pts, zdf, radius_m=3000.0, res=10).collect()
+    ]
+    want = [
+        (r["point_id"], r["zone_id"], r["seg_idx"], r["dist_m"])
+        for r in _brute_seg_pairs(pts, zdf, 3000.0)
+        .selectExpr("point_id", "zone_id", "seg_idx", "round(dist, 6) as dist_m")
+        .collect()
+    ]
+    assert sorted(got) == sorted(want) and len(want) > 0
 
 
 def test_adaptive_partition_bounds_and_levels(spark):
@@ -368,7 +396,7 @@ def test_adaptive_partition_bounds_and_levels(spark):
 def test_trip_stats_partition_invariant_and_sane(spark):
     from osm_to_netex_spark.operators import trajectory
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    ev = spark.read.parquet(f"{SF}/events.parquet")
     a = trajectory.trip_stats(spark, ev).collect()
     b = trajectory.trip_stats(spark, ev.repartition(17, "event_id")).collect()
     key = lambda rows: {(r["user_id"], r["trip"]): tuple(r) for r in rows}

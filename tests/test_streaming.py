@@ -7,6 +7,7 @@ from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import extract
 from osm_to_netex_spark.sources import documents as docs_src
 from osm_to_netex_spark.streaming import stream
+from tests.support import SF
 
 
 def test_stream_tile_assign_matches_batch(spark, corpus, tmp_path):
@@ -126,7 +127,7 @@ def test_stream_session_windows_match_batch(spark, tmp_path):
     """session_window sessions computed over a finite stream (availableNow,
     complete mode) equal the same aggregation run as one batch job — the
     dynamic-gap stateful operator gives identical sessions either way."""
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    ev = spark.read.parquet(f"{SF}/events.parquet")
     src = str(tmp_path / "ev_src")
     ev.repartition(5).write.mode("overwrite").parquet(src)
 
@@ -230,7 +231,7 @@ def test_streaming_interval_join_matches_batch(spark, tmp_path):
     exactly once, regardless of file-replay arrival order."""
     from pyspark.sql import functions as F
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    ev = spark.read.parquet(f"{SF}/events.parquet")
     src = str(tmp_path / "src")
     ev.repartition(6).write.mode("overwrite").parquet(src)
 
@@ -342,7 +343,7 @@ def test_streaming_hopping_hist_matches_batch(spark, tmp_path):
     """Hopping windows: the streamed (window, bucket, n) set must equal the
     same aggregation run as one batch job, and each event must contribute
     to exactly TWO overlapping windows."""
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    ev = spark.read.parquet(f"{SF}/events.parquet")
     src = str(tmp_path / "hist_src")
     ev.repartition(5).write.mode("overwrite").parquet(src)
     st = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 2).parquet(src)
