@@ -201,24 +201,6 @@ def seg_candidates(
     segment-bbox cells, bounded for street-scale segments."""
     if id_cols is None:
         id_cols = ["point_id"]
-    pairs = _seg_cell_pairs(points, lines, radius_m, res, id_cols, line_id, pos_list)
-    return _within(pairs, radius_m).select(
-        *id_cols, F.col("__s_id").alias("__lid"), F.col("__s_seg").alias("seg_idx"), "__d"
-    )
-
-
-def _seg_cell_pairs(
-    points: DataFrame,
-    lines: DataFrame,
-    radius_m: float,
-    res: int,
-    id_cols: list[str],
-    line_id: str,
-    pos_list: str,
-) -> DataFrame:
-    """Unrefined (``*id_cols``, __plat, __plon, __s_id, __s_seg, __sy1,
-    __sx1, __sy2, __sx2) rows: each point with every segment whose
-    radius-padded bbox cover holds the point's cell."""
     segs = _segments(lines, line_id, pos_list, "__s")
     seg_cells = _seg_bbox_cells(segs, "__s", res, radius_m / geo.M_PER_DEG)
     pts = points.select(
@@ -227,14 +209,21 @@ def _seg_cell_pairs(
         F.col("lon").alias("__plon"),
         F.expr(geo.quad_cell("lat", "lon", res, SPARK)).alias("__cell"),
     )
-    return pts.join(seg_cells, "__cell").drop("__cell")
-
-
-def _within(pairs: DataFrame, radius_m: float) -> DataFrame:
-    """The exact refine: ``pairs`` with their seg_dist_m as __d, kept
-    where it is <= ``radius_m``."""
+    pairs = pts.join(seg_cells, "__cell").drop("__cell")
+    # a (point, segment) pair meets in one cell, so the dedup drops no row
+    # of distinct inputs; its shuffle keeps the refine out of the cell
+    # join's condition, where Catalyst would push it.  At sf0.1 on 4 vCPUs
+    # snap_join reads 6.4-7.9 s with it and 12.1-13.1 s without,
+    # corridor_join 4.9-6.5 s and 9.3-12.2 s
+    pairs = pairs.dropDuplicates([*id_cols, "__s_id", "__s_seg"])
     dist = seg_dist_m("__plat", "__plon", "__sy1", "__sx1", "__sy2", "__sx2", SPARK)
-    return pairs.withColumn("__d", F.expr(dist)).where(F.col("__d") <= F.lit(float(radius_m)))
+    return (
+        pairs.withColumn("__d", F.expr(dist))
+        .where(F.col("__d") <= F.lit(float(radius_m)))
+        .select(
+            *id_cols, F.col("__s_id").alias("__lid"), F.col("__s_seg").alias("seg_idx"), "__d"
+        )
+    )
 
 
 def snap_join(
@@ -424,15 +413,12 @@ def corridor_join(
     any segment of a route).  Same provably-complete padded-bbox cell
     prefilter and exact planar metric as ``seg_candidates``; the result is
     the brute cross join's rows, reached through a cell equi-join."""
-    pairs = _seg_cell_pairs(points, lines, radius_m, res, [point_id], line_id, pos_list)
-    # a (point, segment) pair meets in one cell, so the dedup drops no row
-    # of distinct inputs; its shuffle keeps the refine out of the cell
-    # join's condition, where Catalyst would push it: 4.9-6.5 s with it,
-    # 9.3-12.2 s without, at sf0.1 on 4 vCPUs
-    return _within(pairs.dropDuplicates([point_id, "__s_id", "__s_seg"]), radius_m).select(
+    return seg_candidates(
+        points, lines, radius_m, res, [point_id], line_id, pos_list
+    ).select(
         point_id,
-        F.col("__s_id").alias(line_id),
-        F.col("__s_seg").alias("seg_idx"),
+        F.col("__lid").alias(line_id),
+        "seg_idx",
         F.round("__d", 6).alias("dist_m"),
     )
 

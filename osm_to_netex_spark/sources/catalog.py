@@ -8,21 +8,52 @@ on a directory layout:
 
     <root>/<table>/
         snapshots/<snapshot_id>/part-*.parquet    (immutable data files)
-        _meta/v<N>.json                           (snapshot log, atomic rename)
+        deletes/<snapshot_id>/                    (positional delete vectors)
+        eq_deletes/<snapshot_id>/                 (equality-delete key lists)
+        _meta/v<sequence>.json                    (committed snapshot log)
+        _meta/staged-<snapshot_id>.json           (write-audit-publish candidates)
+        _refs/<name>.json                         (branch and tag heads)
+        stats/<snapshot_id>.json                  (per-file column statistics)
 
-Every commit writes parquet; there is no Iceberg delegation.  Readers always
-pin a snapshot id first, so concurrent appends never tear a read — the
-property the resume/lineage plan (plans.lineage) relies on.
+Every metadata file is written to a tmp file and renamed into place, so a
+crash never exposes a torn one.  A snapshot's metadata describes its data in
+full; no reader follows a parent pointer:
+
+    snapshot_id      "<ms>-<8 hex>", also the name of the dirs it wrote
+    sequence         commit order on main (staged/branch: parent's + 1)
+    mode             append | overwrite | delete | eq_delete | merge
+    data_dirs        every data dir of the snapshot, oldest first
+    delete_dirs      positional delete-vector dirs that apply to them
+    eq_deletes       [{dir, seq, cols}] equality deletes, each masking key
+                     matches in data committed before its seq
+    data_seq         data dir -> sequence at which it was added
+    partition_spec   hidden-partitioning transforms, or null
+    schema           Spark schema JSON of the latest write
+    merge_schema     whether reads must merge parquet footers
+    committed_at_ms  commit wall-clock time
+
+plus ``staged: true`` on a staged snapshot, ``branch`` on a branch commit
+and whatever ``extra_meta`` a caller of `commit` adds.  An append, a delete
+and a merge carry everything of their parent and add their own delta; an
+overwrite carries nothing.  Every commit writes parquet; there is no Iceberg
+delegation.  Readers always pin a snapshot id first, so concurrent appends
+never tear a read — the property the resume/lineage plan (plans.lineage)
+relies on.
 """
 
 from __future__ import annotations
 
+import datetime
+import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 class SnapshotCatalog:
@@ -34,6 +65,33 @@ class SnapshotCatalog:
     def _meta_dir(self, table: str) -> str:
         return os.path.join(self.root, table, "_meta")
 
+    def _version_path(self, table: str, sequence: int) -> str:
+        return os.path.join(self._meta_dir(table), f"v{sequence:09d}.json")
+
+    def _staged_path(self, table: str, snap_id: str) -> str:
+        return os.path.join(self._meta_dir(table), f"staged-{snap_id}.json")
+
+    @staticmethod
+    def _read_json(path: str) -> dict:
+        with open(path) as fh:
+            return json.load(fh)
+
+    @staticmethod
+    def _write_json(path: str, obj: dict) -> None:
+        """Atomic publish: write a tmp file beside ``path``, then rename it
+        over ``path`` — readers see the old file or the new, never a torn
+        one."""
+        d = os.path.dirname(path)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.json")
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+        os.replace(tmp, path)
+
+    @staticmethod
+    def _new_snapshot_id() -> str:
+        return f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
+
     def _versions(self, table: str) -> list[str]:
         d = self._meta_dir(table)
         if not os.path.isdir(d):
@@ -44,15 +102,13 @@ class SnapshotCatalog:
         vs = self._versions(table)
         if not vs:
             return None
-        with open(os.path.join(self._meta_dir(table), vs[-1])) as fh:
-            return json.load(fh)
+        return self._read_json(os.path.join(self._meta_dir(table), vs[-1]))
 
     def snapshots(self, table: str) -> list[dict]:
-        out = []
-        for v in self._versions(table):
-            with open(os.path.join(self._meta_dir(table), v)) as fh:
-                out.append(json.load(fh))
-        return out
+        return [
+            self._read_json(os.path.join(self._meta_dir(table), v))
+            for v in self._versions(table)
+        ]
 
     # -- hidden partitioning -------------------------------------------------
     @staticmethod
@@ -82,15 +138,11 @@ class SnapshotCatalog:
         if t == "identity":
             return value
         if t == "bucket":
-            import hashlib
-
             h = int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16)
             return h % int(spec["n"])
         if t == "truncate":
             return (int(value) // int(spec["n"])) * int(spec["n"])
         if t == "day":
-            import datetime
-
             if isinstance(value, str):
                 value = datetime.datetime.fromisoformat(value)
             if isinstance(value, datetime.datetime):
@@ -108,12 +160,10 @@ class SnapshotCatalog:
         self, df: DataFrame, data_dir: str, partition_spec: list[dict] | None
     ) -> None:
         """Write one immutable data dir honoring the table's hidden
-        partitioning — EVERY write path (commit, merge_into) must derive the
-        __p_* directory columns the same way, or a later scan_partitions
-        directory filter hits a dir lacking the derived column."""
+        partitioning — EVERY write path must derive the __p_* directory
+        columns the same way, or a later scan_partitions directory filter
+        hits a dir lacking the derived column."""
         if partition_spec:
-            from pyspark.sql import functions as F
-
             out = df
             pnames = []
             for spec in partition_spec:
@@ -123,6 +173,85 @@ class SnapshotCatalog:
             out.write.mode("overwrite").partitionBy(*pnames).parquet(data_dir)
         else:
             df.write.mode("overwrite").parquet(data_dir)
+
+    # -- snapshot builder ---------------------------------------------------
+    def _child(
+        self,
+        table: str,
+        prev: dict | None,
+        mode: str,
+        df: DataFrame | None = None,
+        carry: bool = True,
+        partition_spec: list[dict] | None = None,
+    ) -> dict:
+        """Metadata of a new snapshot one sequence after ``prev``, the one
+        decision every commit path shares.  With ``carry`` it inherits all
+        of ``prev``'s data: data and delete dirs, equality deletes, their
+        sequences, the partition spec, the schema and its merge flag.  An
+        explicit ``partition_spec`` must then equal the active one (a spec
+        change needs an overwrite — partition-spec evolution on carried
+        files is out of scope; Iceberg proper tracks per-file specs).
+
+        ``df``, if given, is written as the snapshot's own data dir at its
+        sequence, under the spec, after the schema-evolution check against
+        the carried schema.  Callers add their own delta to the result and
+        publish it with `_write_json`."""
+        carried = prev if carry else None
+        if carried is not None:
+            active = carried.get("partition_spec")
+            if partition_spec is None:
+                partition_spec = active
+            elif json.dumps(partition_spec, sort_keys=True) != json.dumps(
+                active, sort_keys=True
+            ):
+                raise ValueError(
+                    "append must reuse the table's partition spec; "
+                    "overwrite to change it"
+                )
+        meta = {
+            "snapshot_id": self._new_snapshot_id(),
+            "sequence": prev["sequence"] + 1 if prev else 0,
+            "mode": mode,
+            "data_dirs": list(carried["data_dirs"]) if carried else [],
+            "delete_dirs": list(carried.get("delete_dirs", [])) if carried else [],
+            "eq_deletes": list(carried.get("eq_deletes", [])) if carried else [],
+            "data_seq": self._dir_seq(carried) if carried else {},
+            "partition_spec": partition_spec,
+            "schema": carried.get("schema") if carried else None,
+            "merge_schema": bool(carried and carried.get("merge_schema")),
+            "committed_at_ms": int(time.time() * 1000),
+        }
+        if df is not None:
+            if meta["schema"]:
+                meta["merge_schema"] = self._check_evolution(meta, df) or meta["merge_schema"]
+            data_dir = os.path.join(self.root, table, "snapshots", meta["snapshot_id"])
+            self._write_data_dir(df, data_dir, partition_spec)
+            meta["data_dirs"].append(data_dir)
+            meta["data_seq"][data_dir] = meta["sequence"]
+            meta["schema"] = json.loads(df.schema.json())
+        return meta
+
+    def _rebase(
+        self, table: str, meta: dict, own: list[str], cur: dict | None, carry: bool
+    ) -> dict:
+        """``meta`` as main's next version after ``cur`` — what `publish` and
+        `fast_forward` write.  Its own data dirs ``own`` land at the new
+        sequence; with ``carry`` (``meta`` appended to its parent) they land
+        on top of everything ``cur`` holds, so what main committed since
+        ``meta`` was built stays in.  Staged and branch commits add no
+        deletes of their own, so everything else comes from ``cur``."""
+        out = self._child(
+            table, cur, meta["mode"], carry=carry,
+            partition_spec=meta.get("partition_spec"),
+        )
+        out["data_dirs"] += own
+        out["data_seq"].update({d: out["sequence"] for d in own})
+        out["merge_schema"] = bool(meta.get("merge_schema") or out["merge_schema"])
+        return {
+            **meta, **out,
+            "snapshot_id": meta["snapshot_id"],
+            "schema": meta.get("schema"),
+        }
 
     # -- write --------------------------------------------------------------
     def commit(
@@ -141,60 +270,14 @@ class SnapshotCatalog:
         "n": ...} dicts.  Data files land under one directory level per
         transform (physical layout), readers never see the derived columns,
         and `scan_partitions` prunes directories from a predicate on the
-        SOURCE column.  Appends must reuse the table's active spec (a spec
-        change needs an overwrite — partition-spec evolution on carried
-        files is out of scope; Iceberg proper tracks per-file specs)."""
-        prev = self.current_snapshot(table)
-        if mode == "append" and prev is not None:
-            active = prev.get("partition_spec")
-            if partition_spec is None:
-                partition_spec = active
-            elif json.dumps(partition_spec, sort_keys=True) != json.dumps(
-                active, sort_keys=True
-            ):
-                raise ValueError(
-                    "append must reuse the table's partition spec; "
-                    "overwrite to change it"
-                )
-        merge = bool(prev and prev.get("merge_schema")) if mode == "append" else False
-        if mode == "append" and prev and prev.get("schema"):
-            merge = self._check_evolution(prev, df) or merge
-        snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        data_dir = os.path.join(self.root, table, "snapshots", snap_id)
-        self._write_data_dir(df, data_dir, partition_spec)
-
-        seq = (prev["sequence"] + 1) if prev else 0
-        dirs = [data_dir]
-        dels: list[str] = []
-        eqs: list[dict] = []
-        data_seq = {data_dir: seq}
-        if mode == "append" and prev:
-            dirs = prev["data_dirs"] + dirs
-            # delete vectors keyed by file path still apply to carried files,
-            # and equality deletes still mask carried rows older than them
-            dels = prev.get("delete_dirs", [])
-            eqs = prev.get("eq_deletes", [])
-            data_seq = {**self._dir_seq(prev), data_dir: seq}
-        meta = {
-            "snapshot_id": snap_id,
-            "sequence": seq,
-            "mode": mode,
-            **(extra_meta or {}),
-            "data_dirs": dirs,
-            "delete_dirs": dels,
-            "eq_deletes": eqs,
-            "data_seq": data_seq,
-            "partition_spec": partition_spec,
-            "schema": json.loads(df.schema.json()),
-            "merge_schema": merge,
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        os.makedirs(self._meta_dir(table), exist_ok=True)
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, os.path.join(self._meta_dir(table), f"v{meta['sequence']:09d}.json"))
-        return snap_id
+        SOURCE column.  Appends must reuse the table's active spec."""
+        meta = self._child(
+            table, self.current_snapshot(table), mode, df,
+            carry=mode == "append", partition_spec=partition_spec,
+        )
+        meta = {**(extra_meta or {}), **meta}
+        self._write_json(self._version_path(table, meta["sequence"]), meta)
+        return meta["snapshot_id"]
 
     # -- schema evolution -----------------------------------------------------
     @staticmethod
@@ -208,12 +291,10 @@ class SnapshotCatalog:
         scale); DROPPING a column in the writer is allowed — the old files
         still carry it and merged reads resurface it as null for new rows.
         """
-        import json as _json
-
-        old = {f["name"]: _json.dumps(f["type"], sort_keys=True)
+        old = {f["name"]: json.dumps(f["type"], sort_keys=True)
                for f in prev["schema"]["fields"]}
-        new = {f["name"]: _json.dumps(f["type"], sort_keys=True)
-               for f in _json.loads(df.schema.json())["fields"]}
+        new = {f["name"]: json.dumps(f["type"], sort_keys=True)
+               for f in json.loads(df.schema.json())["fields"]}
         for name in old.keys() & new.keys():
             if old[name] != new[name]:
                 raise ValueError(
@@ -232,73 +313,36 @@ class SnapshotCatalog:
         with `publish()` (atomic rename — the audit-to-visible flip is one
         filesystem op) or drop it with `abandon()`.
         """
-        prev = self.current_snapshot(table)
-        merge = bool(prev and prev.get("merge_schema")) if mode == "append" else False
-        if mode == "append" and prev and prev.get("schema"):
-            merge = self._check_evolution(prev, df) or merge
-        snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        data_dir = os.path.join(self.root, table, "snapshots", snap_id)
-        df.write.mode("overwrite").parquet(data_dir)
-        dirs = [data_dir]
-        dels: list[str] = []
-        if mode == "append" and prev:
-            dirs = prev["data_dirs"] + dirs
-            dels = prev.get("delete_dirs", [])
-        meta = {
-            "snapshot_id": snap_id,
-            "sequence": (prev["sequence"] + 1) if prev else 0,
-            "mode": mode,
-            "staged": True,
-            "schema": json.loads(df.schema.json()),
-            "merge_schema": merge,
-            "data_dirs": dirs,
-            "delete_dirs": dels,
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        os.makedirs(self._meta_dir(table), exist_ok=True)
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(
-            tmp, os.path.join(self._meta_dir(table), f"staged-{snap_id}.json")
+        meta = self._child(
+            table, self.current_snapshot(table), mode, df, carry=mode == "append"
         )
-        return snap_id
+        meta["staged"] = True
+        self._write_json(self._staged_path(table, meta["snapshot_id"]), meta)
+        return meta["snapshot_id"]
 
     def publish(self, table: str, snap_id: str) -> None:
         """WAP step 3: atomically promote an audited staged snapshot.
 
-        The staged meta becomes the next version file via one rename; its
-        sequence is re-assigned at publish time so staged snapshots can be
+        The staged meta becomes the next version file via one rename; it is
+        re-based on main at publish time (sequence, and for an append the
+        data and deletes published meanwhile), so staged snapshots can be
         audited (and abandoned) in any order."""
-        path = os.path.join(self._meta_dir(table), f"staged-{snap_id}.json")
+        path = self._staged_path(table, snap_id)
         if not os.path.exists(path):
             raise FileNotFoundError(f"no staged snapshot {snap_id!r} for {table!r}")
-        with open(path) as fh:
-            meta = json.load(fh)
-        cur = self.current_snapshot(table)
-        meta["sequence"] = (cur["sequence"] + 1) if cur else 0
-        if meta["mode"] == "append" and cur:
-            # re-base on whatever was published while this snapshot was staged
-            meta["data_dirs"] = cur["data_dirs"] + meta["data_dirs"][-1:]
-            meta["delete_dirs"] = cur.get("delete_dirs", [])
-            meta["merge_schema"] = bool(
-                meta.get("merge_schema") or cur.get("merge_schema")
-            )
-        meta.pop("staged")
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(
-            tmp, os.path.join(self._meta_dir(table), f"v{meta['sequence']:09d}.json")
+        meta = self._read_json(path)
+        meta = self._rebase(
+            table, meta, meta["data_dirs"][-1:], self.current_snapshot(table),
+            carry=meta["mode"] == "append",
         )
+        meta.pop("staged")
+        self._write_json(self._version_path(table, meta["sequence"]), meta)
         os.remove(path)
 
     def abandon(self, table: str, snap_id: str) -> None:
         """Drop a staged snapshot that failed its audit: meta first, then the
         (never-visible) data dir."""
-        import shutil
-
-        path = os.path.join(self._meta_dir(table), f"staged-{snap_id}.json")
+        path = self._staged_path(table, snap_id)
         if not os.path.exists(path):
             raise FileNotFoundError(f"no staged snapshot {snap_id!r} for {table!r}")
         os.remove(path)
@@ -310,31 +354,24 @@ class SnapshotCatalog:
         d = self._meta_dir(table)
         if not os.path.isdir(d):
             return []
-        out = []
-        for f in sorted(os.listdir(d)):
-            if f.startswith("staged-") and f.endswith(".json"):
-                with open(os.path.join(d, f)) as fh:
-                    out.append(json.load(fh))
-        return out
+        return [
+            self._read_json(os.path.join(d, f))
+            for f in sorted(os.listdir(d))
+            if f.startswith("staged-") and f.endswith(".json")
+        ]
 
     # -- branches & tags ------------------------------------------------------
     def _refs_dir(self, table: str) -> str:
         return os.path.join(self.root, table, "_refs")
 
     def _write_ref(self, table: str, name: str, ref: dict) -> None:
-        d = self._refs_dir(table)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(ref, fh)
-        os.replace(tmp, os.path.join(d, f"{name}.json"))
+        self._write_json(os.path.join(self._refs_dir(table), f"{name}.json"), ref)
 
     def _read_ref_meta(self, table: str, name: str) -> dict:
         path = os.path.join(self._refs_dir(table), f"{name}.json")
         if not os.path.exists(path):
             raise FileNotFoundError(f"no ref {name!r} on table {table!r}")
-        with open(path) as fh:
-            return json.load(fh)
+        return self._read_json(path)
 
     def refs(self, table: str) -> dict:
         d = self._refs_dir(table)
@@ -343,8 +380,7 @@ class SnapshotCatalog:
         out = {}
         for f in sorted(os.listdir(d)):
             if f.endswith(".json") and not f.startswith("."):
-                with open(os.path.join(d, f)) as fh:
-                    r = json.load(fh)
+                r = self._read_json(os.path.join(d, f))
                 out[r["name"]] = r
         return out
 
@@ -382,38 +418,17 @@ class SnapshotCatalog:
         self, df: DataFrame, table: str, name: str, mode: str = "append"
     ) -> str:
         """Write a snapshot whose parent is the BRANCH head; main is not
-        moved and never sees the branch lineage.  Same append/overwrite and
-        schema-evolution semantics as `commit`."""
+        moved and never sees the branch lineage.  Same append/overwrite,
+        partition-spec and schema-evolution semantics as `commit`."""
         ref = self._read_ref_meta(table, name)
         if ref["type"] != "branch":
             raise ValueError(f"ref {name!r} is a tag; tags are immutable")
-        prev = ref["meta"]
-        merge = bool(prev.get("merge_schema")) if mode == "append" else False
-        if mode == "append" and prev.get("schema"):
-            merge = self._check_evolution(prev, df) or merge
-        snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        data_dir = os.path.join(self.root, table, "snapshots", snap_id)
-        df.write.mode("overwrite").parquet(data_dir)
-        dirs = [data_dir]
-        dels: list[str] = []
-        if mode == "append":
-            dirs = prev["data_dirs"] + dirs
-            dels = prev.get("delete_dirs", [])
-        meta = {
-            "snapshot_id": snap_id,
-            "sequence": prev.get("sequence", 0) + 1,
-            "mode": mode,
-            "branch": name,
-            "data_dirs": dirs,
-            "delete_dirs": dels,
-            "schema": json.loads(df.schema.json()),
-            "merge_schema": merge,
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        ref["snapshot_id"] = snap_id
+        meta = self._child(table, ref["meta"], mode, df, carry=mode == "append")
+        meta["branch"] = name
+        ref["snapshot_id"] = meta["snapshot_id"]
         ref["meta"] = meta
         self._write_ref(table, name, ref)
-        return snap_id
+        return meta["snapshot_id"]
 
     def read_ref(self, table: str, name: str) -> DataFrame:
         """Read a table at a named ref (tag or branch head)."""
@@ -433,14 +448,10 @@ class SnapshotCatalog:
                 f"branch {name!r} forked from {ref['forked_from']!r} but main "
                 f"is at {cur_id!r}: diverged, cannot fast-forward"
             )
-        meta = dict(ref["meta"])
-        meta["sequence"] = (cur["sequence"] + 1) if cur else 0
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(
-            tmp, os.path.join(self._meta_dir(table), f"v{meta['sequence']:09d}.json")
-        )
+        head = ref["meta"]
+        own = [d for d in head["data_dirs"] if d not in cur["data_dirs"]]
+        meta = self._rebase(table, head, own, cur, carry=len(own) < len(head["data_dirs"]))
+        self._write_json(self._version_path(table, meta["sequence"]), meta)
         ref["forked_from"] = meta["snapshot_id"]
         self._write_ref(table, name, ref)
         return meta["snapshot_id"]
@@ -462,45 +473,57 @@ class SnapshotCatalog:
             d: int(meta.get("data_seq", {}).get(d, 0)) for d in meta["data_dirs"]
         }
 
+    def _pos_delete_join(self, df: DataFrame, delete_dirs: list[str], how: str) -> DataFrame:
+        """``df`` (rows carrying __fp, __ri) joined ``how`` to the positional
+        delete vectors in ``delete_dirs``, the small side broadcast."""
+        dv = self.spark.read.parquet(*delete_dirs)
+        return df.join(
+            F.broadcast(dv),
+            (df["__fp"] == dv["file_path"]) & (df["__ri"] == dv["row_index"]),
+            how,
+        )
+
+    def _eq_delete_join(
+        self, df: DataFrame, meta: dict, eqs: list[dict], how: str
+    ) -> DataFrame:
+        """``df`` (rows of ``meta``'s data dirs carrying __fp) joined ``how``
+        to the equality deletes ``eqs``, sequence-scoped (Iceberg v2): a
+        delete at sequence S matches key-equal rows only in files committed
+        at sequence < S.  'left_anti' chains the joins (rows no delete
+        masks), 'left_semi' unions them (rows some delete masks); each join
+        broadcasts the small key side."""
+        seq_expr = None
+        for d, s in self._dir_seq(meta).items():
+            cond = F.col("__fp").contains(d.rstrip("/") + "/")
+            seq_expr = (
+                F.when(cond, F.lit(s)) if seq_expr is None
+                else seq_expr.when(cond, F.lit(s))
+            )
+        df = df.withColumn("__seq", F.coalesce(seq_expr, F.lit(0)))
+        joined: list[DataFrame] = []
+        for e in eqs:
+            src = joined[-1] if joined and how == "left_anti" else df
+            keys = (
+                self.spark.read.parquet(e["dir"])
+                .select(*[F.col(c).alias(f"__k_{c}") for c in e["cols"]])
+                .distinct()
+            )
+            cond = F.col("__seq") < F.lit(int(e["seq"]))
+            for c in e["cols"]:
+                cond = cond & src[c].eqNullSafe(F.col(f"__k_{c}"))
+            joined.append(src.join(F.broadcast(keys), cond, how))
+        out = joined[-1] if how == "left_anti" else reduce(DataFrame.unionByName, joined)
+        return out.drop("__seq")
+
     def _apply_deletes(self, df: DataFrame, meta: dict) -> DataFrame:
         """Apply positional delete vectors then equality deletes to rows
-        carrying (__fp, __ri) physical identity.
-
-        Equality deletes are sequence-scoped (Iceberg v2): a delete at
-        sequence S masks key-matching rows only in files committed at
-        sequence < S — rows appended by the same or a later snapshot (e.g.
-        a MERGE's own upserts) stay alive.  Both joins broadcast the small
-        delete side; the data side never shuffles."""
-        from pyspark.sql import functions as F
-
+        carrying (__fp, __ri) physical identity.  Rows appended by the
+        same or a later snapshot than an equality delete (e.g. a MERGE's
+        own upserts) stay alive; the data side never shuffles."""
         if meta.get("delete_dirs"):
-            dv = self.spark.read.parquet(*meta["delete_dirs"])
-            df = df.join(
-                F.broadcast(dv),
-                (df["__fp"] == dv["file_path"]) & (df["__ri"] == dv["row_index"]),
-                "left_anti",
-            )
-        eqs = meta.get("eq_deletes") or []
-        if eqs:
-            seq_expr = None
-            for d, s in self._dir_seq(meta).items():
-                cond = F.col("__fp").contains(d.rstrip("/") + "/")
-                seq_expr = (
-                    F.when(cond, F.lit(s)) if seq_expr is None
-                    else seq_expr.when(cond, F.lit(s))
-                )
-            df = df.withColumn("__seq", F.coalesce(seq_expr, F.lit(0)))
-            for e in eqs:
-                keys = (
-                    self.spark.read.parquet(e["dir"])
-                    .select(*[F.col(c).alias(f"__k_{c}") for c in e["cols"]])
-                    .distinct()
-                )
-                cond = F.col("__seq") < F.lit(int(e["seq"]))
-                for c in e["cols"]:
-                    cond = cond & df[c].eqNullSafe(F.col(f"__k_{c}"))
-                df = df.join(F.broadcast(keys), cond, "left_anti")
-            df = df.drop("__seq")
+            df = self._pos_delete_join(df, meta["delete_dirs"], "left_anti")
+        if meta.get("eq_deletes"):
+            df = self._eq_delete_join(df, meta, meta["eq_deletes"], "left_anti")
         return df
 
     def _read_base(self, meta: dict, with_pos: bool, pfilter=None) -> DataFrame:
@@ -512,8 +535,6 @@ class SnapshotCatalog:
         identical across appends so the union is by name.  ``pfilter`` (a
         predicate on a derived __p_ column) is applied per dir BEFORE the
         drop — that is where directory pruning happens."""
-        from pyspark.sql import functions as F
-
         opt = str(meta.get("merge_schema", False)).lower()
 
         def one(paths):
@@ -541,6 +562,12 @@ class SnapshotCatalog:
         (__fp, __ri) = (file path, row index), deletes already applied."""
         return self._apply_deletes(self._read_base(meta, with_pos=True), meta)
 
+    def _current_or_raise(self, table: str) -> dict:
+        meta = self.current_snapshot(table)
+        if meta is None:
+            raise FileNotFoundError(f"table {table!r} has no snapshots")
+        return meta
+
     def delete_where(self, table: str, condition: str) -> dict:
         """Iceberg-v2-style positional delete: rows matching ``condition``
         are tombstoned as (file_path, row_index) pairs in a DELETE FILE —
@@ -553,35 +580,16 @@ class SnapshotCatalog:
         broadcast anti-join on physical row identity (exact, no key columns
         needed); `compact()` materializes them away when they accumulate.
         """
-        meta = self.current_snapshot(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        live = self._read_with_pos(meta)
-        hits = live.where(condition).selectExpr(
+        prev = self._current_or_raise(table)
+        meta = self._child(table, prev, "delete")
+        del_dir = os.path.join(self.root, table, "deletes", meta["snapshot_id"])
+        self._read_with_pos(prev).where(condition).selectExpr(
             "__fp as file_path", "__ri as row_index"
-        )
-        snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        del_dir = os.path.join(self.root, table, "deletes", snap_id)
-        hits.write.mode("overwrite").parquet(del_dir)
+        ).write.mode("overwrite").parquet(del_dir)
         n = self.spark.read.parquet(del_dir).count()
-        new_meta = {
-            **{k: meta[k] for k in ("schema", "merge_schema", "partition_spec") if k in meta},
-            "snapshot_id": snap_id,
-            "sequence": meta["sequence"] + 1,
-            "mode": "delete",
-            "data_dirs": meta["data_dirs"],
-            "delete_dirs": meta.get("delete_dirs", []) + [del_dir],
-            "eq_deletes": meta.get("eq_deletes", []),
-            "data_seq": self._dir_seq(meta),
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(new_meta, fh)
-        os.replace(
-            tmp, os.path.join(self._meta_dir(table), f"v{new_meta['sequence']:09d}.json")
-        )
-        return {"snapshot_id": snap_id, "n_deleted": n}
+        meta["delete_dirs"].append(del_dir)
+        self._write_json(self._version_path(table, meta["sequence"]), meta)
+        return {"snapshot_id": meta["snapshot_id"], "n_deleted": n}
 
     def delete_keys(self, table: str, keys: DataFrame) -> dict:
         """Iceberg-v2-style EQUALITY delete: every live row whose key columns
@@ -596,39 +604,20 @@ class SnapshotCatalog:
         a later append may legitimately re-insert the key.  `compact()`
         materializes equality deletes away like positional ones.
         """
-        meta = self.current_snapshot(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
+        prev = self._current_or_raise(table)
         cols = list(keys.columns)
-        if meta.get("schema"):
-            known = {f["name"] for f in meta["schema"]["fields"]}
+        if prev.get("schema"):
+            known = {f["name"] for f in prev["schema"]["fields"]}
             bad = [c for c in cols if c not in known]
             if bad:
                 raise ValueError(f"equality-delete columns not in table schema: {bad}")
-        seq = meta["sequence"] + 1
-        snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        eq_dir = os.path.join(self.root, table, "eq_deletes", snap_id)
+        meta = self._child(table, prev, "eq_delete")
+        eq_dir = os.path.join(self.root, table, "eq_deletes", meta["snapshot_id"])
         keys.distinct().write.mode("overwrite").parquet(eq_dir)
         n_keys = self.spark.read.parquet(eq_dir).count()
-        new_meta = {
-            **{k: meta[k] for k in ("schema", "merge_schema", "partition_spec") if k in meta},
-            "snapshot_id": snap_id,
-            "sequence": seq,
-            "mode": "eq_delete",
-            "data_dirs": meta["data_dirs"],
-            "delete_dirs": meta.get("delete_dirs", []),
-            "eq_deletes": meta.get("eq_deletes", [])
-            + [{"dir": eq_dir, "seq": seq, "cols": cols}],
-            "data_seq": self._dir_seq(meta),
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(new_meta, fh)
-        os.replace(
-            tmp, os.path.join(self._meta_dir(table), f"v{seq:09d}.json")
-        )
-        return {"snapshot_id": snap_id, "n_keys": n_keys}
+        meta["eq_deletes"].append({"dir": eq_dir, "seq": meta["sequence"], "cols": cols})
+        self._write_json(self._version_path(table, meta["sequence"]), meta)
+        return {"snapshot_id": meta["snapshot_id"], "n_keys": n_keys}
 
     def merge_into(
         self,
@@ -654,43 +643,26 @@ class SnapshotCatalog:
         """
         if when_matched not in ("update", "delete"):
             raise ValueError("when_matched must be 'update' or 'delete'")
-        meta = self.current_snapshot(table)
-        if meta is None:
+        prev = self.current_snapshot(table)
+        if prev is None:
             snap = self.commit(source, table, mode="overwrite")
             n = self.read(table).count()
             return {"snapshot_id": snap, "n_appended": n, "created": True}
         src = source.dropDuplicates(key_cols)
-        seq = meta["sequence"] + 1
-        snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        eq_dir = os.path.join(self.root, table, "eq_deletes", snap_id)
-        src.select(*key_cols).distinct().write.mode("overwrite").parquet(eq_dir)
-        data_dir = os.path.join(self.root, table, "snapshots", snap_id)
         if when_matched == "update":
             to_append = src
         else:
-            live_keys = self._df_from_meta(meta).select(*key_cols).distinct()
+            live_keys = self._df_from_meta(prev).select(*key_cols).distinct()
             to_append = src.join(live_keys, key_cols, "left_anti")
-        self._write_data_dir(to_append, data_dir, meta.get("partition_spec"))
-        n_appended = self.spark.read.parquet(data_dir).count()
-        new_meta = {
-            **{k: meta[k] for k in ("schema", "merge_schema", "partition_spec") if k in meta},
-            "snapshot_id": snap_id,
-            "sequence": seq,
-            "mode": "merge",
-            "data_dirs": meta["data_dirs"] + [data_dir],
-            "delete_dirs": meta.get("delete_dirs", []),
-            "eq_deletes": meta.get("eq_deletes", [])
-            + [{"dir": eq_dir, "seq": seq, "cols": list(key_cols)}],
-            "data_seq": {**self._dir_seq(meta), data_dir: seq},
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        tmp = os.path.join(self._meta_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(new_meta, fh)
-        os.replace(
-            tmp, os.path.join(self._meta_dir(table), f"v{seq:09d}.json")
+        meta = self._child(table, prev, "merge", to_append)
+        eq_dir = os.path.join(self.root, table, "eq_deletes", meta["snapshot_id"])
+        src.select(*key_cols).distinct().write.mode("overwrite").parquet(eq_dir)
+        n_appended = self.spark.read.parquet(meta["data_dirs"][-1]).count()
+        meta["eq_deletes"].append(
+            {"dir": eq_dir, "seq": meta["sequence"], "cols": list(key_cols)}
         )
-        return {"snapshot_id": snap_id, "n_appended": n_appended}
+        self._write_json(self._version_path(table, meta["sequence"]), meta)
+        return {"snapshot_id": meta["snapshot_id"], "n_appended": n_appended}
 
     # -- retention ----------------------------------------------------------
     def history(self, table: str) -> DataFrame:
@@ -714,26 +686,44 @@ class SnapshotCatalog:
             "committed_at_ms: long, n_data_dirs: int, n_delete_files: int",
         )
 
+    @staticmethod
+    def _parquet_files(dirs: list[str]) -> list[str]:
+        """Every parquet file under ``dirs`` (partition subdirs included)."""
+        return [
+            os.path.join(root, f)
+            for d in dirs
+            for root, _dirs, fs in os.walk(d)
+            for f in sorted(fs)
+            if f.endswith(".parquet")
+        ]
+
     def files(self, table: str, snapshot_id: str | None = None) -> DataFrame:
         """Iceberg `table.files` metadata table: one row per live data file
         (path, rows, bytes) from parquet footers — no Spark job, no data
         read.  Positional/equality tombstones are not subtracted here (this
         lists PHYSICAL files; `count_rows` nets deletes out)."""
-        import pyarrow.parquet as pq
-
         meta = self._pin(table, snapshot_id)
-        rows = []
-        for dirpath in meta["data_dirs"]:
-            for root, _dirs, fs in os.walk(dirpath):
-                for f in sorted(fs):
-                    if f.endswith(".parquet"):
-                        p = os.path.join(root, f)
-                        rows.append(
-                            (p, pq.ParquetFile(p).metadata.num_rows, os.path.getsize(p))
-                        )
+        rows = [
+            (p, pq.ParquetFile(p).metadata.num_rows, os.path.getsize(p))
+            for p in self._parquet_files(meta["data_dirs"])
+        ]
         return self.spark.createDataFrame(
             rows, "file_path: string, row_count: long, size_bytes: long"
         )
+
+    @staticmethod
+    def _referenced_dirs(metas: list[dict]) -> set[str]:
+        """Every data, delete-vector and equality-delete dir ``metas`` read."""
+        out: set[str] = set()
+        for m in metas:
+            out.update(m["data_dirs"], m.get("delete_dirs", []))
+            out.update(e["dir"] for e in m.get("eq_deletes", []))
+        return out
+
+    def _pinned_metas(self, table: str) -> list[dict]:
+        """Snapshots that outlive any retention window: staged candidates
+        (a pending audit reads them) and named refs (tags, branch heads)."""
+        return self.staged_snapshots(table) + [r["meta"] for r in self.refs(table).values()]
 
     def remove_orphans(self, table: str) -> dict:
         """Iceberg `removeOrphanFiles`: delete directories under the table's
@@ -743,16 +733,7 @@ class SnapshotCatalog:
         every reader, so deleting them can never change a query result; the
         expire crash-window note relies on this being re-runnable.
         """
-        import shutil
-
-        referenced: set[str] = set()
-        for m in self.snapshots(table) + self.staged_snapshots(table):
-            referenced.update(m["data_dirs"] + m.get("delete_dirs", []))
-            referenced.update(e["dir"] for e in m.get("eq_deletes", []))
-        for r in self.refs(table).values():
-            m = r["meta"]
-            referenced.update(m["data_dirs"] + m.get("delete_dirs", []))
-            referenced.update(e["dir"] for e in m.get("eq_deletes", []))
+        referenced = self._referenced_dirs(self.snapshots(table) + self._pinned_metas(table))
         dropped = 0
         for sub in ("snapshots", "deletes", "eq_deletes"):
             base = os.path.join(self.root, table, sub)
@@ -767,8 +748,9 @@ class SnapshotCatalog:
 
     def expire_snapshots(self, table: str, keep_last: int = 1) -> dict:
         """Iceberg-style `expireSnapshots`: drop all but the newest
-        ``keep_last`` snapshot versions and DELETE data directories no
-        longer referenced by any surviving snapshot.
+        ``keep_last`` snapshot versions and DELETE the data, delete-vector
+        and equality-delete dirs no longer referenced by any surviving,
+        staged or ref-pinned snapshot.
 
         Metadata-only decision, file-system deletion after: the surviving
         metadata jsons are untouched (time travel within the retained window
@@ -777,30 +759,15 @@ class SnapshotCatalog:
         (safe: re-running completes the cleanup; readers never see a
         snapshot whose files were deleted).
         """
-        import shutil
-
-        vs = self._versions(table)
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        expired, survivors = vs[:-keep_last], vs[-keep_last:]
-        keep_dirs: set[str] = set()
-        for v in survivors:
-            with open(os.path.join(self._meta_dir(table), v)) as fh:
-                m = json.load(fh)
-                keep_dirs.update(m["data_dirs"] + m.get("delete_dirs", []))
-        # named refs (tags, branch heads) are retention-protected: their data
-        # stays addressable regardless of the keep_last window
-        for r in self.refs(table).values():
-            m = r["meta"]
-            keep_dirs.update(m["data_dirs"] + m.get("delete_dirs", []))
-        drop_dirs: set[str] = set()
-        for v in expired:
-            path = os.path.join(self._meta_dir(table), v)
-            with open(path) as fh:
-                m = json.load(fh)
-                drop_dirs.update(m["data_dirs"] + m.get("delete_dirs", []))
-            os.remove(path)
-        drop_dirs -= keep_dirs
+        paths = [os.path.join(self._meta_dir(table), v) for v in self._versions(table)]
+        metas = [self._read_json(p) for p in paths]
+        expired, survivors = metas[:-keep_last], metas[-keep_last:]
+        keep_dirs = self._referenced_dirs(survivors + self._pinned_metas(table))
+        for p in paths[:-keep_last]:
+            os.remove(p)
+        drop_dirs = self._referenced_dirs(expired) - keep_dirs
         for d in sorted(drop_dirs):
             shutil.rmtree(d, ignore_errors=True)
         return {
@@ -832,17 +799,10 @@ class SnapshotCatalog:
           whose min/max stats prune future scans.
         * idempotent no-op when the table is already one compacted dir.
         """
-        meta = self.current_snapshot(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        n_bytes = 0
-        n_files = 0
-        for d in meta["data_dirs"]:
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        n_files += 1
-                        n_bytes += os.path.getsize(os.path.join(root, f))
+        meta = self._current_or_raise(table)
+        paths = self._parquet_files(meta["data_dirs"])
+        n_files = len(paths)
+        n_bytes = sum(os.path.getsize(p) for p in paths)
         n_out = max(1, -(-n_bytes // target_file_bytes))  # ceil
         if (len(meta["data_dirs"]) == 1 and meta.get("compaction_of")
                 and not meta.get("delete_dirs") and not meta.get("eq_deletes")
@@ -850,8 +810,6 @@ class SnapshotCatalog:
             return {"compacted": False, "n_files": n_files, "snapshot_id": meta["snapshot_id"]}
         df = self.read(table)
         if layout_col is not None:
-            from pyspark.sql import functions as F
-
             df = df.repartitionByRange(n_out, F.col(layout_col)).sortWithinPartitions(
                 layout_col
             )
@@ -883,8 +841,6 @@ class SnapshotCatalog:
         whose [min,max] can overlap the query box — this is what a Z-order /
         Hilbert write layout buys at read time.  The stats job itself is one
         map-side-combined groupBy over physical file identity."""
-        from pyspark.sql import functions as F
-
         meta = self._pin(table, snapshot_id)
         df = self.spark.read.option(
             "mergeSchema", str(meta.get("merge_schema", False)).lower()
@@ -905,15 +861,14 @@ class SnapshotCatalog:
             for r in rows
         }
         out = {"snapshot_id": meta["snapshot_id"], "cols": cols, "files": stats}
-        sdir = os.path.join(self.root, table, "stats")
-        os.makedirs(sdir, exist_ok=True)
-        tmp = os.path.join(sdir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(out, fh)
-        os.replace(tmp, os.path.join(sdir, f"{meta['snapshot_id']}.json"))
+        self._write_json(
+            os.path.join(self.root, table, "stats", f"{meta['snapshot_id']}.json"), out
+        )
         return out
 
     def _pin(self, table: str, snapshot_id: str | None) -> dict:
+        # explicit pins may target staged (pre-publish) snapshots: that is
+        # how a WAP audit reads its candidate
         meta = (
             self.current_snapshot(table)
             if snapshot_id is None
@@ -944,10 +899,7 @@ class SnapshotCatalog:
         ruled out and is always scanned — pruning is conservative."""
         meta = self._pin(table, snapshot_id)
         spath = os.path.join(self.root, table, "stats", f"{meta['snapshot_id']}.json")
-        stats = None
-        if os.path.exists(spath):
-            with open(spath) as fh:
-                stats = json.load(fh)
+        stats = self._read_json(spath) if os.path.exists(spath) else None
         if stats is None or col not in stats["cols"]:
             stats = self.collect_file_stats(
                 table, [col], snapshot_id=meta["snapshot_id"]
@@ -972,8 +924,6 @@ class SnapshotCatalog:
         the exact predicate; positional delete vectors still apply.  Returns
         the same rows as ``read(...).where(between)`` — the pruning is
         metadata-only and conservative."""
-        from pyspark.sql import functions as F
-
         meta = self._pin(table, snapshot_id)
         files, _total = self.prune_files(table, col, lo, hi, meta["snapshot_id"])
         pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
@@ -1000,8 +950,6 @@ class SnapshotCatalog:
         plan), never touching the rest of the layout.  Falls back to a plain
         filter when the column is not partition-driving.  Positional and
         equality deletes still apply."""
-        from pyspark.sql import functions as F
-
         meta = self._pin(table, snapshot_id)
         spec = next(
             (s for s in (meta.get("partition_spec") or []) if s["col"] == col), None
@@ -1024,23 +972,14 @@ class SnapshotCatalog:
         row) pairs are disjoint by construction — delete_where only pins
         LIVE rows).  Equality deletes cannot be counted from metadata, so
         their presence falls back to the exact scan."""
-        import pyarrow.parquet as pq
-
         meta = self._pin(table, snapshot_id)
         if meta.get("eq_deletes"):
             return self.read(table, meta["snapshot_id"]).count()
-        total = 0
-        for d in meta["data_dirs"]:
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        for d in meta.get("delete_dirs", []):
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total -= pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
+
+        def rows(dirs):
+            return sum(pq.ParquetFile(p).metadata.num_rows for p in self._parquet_files(dirs))
+
+        return rows(meta["data_dirs"]) - rows(meta.get("delete_dirs", []))
 
     def changes(
         self, table: str, from_snapshot_id: str, to_snapshot_id: str | None = None
@@ -1058,8 +997,6 @@ class SnapshotCatalog:
         window therefore surfaces as full delete+insert of the rewritten
         rows — physical-identity CDC is honest about rewrites (Iceberg's
         append-only incremental scan refuses such windows instead)."""
-        from pyspark.sql import functions as F
-
         m_from = self._pin(table, from_snapshot_id)
         m_to = self._pin(table, to_snapshot_id)
         if m_to["sequence"] < m_from["sequence"]:
@@ -1082,57 +1019,24 @@ class SnapshotCatalog:
                 if d not in m_from.get("delete_dirs", [])
             ]
             if new_vec:
-                dv = self.spark.read.parquet(*new_vec)
-                dels.append(
-                    f_car.join(
-                        F.broadcast(dv),
-                        (f_car["__fp"] == dv["file_path"])
-                        & (f_car["__ri"] == dv["row_index"]),
-                        "left_semi",
-                    )
-                )
+                dels.append(self._pos_delete_join(f_car, new_vec, "left_semi"))
             old_eqs = {json.dumps(e, sort_keys=True) for e in m_from.get("eq_deletes", [])}
             new_eqs = [
                 e for e in m_to.get("eq_deletes", [])
                 if json.dumps(e, sort_keys=True) not in old_eqs
             ]
             if new_eqs:
-                seq_expr = None
-                for d, s in self._dir_seq(m_from).items():
-                    cond = F.col("__fp").contains(d.rstrip("/") + "/")
-                    seq_expr = (
-                        F.when(cond, F.lit(s)) if seq_expr is None
-                        else seq_expr.when(cond, F.lit(s))
-                    )
-                f_seq = f_car.withColumn("__seq", F.coalesce(seq_expr, F.lit(0)))
-                for e in new_eqs:
-                    keys = (
-                        self.spark.read.parquet(e["dir"])
-                        .select(*[F.col(c).alias(f"__k_{c}") for c in e["cols"]])
-                        .distinct()
-                    )
-                    cond = F.col("__seq") < F.lit(int(e["seq"]))
-                    for c in e["cols"]:
-                        cond = cond & f_seq[c].eqNullSafe(F.col(f"__k_{c}"))
-                    dels.append(
-                        f_seq.join(F.broadcast(keys), cond, "left_semi").drop("__seq")
-                    )
+                dels.append(self._eq_delete_join(f_car, m_from, new_eqs, "left_semi"))
         if dels:
-            all_dels = dels[0]
-            for d in dels[1:]:
-                all_dels = all_dels.unionByName(d)
             parts.append(
-                all_dels.dropDuplicates(["__fp", "__ri"]).withColumn(
-                    "_change_type", F.lit("delete")
-                )
+                reduce(DataFrame.unionByName, dels)
+                .dropDuplicates(["__fp", "__ri"])
+                .withColumn("_change_type", F.lit("delete"))
             )
         if not parts:
             empty = self._df_from_meta(m_to).limit(0)
             return empty.withColumn("_change_type", F.lit(""))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.drop("__fp", "__ri")
+        return reduce(DataFrame.unionByName, parts).drop("__fp", "__ri")
 
     # -- read ---------------------------------------------------------------
     def snapshot_as_of(self, table: str, ts_ms: int) -> dict:
@@ -1157,45 +1061,11 @@ class SnapshotCatalog:
         return self._df_from_meta(self.snapshot_as_of(table, ts_ms))
 
     def read(self, table: str, snapshot_id: str | None = None) -> DataFrame:
-        """Read the table pinned at a snapshot (default: current)."""
-        if snapshot_id is None:
-            meta = self.current_snapshot(table)
-        else:
-            # explicit pins may target staged (pre-publish) snapshots: that is
-            # how a WAP audit reads its candidate
-            cands = self.snapshots(table) + self.staged_snapshots(table)
-            meta = next(
-                (m for m in cands if m["snapshot_id"] == snapshot_id), None
-            )
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} snapshot {snapshot_id!r} not found")
-        return self._df_from_meta(meta)
+        """Read the table pinned at a snapshot (default: current; an
+        explicit id may name a staged snapshot)."""
+        return self._df_from_meta(self._pin(table, snapshot_id))
 
     def _df_from_meta(self, meta: dict) -> DataFrame:
         if meta.get("delete_dirs") or meta.get("eq_deletes"):
             return self._read_with_pos(meta).drop("__fp", "__ri")
         return self._read_base(meta, with_pos=False)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by join key.
-
-    Bucketing is THE 100 TB co-location strategy: two tables bucketed by the
-    same key into the same bucket count join with ZERO exchange — the
-    shuffle is paid once at write time and amortized over every subsequent
-    join/aggregation on that key (cell_id for the spatial indexes, doc_id
-    for dedup artifacts).  Uses the session catalog's managed-table path
-    (`saveAsTable` — bucketing metadata does not survive a bare
-    `.parquet(path)` write).
-    """
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)

@@ -85,6 +85,30 @@ def write_zordered(
     )
 
 
+def write_bucketed(
+    df: DataFrame,
+    table: str,
+    bucket_cols: list[str],
+    n_buckets: int = 32,
+    sort_cols: list[str] | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """Persist a table bucketed (and optionally sorted) by join key.
+
+    Bucketing is THE 100 TB co-location strategy: two tables bucketed by the
+    same key into the same bucket count join with ZERO exchange — the
+    shuffle is paid once at write time and amortized over every subsequent
+    join/aggregation on that key (cell_id for the spatial indexes, doc_id
+    for dedup artifacts).  Uses the session catalog's managed-table path
+    (`saveAsTable` — bucketing metadata does not survive a bare
+    `.parquet(path)` write).
+    """
+    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
+    if sort_cols:
+        w = w.sortBy(*sort_cols)
+    w.saveAsTable(table)
+
+
 def file_stat_ranges(path: str, columns: tuple[str, ...]) -> list[dict]:
     """Per-file min/max footer stats (the information a pruning scan uses).
 

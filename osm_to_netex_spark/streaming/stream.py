@@ -18,6 +18,7 @@ from .. import schemas
 from ..functions import geo
 from ..functions.portable import SPARK
 from ..operators import extract
+from ..sources.catalog import SnapshotCatalog
 
 
 def read_document_stream(
@@ -199,8 +200,6 @@ def stream_upsert_to_catalog(
     copy-on-write table format makes — for huge tables, partition the
     catalog table and rewrite only touched partitions.
     """
-    from ..sources.catalog import SnapshotCatalog
-
     def upsert(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
         cat = SnapshotCatalog(spark, catalog_root)

@@ -132,3 +132,18 @@ def test_scan_applies_eq_deletes(spark, tmp_path):
     cat.delete_keys("t", spark.createDataFrame([("k3",)], "k: string"))
     got = cat.scan("t", "id", 0, 5)
     assert _rows(got.select("id")) == [(0,), (1,), (2,), (4,), (5,)]
+
+
+def test_staged_append_keeps_key_deleted(spark, tmp_path):
+    """A staged append carries the table's equality deletes: the deleted
+    key stays masked on the audit read and after publish."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    cat.commit(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id: long, k: string"),
+        "t", mode="overwrite",
+    )
+    cat.delete_keys("t", spark.createDataFrame([("a",)], "k: string"))
+    sid = cat.stage(spark.createDataFrame([(3, "c")], "id: long, k: string"), "t")
+    assert _rows(cat.read("t", sid)) == [(2, "b"), (3, "c")]
+    cat.publish("t", sid)
+    assert _rows(cat.read("t")) == [(2, "b"), (3, "c")]

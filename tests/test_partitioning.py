@@ -132,6 +132,31 @@ def test_day_partition_prunes(spark, tmp_path):
     ).count() > 0
 
 
+def test_staged_append_keeps_partition_spec(spark, tmp_path):
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    spec = [{"transform": "identity", "col": "source"}]
+    cat.commit(_docs(spark), "t", mode="overwrite", partition_spec=spec)
+    sid = cat.stage(_docs(spark, 8), "t")
+    assert cat.read("t", sid).count() == 48
+    cat.publish("t", sid)
+    assert cat.current_snapshot("t")["partition_spec"] == spec
+    assert sorted(cat.read("t").columns) == ["doc_id", "source", "val"]
+    assert cat.read("t").count() == 48
+    assert cat.scan_partitions("t", "source", "s2").count() == 12
+
+
+def test_branch_append_keeps_partition_spec(spark, tmp_path):
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    spec = [{"transform": "identity", "col": "source"}]
+    cat.commit(_docs(spark), "t", mode="overwrite", partition_spec=spec)
+    cat.create_branch("t", "b")
+    cat.commit_to_branch(_docs(spark, 8), "t", "b")
+    assert cat.refs("t")["b"]["meta"]["partition_spec"] == spec
+    assert cat.read_ref("t", "b").count() == 48
+    cat.fast_forward("t", "b")
+    assert cat.scan_partitions("t", "source", "s2").count() == 12
+
+
 def test_read_as_of_timestamp(spark, tmp_path):
     import time as _t
 

@@ -60,3 +60,22 @@ def test_tagged_snapshot_survives_expiry(spark, tmp_path):
     assert res["deleted_dirs"] == 1
     assert cat.read_ref("t", "keepme").count() == 7
     assert cat.read("t").count() == 11
+
+
+def test_branch_commit_keeps_key_deleted(spark, tmp_path):
+    """A branch append carries the fork's equality deletes: the deleted key
+    stays masked on the branch read and after fast-forward."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    cat.commit(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id: long, k: string"),
+        "t", mode="overwrite",
+    )
+    cat.delete_keys("t", spark.createDataFrame([("a",)], "k: string"))
+    cat.create_branch("t", "fix")
+    cat.commit_to_branch(
+        spark.createDataFrame([(3, "c")], "id: long, k: string"), "t", "fix"
+    )
+    rows = [(2, "b"), (3, "c")]
+    assert sorted(tuple(r) for r in cat.read_ref("t", "fix").collect()) == rows
+    cat.fast_forward("t", "fix")
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == rows

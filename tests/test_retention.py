@@ -36,3 +36,24 @@ def test_expire_deletes_unreferenced_dirs(spark, tmp_path):
     assert res["deleted_dirs"] == 1
     assert len(os.listdir(snap_root)) == 1
     assert cat.read("t").count() == 7
+
+
+def test_expire_keeps_staged_dirs_and_drops_eq_deletes(spark, tmp_path):
+    """Expiry protects what a pending staged snapshot reads and reclaims
+    the equality-delete dirs only expired snapshots referenced."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    schema = "id: long, k: string"
+    cat.commit(spark.createDataFrame([(1, "a"), (2, "b")], schema), "t", mode="overwrite")
+    sid = cat.stage(spark.createDataFrame([(3, "c")], schema), "t")
+    cat.delete_keys("t", spark.createDataFrame([("a",)], "k: string"))
+    eq_dir = cat.current_snapshot("t")["eq_deletes"][0]["dir"]
+    cat.commit(spark.createDataFrame([(9, "z")], schema), "t", mode="overwrite")
+
+    res = cat.expire_snapshots("t", keep_last=1)
+    assert res["expired_versions"] == 2 and res["deleted_dirs"] == 1
+    assert not os.path.exists(eq_dir)
+    # the pending audit still reads its candidate: the first commit's rows
+    # plus its own
+    got = sorted(tuple(r) for r in cat.read("t", sid).collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c")]
+    assert [tuple(r) for r in cat.read("t").collect()] == [(9, "z")]

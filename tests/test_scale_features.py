@@ -146,7 +146,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     import contextlib
     import io
 
-    from osm_to_netex_spark.sources.catalog import write_bucketed
+    from osm_to_netex_spark.sources.layout import write_bucketed
 
     import shutil
 
