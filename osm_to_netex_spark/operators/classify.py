@@ -52,7 +52,11 @@ def _grams(t: str, d: str) -> str:
 def nb_langid_sql(d: str, train_mod: int = 10, train_lt: int = 8) -> str:
     """Full train+apply SQL (docs with doc_id % train_mod < train_lt train
     the model; the rest are classified).  Returns (doc_id, pred_lang,
-    true_lang, correct, score_q) for the held-out split."""
+    true_lang, correct, score_q) for the held-out split.
+
+    Multinomial NB over char trigrams: train on the 80% split, classify the
+    held-out 20%.  Integer-quantized log-probs make every score an exact
+    fold and the argmax deterministic."""
     if d == SPARK:
         ex = lambda cols, g: f"select {cols}, explode({g}) as g"  # noqa: E731
         smax = "max(named_struct('s', score_q, 'l', lang))"
@@ -133,7 +137,10 @@ def ngram_lm_sql(d: str, train_mod: int = 10, train_lt: int = 8) -> str:
     Scale: the model is (ctx, next) counts — bounded by charset³, a
     broadcast dimension; train-side aggregates are map-side-combined; the
     held-out corpus shuffles only on doc_id.  Docs shorter than one trigram
-    survive with n_grams = 0 and null scores."""
+    survive with n_grams = 0 and null scores.
+
+    Char-trigram LM trained on the 80% split scores the held-out 20%:
+    quantized log-probs, exact integer folds."""
     if d == SPARK:
         ex = lambda cols, g: f"select {cols}, explode({g}) as g"  # noqa: E731
     else:

@@ -209,6 +209,10 @@ def triangles_sql(d: str, table: str = "documents") -> str:
     for skewed graphs (each hub's wedges pair only its higher-id neighbors).
 
     Both dialects share this text verbatim (pure ANSI joins).
+
+    Per-node triangle counts on the deterministic link graph:
+    ordered-vertex wedge join + closure semi-join (each triangle counted
+    once).
     """
     base = edges_sql(d, table)
     return f"""
@@ -462,7 +466,9 @@ def clustering_coeff_sql(d: str, table: str = "documents") -> str:
     how tightly a node's neighborhood closes into triangles, the standard
     local graph-structure feature.  Triangle counts via the ordered-wedge
     enumeration (triangles_sql); cc quantized to bigint 1e-9 (one double
-    division on exact integer operands).  Shared dialect text."""
+    division on exact integer operands).  Shared dialect text.
+
+    Local clustering coefficient per node over the link graph."""
     base = edges_sql(d, table)
     return f"""
         with raw as ({base}),
@@ -609,7 +615,10 @@ def modularity_sql(d: str, table: str = "documents", n_rounds: int = 3) -> str:
     Composes the gated LPA (same unrolled rounds); edge/degree counts come
     from the same canonical undirected edge set.  Magnitudes: m ≤ |E|,
     4·m·e_c and d_c² ≤ 4m² ≪ 2^63 for any graph this engine's int64 ids
-    fit."""
+    fit.
+
+    Newman modularity terms of the LPA partition — integer numerators,
+    global Q one division away."""
     return f"""
         with {_lpa_ctes(d, table, n_rounds)},
         lab as (select v as doc_id, cast(lbl as bigint) as community from l{n_rounds}),

@@ -138,7 +138,10 @@ def logreg_gd_sql(
     re-quantizes — the gravity-IPF state discipline.
 
     Output: one row (n, w0..wk as doubles, bias, n_correct) — n_correct
-    evaluated at the final weights via the sign of the exact dot."""
+    evaluated at the final weights via the sign of the exact dot.
+
+    Full-batch logistic regression, 3 synchronous GD rounds over the
+    embedding features."""
     from ..functions.portable import element_at
 
     j_range = range(1, n_features + 1)
@@ -205,7 +208,10 @@ def logreg_calibration_sql(
     quantized mean prediction, and positive rate — the calibration check
     that decides whether scores are usable as probabilities.  Reuses the
     EXACT same unrolled GD chain as logreg_gd_sql (same weights bit for
-    bit), then one scan to score + one n_bins-key aggregate."""
+    bit), then one scan to score + one n_bins-key aggregate.
+
+    Reliability diagram of the gated logreg — same unrolled GD chain,
+    observed-range probability bins."""
     from ..functions.portable import element_at
 
     j_range = range(1, n_features + 1)

@@ -623,7 +623,9 @@ def pmi_cooc_sql(d: str, table: str = "documents", top_v: int = 40,
     cut), so the per-doc kept-term list is <= top_v and the within-doc pair
     fan-out <= top_v²/2; corpus touched once for the vocab count and once
     for the pair explode; both aggregates map-side combine.  The marginal
-    table is dimension-sized and joins back by term."""
+    table is dimension-sized and joins back by term.
+
+    PMI word-association mining over the top-40 vocabulary."""
     toks = tx.tokens("text", d)
     ex = (
         f"select doc_id, explode({toks}) as w from {table}"
@@ -673,7 +675,9 @@ def ngram_overlap_sql(d: str, table: str = "documents", n: int = 2) -> str:
     Scale: n-grams count per doc (map-side combine), pairs join on
     (doc_id, gram) after an id-shift equi-join — no cross product; the
     pairing key generalizes to any candidate table (LSH buckets at corpus
-    scale)."""
+    scale).
+
+    BLEU-style clipped bigram precision between consecutive documents."""
     toks = tx.tokens("text", d)
     if d == SPARK:
         grams = (

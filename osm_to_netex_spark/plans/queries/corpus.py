@@ -13,7 +13,9 @@ value-hash gate is a real verification, not an echo.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 from ...functions.portable import DUCK, SPARK, concat_str, flit, phash60
 
@@ -106,6 +108,24 @@ def register_geometry_views(spark: SparkSession, sf_dir: str) -> None:
     spark.sql(f"create or replace temp view geo_points as {points_sql(SPARK)}")
     spark.sql(f"create or replace temp view geo_polys as {polys_sql(SPARK)}")
     spark._graft_geo_views = sf_dir
+
+
+def sql_query(
+    sql: Callable[[str], str],
+) -> tuple[Callable[[SparkSession, str], DataFrame], Callable[[], str]]:
+    """The ``(builder, oracle)`` registry entry of a query that is one SQL
+    text in two dialects: the builder registers the sf views and runs
+    ``sql(SPARK)``, the oracle returns ``sql(DUCK)``.  A builder that stages
+    work before its SQL is written out by hand instead."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_geometry_views(spark, sf_dir)
+        return spark.sql(sql(SPARK))
+
+    def oracle() -> str:
+        return sql(DUCK)
+
+    return build, oracle
 
 
 def duck_geometry_ctes() -> str:

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ...functions.portable import DUCK, SPARK
 from ...operators import graph
 from ...operators.graph import edges_sql, undirected_edges_sql
-from .corpus import register_geometry_views
+from .corpus import register_geometry_views, sql_query
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -24,17 +24,6 @@ def q_pagerank_oracle() -> str:
     return graph.pagerank_oracle_sql("documents", n_iter=5)
 
 
-def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient per node over the link graph
-    (operators.graph.clustering_coeff_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(graph.clustering_coeff_sql(SPARK))
-
-
-def q_clustering_coeff_oracle() -> str:
-    return graph.clustering_coeff_sql(DUCK)
-
-
 def q_hyperanf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperANF neighborhood function, depths 0-2
     (operators.graph.hyperanf)."""
@@ -44,17 +33,6 @@ def q_hyperanf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hyperanf_oracle() -> str:
     return graph.hyperanf_oracle_sql("documents", n_rounds=2)
-
-
-def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts on the deterministic link graph: ordered-
-    vertex wedge join + closure semi-join (each triangle counted once)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(graph.triangles_sql(SPARK))
-
-
-def q_triangles_oracle() -> str:
-    return graph.triangles_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -70,17 +48,6 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sssp_oracle() -> str:
     return graph.sssp_oracle_sql(n_rounds=4)
-
-
-def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity terms of the LPA partition — integer numerators,
-    global Q one division away (operators.graph.modularity_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(graph.modularity_sql(SPARK))
-
-
-def q_modularity_oracle() -> str:
-    return graph.modularity_sql(DUCK)
 
 
 def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,15 +121,6 @@ def _link_predict_sql(d: str, min_cn: int = 2) -> str:
         from scored s
         left join und u on u.a = s.doc_a and u.b = s.doc_b
         where u.a is null and s.cn >= {min_cn}"""
-
-
-def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_link_predict_sql(SPARK))
-
-
-def q_link_predict_oracle() -> str:
-    return _link_predict_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -297,17 +255,6 @@ def _rich_club_sql(d: str) -> str:
         where n.n_k >= 2"""
 
 
-def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_rich_club_sql(SPARK))
-
-
-def q_rich_club_oracle() -> str:
-    return _rich_club_sql(DUCK)
-
-
 def _assortativity_sql(d: str) -> str:
     """Degree assortativity of the link graph — the Pearson correlation
     of endpoint degrees over edges (Newman 2002), the single number that
@@ -356,17 +303,6 @@ def _assortativity_sql(d: str) -> str:
                                - cast(sy as double) * cast(sy as double))),
                      9) as assortativity
         from mom"""
-
-
-def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_assortativity_sql(SPARK))
-
-
-def q_assortativity_oracle() -> str:
-    return _assortativity_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -479,16 +415,16 @@ def q_hits_oracle() -> str:
 
 QUERIES = {
     "pagerank": (q_pagerank, q_pagerank_oracle),
-    "clustering_coeff": (q_clustering_coeff, q_clustering_coeff_oracle),
+    "clustering_coeff": sql_query(graph.clustering_coeff_sql),
     "hyperanf": (q_hyperanf, q_hyperanf_oracle),
-    "triangles": (q_triangles, q_triangles_oracle),
+    "triangles": sql_query(graph.triangles_sql),
     "sssp": (q_sssp, q_sssp_oracle),
-    "modularity": (q_modularity, q_modularity_oracle),
+    "modularity": sql_query(graph.modularity_sql),
     "k_core": (q_k_core, q_k_core_oracle),
     "label_prop": (q_label_prop, q_label_prop_oracle),
-    "link_predict": (q_link_predict, q_link_predict_oracle),
+    "link_predict": sql_query(_link_predict_sql),
     "harmonic_centrality": (q_harmonic_centrality, q_harmonic_centrality_oracle),
-    "rich_club": (q_rich_club, q_rich_club_oracle),
-    "degree_assortativity": (q_assortativity, q_assortativity_oracle),
+    "rich_club": sql_query(_rich_club_sql),
+    "degree_assortativity": sql_query(_assortativity_sql),
     "hits_scores": (q_hits, q_hits_oracle),
 }

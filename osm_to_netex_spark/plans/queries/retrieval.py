@@ -13,7 +13,7 @@ from ...functions import text as tx
 from ...functions.portable import DUCK, SPARK
 from ...operators import clustering, dedup, retrieval, similarity
 from ...operators.dedup import _attach_cached, cosine_expr
-from .corpus import register_geometry_views
+from .corpus import register_geometry_views, sql_query
 
 
 def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,15 +520,6 @@ def _mmr_sql(d: str, k: int = 4, pool: int = 12, lam10: int = 7) -> str:
     )
 
 
-def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_mmr_sql(SPARK))
-
-
-def q_mmr_rerank_oracle() -> str:
-    return _mmr_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Distributed PCA: top principal direction via matrix-free power iteration
 # ---------------------------------------------------------------------------
@@ -673,15 +664,6 @@ def _item_cf_sql(d: str, min_co: int = 2, k: int = 3) -> str:
         ) r where rn <= {int(k)}"""
 
 
-def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_item_cf_sql(SPARK))
-
-
-def q_item_cf_oracle() -> str:
-    return _item_cf_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Per-document TF-IDF keyword extraction
 # ---------------------------------------------------------------------------
@@ -721,15 +703,6 @@ def _tfidf_topk_sql(d: str, k: int = 5) -> str:
                                       order by score_q6 desc, term asc) as rn
             from scored
         ) r where rn <= {int(k)}"""
-
-
-def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tfidf_topk_sql(SPARK))
-
-
-def q_tfidf_topk_oracle() -> str:
-    return _tfidf_topk_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -832,15 +805,6 @@ def _rocchio_sql(d: str) -> str:
                    row_number() over (order by score2 desc, doc_id asc) as rn
             from s2
         ) r where rn <= {_ROCCHIO_K}"""
-
-
-def q_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_rocchio_sql(SPARK))
-
-
-def q_rocchio_oracle() -> str:
-    return _rocchio_sql(DUCK)
 
 
 _ND_BITS = 4
@@ -1078,12 +1042,6 @@ def q_rbo_eval_oracle() -> str:
         from j"""
 
 
-def _emb_view(spark: SparkSession, sf_dir: str) -> None:
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").createOrReplaceTempView(
-        "embeddings"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Embedding drift (per-label centroid divergence)
 # ---------------------------------------------------------------------------
@@ -1136,15 +1094,6 @@ def _embedding_drift_sql(d: str) -> str:
                      / (sqrt(cast(naa as double)) * sqrt(cast(nbb as double))),
                      9) as centroid_cos
         from pair"""
-
-
-def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _emb_view(spark, sf_dir)
-    return spark.sql(_embedding_drift_sql(SPARK))
-
-
-def q_embedding_drift_oracle() -> str:
-    return _embedding_drift_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1241,15 +1190,6 @@ def _bq_sql(d: str) -> str:
         group by b.qid"""
 
 
-def q_bq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _emb_view(spark, sf_dir)
-    return spark.sql(_bq_sql(SPARK))
-
-
-def q_bq_search_oracle() -> str:
-    return _bq_sql(DUCK)
-
-
 _MK_K = 5
 # the brute rank runs over a deterministic id-sample universe (the
 # embedding_recall convention) — bounds the eval-posture quadratic at
@@ -1296,17 +1236,6 @@ def _mutual_knn_sql(d: str) -> str:
         where f.src < f.dst"""
 
 
-def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").createOrReplaceTempView(
-        "embeddings"
-    )
-    return spark.sql(_mutual_knn_sql(SPARK))
-
-
-def q_mutual_knn_oracle() -> str:
-    return _mutual_knn_sql(DUCK)
-
-
 QUERIES = {
     "embedding_topk": (q_embed_topk, q_embed_topk_oracle),
     "embedding_topk_ivf": (q_embed_topk_ivf, q_embed_topk_ivf_oracle),
@@ -1322,17 +1251,17 @@ QUERIES = {
     "ndcg": (q_ndcg, q_ndcg_oracle),
     "cluster_cohesion": (q_cluster_cohesion, q_cluster_cohesion_oracle),
     "hard_negatives": (q_hard_negatives, q_hard_negatives_oracle),
-    "mmr_rerank": (q_mmr_rerank, q_mmr_rerank_oracle),
+    "mmr_rerank": sql_query(_mmr_sql),
     "pca_top": (q_pca_top, q_pca_top_oracle),
-    "item_cf": (q_item_cf, q_item_cf_oracle),
-    "rocchio_expand": (q_rocchio, q_rocchio_oracle),
-    "tfidf_topk": (q_tfidf_topk, q_tfidf_topk_oracle),
+    "item_cf": sql_query(_item_cf_sql),
+    "rocchio_expand": sql_query(_rocchio_sql),
+    "tfidf_topk": sql_query(_tfidf_topk_sql),
     "embedding_near_dup_ensemble": (
         q_embed_near_dup_ensemble, q_embed_near_dup_ensemble_oracle,
     ),
     "embedding_recall": (q_embed_recall, q_embed_recall_oracle),
     "rbo_eval": (q_rbo_eval, q_rbo_eval_oracle),
-    "embedding_drift": (q_embedding_drift, q_embedding_drift_oracle),
-    "bq_search": (q_bq_search, q_bq_search_oracle),
-    "mutual_knn": (q_mutual_knn, q_mutual_knn_oracle),
+    "embedding_drift": sql_query(_embedding_drift_sql),
+    "bq_search": sql_query(_bq_sql),
+    "mutual_knn": sql_query(_mutual_knn_sql),
 }

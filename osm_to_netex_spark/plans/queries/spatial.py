@@ -22,7 +22,7 @@ from ...operators.tiling import cover_cells
 from ...sources import layout
 from .corpus import (
     COSLAT0, DLAT, DLON, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, _pr,
-    duck_geometry_ctes, points_sql, polys_sql, register_geometry_views,
+    duck_geometry_ctes, points_sql, polys_sql, register_geometry_views, sql_query,
 )
 
 
@@ -887,15 +887,6 @@ def _decayed_density_sql(d: str, res: int = 12, halflife_s: int = 86400) -> str:
         group by e.cell"""
 
 
-def q_decayed_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_decayed_density_sql(SPARK))
-
-
-def q_decayed_density_oracle() -> str:
-    return _decayed_density_sql(DUCK)
-
-
 def q_corridor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corridor join: every (point, polyline segment) pair within 2 km —
     all refined pairs, not just the snap argmin."""
@@ -1477,15 +1468,6 @@ def _cell_entropy_sql(d: str, res: int = 11) -> str:
         from h"""
 
 
-def q_cell_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_cell_entropy_sql(SPARK))
-
-
-def q_cell_entropy_oracle() -> str:
-    return _cell_entropy_sql(DUCK)
-
-
 def _skew_report_sql(d: str, res: int = 8) -> str:
     """Join-key skew diagnostics for the spatial partitioning: per res-8
     cell load (points per cell), the shares of the heaviest and top-10
@@ -1633,15 +1615,6 @@ def _gearys_c_sql(d: str, res: int = 11) -> str:
                                  - cast(sx as double) * cast(sx as double)),
                               0.0e0), 9) as geary_c
         from pairs cross join gstats"""
-
-
-def q_gearys_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_gearys_c_sql(SPARK))
-
-
-def q_gearys_c_oracle() -> str:
-    return _gearys_c_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2156,15 +2129,6 @@ def _line_raster_sql(d: str, res: int = _LR_RES) -> str:
         group by 1"""
 
 
-def q_line_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_line_raster_sql(SPARK))
-
-
-def q_line_raster_oracle() -> str:
-    return _line_raster_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Google Encoded Polyline (interchange format for zone rings / tracks)
 # ---------------------------------------------------------------------------
@@ -2226,15 +2190,6 @@ def _polyline_encode_sql(d: str) -> str:
                      list_transform(pos_list, x ->
                        cast(floor(x * 1.0e5 + 0.5e0) as bigint)) as qq
               from ({polys_sql(DUCK)}) geo_polys)))"""
-
-
-def q_polyline_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_polyline_encode_sql(SPARK))
-
-
-def q_polyline_encode_oracle() -> str:
-    return _polyline_encode_sql(DUCK)
 
 
 def _polyline_roundtrip_sql(d: str) -> str:
@@ -2314,15 +2269,6 @@ def _polyline_roundtrip_sql(d: str) -> str:
         select zone_id, cast(count(*) as bigint) as n_vals,
                cast(max(err) as bigint) as max_abs_err
         from joined group by zone_id"""
-
-
-def q_polyline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_polyline_roundtrip_sql(SPARK))
-
-
-def q_polyline_roundtrip_oracle() -> str:
-    return _polyline_roundtrip_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2437,15 +2383,6 @@ def _densify_sql(d: str) -> str:
                cast(sum(greatest(k, 1) - 1) as bigint) as n_inserted
         from lens
         group by zone_id"""
-
-
-def q_densify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_densify_sql(SPARK))
-
-
-def q_densify_oracle() -> str:
-    return _densify_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2694,15 +2631,6 @@ def _lq_sql(d: str) -> str:
         cross join tot x"""
 
 
-def q_lq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_lq_sql(SPARK))
-
-
-def q_lq_oracle() -> str:
-    return _lq_sql(DUCK)
-
-
 def _beta_sql(d: str) -> str:
     """Whittaker beta diversity of event types across cells — γ/ᾱ, the
     landscape-to-local diversity ratio (β near 1 = every cell sees every
@@ -2729,15 +2657,6 @@ def _beta_sql(d: str) -> str:
                      / (cast(sum(a.a) as double) / cast(count(*) as double)),
                      9) as beta_w
         from alpha a cross join g"""
-
-
-def q_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_beta_sql(SPARK))
-
-
-def q_beta_oracle() -> str:
-    return _beta_sql(DUCK)
 
 
 QUERIES = {
@@ -2767,7 +2686,7 @@ QUERIES = {
     "grid_bfs": (q_grid_bfs, q_grid_bfs_oracle),
     "label_point": (q_label_point, q_label_point_oracle),
     "pip_best": (q_pip_best, q_pip_best_oracle),
-    "decayed_density": (q_decayed_density, q_decayed_density_oracle),
+    "decayed_density": sql_query(_decayed_density_sql),
     "corridor_join": (q_corridor_join, q_corridor_join_oracle),
     "hull": (q_hull, q_hull_oracle),
     "hilbert_key": (q_hilbert_key, q_hilbert_key_oracle),
@@ -2787,22 +2706,22 @@ QUERIES = {
     "locate_along": (q_locate_along, q_locate_along_oracle),
     "g_function": (q_g_function, q_g_function_oracle),
     "zorder_ranges": (q_zorder_ranges, q_zorder_ranges_oracle),
-    "cell_entropy": (q_cell_entropy, q_cell_entropy_oracle),
+    "cell_entropy": sql_query(_cell_entropy_sql),
     "skew_report": (q_skew_report, q_skew_report_oracle),
     "linear_ref": (q_linear_ref, q_linear_ref_oracle),
-    "gearys_c": (q_gearys_c, q_gearys_c_oracle),
+    "gearys_c": sql_query(_gearys_c_sql),
     "f_function": (q_f_function, q_f_function_oracle),
     "clark_evans": (q_clark_evans, q_clark_evans_oracle),
     "quadrat": (q_quadrat, q_quadrat_oracle),
     "centrography": (q_centrography, q_centrography_oracle),
     "emerging_hotspots": (q_emerging_hotspots, q_emerging_hotspots_oracle),
-    "line_raster": (q_line_raster, q_line_raster_oracle),
-    "polyline_encode": (q_polyline_encode, q_polyline_encode_oracle),
-    "polyline_roundtrip": (q_polyline_roundtrip, q_polyline_roundtrip_oracle),
+    "line_raster": sql_query(_line_raster_sql),
+    "polyline_encode": sql_query(_polyline_encode_sql),
+    "polyline_roundtrip": sql_query(_polyline_roundtrip_sql),
     "areal_interp": (q_areal_interp, q_areal_interp_oracle),
-    "densify": (q_densify, q_densify_oracle),
+    "densify": sql_query(_densify_sql),
     "spatial_qa": (q_spatial_qa, q_spatial_qa_oracle),
     "facility_select": (q_facility_select, q_facility_select_oracle),
-    "location_quotient": (q_lq, q_lq_oracle),
-    "beta_diversity": (q_beta, q_beta_oracle),
+    "location_quotient": sql_query(_lq_sql),
+    "beta_diversity": sql_query(_beta_sql),
 }

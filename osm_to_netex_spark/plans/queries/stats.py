@@ -13,19 +13,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ...functions import sketch, text as tx
 from ...functions.portable import DUCK, SPARK, concat_str, element_at, phash60
 from ...operators import curation, regression, temporal
-from .corpus import register_geometry_views
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization (30-min inactivity gap) — the classic training-data /
-    clickstream operator: lag + cumulative sum over one per-user window
-    partition, no self-join.  Ties broken by event_id for determinism."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.createOrReplaceTempView("events")
-    return spark.sql(_sessionize_sql(SPARK))
+from .corpus import register_geometry_views, sql_query
 
 
 def _sessionize_sql(d: str) -> str:
+    """Sessionization (30-min inactivity gap) — the classic training-data /
+    clickstream operator: lag + cumulative sum over one per-user window
+    partition, no self-join.  Ties broken by event_id for determinism."""
     # fractional epoch seconds: micros/1e6 in BOTH engines — bit-identical
     # doubles, immune to timestamp->string formatting differences and free of
     # any session-timezone dependence (ts is NTZ; timestampdiff is tz-free)
@@ -58,20 +52,10 @@ def _sessionize_sql(d: str) -> str:
         from sessioned group by user_id, session_idx"""
 
 
-def q_events_sessionize_oracle() -> str:
-    return _sessionize_sql(DUCK)
-
-
-def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _rollup_events_sql(d: str) -> str:
     """Grouping-sets analytics: ROLLUP (event_type, day) with grand totals —
     partial aggregation handles every grouping set in one shuffle (Catalyst
     Expand + HashAggregate), no per-level re-scan."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.createOrReplaceTempView("events")
-    return spark.sql(_rollup_events_sql(SPARK))
-
-
-def _rollup_events_sql(d: str) -> str:
     day = "cast(date_trunc('day', ts) as date)"
     return f"""
         select coalesce(event_type, '<all>') as event_type,
@@ -82,10 +66,6 @@ def _rollup_events_sql(d: str) -> str:
                count(distinct user_id) as n_users
         from events
         group by rollup (event_type, {day})"""
-
-
-def q_events_rollup_oracle() -> str:
-    return _rollup_events_sql(DUCK)
 
 
 def q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,7 +121,10 @@ def _hll_distinct_sql(d: str) -> str:
     The Σ 2^-M_j harmonic sum is kept in INTEGERS (Σ 2^(53-M_j), ≤ 2^60)
     so it is order-free under any partitioning — float summation of the
     dyadic terms would round differently per accumulation order.  The only
-    float op is the final division."""
+    float op is the final division.
+
+    Batch HLL sketch (m=256 registers as ROWS — one map-side-combined
+    groupBy, mergeable by construction) beside the exact distinct count."""
     reg = sketch.hll_register("user_id", d)
     rho = sketch.hll_rho("user_id", d)
     term = (
@@ -171,17 +154,6 @@ def _hll_distinct_sql(d: str) -> str:
     """
 
 
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch HLL sketch (m=256 registers as ROWS — one map-side-combined
-    groupBy, mergeable by construction) beside the exact distinct count."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_hll_distinct_sql(SPARK))
-
-
-def q_hll_distinct_oracle() -> str:
-    return _hll_distinct_sql(DUCK)
-
-
 def _cms_sql(d: str) -> str:
     """Count-min-sketch frequency estimates beside exact counts, per user.
 
@@ -189,7 +161,9 @@ def _cms_sql(d: str) -> str:
     (row, bucket) count.  The register table is DEPTH×WIDTH rows (1024) no
     matter the corpus size, mergeable by addition, and integer end-to-end
     (bit-exact oracle).  Probe: distinct users join their DEPTH registers,
-    estimate = min over rows (classic CMS overestimate bound)."""
+    estimate = min over rows (classic CMS overestimate bound).
+
+    Count-min sketch (4×256 integer registers as rows) vs exact counts."""
     b = sketch.cms_bucket("user_id", "i", d)
     depths = (
         f"lateral view explode(sequence(0, {sketch.CMS_DEPTH - 1})) t as i"
@@ -218,16 +192,6 @@ def _cms_sql(d: str) -> str:
         select e.user_id as user_id, est.cms_est as cms_est, e.exact_n as exact_n
         from exact e join est on e.user_id = est.user_id
     """
-
-
-def q_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch (4×256 integer registers as rows) vs exact counts."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_cms_sql(SPARK))
-
-
-def q_cms_frequencies_oracle() -> str:
-    return _cms_sql(DUCK)
 
 
 def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,7 +244,10 @@ def _hll_setops_sql(d: str) -> str:
     A = click users with value > 120, B = purchase users with value > 120
     (overlapping but distinct subsets).  Register sums stay integer
     (Σ 2^(53-M_j)) exactly as _hll_distinct_sql; merging sketches is a
-    256-row full-outer max — constant cost no matter the corpus."""
+    256-row full-outer max — constant cost no matter the corpus.
+
+    HLL sketch union (register max merge) + inclusion-exclusion
+    intersection, beside exact answers — bit-exact integer register sums."""
     reg = sketch.hll_register("user_id", d)
     rho = sketch.hll_rho("user_id", d)
     term = (
@@ -325,17 +292,6 @@ def _hll_setops_sql(d: str) -> str:
         from sa, sb, su, ex, exu"""
 
 
-def q_hll_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL sketch union (register max merge) + inclusion-exclusion
-    intersection, beside exact answers — bit-exact integer register sums."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_hll_setops_sql(SPARK))
-
-
-def q_hll_setops_oracle() -> str:
-    return _hll_setops_sql(DUCK)
-
-
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel view→click→purchase per user: chained
     conditional-min aggregations, integer epoch micros throughout."""
@@ -369,7 +325,9 @@ def _hist_quantiles_sql(d: str, width: float = 5.0, qs=(0.5, 0.9, 0.99)) -> str:
     bucket at rank q·n (integer cumsums; the interpolation is the only float
     arithmetic, fixed op order).  The exact percentile_cont runs beside it so
     the approximation error is visible in the gated output.
-    """
+
+    Histogram quantile sketch (mergeable bucket-count rows) with exact
+    percentile_cont beside the estimates."""
     yq = "cast(floor(value * 100.0e0 + 0.5e0) as bigint)"
     wq = int(round(width * 100))
     bkt = f"({yq} div {wq})" if d == SPARK else f"({yq} // {wq})"
@@ -424,17 +382,6 @@ def _hist_quantiles_sql(d: str, width: float = 5.0, qs=(0.5, 0.9, 0.99)) -> str:
         from ests e join ex x on e.event_type = x.event_type"""
 
 
-def q_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram quantile sketch (mergeable bucket-count rows) with exact
-    percentile_cont beside the estimates."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_hist_quantiles_sql(SPARK))
-
-
-def q_hist_quantiles_oracle() -> str:
-    return _hist_quantiles_sql(DUCK)
-
-
 def _anomaly_sql(d: str, z_thresh: float = 3.0) -> str:
     """Z-score outlier detection per event_type — exact integer moment sums.
 
@@ -444,7 +391,9 @@ def _anomaly_sql(d: str, z_thresh: float = 3.0) -> str:
     std are two deterministic float ops on them, z a fixed op sequence.
     Shape: one partial-agg pass for the 5-row stats table, broadcast back
     into a second scan — both scans parallel, no wide shuffle.
-    """
+
+    3-sigma outlier events per type: exact integer moments, broadcast
+    stats join, both passes scan-parallel."""
     yq = "cast(floor(value * 100.0e0 + 0.5e0) as bigint)"
     return f"""
         with s as (
@@ -465,17 +414,6 @@ def _anomaly_sql(d: str, z_thresh: float = 3.0) -> str:
         where abs(({yq} - st.mean_q) / st.std_q) > {z_thresh!r}e0"""
 
 
-def q_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-sigma outlier events per type: exact integer moments, broadcast
-    stats join, both passes scan-parallel."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_anomaly_sql(SPARK))
-
-
-def q_anomaly_oracle() -> str:
-    return _anomaly_sql(DUCK)
-
-
 def _robust_anomaly_sql(d: str) -> str:
     """Median/MAD (robust z-score) outlier detection per event type — the
     Iglewicz-Hoaglin modified z with the 0.6745 consistency constant and the
@@ -490,7 +428,9 @@ def _robust_anomaly_sql(d: str) -> str:
 
     Scale: two per-type exact percentiles (type-keyed shuffles over the
     quantized column) + one broadcast-sized stats join back; flags are a
-    scan-parallel projection."""
+    scan-parallel projection.
+
+    Median/MAD robust outlier detection."""
     pct = (
         (lambda x, p: f"percentile({x}, {p})")
         if d == SPARK
@@ -526,16 +466,6 @@ def _robust_anomaly_sql(d: str) -> str:
                abs({zq}) > 3500000000 as outlier
         from dev join mad using (event_type)
         where mad.madq > 0"""
-
-
-def q_robust_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median/MAD robust outlier detection (see _robust_anomaly_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_robust_anomaly_sql(SPARK))
-
-
-def q_robust_anomaly_oracle() -> str:
-    return _robust_anomaly_sql(DUCK)
 
 
 def _ab_test_sql(d: str) -> str:
@@ -586,26 +516,6 @@ def _ab_test_sql(d: str) -> str:
         where a.arm = 0 and b.arm = 1"""
 
 
-def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_ab_test_sql(SPARK))
-
-
-def q_ab_test_oracle() -> str:
-    return _ab_test_sql(DUCK)
-
-
-def q_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-batch logistic regression, 3 synchronous GD rounds over the
-    embedding features (operators.regression.logreg_gd_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(regression.logreg_gd_sql(SPARK))
-
-
-def q_logreg_oracle() -> str:
-    return regression.logreg_gd_sql(DUCK)
-
-
 def _target_encode_sql(d: str, m: float = 10.0) -> str:
     """Smoothed target (mean) encoding of a categorical column — the
     leakage-resistant categorical feature every tabular/ranking pipeline
@@ -641,22 +551,16 @@ def _target_encode_sql(d: str, m: float = 10.0) -> str:
         from documents d join enc e on e.source = d.source"""
 
 
-def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_target_encode_sql(SPARK))
-
-
-def q_target_encode_oracle() -> str:
-    return _target_encode_sql(DUCK)
-
-
 def _winsorize_sql(d: str, lo: float = 0.05, hi: float = 0.95) -> str:
     """Winsorized [0,1] scaling per event_type: clip at the exact p05/p95
     (linear-interpolated percentiles — the same cross-engine-deterministic
     primitive events_quantiles gates) then rescale.  The feature-
     normalization step of a training pipeline, robust to the tail outliers
     the anomaly query flags.  Shape: one percentile agg (5-row stats table)
-    broadcast into a second scan — no wide shuffle."""
+    broadcast into a second scan — no wide shuffle.
+
+    Robust per-type feature scaling: winsorize at p05/p95, rescale to
+    [0,1]; stats broadcast, both passes scan-parallel."""
     pc = (
         (lambda q: f"percentile(value, {q!r}e0)")
         if d == SPARK
@@ -673,17 +577,6 @@ def _winsorize_sql(d: str, lo: float = 0.05, hi: float = 0.95) -> str:
         from events e join st on e.event_type = st.event_type"""
 
 
-def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-type feature scaling: winsorize at p05/p95, rescale to
-    [0,1]; stats broadcast, both passes scan-parallel."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_winsorize_sql(SPARK))
-
-
-def q_winsorize_oracle() -> str:
-    return _winsorize_sql(DUCK)
-
-
 def _incremental_rollup_sql(d: str) -> str:
     """Incremental materialized-view maintenance: partition the corpus into
     BASE (first half of time) and DELTA (rest), roll each up independently,
@@ -695,7 +588,10 @@ def _incremental_rollup_sql(d: str) -> str:
     This is the algebra that lets a 100 TB pipeline ingest a day at a time
     and never rescan history: all the engine's sketches (HLL/CMS/Bloom/
     histogram) were built as mergeable ROW tables precisely so this merge is
-    a groupBy, not a recompute."""
+    a groupBy, not a recompute.
+
+    Base+delta partial-rollup merge vs direct full recompute — the
+    mergeable-aggregate algebra, value-gated."""
     reg = sketch.hll_register("user_id", d)
     rho = sketch.hll_rho("user_id", d)
     yq = "cast(floor(value * 100.0e0 + 0.5e0) as bigint)"
@@ -759,24 +655,16 @@ def _incremental_rollup_sql(d: str) -> str:
         from merged_stats m join full_stats f on m.event_type = f.event_type"""
 
 
-def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Base+delta partial-rollup merge vs direct full recompute — the
-    mergeable-aggregate algebra, value-gated."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_incremental_rollup_sql(SPARK))
-
-
-def q_incremental_rollup_oracle() -> str:
-    return _incremental_rollup_sql(DUCK)
-
-
 def _eqfreq_bins_sql(d: str, k: int = 8) -> str:
     """Equal-frequency discretization (quantile binning) per event_type:
     bucket = floor((rank-1)·k / n) over (value, event_id) order — an
     unambiguous total order and an explicit floor (Spark casts truncate,
     DuckDB casts round — floor() is the portable spelling), so bucket
     boundaries are deterministic even with duplicate values.  The feature-bucketization
-    primitive (monotone-binned features for GBDTs etc.)."""
+    primitive (monotone-binned features for GBDTs etc.).
+
+    Equal-frequency value binning per event_type (k=8), deterministic
+    total order."""
     return f"""
         with ranked as (
             select event_id, event_type, value,
@@ -790,21 +678,12 @@ def _eqfreq_bins_sql(d: str, k: int = 8) -> str:
         from ranked"""
 
 
-def q_eqfreq_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-frequency value binning per event_type (k=8), deterministic
-    total order."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_eqfreq_bins_sql(SPARK))
-
-
-def q_eqfreq_bins_oracle() -> str:
-    return _eqfreq_bins_sql(DUCK)
-
-
 def _cohort_sql(d: str) -> str:
     """Weekly cohort retention: users grouped by first-activity week, counted
     per subsequent activity week — the product-analytics retention matrix.
-    Integer week arithmetic (epoch-day div 7) keeps everything exact."""
+    Integer week arithmetic (epoch-day div 7) keeps everything exact.
+
+    Weekly cohort retention matrix (cohort week × offset week × users)."""
     if d == SPARK:
         wk = "cast(datediff(cast(ts as date), date'1970-01-01') div 7 as bigint)"
     else:
@@ -818,21 +697,13 @@ def _cohort_sql(d: str) -> str:
         from activity group by cohort, offset_w"""
 
 
-def q_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention matrix (cohort week × offset week × users)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_cohort_sql(SPARK))
-
-
-def q_cohort_oracle() -> str:
-    return _cohort_sql(DUCK)
-
-
 def _transitions_sql(d: str) -> str:
     """Event-type transition counts (first-order Markov statistics): for
     each user's ts-ordered event stream, count (prev_type → type) bigrams.
     Deterministic order: (ts, event_id) is a total order.  One window on the
-    user key + one map-side-combined count."""
+    user key + one map-side-combined count.
+
+    First-order event-type transition matrix per the user timeline."""
     return """
         with seq as (
             select user_id, event_type,
@@ -844,16 +715,6 @@ def _transitions_sql(d: str) -> str:
                cast(count(*) as bigint) as n
         from seq where prev_type is not null
         group by prev_type, event_type"""
-
-
-def q_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order event-type transition matrix per the user timeline."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_transitions_sql(SPARK))
-
-
-def q_transitions_oracle() -> str:
-    return _transitions_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -900,15 +761,6 @@ def _rolling_stats_sql(d: str) -> str:
             partition by user_id order by epoch_us
             range between 3600000000 preceding and current row
         )"""
-
-
-def q_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_rolling_stats_sql(SPARK))
-
-
-def q_rolling_stats_oracle() -> str:
-    return _rolling_stats_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1025,15 +877,6 @@ def _return_gaps_sql(d: str) -> str:
         from gaps group by user_id"""
 
 
-def q_return_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_return_gaps_sql(SPARK))
-
-
-def q_return_gaps_oracle() -> str:
-    return _return_gaps_sql(DUCK)
-
-
 def _quantile_rank_sql(d: str) -> str:
     """Per-group quantile-rank transform (the rank-gauss/quantile-uniform
     feature): qrank = (rn − 1)/(n − 1) with a fully deterministic order
@@ -1058,15 +901,6 @@ def _quantile_rank_sql(d: str) -> str:
                cast(floor(cast(rn - 1 as double) / cast(n - 1 as double)
                     * 1.0e9 + 0.5e0) as bigint) as qrank_q9
         from r where n > 1"""
-
-
-def q_quantile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_quantile_rank_sql(SPARK))
-
-
-def q_quantile_rank_oracle() -> str:
-    return _quantile_rank_sql(DUCK)
 
 
 def _benford_sql(d: str) -> str:
@@ -1103,15 +937,6 @@ def _benford_sql(d: str) -> str:
                round(exp_n, 6) as expected,
                {chi} as chi2_term_q9
         from staged"""
-
-
-def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_benford_sql(SPARK))
-
-
-def q_benford_oracle() -> str:
-    return _benford_sql(DUCK)
 
 
 def _haar_energy_sql(d: str) -> str:
@@ -1169,15 +994,6 @@ def _haar_energy_sql(d: str) -> str:
         from sums"""
 
 
-def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_haar_energy_sql(SPARK))
-
-
-def q_haar_energy_oracle() -> str:
-    return _haar_energy_sql(DUCK)
-
-
 def _churn_labels_sql(d: str, horizon_days: int = 14, feat_days: int = 7) -> str:
     """Supervised-dataset builder for churn prediction: per (user, event)
     the LABEL — no activity within the next ``horizon_days`` — plus leakage
@@ -1215,15 +1031,6 @@ def _churn_labels_sql(d: str, horizon_days: int = 14, feat_days: int = 7) -> str
                cast(coalesce(us - prev_us, -1) as bigint) as us_since_prev,
                (next_us is null or next_us - us > {h_us}) as churned
         from w"""
-
-
-def q_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_churn_labels_sql(SPARK))
-
-
-def q_churn_labels_oracle() -> str:
-    return _churn_labels_sql(DUCK)
 
 
 def _autocorr_sql(d: str, lags_h: tuple[int, ...] = (24, 48)) -> str:
@@ -1284,27 +1091,6 @@ def _autocorr_sql(d: str, lags_h: tuple[int, ...] = (24, 48)) -> str:
           and n * syy - sy * sy > 0"""
 
 
-def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_autocorr_sql(SPARK))
-
-
-def q_autocorr_oracle() -> str:
-    return _autocorr_sql(DUCK)
-
-
-def q_logreg_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram of the gated logreg — same unrolled GD chain,
-    observed-range probability bins
-    (operators.regression.logreg_calibration_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(regression.logreg_calibration_sql(SPARK))
-
-
-def q_logreg_calibration_oracle() -> str:
-    return regression.logreg_calibration_sql(DUCK)
-
-
 def _weighted_median_sql(d: str) -> str:
     """Exact weighted median of order value per returnflag, weighted by
     quantity — the fair-aggregation primitive (a 50-unit line counts 50×):
@@ -1336,15 +1122,6 @@ def _weighted_median_sql(d: str) -> str:
                    as wmedian_q2,
                cast(max(tw) as bigint) as total_weight
         from c group by grp"""
-
-
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_weighted_median_sql(SPARK))
-
-
-def q_weighted_median_oracle() -> str:
-    return _weighted_median_sql(DUCK)
 
 
 def _theil_sen_sql(d: str) -> str:
@@ -1393,15 +1170,6 @@ def _theil_sen_sql(d: str) -> str:
                    as ts_slope_q6_per_h,
                cast(max(tc) as bigint) as n_slopes
         from c group by user_id"""
-
-
-def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_theil_sen_sql(SPARK))
-
-
-def q_theil_sen_oracle() -> str:
-    return _theil_sen_sql(DUCK)
 
 
 def _stump_sql(d: str, n_features: int = 2) -> str:
@@ -1477,15 +1245,6 @@ def _stump_sql(d: str, n_features: int = 2) -> str:
         ) t where rn = 1"""
 
 
-def q_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_stump_sql(SPARK))
-
-
-def q_stump_oracle() -> str:
-    return _stump_sql(DUCK)
-
-
 def _kaplan_meier_sql(d: str) -> str:
     """Kaplan–Meier survival estimate of user lifetime: duration = hours
     between a user's first and last event; users still active in the final
@@ -1548,15 +1307,6 @@ def _kaplan_meier_sql(d: str) -> str:
         from km where d_events > 0"""
 
 
-def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_kaplan_meier_sql(SPARK))
-
-
-def q_kaplan_meier_oracle() -> str:
-    return _kaplan_meier_sql(DUCK)
-
-
 def _gini_sql(d: str) -> str:
     """Gini coefficient + Lorenz curve of user activity concentration —
     'do 20% of users generate 80% of events?': exact closed form
@@ -1591,15 +1341,6 @@ def _gini_sql(d: str) -> str:
                      / cast(max(n) over () * max(sx) over () as double), 9)
                    as gini
         from ranked"""
-
-
-def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_gini_sql(SPARK))
-
-
-def q_gini_oracle() -> str:
-    return _gini_sql(DUCK)
 
 
 _BOOT_B = 20
@@ -1665,15 +1406,6 @@ def _poisson_bootstrap_sql(d: str, n_reps: int = _BOOT_B) -> str:
         from means group by event_type"""
 
 
-def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_poisson_bootstrap_sql(SPARK))
-
-
-def q_poisson_bootstrap_oracle() -> str:
-    return _poisson_bootstrap_sql(DUCK)
-
-
 _STAT_ROUNDS = 4
 
 
@@ -1726,15 +1458,6 @@ def _stationary_sql(d: str, n_rounds: int = _STAT_ROUNDS) -> str:
     )
 
 
-def q_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_stationary_sql(SPARK))
-
-
-def q_stationary_oracle() -> str:
-    return _stationary_sql(DUCK)
-
-
 def _seasonal_sql(d: str) -> str:
     """Seasonal decomposition (STL-lite) of the event stream: per
     (event_type, hour-of-day) the seasonal index — hourly activity rate
@@ -1774,15 +1497,6 @@ def _seasonal_sql(d: str) -> str:
         select h.event_type, h.hod, h.n as n_events,
                {idx} as seasonal_idx_q9
         from h join t on t.event_type = h.event_type"""
-
-
-def q_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_seasonal_sql(SPARK))
-
-
-def q_seasonal_oracle() -> str:
-    return _seasonal_sql(DUCK)
 
 
 def _peaks_sql(d: str) -> str:
@@ -1828,15 +1542,6 @@ def _peaks_sql(d: str) -> str:
         where w.prev_n is not null and w.next_n is not null
           and w.n > w.prev_n and w.n > w.next_n
           and w.n >= g.p90q"""
-
-
-def q_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_peaks_sql(SPARK))
-
-
-def q_peaks_oracle() -> str:
-    return _peaks_sql(DUCK)
 
 
 def _cramers_v_sql(d: str) -> str:
@@ -1888,15 +1593,6 @@ def _cramers_v_sql(d: str) -> str:
                         * cast(least(n.nr - 1, n.nc - 1) as double))), 9)
                    as cramers_v
         from chi cross join n"""
-
-
-def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_cramers_v_sql(SPARK))
-
-
-def q_cramers_v_oracle() -> str:
-    return _cramers_v_sql(DUCK)
 
 
 def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1974,15 +1670,6 @@ def _spearman_sql(d: str) -> str:
         from sums"""
 
 
-def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_spearman_sql(SPARK))
-
-
-def q_spearman_oracle() -> str:
-    return _spearman_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Mann–Whitney U (each event_type vs the rest)
 # ---------------------------------------------------------------------------
@@ -2036,15 +1723,6 @@ def _mannwhitney_sql(d: str) -> str:
                               / (cast(nn as double) * cast(nn - 1 as double)))),
                        0.0e0), 9) as z
         from per cross join ties"""
-
-
-def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_mannwhitney_sql(SPARK))
-
-
-def q_mannwhitney_oracle() -> str:
-    return _mannwhitney_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2107,15 +1785,6 @@ def _jsd_sql(d: str) -> str:
         from grid group by source"""
 
 
-def q_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_jsd_sql(SPARK))
-
-
-def q_jsd_oracle() -> str:
-    return _jsd_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # l-diversity extension of the k-anonymity ladder
 # ---------------------------------------------------------------------------
@@ -2155,15 +1824,6 @@ def _l_diversity_sql(d: str, k: int = 5, l_min: int = 3) -> str:
                cast(sum(case when n >= {k} and ndist < {l_min} then 1 else 0 end)
                     as bigint) as k_anon_not_l_diverse
         from cls group by level"""
-
-
-def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_l_diversity_sql(SPARK))
-
-
-def q_l_diversity_oracle() -> str:
-    return _l_diversity_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2226,15 +1886,6 @@ def _kruskal_sql(d: str) -> str:
         from hstat"""
 
 
-def q_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_kruskal_sql(SPARK))
-
-
-def q_kruskal_oracle() -> str:
-    return _kruskal_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Exact AUC-ROC via the rank formula
 # ---------------------------------------------------------------------------
@@ -2282,15 +1933,6 @@ def _auc_sql(d: str) -> str:
                      / (cast(n_pos as double) * cast(n_neg as double)))
                      - 1.0e0, 9) as gini_coeff
         from agg"""
-
-
-def q_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_auc_sql(SPARK))
-
-
-def q_auc_roc_oracle() -> str:
-    return _auc_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2359,15 +2001,6 @@ def _isotonic_sql(d: str) -> str:
         from bins b join fit f on f.i = b.bin"""
 
 
-def q_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_isotonic_sql(SPARK))
-
-
-def q_isotonic_oracle() -> str:
-    return _isotonic_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Burstiness of inter-event times per user
 # ---------------------------------------------------------------------------
@@ -2424,15 +2057,6 @@ def _burstiness_sql(d: str, min_events: int = 10) -> str:
                       + cast(s1 as double) / cast(n as double), 0.0e0), 9)
                    as burstiness
         from agg"""
-
-
-def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_burstiness_sql(SPARK))
-
-
-def q_burstiness_oracle() -> str:
-    return _burstiness_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2504,15 +2128,6 @@ def _l_moments_sql(d: str) -> str:
         from b"""
 
 
-def q_l_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_l_moments_sql(SPARK))
-
-
-def q_l_moments_oracle() -> str:
-    return _l_moments_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Marketing attribution: first/last touch within a lookback window
 # ---------------------------------------------------------------------------
@@ -2577,15 +2192,6 @@ def _attribution_sql(d: str) -> str:
                cast(coalesce(last_p {dv} 2, 0) as bigint) as last_ts_us,
                cast(n_touches as bigint) as n_touches
         from wnd where event_type = 'purchase'"""
-
-
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_attribution_sql(SPARK))
-
-
-def q_attribution_oracle() -> str:
-    return _attribution_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2654,15 +2260,6 @@ def _kendall_sql(d: str) -> str:
         join ty_ on ty_.source = n_tot.source"""
 
 
-def q_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_kendall_sql(SPARK))
-
-
-def q_kendall_oracle() -> str:
-    return _kendall_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Exact exponential smoothing (α = 1/2, binary weights)
 # ---------------------------------------------------------------------------
@@ -2715,17 +2312,6 @@ def _exp_smooth_sql(d: str) -> str:
                     {div} (cast(pow(2.0e0, n_events - 1) as bigint))
                     as bigint) as level_q6
         from folded"""
-
-
-def q_exp_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_exp_smooth_sql(SPARK))
-
-
-def q_exp_smooth_oracle() -> str:
-    return _exp_smooth_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2788,17 +2374,6 @@ def _sprt_sql(d: str) -> str:
         group by event_type"""
 
 
-def q_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_sprt_sql(SPARK))
-
-
-def q_sprt_oracle() -> str:
-    return _sprt_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # JSON property extraction + stats
 # ---------------------------------------------------------------------------
@@ -2824,17 +2399,6 @@ def _json_stats_sql(d: str) -> str:
                cast(max(k) as bigint) as max_k
         from ext
         group by event_type"""
-
-
-def q_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_json_stats_sql(SPARK))
-
-
-def q_json_stats_oracle() -> str:
-    return _json_stats_sql(DUCK)
 
 
 # integer MICROSECONDS since epoch: DuckDB's epoch() returns fractional
@@ -2894,17 +2458,6 @@ def _hbos_sql(d: str) -> str:
         limit {_HBOS_TOPK}"""
 
 
-def q_hbos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_hbos_sql(SPARK))
-
-
-def q_hbos_oracle() -> str:
-    return _hbos_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Trigram path mining (second-order user journeys)
 # ---------------------------------------------------------------------------
@@ -2934,17 +2487,6 @@ def _path_trigrams_sql(d: str) -> str:
         group by t1, t2, t3
         order by n desc, t1 asc, t2 asc, t3 asc
         limit {_PT_TOPK}"""
-
-
-def q_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_path_trigrams_sql(SPARK))
-
-
-def q_path_trigrams_oracle() -> str:
-    return _path_trigrams_sql(DUCK)
 
 
 _CONV_THRESH = 50.0
@@ -3032,17 +2574,6 @@ def _cuped_sql(d: str) -> str:
         group by u.arm, t.th, t.vx_n2, t.vy_n2, t.sx, t.n"""
 
 
-def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_cuped_sql(SPARK))
-
-
-def q_cuped_oracle() -> str:
-    return _cuped_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Empirical-Bayes rate shrinkage (beta-binomial, method of moments)
 # ---------------------------------------------------------------------------
@@ -3101,17 +2632,6 @@ def _eb_sql(d: str) -> str:
                round(a.alpha, 9) as alpha,
                round(a.beta, 9) as beta
         from rated r cross join ab a"""
-
-
-def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_eb_sql(SPARK))
-
-
-def q_eb_shrinkage_oracle() -> str:
-    return _eb_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -3178,15 +2698,6 @@ def _t_closeness_sql(d: str) -> str:
                     then 1 else 0 end as bigint) as is_t_close
         from grid g cross join tot t
         group by g.qi_nat, g.qi_band, t.big_n"""
-
-
-def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_t_closeness_sql(SPARK))
-
-
-def q_t_closeness_oracle() -> str:
-    return _t_closeness_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -3275,17 +2786,6 @@ def _brier_sql(d: str) -> str:
         from nums"""
 
 
-def q_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_brier_sql(SPARK))
-
-
-def q_brier_oracle() -> str:
-    return _brier_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # A/B power analysis (required sample size from observed variance)
 # ---------------------------------------------------------------------------
@@ -3332,17 +2832,6 @@ def _power_sql(d: str) -> str:
                        * {_PW_MDE_PCT / 100.0!r}e0)) as bigint)
                    as n_per_arm
         from mom"""
-
-
-def q_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_power_sql(SPARK))
-
-
-def q_power_oracle() -> str:
-    return _power_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -3405,17 +2894,6 @@ def _qnorm_sql(d: str) -> str:
         from ranked rk
         cross join n
         join gr g on g.grk = ((rk.r * n.big_n + rk.n_b - 1) {div} rk.n_b)"""
-
-
-def q_qnorm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_qnorm_sql(SPARK))
-
-
-def q_qnorm_oracle() -> str:
-    return _qnorm_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -3490,17 +2968,6 @@ def _median_polish_sql(d: str) -> str:
         from res3 a join c2 b on b.hr = a.hr"""
 
 
-def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_median_polish_sql(SPARK))
-
-
-def q_median_polish_oracle() -> str:
-    return _median_polish_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Seasonal-naive forecast backtest
 # ---------------------------------------------------------------------------
@@ -3544,17 +3011,6 @@ def _backtest_sql(d: str) -> str:
                          else 0 end as bigint) as seasonal_wins
         from eval_days
         group by event_type"""
-
-
-def q_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_backtest_sql(SPARK))
-
-
-def q_backtest_oracle() -> str:
-    return _backtest_sql(DUCK)
 
 
 def _streaks_sql(d: str) -> str:
@@ -3602,87 +3058,76 @@ def _streaks_sql(d: str) -> str:
         group by r.user_id"""
 
 
-def q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(_streaks_sql(SPARK))
-
-
-def q_streaks_oracle() -> str:
-    return _streaks_sql(DUCK)
-
-
 QUERIES = {
     "events_window": (q_events_window, q_events_window_oracle),
-    "events_sessionize": (q_events_sessionize, q_events_sessionize_oracle),
-    "events_rollup": (q_events_rollup, q_events_rollup_oracle),
+    "events_sessionize": sql_query(_sessionize_sql),
+    "events_rollup": sql_query(_rollup_events_sql),
     "events_quantiles": (q_events_quantiles, q_events_quantiles_oracle),
     "events_asof": (q_events_asof, q_events_asof_oracle),
-    "hll_distinct": (q_hll_distinct, q_hll_distinct_oracle),
-    "cms_frequencies": (q_cms_frequencies, q_cms_frequencies_oracle),
+    "hll_distinct": sql_query(_hll_distinct_sql),
+    "cms_frequencies": sql_query(_cms_sql),
     "trend_fit": (q_trend_fit, q_trend_fit_oracle),
-    "hll_setops": (q_hll_setops, q_hll_setops_oracle),
+    "hll_setops": sql_query(_hll_setops_sql),
     "funnel": (q_funnel, q_funnel_oracle),
     "gap_fill": (q_gap_fill, q_gap_fill_oracle),
-    "hist_quantiles": (q_hist_quantiles, q_hist_quantiles_oracle),
-    "anomaly": (q_anomaly, q_anomaly_oracle),
-    "robust_anomaly": (q_robust_anomaly, q_robust_anomaly_oracle),
-    "ab_test": (q_ab_test, q_ab_test_oracle),
-    "logreg": (q_logreg, q_logreg_oracle),
-    "target_encode": (q_target_encode, q_target_encode_oracle),
-    "winsorize": (q_winsorize, q_winsorize_oracle),
-    "incremental_rollup": (q_incremental_rollup, q_incremental_rollup_oracle),
-    "eqfreq_bins": (q_eqfreq_bins, q_eqfreq_bins_oracle),
-    "cohort": (q_cohort, q_cohort_oracle),
-    "transitions": (q_transitions, q_transitions_oracle),
+    "hist_quantiles": sql_query(_hist_quantiles_sql),
+    "anomaly": sql_query(_anomaly_sql),
+    "robust_anomaly": sql_query(_robust_anomaly_sql),
+    "ab_test": sql_query(_ab_test_sql),
+    "logreg": sql_query(regression.logreg_gd_sql),
+    "target_encode": sql_query(_target_encode_sql),
+    "winsorize": sql_query(_winsorize_sql),
+    "incremental_rollup": sql_query(_incremental_rollup_sql),
+    "eqfreq_bins": sql_query(_eqfreq_bins_sql),
+    "cohort": sql_query(_cohort_sql),
+    "transitions": sql_query(_transitions_sql),
     "interval_merge": (q_interval_merge, q_interval_merge_oracle),
-    "rolling_stats": (q_rolling_stats, q_rolling_stats_oracle),
+    "rolling_stats": sql_query(_rolling_stats_sql),
     "ridge_fit": (q_ridge_fit, q_ridge_fit_oracle),
     "profile": (q_profile, q_profile_oracle),
     "headways": (q_headways, q_headways_oracle),
-    "return_gaps": (q_return_gaps, q_return_gaps_oracle),
-    "quantile_rank": (q_quantile_rank, q_quantile_rank_oracle),
-    "benford": (q_benford, q_benford_oracle),
-    "haar_energy": (q_haar_energy, q_haar_energy_oracle),
-    "churn_labels": (q_churn_labels, q_churn_labels_oracle),
-    "autocorr": (q_autocorr, q_autocorr_oracle),
-    "logreg_calibration": (q_logreg_calibration, q_logreg_calibration_oracle),
-    "weighted_median": (q_weighted_median, q_weighted_median_oracle),
-    "theil_sen": (q_theil_sen, q_theil_sen_oracle),
-    "stump": (q_stump, q_stump_oracle),
-    "kaplan_meier": (q_kaplan_meier, q_kaplan_meier_oracle),
-    "gini": (q_gini, q_gini_oracle),
-    "poisson_bootstrap": (q_poisson_bootstrap, q_poisson_bootstrap_oracle),
-    "stationary": (q_stationary, q_stationary_oracle),
-    "seasonal": (q_seasonal, q_seasonal_oracle),
-    "peaks": (q_peaks, q_peaks_oracle),
-    "cramers_v": (q_cramers_v, q_cramers_v_oracle),
+    "return_gaps": sql_query(_return_gaps_sql),
+    "quantile_rank": sql_query(_quantile_rank_sql),
+    "benford": sql_query(_benford_sql),
+    "haar_energy": sql_query(_haar_energy_sql),
+    "churn_labels": sql_query(_churn_labels_sql),
+    "autocorr": sql_query(_autocorr_sql),
+    "logreg_calibration": sql_query(regression.logreg_calibration_sql),
+    "weighted_median": sql_query(_weighted_median_sql),
+    "theil_sen": sql_query(_theil_sen_sql),
+    "stump": sql_query(_stump_sql),
+    "kaplan_meier": sql_query(_kaplan_meier_sql),
+    "gini": sql_query(_gini_sql),
+    "poisson_bootstrap": sql_query(_poisson_bootstrap_sql),
+    "stationary": sql_query(_stationary_sql),
+    "seasonal": sql_query(_seasonal_sql),
+    "peaks": sql_query(_peaks_sql),
+    "cramers_v": sql_query(_cramers_v_sql),
     "cusum": (q_cusum, q_cusum_oracle),
     "kanon": (q_kanon, q_kanon_oracle),
-    "spearman": (q_spearman, q_spearman_oracle),
-    "mannwhitney": (q_mannwhitney, q_mannwhitney_oracle),
-    "jsd_drift": (q_jsd, q_jsd_oracle),
-    "l_diversity": (q_l_diversity, q_l_diversity_oracle),
-    "kruskal_wallis": (q_kruskal, q_kruskal_oracle),
-    "auc_roc": (q_auc_roc, q_auc_roc_oracle),
-    "isotonic_calibration": (q_isotonic, q_isotonic_oracle),
-    "burstiness": (q_burstiness, q_burstiness_oracle),
-    "l_moments": (q_l_moments, q_l_moments_oracle),
-    "attribution": (q_attribution, q_attribution_oracle),
-    "kendall_tau": (q_kendall, q_kendall_oracle),
-    "exp_smooth": (q_exp_smooth, q_exp_smooth_oracle),
-    "sprt": (q_sprt, q_sprt_oracle),
-    "json_extract_stats": (q_json_stats, q_json_stats_oracle),
-    "hbos_outliers": (q_hbos, q_hbos_oracle),
-    "path_trigrams": (q_path_trigrams, q_path_trigrams_oracle),
-    "cuped": (q_cuped, q_cuped_oracle),
-    "eb_shrinkage": (q_eb_shrinkage, q_eb_shrinkage_oracle),
-    "t_closeness": (q_t_closeness, q_t_closeness_oracle),
-    "brier_decomp": (q_brier, q_brier_oracle),
-    "power_analysis": (q_power, q_power_oracle),
-    "quantile_norm": (q_qnorm, q_qnorm_oracle),
-    "median_polish": (q_median_polish, q_median_polish_oracle),
-    "forecast_backtest": (q_backtest, q_backtest_oracle),
-    "user_streaks": (q_streaks, q_streaks_oracle),
+    "spearman": sql_query(_spearman_sql),
+    "mannwhitney": sql_query(_mannwhitney_sql),
+    "jsd_drift": sql_query(_jsd_sql),
+    "l_diversity": sql_query(_l_diversity_sql),
+    "kruskal_wallis": sql_query(_kruskal_sql),
+    "auc_roc": sql_query(_auc_sql),
+    "isotonic_calibration": sql_query(_isotonic_sql),
+    "burstiness": sql_query(_burstiness_sql),
+    "l_moments": sql_query(_l_moments_sql),
+    "attribution": sql_query(_attribution_sql),
+    "kendall_tau": sql_query(_kendall_sql),
+    "exp_smooth": sql_query(_exp_smooth_sql),
+    "sprt": sql_query(_sprt_sql),
+    "json_extract_stats": sql_query(_json_stats_sql),
+    "hbos_outliers": sql_query(_hbos_sql),
+    "path_trigrams": sql_query(_path_trigrams_sql),
+    "cuped": sql_query(_cuped_sql),
+    "eb_shrinkage": sql_query(_eb_sql),
+    "t_closeness": sql_query(_t_closeness_sql),
+    "brier_decomp": sql_query(_brier_sql),
+    "power_analysis": sql_query(_power_sql),
+    "quantile_norm": sql_query(_qnorm_sql),
+    "median_polish": sql_query(_median_polish_sql),
+    "forecast_backtest": sql_query(_backtest_sql),
+    "user_streaks": sql_query(_streaks_sql),
 }

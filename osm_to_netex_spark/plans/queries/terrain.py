@@ -15,7 +15,7 @@ from ...functions.portable import DUCK, SPARK, concat_str, flit, phash60
 from ...operators import raster
 from .corpus import (
     BBOX, COSLAT0, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, duck_geometry_ctes,
-    register_geometry_views,
+    register_geometry_views, sql_query,
 )
 
 
@@ -703,15 +703,6 @@ def _way_split_sql(d: str) -> str:
         where next_pos is not null"""
 
 
-def q_way_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_way_split_sql(SPARK))
-
-
-def q_way_split_oracle() -> str:
-    return _way_split_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Local Moran (LISA) cluster labels over the elevation raster
 # ---------------------------------------------------------------------------
@@ -769,15 +760,6 @@ def _local_moran_sql(d: str) -> str:
                     else 'NS' end as quad
         from ctr c
         join lag l on l.ix = c.ix and l.iy = c.iy"""
-
-
-def q_local_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_local_moran_sql(SPARK))
-
-
-def q_local_moran_oracle() -> str:
-    return _local_moran_sql(DUCK)
 
 
 _SS_MAX_LAG = 4
@@ -860,15 +842,6 @@ def _spatial_structure_sql(d: str) -> str:
                    as moran_i
         from pairs p cross join varg v
         group by p.h, v.scc, v.n"""
-
-
-def q_spatial_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_spatial_structure_sql(SPARK))
-
-
-def q_spatial_structure_oracle() -> str:
-    return _spatial_structure_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1083,15 +1056,6 @@ def _terrain_sql(d: str) -> str:
         join ras c on c.ix = a.ix and c.iy = a.iy"""
 
 
-def q_terrain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_terrain_sql(SPARK))
-
-
-def q_terrain_oracle() -> str:
-    return _terrain_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Edge elevation profiles (way_split edges × elevation raster)
 # ---------------------------------------------------------------------------
@@ -1153,15 +1117,6 @@ def _edge_profiles_sql(d: str) -> str:
                    as relief_per_step
         from seg
         group by way_id, edge_idx"""
-
-
-def q_edge_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_edge_profiles_sql(SPARK))
-
-
-def q_edge_profiles_oracle() -> str:
-    return _edge_profiles_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1388,15 +1343,6 @@ def _anisotropy_sql(d: str) -> str:
         group by h, dir_class"""
 
 
-def q_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_anisotropy_sql(SPARK))
-
-
-def q_anisotropy_oracle() -> str:
-    return _anisotropy_sql(DUCK)
-
-
 QUERIES = {
     "raster_zonal": (q_raster_zonal, q_raster_zonal_oracle),
     "raster_slope": (q_raster_slope, q_raster_slope_oracle),
@@ -1406,13 +1352,13 @@ QUERIES = {
     "flow_accum": (q_flow_accum, q_flow_accum_oracle),
     "viewshed": (q_viewshed, q_viewshed_oracle),
     "cost_distance": (q_cost_distance, q_cost_distance_oracle),
-    "way_split": (q_way_split, q_way_split_oracle),
-    "local_moran": (q_local_moran, q_local_moran_oracle),
-    "spatial_structure": (q_spatial_structure, q_spatial_structure_oracle),
+    "way_split": sql_query(_way_split_sql),
+    "local_moran": sql_query(_local_moran_sql),
+    "spatial_structure": sql_query(_spatial_structure_sql),
     "strahler": (q_strahler, q_strahler_oracle),
     "watershed": (q_watershed, q_watershed_oracle),
-    "terrain_indices": (q_terrain, q_terrain_oracle),
-    "edge_profiles": (q_edge_profiles, q_edge_profiles_oracle),
+    "terrain_indices": sql_query(_terrain_sql),
+    "edge_profiles": sql_query(_edge_profiles_sql),
     "lcp_path": (q_lcp_path, q_lcp_path_oracle),
-    "anisotropy": (q_anisotropy, q_anisotropy_oracle),
+    "anisotropy": sql_query(_anisotropy_sql),
 }

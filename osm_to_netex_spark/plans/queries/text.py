@@ -17,7 +17,7 @@ from ...operators import (
 from ...operators.dedup import _attach_cached
 from ...operators.textstats import lang_id_expr, quality_score_expr
 from ..convert_queries import FIXTURE_CORPUS
-from .corpus import register_geometry_views
+from .corpus import register_geometry_views, sql_query
 
 
 # --- training-data operators over the shared documents/embeddings tables ---
@@ -426,7 +426,10 @@ def _bpe_pairs_sql(d: str, top_n: int = 50) -> str:
     over the vocab (≪ corpus — the same trick as top_terms), one explode of
     len-1 positions per word; global top-n via ORDER BY + LIMIT ⇒
     TakeOrderedAndProject (per-partition top-n + driver merge), never a full
-    sort.  Deterministic tiebreak (count desc, pair asc)."""
+    sort.  Deterministic tiebreak (count desc, pair asc).
+
+    Top-50 adjacent character pairs (BPE merge candidates), vocab-level
+    counting, global top-k via TakeOrderedAndProject."""
     toks = tx.tokens("text", d)
     if d == SPARK:
         tok_rows = f"select explode({toks}) as w from documents"
@@ -452,17 +455,6 @@ def _bpe_pairs_sql(d: str, top_n: int = 50) -> str:
         from pairs group by pair
         order by pair_count desc, pair asc
         limit {top_n}"""
-
-
-def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 adjacent character pairs (BPE merge candidates), vocab-level
-    counting, global top-k via TakeOrderedAndProject."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_bpe_pairs_sql(SPARK))
-
-
-def q_bpe_pairs_oracle() -> str:
-    return _bpe_pairs_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -504,30 +496,6 @@ def _token_drift_sql(d: str) -> str:
         )
         select source, cast(sum(tq) as bigint) as chi2_q9, count(*) as n_cells
         from terms group by source"""
-
-
-def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_token_drift_sql(SPARK))
-
-
-def q_token_drift_oracle() -> str:
-    return _token_drift_sql(DUCK)
-
-
-# ---------------------------------------------------------------------------
-# Naive Bayes language classification
-# ---------------------------------------------------------------------------
-def q_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial NB over char trigrams: train on the 80% split, classify
-    the held-out 20%.  Integer-quantized log-probs make every score an exact
-    fold and the argmax deterministic (operators/classify.py)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(classify.nb_langid_sql(SPARK))
-
-
-def q_nb_langid_oracle() -> str:
-    return classify.nb_langid_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -639,20 +607,6 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dsir_oracle() -> str:
     return sampling.dsir_weights_oracle_sql(target_pred="lang = 'en'", n_buckets=256)
-
-
-# ---------------------------------------------------------------------------
-# n-gram LM perplexity scoring (CCNet-style quality filter)
-# ---------------------------------------------------------------------------
-def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-trigram LM trained on the 80% split scores the held-out 20%:
-    quantized log-probs, exact integer folds (classify.ngram_lm_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(classify.ngram_lm_sql(SPARK))
-
-
-def q_lm_score_oracle() -> str:
-    return classify.ngram_lm_sql(DUCK)
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -819,15 +773,6 @@ def _sn_blocking_sql(d: str, w: int = 3) -> str:
                cast(a.o as int) as window_dist,
                (a.blk_key = b.blk_key) as same_key
         from offs a join r b on b.rn = a.rn + a.o"""
-
-
-def q_sn_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_sn_blocking_sql(SPARK))
-
-
-def q_sn_blocking_oracle() -> str:
-    return _sn_blocking_sql(DUCK)
 
 
 def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1022,15 +967,6 @@ def _ks_drift_sql(d: str) -> str:
         from grid group by source"""
 
 
-def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_ks_drift_sql(SPARK))
-
-
-def q_ks_drift_oracle() -> str:
-    return _ks_drift_sql(DUCK)
-
-
 def _term_mi_sql(d: str, top_v: int = 30, top_k: int = 20) -> str:
     """Mutual information between term PRESENCE and document source, for
     the top-V vocabulary — the classic text-classification feature-
@@ -1096,15 +1032,6 @@ def _term_mi_sql(d: str, top_v: int = 30, top_k: int = 20) -> str:
         ) t where rn <= {int(top_k)}"""
 
 
-def q_term_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_term_mi_sql(SPARK))
-
-
-def q_term_mi_oracle() -> str:
-    return _term_mi_sql(DUCK)
-
-
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf slope/intercept of the corpus term distribution, integer-exact
     OLS in log-log space (textstats.zipf_fit)."""
@@ -1114,28 +1041,6 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zipf_fit_oracle() -> str:
     return textstats.zipf_fit_sql(DUCK, top_n=200)
-
-
-def q_pmi_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PMI word-association mining over the top-40 vocabulary
-    (operators.textstats.pmi_cooc_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(textstats.pmi_cooc_sql(SPARK))
-
-
-def q_pmi_cooc_oracle() -> str:
-    return textstats.pmi_cooc_sql(DUCK)
-
-
-def q_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLEU-style clipped bigram precision between consecutive documents
-    (operators.textstats.ngram_overlap_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(textstats.ngram_overlap_sql(SPARK))
-
-
-def q_ngram_overlap_oracle() -> str:
-    return textstats.ngram_overlap_sql(DUCK)
 
 
 def q_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1281,15 +1186,6 @@ def _feature_hash_sql(d: str, dim: int = 64) -> str:
         from hashed group by doc_id, dim"""
 
 
-def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_feature_hash_sql(SPARK))
-
-
-def q_feature_hash_oracle() -> str:
-    return _feature_hash_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # SimHash blocked-Hamming near-dup pairs
 # ---------------------------------------------------------------------------
@@ -1417,15 +1313,6 @@ def _vocab_richness_sql(d: str) -> str:
         from fof"""
 
 
-def q_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_vocab_richness_sql(SPARK))
-
-
-def q_vocab_richness_oracle() -> str:
-    return _vocab_richness_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Leakage-safe train/val/test split (near-dup groups stay on one side)
 # ---------------------------------------------------------------------------
@@ -1530,15 +1417,6 @@ def _cdc_chunks_sql(d: str) -> str:
         from ch"""
 
 
-def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_cdc_chunks_sql(SPARK))
-
-
-def q_cdc_chunks_oracle() -> str:
-    return _cdc_chunks_sql(DUCK)
-
-
 _CDC_MAX_DF = 50   # postings guardrail: drop chunk hashes in > max_df docs
 _CDC_MIN_SHARED = 2
 
@@ -1573,15 +1451,6 @@ def _cdc_pairs_sql(d: str) -> str:
         )
         select doc_a, doc_b, n_shared from p
         where n_shared >= {_CDC_MIN_SHARED}"""
-
-
-def q_cdc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_cdc_pairs_sql(SPARK))
-
-
-def q_cdc_pairs_oracle() -> str:
-    return _cdc_pairs_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1667,17 +1536,6 @@ def _rake_sql(d: str) -> str:
         from ranked where rk <= {_RAKE_TOPK}"""
 
 
-def q_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_rake_sql(SPARK))
-
-
-def q_rake_oracle() -> str:
-    return _rake_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Corpus novelty curve (shingle first-occurrence by ingestion order)
 # ---------------------------------------------------------------------------
@@ -1748,17 +1606,6 @@ def _novelty_sql(d: str) -> str:
         group by s.doc_id"""
 
 
-def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_novelty_sql(SPARK))
-
-
-def q_novelty_oracle() -> str:
-    return _novelty_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # Language-ID confusion matrix (classifier eval vs gold labels)
 # ---------------------------------------------------------------------------
@@ -1792,17 +1639,6 @@ def _langid_confusion_sql(d: str) -> str:
         from conf c join tot t on t.true_lang = c.true_lang"""
 
 
-def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_langid_confusion_sql(SPARK))
-
-
-def q_langid_confusion_oracle() -> str:
-    return _langid_confusion_sql(DUCK)
-
-
 QUERIES = {
     "dedup_exact": (q_dedup_exact, q_dedup_exact_oracle),
     "minhash_signatures": (q_minhash, q_minhash_oracle),
@@ -1822,16 +1658,16 @@ QUERIES = {
     "chunk_spans": (q_chunk_spans, q_chunk_spans_oracle),
     "span_profile": (q_span_profile, q_span_profile_oracle),
     "redact_pii": (q_redact_pii, q_redact_pii_oracle),
-    "bpe_pairs": (q_bpe_pairs, q_bpe_pairs_oracle),
-    "token_drift": (q_token_drift, q_token_drift_oracle),
-    "nb_langid": (q_nb_langid, q_nb_langid_oracle),
+    "bpe_pairs": sql_query(_bpe_pairs_sql),
+    "token_drift": sql_query(_token_drift_sql),
+    "nb_langid": sql_query(classify.nb_langid_sql),
     "cosine_pairs": (q_cosine_pairs, q_cosine_pairs_oracle),
     "line_dedup": (q_line_dedup, q_line_dedup_oracle),
     "dup_spans": (q_dup_spans, q_dup_spans_oracle),
     "pack_sequences": (q_pack_sequences, q_pack_sequences_oracle),
     "span_corruption": (q_span_corruption, q_span_corruption_oracle),
     "dsir": (q_dsir, q_dsir_oracle),
-    "lm_score": (q_lm_score, q_lm_score_oracle),
+    "lm_score": sql_query(classify.ngram_lm_sql),
     "bpe_encode": (q_bpe_encode, q_bpe_encode_oracle),
     "lexdiv": (q_lexdiv, q_lexdiv_oracle),
     "corpus_shuffle": (q_corpus_shuffle, q_corpus_shuffle_oracle),
@@ -1839,25 +1675,25 @@ QUERIES = {
     "temperature_mix": (q_temperature_mix, q_temperature_mix_oracle),
     "lsh_recall": (q_lsh_recall, q_lsh_recall_oracle),
     "rendezvous": (q_rendezvous, q_rendezvous_oracle),
-    "sn_blocking": (q_sn_blocking, q_sn_blocking_oracle),
+    "sn_blocking": sql_query(_sn_blocking_sql),
     "containment": (q_containment, q_containment_oracle),
     "cosine_pairs_capped": (q_cosine_pairs_capped, q_cosine_pairs_capped_oracle),
     "containment_capped": (q_containment_capped, q_containment_capped_oracle),
     "lsh_band_stats": (q_lsh_band_stats, q_lsh_band_stats_oracle),
-    "ks_drift": (q_ks_drift, q_ks_drift_oracle),
-    "term_mi": (q_term_mi, q_term_mi_oracle),
+    "ks_drift": sql_query(_ks_drift_sql),
+    "term_mi": sql_query(_term_mi_sql),
     "zipf_fit": (q_zipf_fit, q_zipf_fit_oracle),
-    "pmi_cooc": (q_pmi_cooc, q_pmi_cooc_oracle),
-    "ngram_overlap": (q_ngram_overlap, q_ngram_overlap_oracle),
+    "pmi_cooc": sql_query(textstats.pmi_cooc_sql),
+    "ngram_overlap": sql_query(textstats.ngram_overlap_sql),
     "keep_best": (q_keep_best, q_keep_best_oracle),
     "media_context": (q_media_context, q_media_context_oracle),
-    "feature_hash": (q_feature_hash, q_feature_hash_oracle),
-    "vocab_richness": (q_vocab_richness, q_vocab_richness_oracle),
+    "feature_hash": sql_query(_feature_hash_sql),
+    "vocab_richness": sql_query(_vocab_richness_sql),
     "simhash_pairs": (q_simhash_pairs, q_simhash_pairs_oracle),
     "leakage_safe_split": (q_leakage_safe_split, q_leakage_safe_split_oracle),
-    "cdc_chunks": (q_cdc_chunks, q_cdc_chunks_oracle),
-    "cdc_dedup_pairs": (q_cdc_pairs, q_cdc_pairs_oracle),
-    "rake_keyphrases": (q_rake, q_rake_oracle),
-    "novelty_curve": (q_novelty, q_novelty_oracle),
-    "langid_confusion": (q_langid_confusion, q_langid_confusion_oracle),
+    "cdc_chunks": sql_query(_cdc_chunks_sql),
+    "cdc_dedup_pairs": sql_query(_cdc_pairs_sql),
+    "rake_keyphrases": sql_query(_rake_sql),
+    "novelty_curve": sql_query(_novelty_sql),
+    "langid_confusion": sql_query(_langid_confusion_sql),
 }

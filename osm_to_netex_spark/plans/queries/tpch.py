@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ...functions.portable import DUCK, SPARK
 from ...operators import basket, bloom, linkage, skyline, temporal
-from .corpus import register_geometry_views
+from .corpus import register_geometry_views, sql_query
 
 
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,15 +287,6 @@ def _star_rollup_sql(d: str) -> str:
         group by r_name, n_name"""
 
 
-def q_star_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_star_rollup_sql(SPARK))
-
-
-def q_star_rollup_oracle() -> str:
-    return _star_rollup_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # TPC-H classics: Q1 pricing summary, Q3 shipping priority, Q18 big orders
 # ---------------------------------------------------------------------------
@@ -303,7 +294,10 @@ def _tpch_q1_sql(d: str) -> str:
     """TPC-H Q1 shape: per (returnflag, linestatus) pricing summary over
     lineitems shipped before the cutoff.  Every per-row money/qty term is
     quantized to int 1e-4 units BEFORE its sum (order-free bigint folds);
-    the averages are single double divisions at the end."""
+    the averages are single double divisions at the end.
+
+    One fact-scan aggregate with map-side combine; the shipdate filter is
+    pushed to the parquet scan."""
     q4 = lambda x: f"cast(floor(({x}) * 1.0e4 + 0.5e0) as bigint)"  # noqa: E731
     disc = "l_extendedprice * (1.0e0 - l_discount)"
     charge = f"({disc}) * (1.0e0 + l_tax)"
@@ -321,17 +315,6 @@ def _tpch_q1_sql(d: str) -> str:
         from lineitem
         where l_shipdate <= timestamp '2000-06-01 00:00:00'
         group by l_returnflag, l_linestatus"""
-
-
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One fact-scan aggregate with map-side combine; the shipdate filter is
-    pushed to the parquet scan."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q1_sql(SPARK))
-
-
-def q_tpch_q1_oracle() -> str:
-    return _tpch_q1_sql(DUCK)
 
 
 def _tpch_q3_sql(d: str) -> str:
@@ -352,15 +335,6 @@ def _tpch_q3_sql(d: str) -> str:
         group by o_orderkey, {od}, o_orderpriority
         order by revenue_q4 desc, o_orderkey
         limit 10"""
-
-
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q3_sql(SPARK))
-
-
-def q_tpch_q3_oracle() -> str:
-    return _tpch_q3_sql(DUCK)
 
 
 def _tpch_q18_sql(d: str) -> str:
@@ -385,22 +359,16 @@ def _tpch_q18_sql(d: str) -> str:
         join customer on c_custkey = o_custkey"""
 
 
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q18_sql(SPARK))
-
-
-def q_tpch_q18_oracle() -> str:
-    return _tpch_q18_sql(DUCK)
-
-
 def _tpch_q4_sql(d: str) -> str:
     """TPC-H Q4 shape (priority counts over a semi-join): orders in a
     quarter with AT LEAST ONE late-shipping lineitem (exists → left-semi),
     counted by priority.  The testdata lineitem carries no commitdate, so
     'late' = shipped more than 60 days after order date — same plan shape
     (date-windowed fact scan, semi-join on the key, tiny group-by), pure
-    integer output."""
+    integer output.
+
+    Q4 shape: EXISTS decorrelates to a left-semi join; the fact crosses
+    the join once at order granularity."""
     lag = (
         "l_shipdate > o_orderdate + interval 60 days" if d == SPARK
         else "l_shipdate > o_orderdate + interval 60 day"
@@ -418,22 +386,14 @@ def _tpch_q4_sql(d: str) -> str:
     """
 
 
-def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q4 shape: EXISTS decorrelates to a left-semi join; the fact crosses
-    the join once at order granularity."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q4_sql(SPARK))
-
-
-def q_tpch_q4_oracle() -> str:
-    return _tpch_q4_sql(DUCK)
-
-
 def _tpch_q12_sql(d: str) -> str:
     """TPC-H Q12 shape (conditional aggregation after a fact join): per
     l_returnflag (the testdata's stand-in for shipmode), count high- vs
     low-priority orders among lineitems shipping in a window — integer
-    conditional sums, one join, one tiny group-by."""
+    conditional sums, one join, one tiny group-by.
+
+    Q12 shape: windowed fact scan (PushedFilters on l_shipdate) joined to
+    orders, conditional integer sums."""
     return f"""
         select l_returnflag,
                cast(sum(case when o_orderpriority in ('1-URGENT', '2-HIGH')
@@ -447,22 +407,14 @@ def _tpch_q12_sql(d: str) -> str:
     """
 
 
-def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q12 shape: windowed fact scan (PushedFilters on l_shipdate) joined to
-    orders, conditional integer sums."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q12_sql(SPARK))
-
-
-def q_tpch_q12_oracle() -> str:
-    return _tpch_q12_sql(DUCK)
-
-
 def _tpch_q7_sql(d: str) -> str:
     """TPC-H Q7 shape (volume shipping between nation pairs by year): the
     two-dimension-chain fact join — lineitem→orders→customer→nation crossed
     with lineitem→supplier→nation — revenue quantized per row to int 1e-4
-    BEFORE the sum, grouped by (supp_nation, cust_nation, year)."""
+    BEFORE the sum, grouped by (supp_nation, cust_nation, year).
+
+    Q7 shape: fact-sized hash joins to both dimension chains (broadcast
+    snowflake dims), map-side-combined aggregate on the pair-year key."""
     yr = (
         "year(l_shipdate)" if d == SPARK
         else "cast(date_part('year', l_shipdate) as bigint)"
@@ -486,21 +438,13 @@ def _tpch_q7_sql(d: str) -> str:
         group by n1.n_name, n2.n_name, {yr}"""
 
 
-def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q7 shape: fact-sized hash joins to both dimension chains (broadcast
-    snowflake dims), map-side-combined aggregate on the pair-year key."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q7_sql(SPARK))
-
-
-def q_tpch_q7_oracle() -> str:
-    return _tpch_q7_sql(DUCK)
-
-
 def _tpch_q10_sql(d: str) -> str:
     """TPC-H Q10 shape (returned-item revenue ranking): customers ranked by
     revenue lost to returns in a quarter — fact join + group by customer +
-    deterministic global top-20 on the integer (revenue, custkey) pair."""
+    deterministic global top-20 on the integer (revenue, custkey) pair.
+
+    Q10 shape: pushed returnflag+date filters, broadcast dims, top-20 via
+    TakeOrderedAndProject on an integer key."""
     rev = (
         "cast(floor(l_extendedprice * (1.0e0 - l_discount) * 1.0e4 + 0.5e0)"
         " as bigint)"
@@ -519,17 +463,6 @@ def _tpch_q10_sql(d: str) -> str:
         group by c_custkey, c_name, n_name
         order by revenue_q4 desc, c_custkey asc
         limit 20"""
-
-
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q10 shape: pushed returnflag+date filters, broadcast dims, top-20 via
-    TakeOrderedAndProject on an integer key."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q10_sql(SPARK))
-
-
-def q_tpch_q10_oracle() -> str:
-    return _tpch_q10_sql(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -563,15 +496,6 @@ def _tpch_q5_sql(d: str) -> str:
         group by n_name"""
 
 
-def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q5_sql(SPARK))
-
-
-def q_tpch_q5_oracle() -> str:
-    return _tpch_q5_sql(DUCK)
-
-
 # ---------------------------------------------------------------------------
 # TPC-H Q6 and Q14 shapes (filters-only agg; join with ratio-of-sums)
 # ---------------------------------------------------------------------------
@@ -592,15 +516,6 @@ def _tpch_q6_sql(d: str) -> str:
           and l_quantity < 24.0e0"""
 
 
-def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q6_sql(SPARK))
-
-
-def q_tpch_q6_oracle() -> str:
-    return _tpch_q6_sql(DUCK)
-
-
 def _tpch_q14_sql(d: str) -> str:
     """TPC-H Q14 shape — promo revenue share: fact→part join with a
     CONDITIONAL numerator over the same aggregate pass (promo vs total), a
@@ -618,15 +533,6 @@ def _tpch_q14_sql(d: str) -> str:
         join part on p_partkey = l_partkey
         where l_shipdate >= timestamp '1996-09-01 00:00:00'
           and l_shipdate <  timestamp '1996-10-01 00:00:00'"""
-
-
-def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q14_sql(SPARK))
-
-
-def q_tpch_q14_oracle() -> str:
-    return _tpch_q14_sql(DUCK)
 
 
 def _tpch_q17_sql(d: str) -> str:
@@ -653,15 +559,6 @@ def _tpch_q17_sql(d: str) -> str:
           and 5 * cast(l_quantity as bigint) * cnt < sq"""
 
 
-def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q17_sql(SPARK))
-
-
-def q_tpch_q17_oracle() -> str:
-    return _tpch_q17_sql(DUCK)
-
-
 def _tpch_q15_sql(d: str) -> str:
     """TPC-H Q15 shape — top supplier(s) by 3-month revenue: the
     argmax-over-aggregate pattern (view + global max + equality join in the
@@ -682,15 +579,6 @@ def _tpch_q15_sql(d: str) -> str:
         select s_suppkey, s_name, total_q4
         from supplier join rev on supplier_no = s_suppkey
         where total_q4 = (select max(total_q4) from rev)"""
-
-
-def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_tpch_q15_sql(SPARK))
-
-
-def q_tpch_q15_oracle() -> str:
-    return _tpch_q15_sql(DUCK)
 
 
 # per-row integer quantization of money expressions (exact IEEE-double
@@ -1091,17 +979,6 @@ def _compaction_sql(d: str) -> str:
         group by source, (cum_bytes - bytes) {div} {_CP_TARGET}"""
 
 
-def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_compaction_sql(SPARK))
-
-
-def q_compaction_oracle() -> str:
-    return _compaction_sql(DUCK)
-
-
 def _pareto_sql(d: str) -> str:
     """ABC/Pareto analysis of revenue concentration over parts: rank
     parts by revenue, classify A/B/C at the 80%/95% cumulative-share
@@ -1146,15 +1023,6 @@ def _pareto_sql(d: str) -> str:
         group by abc"""
 
 
-def q_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_pareto_sql(SPARK))
-
-
-def q_pareto_oracle() -> str:
-    return _pareto_sql(DUCK)
-
-
 QUERIES = {
     "range_join": (q_range_join, q_range_join_oracle),
     "bloom": (q_bloom, q_bloom_oracle),
@@ -1163,23 +1031,23 @@ QUERIES = {
     "fuzzy_match": (q_fuzzy_match, q_fuzzy_match_oracle),
     "skyline": (q_skyline, q_skyline_oracle),
     "frequent_pairs": (q_frequent_pairs, q_frequent_pairs_oracle),
-    "star_rollup": (q_star_rollup, q_star_rollup_oracle),
-    "tpch_q1": (q_tpch_q1, q_tpch_q1_oracle),
-    "tpch_q3": (q_tpch_q3, q_tpch_q3_oracle),
-    "tpch_q18": (q_tpch_q18, q_tpch_q18_oracle),
-    "tpch_q4": (q_tpch_q4, q_tpch_q4_oracle),
-    "tpch_q12": (q_tpch_q12, q_tpch_q12_oracle),
-    "tpch_q7": (q_tpch_q7, q_tpch_q7_oracle),
-    "tpch_q10": (q_tpch_q10, q_tpch_q10_oracle),
-    "tpch_q5": (q_tpch_q5, q_tpch_q5_oracle),
-    "tpch_q6": (q_tpch_q6, q_tpch_q6_oracle),
-    "tpch_q14": (q_tpch_q14, q_tpch_q14_oracle),
-    "tpch_q17": (q_tpch_q17, q_tpch_q17_oracle),
-    "tpch_q15": (q_tpch_q15, q_tpch_q15_oracle),
+    "star_rollup": sql_query(_star_rollup_sql),
+    "tpch_q1": sql_query(_tpch_q1_sql),
+    "tpch_q3": sql_query(_tpch_q3_sql),
+    "tpch_q18": sql_query(_tpch_q18_sql),
+    "tpch_q4": sql_query(_tpch_q4_sql),
+    "tpch_q12": sql_query(_tpch_q12_sql),
+    "tpch_q7": sql_query(_tpch_q7_sql),
+    "tpch_q10": sql_query(_tpch_q10_sql),
+    "tpch_q5": sql_query(_tpch_q5_sql),
+    "tpch_q6": sql_query(_tpch_q6_sql),
+    "tpch_q14": sql_query(_tpch_q14_sql),
+    "tpch_q17": sql_query(_tpch_q17_sql),
+    "tpch_q15": sql_query(_tpch_q15_sql),
     **{
         name: (_spark_runner(builder), (lambda b: lambda: b(DUCK))(builder))
         for name, builder in _SHAPES.items()
     },
-    "compaction_plan": (q_compaction, q_compaction_oracle),
-    "pareto_abc": (q_pareto, q_pareto_oracle),
+    "compaction_plan": sql_query(_compaction_sql),
+    "pareto_abc": sql_query(_pareto_sql),
 }

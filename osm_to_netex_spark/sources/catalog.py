@@ -526,19 +526,26 @@ class SnapshotCatalog:
             df = self._eq_delete_join(df, meta, meta["eq_deletes"], "left_anti")
         return df
 
-    def _read_base(self, meta: dict, with_pos: bool, pfilter=None) -> DataFrame:
+    def _read_base(
+        self, meta: dict, with_pos: bool, pfilter=None, files: list[str] | None = None
+    ) -> DataFrame:
         """Raw rows of a snapshot's data dirs, derived partition columns
         dropped, optional (__fp, __ri) physical identity.  Partitioned
-        multi-dir snapshots are read per-dir and unioned: each append dir is
-        its own partition-discovery root (a shared basePath would make the
+        snapshots are read per-dir and unioned: each append dir is its own
+        partition-discovery root (a shared basePath would make the
         snapshot-id level look like a partition), and the spec is enforced
         identical across appends so the union is by name.  ``pfilter`` (a
         predicate on a derived __p_ column) is applied per dir BEFORE the
-        drop — that is where directory pruning happens."""
+        drop — that is where directory pruning happens.  ``files`` (paths
+        as ``_metadata.file_path`` spells them) restricts the read to those
+        files, each still read under its own data dir."""
         opt = str(meta.get("merge_schema", False)).lower()
 
-        def one(paths):
-            df = self.spark.read.option("mergeSchema", opt).parquet(*paths)
+        def one(paths, base=None):
+            reader = self.spark.read.option("mergeSchema", opt)
+            if base is not None:
+                reader = reader.option("basePath", base)
+            df = reader.parquet(*paths)
             if pfilter is not None:
                 df = df.where(pfilter)
             if with_pos:
@@ -550,17 +557,21 @@ class SnapshotCatalog:
             return df.drop(*[c for c in df.columns if c.startswith("__p_")])
 
         dirs = meta["data_dirs"]
-        if meta.get("partition_spec") and len(dirs) > 1:
-            out = one([dirs[0]])
-            for d in dirs[1:]:
-                out = out.unionByName(one([d]), allowMissingColumns=True)
-            return out
-        return one(dirs)
+        parts = [([d], d) for d in dirs] if meta.get("partition_spec") else [(dirs, None)]
+        if files is not None:
+            parts = [
+                ([f for f in files if any(d.rstrip("/") + "/" in f for d in ds)], base)
+                for ds, base in parts
+            ]
+        frames = [one(paths, base) for paths, base in parts if paths]
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
 
-    def _read_with_pos(self, meta: dict) -> DataFrame:
+    def _read_with_pos(self, meta: dict, files: list[str] | None = None) -> DataFrame:
         """Current rows of a snapshot plus their physical identity
         (__fp, __ri) = (file path, row index), deletes already applied."""
-        return self._apply_deletes(self._read_base(meta, with_pos=True), meta)
+        return self._apply_deletes(self._read_base(meta, with_pos=True, files=files), meta)
 
     def _current_or_raise(self, table: str) -> dict:
         meta = self.current_snapshot(table)
@@ -842,16 +853,11 @@ class SnapshotCatalog:
         Hilbert write layout buys at read time.  The stats job itself is one
         map-side-combined groupBy over physical file identity."""
         meta = self._pin(table, snapshot_id)
-        df = self.spark.read.option(
-            "mergeSchema", str(meta.get("merge_schema", False)).lower()
-        ).parquet(*meta["data_dirs"])
         aggs = [F.count("*").alias("__n")]
         for c in cols:
             aggs += [F.min(c).alias(f"min__{c}"), F.max(c).alias(f"max__{c}")]
         rows = (
-            df.groupBy(F.col("_metadata.file_path").alias("__fp"))
-            .agg(*aggs)
-            .collect()
+            self._read_base(meta, with_pos=True).groupBy("__fp").agg(*aggs).collect()
         )
         stats = {
             r["__fp"]: {
@@ -929,17 +935,7 @@ class SnapshotCatalog:
         pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         if not files:
             return self.read(table, meta["snapshot_id"]).where(F.lit(False))
-        df = self.spark.read.option(
-            "mergeSchema", str(meta.get("merge_schema", False)).lower()
-        ).parquet(*files)
-        if meta.get("delete_dirs") or meta.get("eq_deletes"):
-            df = df.select(
-                "*",
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-            df = self._apply_deletes(df, meta).drop("__fp", "__ri")
-        return df.where(pred)
+        return self._df_from_meta(meta, files).where(pred)
 
     def scan_partitions(self, table: str, col: str, value, snapshot_id: str | None = None) -> DataFrame:
         """Equality read pruned by HIDDEN partitioning: the predicate is on
@@ -1065,7 +1061,9 @@ class SnapshotCatalog:
         explicit id may name a staged snapshot)."""
         return self._df_from_meta(self._pin(table, snapshot_id))
 
-    def _df_from_meta(self, meta: dict) -> DataFrame:
+    def _df_from_meta(self, meta: dict, files: list[str] | None = None) -> DataFrame:
+        """The snapshot's rows, deletes applied; ``files`` restricts the
+        read as in `_read_base`."""
         if meta.get("delete_dirs") or meta.get("eq_deletes"):
-            return self._read_with_pos(meta).drop("__fp", "__ri")
-        return self._read_base(meta, with_pos=False)
+            return self._read_with_pos(meta, files).drop("__fp", "__ri")
+        return self._read_base(meta, with_pos=False, files=files)

@@ -1,6 +1,9 @@
 """Manifest-style file stats + range-scan file skipping: disjoint appends
 prune to one file set, results equal the unpruned filter, conservative on
-null stats, delete vectors still apply."""
+null stats, delete vectors still apply, partitioned multi-dir tables read
+per data dir."""
+
+from urllib.parse import unquote, urlparse
 
 from osm_to_netex_spark.sources.catalog import SnapshotCatalog
 
@@ -44,6 +47,25 @@ def test_scan_applies_delete_vectors(spark, tmp_path):
     cat.delete_where("t", "id in (125, 126)")
     got = sorted(r.id for r in cat.scan("t", "id", 120, 130).collect())
     assert got == [120, 121, 122, 123, 124, 127, 128, 129, 130]
+
+
+def test_partitioned_multi_dir_stats_and_scan(spark, tmp_path):
+    """Two appends under one partition spec are two data dirs, each its own
+    partition root: stats cover every file `files` lists and the pruned scan
+    equals the filtered read."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    spec = [{"col": "k", "transform": "identity"}]
+    df = spark.range(0, 100).selectExpr("id", "id % 3 as k")
+    cat.commit(df.where("id < 50"), "t", mode="overwrite", partition_spec=spec)
+    cat.commit(df.where("id >= 50"), "t", mode="append")
+    stats = cat.collect_file_stats("t", ["id"])
+    listed = {r.file_path for r in cat.files("t").collect()}
+    assert {unquote(urlparse(fp).path) for fp in stats["files"]} == listed
+    got = sorted((r.id, r.k) for r in cat.scan("t", "id", 0, 25).collect())
+    want = sorted(
+        (r.id, r.k) for r in cat.read("t").where("id between 0 and 25").collect()
+    )
+    assert got == want == [(i, i % 3) for i in range(26)]
 
 
 def test_null_stats_are_conservative(spark, tmp_path):

@@ -66,7 +66,7 @@ def test_line_raster_matches_python_replay(spark):
                         per_cell[key][1].add(r["zone_id"])
     got = {
         r["cell"]: (r["n_segs"], r["n_zones"])
-        for r in SPATIAL.q_line_raster(spark, SF).collect()
+        for r in SPATIAL.QUERIES["line_raster"][0](spark, SF).collect()
     }
     want = {k: (v[0], len(v[1])) for k, v in per_cell.items()}
     assert got == want
@@ -108,7 +108,7 @@ def test_polyline_encode_matches_canonical_algorithm(spark):
     }
     got = {
         r["zone_id"]: (r["n_pts"], r["polyline"])
-        for r in SPATIAL.q_polyline_encode(spark, SF).collect()
+        for r in SPATIAL.QUERIES["polyline_encode"][0](spark, SF).collect()
     }
     assert set(got) == set(rings)
     for zid, pl in rings.items():
@@ -117,7 +117,7 @@ def test_polyline_encode_matches_canonical_algorithm(spark):
 
 
 def test_polyline_roundtrip_exact_inverse(spark):
-    rows = SPATIAL.q_polyline_roundtrip(spark, SF).collect()
+    rows = SPATIAL.QUERIES["polyline_roundtrip"][0](spark, SF).collect()
     assert rows and all(r["max_abs_err"] == 0 for r in rows)
 
 

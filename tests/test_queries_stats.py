@@ -63,7 +63,7 @@ def test_attribution_matches_python_replay(spark):
             r["first_touch"], r["first_ts_us"],
             r["last_touch"], r["last_ts_us"], r["n_touches"],
         )
-        for r in STATS.q_attribution(spark, SF).collect()
+        for r in STATS.QUERIES["attribution"][0](spark, SF).collect()
     }
     assert got == want
     assert any(v[0] != "none" for v in got.values())
@@ -104,7 +104,7 @@ def test_kendall_matches_python_replay(spark):
         want[s] = (n, c - d, round((c - d) / den, 9) if den else None)
     got = {
         r["source"]: (r["n"], r["c_minus_d"], r["tau_b"])
-        for r in STATS.q_kendall(spark, SF).collect()
+        for r in STATS.QUERIES["kendall_tau"][0](spark, SF).collect()
     }
     assert set(got) == set(want)
     for s in want:
@@ -652,7 +652,7 @@ def test_asof_join_payload_row_atomic(spark):
 def test_cms_overestimates_and_bounds(spark):
     """CMS property: estimate >= exact for every key, and error bounded in
     practice on the fixture (4x256 registers, 10k events, ~150 users)."""
-    rows = STATS.q_cms_frequencies(spark, SF).collect()
+    rows = STATS.QUERIES["cms_frequencies"][0](spark, SF).collect()
     assert rows
     for r in rows:
         assert r["cms_est"] >= r["exact_n"]
@@ -662,7 +662,7 @@ def test_cms_overestimates_and_bounds(spark):
 
 
 def test_hist_quantiles_bracket_exact(spark):
-    rows = STATS.q_hist_quantiles(spark, SF).collect()
+    rows = STATS.QUERIES["hist_quantiles"][0](spark, SF).collect()
     assert len(rows) == 5  # one per event_type
     for r in rows:
         # estimates must be finite, ordered, and within one bucket width of
@@ -677,7 +677,7 @@ def test_hist_quantiles_bracket_exact(spark):
 
 
 def test_anomaly_flags_are_3_sigma(spark):
-    out = STATS.q_anomaly(spark, SF).collect()
+    out = STATS.QUERIES["anomaly"][0](spark, SF).collect()
     assert all(abs(r.z) > 3.0 for r in out)
     # the synthetic value distribution is heavy-tailed → outliers exist
     assert len(out) > 0
@@ -687,7 +687,7 @@ def test_anomaly_flags_are_3_sigma(spark):
 
 
 def test_winsorize_bounds_and_clipping(spark):
-    rows = STATS.q_winsorize(spark, SF).collect()
+    rows = STATS.QUERIES["winsorize"][0](spark, SF).collect()
     assert all(0.0 <= r.scaled <= 1.0 for r in rows)
     # the tails must actually clip: some rows at exactly 0 and exactly 1
     assert any(r.scaled == 0.0 for r in rows)
@@ -695,7 +695,7 @@ def test_winsorize_bounds_and_clipping(spark):
 
 
 def test_incremental_rollup_merge_equals_full(spark):
-    rows = STATS.q_incremental_rollup(spark, SF).collect()
+    rows = STATS.QUERIES["incremental_rollup"][0](spark, SF).collect()
     assert len(rows) == 5
     for r in rows:
         assert r.n_merged == r.n_full
@@ -704,7 +704,7 @@ def test_incremental_rollup_merge_equals_full(spark):
 
 
 def test_eqfreq_bins_are_balanced(spark):
-    rows = STATS.q_eqfreq_bins(spark, SF).collect()
+    rows = STATS.QUERIES["eqfreq_bins"][0](spark, SF).collect()
     import collections
     per = collections.Counter((r.event_type, r.bucket) for r in rows)
     by_type = collections.defaultdict(list)
@@ -717,7 +717,7 @@ def test_eqfreq_bins_are_balanced(spark):
 
 
 def test_cohort_and_transitions_shape(spark):
-    coh = STATS.q_cohort(spark, SF).collect()
+    coh = STATS.QUERIES["cohort"][0](spark, SF).collect()
     # offset 0 row exists for every cohort and counts all its users
     by_cohort = {}
     for r in coh:
@@ -726,7 +726,7 @@ def test_cohort_and_transitions_shape(spark):
         assert 0 in offs
         assert all(offs[0] >= n for o, n in offs.items())  # retention <= cohort size
 
-    tr = STATS.q_transitions(spark, SF).collect()
+    tr = STATS.QUERIES["transitions"][0](spark, SF).collect()
     n_events = spark.read.parquet(f"{SF}/events.parquet").count()
     n_users = spark.read.parquet(f"{SF}/events.parquet").select("user_id").distinct().count()
     # each user's chain has len-1 transitions

@@ -89,7 +89,7 @@ def test_cdc_chunks_matches_python_replay_and_cdc_property(spark):
         sum(1 for v in by_hash.values() if len(v) > 1),
         round(sum(ln for ln, _ in all_chunks) / len(all_chunks), 6),
     )
-    row = TEXT.q_cdc_chunks(spark, SF).collect()[0]
+    row = TEXT.QUERIES["cdc_chunks"][0](spark, SF).collect()[0]
     assert (row["n_chunks"], row["n_distinct"], row["n_cross_doc"],
             row["mean_len"]) == want
 
@@ -251,5 +251,6 @@ def test_bpe_pairs_reference(spark):
         for i in range(len(w) - 1):
             counts[w[i:i+2]] += f
     expect = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
-    got = [(r.pair, r.pair_count) for r in TEXT.q_bpe_pairs(spark, SF).collect()]
+    rows = TEXT.QUERIES["bpe_pairs"][0](spark, SF).collect()
+    got = [(r.pair, r.pair_count) for r in rows]
     assert got == expect

@@ -45,6 +45,76 @@ def test_driver_window_leads_the_registry():
     assert list(Q.QUERIES)[:50] == Q._DRIVER_WINDOW
 
 
+_REGISTERS_VIEWS = {"register_geometry_views", "parquet", "createOrReplaceTempView"}
+
+
+def _body(fn: ast.FunctionDef) -> list[ast.stmt]:
+    """The statements of ``fn`` after its docstring."""
+    first = fn.body[0]
+    doc = isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant)
+    return fn.body[1:] if doc else fn.body
+
+
+def _dialect_call(node: ast.AST, dialect: str) -> str | None:
+    """``"f"`` when ``node`` is ``f(<dialect>)``, for a name or dotted ``f``."""
+    if (
+        isinstance(node, ast.Call) and len(node.args) == 1 and not node.keywords
+        and isinstance(node.args[0], ast.Name) and node.args[0].id == dialect
+    ):
+        return ast.unparse(node.func)
+    return None
+
+
+def _registers_sf_views(stmt: ast.stmt, fns: dict[str, ast.FunctionDef]) -> bool:
+    """``stmt`` only reads sf tables and registers them as temp views,
+    directly or through a module helper that does only that."""
+    for call in (n for n in ast.walk(stmt) if isinstance(n, ast.Call)):
+        name = getattr(call.func, "id", getattr(call.func, "attr", None))
+        if name in fns:
+            if not all(_registers_sf_views(s, fns) for s in _body(fns[name])):
+                return False
+        elif name not in _REGISTERS_VIEWS or (
+            name == "parquet" and "sf_dir" not in ast.unparse(call)
+        ):
+            return False
+    return True
+
+
+def _single_sql_wrappers(tree: ast.Module) -> list[str]:
+    """Builders ``q_x`` whose ``q_x_oracle`` only returns ``f(DUCK)`` and
+    which only register sf views before returning ``spark.sql(f(SPARK))``:
+    the pair ``sql_query(f)`` declares."""
+    fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    found = []
+    for name, oracle in fns.items():
+        build = fns.get(name.removesuffix("_oracle")) if name.endswith("_oracle") else None
+        if build is None:
+            continue
+        returns, (*head, last) = _body(oracle), _body(build) or [None]
+        if len(returns) != 1 or not isinstance(returns[0], ast.Return):
+            continue
+        sql = _dialect_call(returns[0].value, "DUCK")
+        run = last.value if isinstance(last, ast.Return) else None
+        if (
+            sql is not None and isinstance(run, ast.Call) and ast.unparse(run.func) == "spark.sql"
+            and len(run.args) == 1 and _dialect_call(run.args[0], "SPARK") == sql
+            and all(_registers_sf_views(s, fns) for s in head)
+        ):
+            found.append(build.name)
+    return found
+
+
+def test_single_sql_queries_use_sql_query():
+    """A query that is one SQL text in two dialects registers as
+    ``sql_query(f)``; a hand-written ``q_x``/``q_x_oracle`` pair of that
+    shape is boilerplate the helper already declares."""
+    found = {
+        path.name: _single_sql_wrappers(ast.parse(path.read_text()))
+        for path in sorted(PKG.glob("*.py"))
+    }
+    assert not {k: v for k, v in found.items() if v}
+
+
 def _imported_test_modules(tree: ast.AST) -> list[str]:
     """Import targets naming a test module: ``tests.test_x``, ``test_x`` or
     ``.test_x``, with or without a trailing member."""

@@ -251,7 +251,7 @@ def test_robust_anomaly_matches_python_replay(spark):
             int(r["robust_z_q9"]),
             bool(r["outlier"]),
         )
-        for r in STATS.q_robust_anomaly(spark, SF).collect()
+        for r in STATS.QUERIES["robust_anomaly"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_type = defaultdict(list)
@@ -356,7 +356,7 @@ def test_decayed_density_python_replay(spark):
 
     got = {
         int(r["cell"]): (int(r["n_events"]), int(r["decayed_q9"]))
-        for r in SPATIAL.q_decayed_density(spark, SF).collect()
+        for r in SPATIAL.QUERIES["decayed_density"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     # replay: hash location -> res-12 quad cell, ln2/86400 decay from max ts
@@ -409,7 +409,7 @@ def _ab_test_replay(got, ev):
 def test_ab_test_welch_replay(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    got = {r["event_type"]: r for r in STATS.q_ab_test(spark, SF).collect()}
+    got = {r["event_type"]: r for r in STATS.QUERIES["ab_test"][0](spark, SF).collect()}
     _ab_test_replay(got, spark.read.parquet(f"{SF}/events.parquet").collect())
 
 
@@ -434,7 +434,7 @@ def test_clustering_coeff_python_replay(spark, docs):
 
     got = {
         int(r["doc_id"]): (int(r["n_triangles"]), int(r["degree"]), int(r["cc_q9"]))
-        for r in GRAPH.q_clustering_coeff(spark, SF).collect()
+        for r in GRAPH.QUERIES["clustering_coeff"][0](spark, SF).collect()
     }
     adj = _und_edges(spark, docs)
     for v, ns in adj.items():
@@ -474,7 +474,7 @@ def test_hyperanf_monotone_and_depth0_is_one(spark, docs):
 def test_logreg_gd_python_replay(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    r = STATS.q_logreg(spark, SF).collect()[0]
+    r = STATS.QUERIES["logreg"][0](spark, SF).collect()[0]
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     data = [
         ([float(e["embedding"][j]) for j in range(4)], float(int(e["label"]) % 2))
@@ -509,7 +509,7 @@ def test_logreg_gd_python_replay(spark):
 def test_target_encode_smoothing(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = STATS.q_target_encode(spark, SF).collect()
+    rows = STATS.QUERIES["target_encode"][0](spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     g_sy = sum(int(d["n_chars"]) for d in docs)
     g_n = len(docs)
@@ -564,8 +564,8 @@ def test_return_gaps_vs_sessionize(spark):
     positive and bounded below by the 30-min break rule."""
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rg = {int(r["user_id"]): r for r in STATS.q_return_gaps(spark, SF).collect()}
-    sess = STATS.q_events_sessionize(spark, SF).collect()
+    rg = {int(r["user_id"]): r for r in STATS.QUERIES["return_gaps"][0](spark, SF).collect()}
+    sess = STATS.QUERIES["events_sessionize"][0](spark, SF).collect()
     n_sess = Counter(int(r["user_id"]) for r in sess)
     for uid, r in rg.items():
         assert int(r["n_sessions"]) == n_sess[uid]
@@ -578,7 +578,7 @@ def test_return_gaps_vs_sessionize(spark):
 def test_quantile_rank_uniform(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = STATS.q_quantile_rank(spark, SF).collect()
+    rows = STATS.QUERIES["quantile_rank"][0](spark, SF).collect()
     by_type = defaultdict(list)
     for r in rows:
         by_type[r["event_type"]].append(int(r["qrank_q9"]))
@@ -642,7 +642,7 @@ def test_g_function_vs_brute_python(spark):
 def test_benford_digits_partition(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = STATS.q_benford(spark, SF).collect()
+    rows = STATS.QUERIES["benford"][0](spark, SF).collect()
     li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
     want = Counter(
         str(math.floor(float(r["l_extendedprice"]) * 100 + 0.5))[0]
@@ -659,7 +659,7 @@ def test_benford_digits_partition(spark):
 def test_sn_blocking_window_property(spark):
     from osm_to_netex_spark.plans.queries import text as TEXT
 
-    rows = TEXT.q_sn_blocking(spark, SF).collect()
+    rows = TEXT.QUERIES["sn_blocking"][0](spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     import re as _re
 
@@ -682,7 +682,7 @@ def test_haar_energy_python_replay(spark):
 
     got = {
         int(r["user_id"]): (int(r["energy_l1"]), int(r["energy_l2"]), int(r["energy_l3"]), int(r["total_q3"]))
-        for r in STATS.q_haar_energy(spark, SF).collect()
+        for r in STATS.QUERIES["haar_energy"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
@@ -719,7 +719,7 @@ def test_modularity_python_replay(spark, docs):
             int(r["n_nodes"]), int(r["intra_edges"]),
             int(r["degree_sum"]), int(r["m_edges"]), int(r["num_term"]),
         )
-        for r in GRAPH.q_modularity(spark, SF).collect()
+        for r in GRAPH.QUERIES["modularity"][0](spark, SF).collect()
     }
     lbl = {
         int(r["doc_id"]): int(r["community"])
@@ -813,7 +813,7 @@ def test_zorder_ranges_cover_exactly(spark):
 def test_churn_labels_no_future_leakage(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = STATS.q_churn_labels(spark, SF).collect()
+    rows = STATS.QUERIES["churn_labels"][0](spark, SF).collect()
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
     for r in ev:
@@ -890,7 +890,7 @@ def test_autocorr_python_replay(spark):
 
     got = {
         (int(r["user_id"]), int(r["lag_h"])): (int(r["n"]), int(r["autocorr_q9"]))
-        for r in STATS.q_autocorr(spark, SF).collect()
+        for r in STATS.QUERIES["autocorr"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     hourly = Counter()
@@ -919,9 +919,9 @@ def test_logreg_calibration_consistency(spark):
     internally consistent with the gated logreg accuracy row."""
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    bins = STATS.q_logreg_calibration(spark, SF).collect()
+    bins = STATS.QUERIES["logreg_calibration"][0](spark, SF).collect()
     total = sum(int(r["n"]) for r in bins)
-    logreg = STATS.q_logreg(spark, SF).collect()[0]
+    logreg = STATS.QUERIES["logreg"][0](spark, SF).collect()[0]
     assert total == int(logreg["n"])
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n_pos = emb.where("label % 2 = 1").count()
@@ -938,7 +938,7 @@ def test_weighted_median_python_replay(spark):
 
     got = {
         r["l_returnflag"]: (int(r["wmedian_q2"]), int(r["total_weight"]))
-        for r in STATS.q_weighted_median(spark, SF).collect()
+        for r in STATS.QUERIES["weighted_median"][0](spark, SF).collect()
     }
     li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
     by_flag = defaultdict(Counter)
@@ -964,7 +964,7 @@ def test_theil_sen_python_replay(spark):
 
     got = {
         int(r["user_id"]): (int(r["ts_slope_q6_per_h"]), int(r["n_slopes"]))
-        for r in STATS.q_theil_sen(spark, SF).collect()
+        for r in STATS.QUERIES["theil_sen"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
@@ -997,7 +997,7 @@ def test_stump_python_replay(spark):
             int(r["threshold_q6"]), int(r["ig_q9"]),
             int(r["n_left"]), int(r["n_right"]),
         )
-        for r in STATS.q_stump(spark, SF).collect()
+        for r in STATS.QUERIES["stump"][0](spark, SF).collect()
     }
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
 
@@ -1044,7 +1044,7 @@ def test_kaplan_meier_python_replay(spark):
 
     got = {
         int(r["dur_h"]): (int(r["d_events"]), int(r["n_risk"]), float(r["survival"]))
-        for r in STATS.q_kaplan_meier(spark, SF).collect()
+        for r in STATS.QUERIES["kaplan_meier"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     spans = defaultdict(lambda: [None, None])
@@ -1076,7 +1076,7 @@ def test_kaplan_meier_python_replay(spark):
 def test_gini_python_replay(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    rows = STATS.q_gini(spark, SF).collect()
+    rows = STATS.QUERIES["gini"][0](spark, SF).collect()
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     cnt = Counter(int(r["user_id"]) for r in ev)
     xs = [c for _, c in sorted(cnt.items(), key=lambda t: (t[1], t[0]))]
@@ -1101,7 +1101,7 @@ def test_poisson_bootstrap_python_replay(spark):
             int(r["n_reps"]), int(r["boot_min_q6"]),
             int(r["boot_max_q6"]), int(r["boot_mean_q6"]),
         )
-        for r in STATS.q_poisson_bootstrap(spark, SF).collect()
+        for r in STATS.QUERIES["poisson_bootstrap"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     THS = [424136118829305344, 848272237658610688, 1060340297073263360,
@@ -1141,7 +1141,7 @@ def test_stationary_python_replay(spark):
 
     got = {
         r["event_type"]: int(r["stationary_q9"])
-        for r in STATS.q_stationary(spark, SF).collect()
+        for r in STATS.QUERIES["stationary"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     by_user = defaultdict(list)
@@ -1173,7 +1173,7 @@ def test_seasonal_python_replay(spark):
 
     got = {
         (r["event_type"], int(r["hod"])): (int(r["n_events"]), int(r["seasonal_idx_q9"]))
-        for r in STATS.q_seasonal(spark, SF).collect()
+        for r in STATS.QUERIES["seasonal"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     per = defaultdict(lambda: [0, set()])
@@ -1196,7 +1196,8 @@ def test_seasonal_python_replay(spark):
 def test_peaks_are_gated_local_maxima(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    got = {(r["event_type"], int(r["hour"])) for r in STATS.q_peaks(spark, SF).collect()}
+    rows = STATS.QUERIES["peaks"][0](spark, SF).collect()
+    got = {(r["event_type"], int(r["hour"])) for r in rows}
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     hourly = defaultdict(Counter)
     for r in ev:
@@ -1226,7 +1227,7 @@ def test_cell_entropy_python_replay(spark):
 
     got = {
         int(r["cell"]): (int(r["n_events"]), int(r["n_types"]), int(r["h_q9"]))
-        for r in SPATIAL.q_cell_entropy(spark, SF).collect()
+        for r in SPATIAL.QUERIES["cell_entropy"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     LAT_LO, LAT_HI, LON_LO, LON_HI = CORPUS.BBOX
@@ -1300,7 +1301,7 @@ def test_ks_drift_python_replay(spark):
 
     got = {
         r["source"]: (int(r["n_source"]), int(r["n_corpus"]), int(r["ks_d_q9"]))
-        for r in TEXT.q_ks_drift(spark, SF).collect()
+        for r in TEXT.QUERIES["ks_drift"][0](spark, SF).collect()
     }
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     vals = sorted({int(d["n_chars"]) for d in docs})
@@ -1322,7 +1323,7 @@ def test_ks_drift_python_replay(spark):
 def test_cramers_v_python_replay(spark):
     from osm_to_netex_spark.plans.queries import stats as STATS
 
-    r = STATS.q_cramers_v(spark, SF).collect()[0]
+    r = STATS.QUERIES["cramers_v"][0](spark, SF).collect()[0]
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
     cells = Counter()
     for e in ev:
@@ -1350,7 +1351,7 @@ def test_term_mi_python_replay(spark):
 
     from osm_to_netex_spark.plans.queries import text as TEXT
 
-    got = [(r["term"], int(r["mi_q9"])) for r in TEXT.q_term_mi(spark, SF).collect()]
+    got = [(r["term"], int(r["mi_q9"])) for r in TEXT.QUERIES["term_mi"][0](spark, SF).collect()]
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     nd = len(docs)
     pres = defaultdict(set)
