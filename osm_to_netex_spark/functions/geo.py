@@ -220,33 +220,10 @@ def quad_cover_refined(pl: str, res: int, d: str) -> str:
     meets the polygon at all, either its center is interior, or the polygon
     boundary passes through the cell — and then that edge's bbox overlaps the
     cell rect.  Typically 2–5× fewer cells than the bbox cover for star
-    polygons, i.e. 2–5× less PIP join fan-out at scale.
+    polygons, i.e. 2–5× less PIP join fan-out at scale.  The test is
+    :func:`quad_cell_classify` > 0 (boundary or interior).
     """
-    n = 2**res
-    cellw, cellh = 360.0 / n, 180.0 / n
-    lo = res * 2**QUAD_RES_BITS
-    # cell rect (west, south) corner from packed id
-    ix = f"((c - {lo}) % {2**QUAD_AXIS_BITS})"
-    iy = _intdiv(f"(c - {lo})", str(2**QUAD_AXIS_BITS), d)
-    cw = f"({ix} * {cellw!r}e0 - 180.0e0)"
-    cs = f"({iy} * {cellh!r}e0 - 90.0e0)"
-    clat = f"({cs} + {cellh / 2.0!r}e0)"
-    clon = f"({cw} + {cellw / 2.0!r}e0)"
-    center_in = point_in_polygon(clat, clon, pl, d)
-
-    npts = _intdiv(size(pl, d), "2", d)
-    yi = element_at(pl, "2*i - 1", d)
-    xi = element_at(pl, "2*i", d)
-    yj = element_at(pl, "2*i + 1", d)
-    xj = element_at(pl, "2*i + 2", d)
-    edge_overlap = (
-        f"least({xi}, {xj}) <= {cw} + {cellw!r}e0 AND greatest({xi}, {xj}) >= {cw} "
-        f"AND least({yi}, {yj}) <= {cs} + {cellh!r}e0 AND greatest({yi}, {yj}) >= {cs}"
-    )
-    any_edge = f"exists({seq('1', f'({npts} - 1)', d)}, i -> {edge_overlap})" if d == SPARK else (
-        f"len(list_filter({seq('1', f'({npts} - 1)', d)}, i -> {edge_overlap})) > 0"
-    )
-    return filter_(quad_cover_bbox(pl, res, d), "c", f"({center_in}) OR ({any_edge})", d)
+    return filter_(quad_cover_bbox(pl, res, d), "c", f"{quad_cell_classify('c', pl, res, d)} > 0", d)
 
 
 # ---------------------------------------------------------------------------

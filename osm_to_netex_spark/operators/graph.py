@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.portable import DUCK, SPARK, concat_str, phash60
+from ..functions.stages import rounds, run_stages, stages_sql
 
 SCALE = 10**12
 K_LINKS = 3
@@ -268,6 +269,21 @@ def _sssp_iter_sql(edges: str, prev: str) -> str:
     )
 
 
+def _sssp_stages(d: str, docs, n_rounds: int, source_mod: int):
+    # edges feed every round, and a round feeds TWO branches of the next
+    # (carry + relax): each staged round keeps the plan linear in K
+    n_expr = "(select count(*) from __sp_docs)"
+    seed = (
+        f"select doc_id, cast(0 as bigint) as dist from __sp_docs "
+        f"where doc_id % {source_mod} = 0"
+    )
+    return [
+        ("__sp_docs", docs),
+        ("__sp_edges", weighted_edges_sql(d, "__sp_docs", n_expr)),
+        *rounds("__sp_d", seed, lambda p: _sssp_iter_sql("__sp_edges", p), n_rounds - 1),
+    ], _sssp_iter_sql("__sp_edges", f"__sp_d{n_rounds - 1}")
+
+
 def sssp(spark: SparkSession, docs: DataFrame, n_rounds: int = 4,
          source_mod: int = 997) -> DataFrame:
     """(doc_id, dist): exact min-cost path length from the source set
@@ -278,39 +294,15 @@ def sssp(spark: SparkSession, docs: DataFrame, n_rounds: int = 4,
     the Pregel/GraphX SSSP shape without per-vertex driver state.  Integer
     weights and min() make every round order-free, so the K-round label
     table is bit-identical across partitionings and both engines (the
-    oracle unrolls the same K rounds as CTEs).
+    oracle runs the same stages).
     """
-    docs.select("doc_id").createOrReplaceTempView("__sp_docs")
-    n_expr = "(select count(*) from __sp_docs)"
-    # edges feed every round, and prev feeds TWO branches per round (carry +
-    # relax) — localCheckpoint keeps the plan linear in K instead of 2^K
-    # (the grid_bfs / connected-components lesson)
-    spark.sql(weighted_edges_sql(SPARK, "__sp_docs", n_expr)).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("__sp_edges")
-    cur = spark.sql(
-        f"select doc_id, cast(0 as bigint) as dist from __sp_docs "
-        f"where doc_id % {source_mod} = 0"
-    )
-    for t in range(n_rounds):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__sp_d{t}")
-        cur = spark.sql(_sssp_iter_sql("__sp_edges", f"__sp_d{t}"))
-    return cur
+    return run_stages(spark, *_sssp_stages(SPARK, docs.select("doc_id"), n_rounds, source_mod))
 
 
 def sssp_oracle_sql(table: str = "documents", n_rounds: int = 4,
                     source_mod: int = 997) -> str:
-    """The same K rounds unrolled as chained CTEs (DuckDB dialect)."""
-    n_expr = "(select count(*) from d0)"
-    ctes = [
-        f"d0 as (select doc_id from {table})",
-        f"e0 as ({weighted_edges_sql(DUCK, 'd0', n_expr)})",
-        f"s0 as (select doc_id, cast(0 as bigint) as dist from d0 "
-        f"where doc_id % {source_mod} = 0)",
-    ]
-    for t in range(n_rounds):
-        ctes.append(f"s{t + 1} as ({_sssp_iter_sql('e0', f's{t}')})")
-    return "with " + ", ".join(ctes) + f" select doc_id, dist from s{n_rounds}"
+    """The same K rounds as materialized CTEs (DuckDB dialect)."""
+    return stages_sql(*_sssp_stages(DUCK, f"select doc_id from {table}", n_rounds, source_mod))
 
 
 # ---------------------------------------------------------------------------
@@ -345,6 +337,21 @@ def _kcore_round_sql(adj: str, alive: str, k: int) -> str:
         ) t where deg >= {k}"""
 
 
+def _kcore_stages(d: str, docs, k: int, n_rounds: int):
+    n_expr = "(select count(*) from __kc_docs)"
+    seed = (
+        "select v, deg from ("
+        "  select u as v, count(*) as deg from __kc_adj group by u"
+        f") t where deg >= {k}"
+    )
+    last = _kcore_round_sql("__kc_adj", f"__kc_a{n_rounds - 1}", k)
+    return [
+        ("__kc_docs", docs),
+        ("__kc_adj", undirected_edges_sql(d, "__kc_docs", n_expr)),
+        *rounds("__kc_a", seed, lambda p: _kcore_round_sql("__kc_adj", p, k), n_rounds - 1),
+    ], f"select v as doc_id, cast(deg as bigint) as deg from ({last}) t"
+
+
 def k_core(
     spark: SparkSession, docs: DataFrame, k: int = 2, n_rounds: int = 4
 ) -> DataFrame:
@@ -355,40 +362,15 @@ def k_core(
     (pytest-pinned on the fixture graph).
 
     Scale: each round is one groupBy (map-side combine) + two hash joins on
-    node id; the alive table only shrinks; adjacency is localCheckpoint-bound
+    node id; the alive table only shrinks; adjacency and rounds are staged
     so the plan stays linear in rounds — the connected-components /
     grid_bfs discipline."""
-    docs.select("doc_id").createOrReplaceTempView("__kc_docs")
-    n_expr = "(select count(*) from __kc_docs)"
-    spark.sql(
-        undirected_edges_sql(SPARK, "__kc_docs", n_expr)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__kc_adj")
-    cur = spark.sql(
-        "select v, deg from ("
-        "  select u as v, count(*) as deg from __kc_adj group by u"
-        f") t where deg >= {k}"
-    )
-    for t in range(n_rounds):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__kc_a{t}")
-        cur = spark.sql(_kcore_round_sql("__kc_adj", f"__kc_a{t}", k))
-    return cur.selectExpr("v as doc_id", "cast(deg as bigint) as deg")
+    return run_stages(spark, *_kcore_stages(SPARK, docs.select("doc_id"), k, n_rounds))
 
 
 def k_core_oracle_sql(table: str = "documents", k: int = 2, n_rounds: int = 4) -> str:
-    """The same peel unrolled as chained CTEs (DuckDB dialect)."""
-    n_expr = "(select count(*) from d0)"
-    ctes = [
-        f"d0 as (select doc_id from {table})",
-        f"adj as ({undirected_edges_sql(DUCK, 'd0', n_expr)})",
-        f"a0 as (select v, deg from (select u as v, count(*) as deg "
-        f"from adj group by u) t where deg >= {k})",
-    ]
-    for t in range(n_rounds):
-        ctes.append(f"a{t + 1} as ({_kcore_round_sql('adj', f'a{t}', k)})")
-    return (
-        "with " + ", ".join(ctes)
-        + f" select v as doc_id, cast(deg as bigint) as deg from a{n_rounds}"
-    )
+    """The same peel as materialized CTEs (DuckDB dialect)."""
+    return stages_sql(*_kcore_stages(DUCK, f"select doc_id from {table}", k, n_rounds))
 
 
 # ---------------------------------------------------------------------------
@@ -414,6 +396,23 @@ def _lpa_round_sql(adj: str, lab: str) -> str:
         ) nl on nl.v = l.v"""
 
 
+def _lpa_stages(d: str, docs, k: int, p: str = "") -> list:
+    """The {p}d0/{p}adj/{p}l0..l{k} stages of LPA, dialect-selectable
+    (shared by label propagation and the modularity composition)."""
+    n_expr = f"(select count(*) from {p}d0)"
+    return [
+        (f"{p}d0", docs),
+        (f"{p}adj", undirected_edges_sql(d, f"{p}d0", n_expr)),
+        *rounds(f"{p}l", f"select doc_id as v, doc_id as lbl from {p}d0",
+                lambda prev: _lpa_round_sql(f"{p}adj", prev), k),
+    ]
+
+
+def _lpa_final(n_rounds: int, p: str) -> str:
+    last = _lpa_round_sql(f"{p}adj", f"{p}l{n_rounds - 1}")
+    return f"select v as doc_id, cast(lbl as bigint) as community from ({last}) t"
+
+
 def label_propagation(
     spark: SparkSession, docs: DataFrame, n_rounds: int = 3
 ) -> DataFrame:
@@ -425,37 +424,13 @@ def label_propagation(
     Scale: per round one groupBy on (node, label) with map-side combine, one
     per-node top-1 window (keys are node ids — no global window), one
     broadcast-free left join; labels are ints, no driver state."""
-    docs.select("doc_id").createOrReplaceTempView("__lp_docs")
-    n_expr = "(select count(*) from __lp_docs)"
-    spark.sql(
-        undirected_edges_sql(SPARK, "__lp_docs", n_expr)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__lp_adj")
-    cur = spark.sql("select doc_id as v, doc_id as lbl from __lp_docs")
-    for t in range(n_rounds):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__lp_l{t}")
-        cur = spark.sql(_lpa_round_sql("__lp_adj", f"__lp_l{t}"))
-    return cur.selectExpr("v as doc_id", "cast(lbl as bigint) as community")
-
-
-def _lpa_ctes(d: str, table: str, n_rounds: int) -> str:
-    """The d0/adj/l0..lN CTE chain of the unrolled LPA, dialect-selectable
-    (shared by the LPA oracle and the modularity composition)."""
-    n_expr = "(select count(*) from d0)"
-    ctes = [
-        f"d0 as (select doc_id from {table})",
-        f"adj as ({undirected_edges_sql(d, 'd0', n_expr)})",
-        "l0 as (select doc_id as v, doc_id as lbl from d0)",
-    ]
-    for t in range(n_rounds):
-        ctes.append(f"l{t + 1} as ({_lpa_round_sql('adj', f'l{t}')})")
-    return ", ".join(ctes)
+    stages = _lpa_stages(SPARK, docs.select("doc_id"), n_rounds - 1, "__lp_")
+    return run_stages(spark, stages, _lpa_final(n_rounds, "__lp_"))
 
 
 def label_propagation_oracle_sql(table: str = "documents", n_rounds: int = 3) -> str:
-    return (
-        "with " + _lpa_ctes(DUCK, table, n_rounds)
-        + f" select v as doc_id, cast(lbl as bigint) as community from l{n_rounds}"
-    )
+    stages = _lpa_stages(DUCK, f"select doc_id from {table}", n_rounds - 1)
+    return stages_sql(stages, _lpa_final(n_rounds, ""))
 
 
 # ---------------------------------------------------------------------------
@@ -544,6 +519,21 @@ def _hanf_est_sql(regs: str, depth: int, d: str) -> str:
         from {regs} group by v"""
 
 
+def _hanf_stages(d: str, docs, n_rounds: int):
+    from ..functions import sketch
+
+    n_expr = "(select count(*) from __ha_docs)"
+    reg = sketch.hll_register("doc_id", d, salt="anf")
+    rho = sketch.hll_rho("doc_id", d, salt="anf")
+    seed = f"select doc_id as v, {reg} as j, {rho} as m from __ha_docs"
+    ests = [f"({_hanf_est_sql(f'__ha_r{t}', t, d)})" for t in range(n_rounds + 1)]
+    return [
+        ("__ha_docs", docs),
+        ("__ha_adj", undirected_edges_sql(d, "__ha_docs", n_expr)),
+        *rounds("__ha_r", seed, lambda p: _hanf_round_sql("__ha_adj", p), n_rounds),
+    ], "select * from " + " union all select * from ".join(ests)
+
+
 def hyperanf(
     spark: SparkSession, docs: DataFrame, n_rounds: int = 2
 ) -> DataFrame:
@@ -557,50 +547,11 @@ def hyperanf(
 
     Scale: per-node register state bounded by m=256 rows; rounds are K
     small constants; no driver state; skewed hubs are the AQE case."""
-    from ..functions import sketch
-
-    docs.select("doc_id").createOrReplaceTempView("__ha_docs")
-    n_expr = "(select count(*) from __ha_docs)"
-    spark.sql(
-        undirected_edges_sql(SPARK, "__ha_docs", n_expr)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__ha_adj")
-    reg = sketch.hll_register("doc_id", SPARK, salt="anf")
-    rho = sketch.hll_rho("doc_id", SPARK, salt="anf")
-    cur = spark.sql(
-        f"select doc_id as v, {reg} as j, {rho} as m from __ha_docs"
-    )
-    ests = []
-    for t in range(n_rounds + 1):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__ha_r{t}")
-        ests.append(spark.sql(_hanf_est_sql(f"__ha_r{t}", t, SPARK)))
-        if t < n_rounds:
-            cur = spark.sql(_hanf_round_sql("__ha_adj", f"__ha_r{t}"))
-    out = ests[0]
-    for e in ests[1:]:
-        out = out.unionByName(e)
-    return out
+    return run_stages(spark, *_hanf_stages(SPARK, docs.select("doc_id"), n_rounds))
 
 
 def hyperanf_oracle_sql(table: str = "documents", n_rounds: int = 2) -> str:
-    from ..functions import sketch
-
-    n_expr = "(select count(*) from d0)"
-    reg = sketch.hll_register("doc_id", DUCK, salt="anf")
-    rho = sketch.hll_rho("doc_id", DUCK, salt="anf")
-    ctes = [
-        f"d0 as (select doc_id from {table})",
-        f"adj as ({undirected_edges_sql(DUCK, 'd0', n_expr)})",
-        f"r0 as (select doc_id as v, {reg} as j, {rho} as m from d0)",
-    ]
-    for t in range(n_rounds):
-        ctes.append(f"r{t + 1} as ({_hanf_round_sql('adj', f'r{t}')})")
-    selects = [
-        f"({_hanf_est_sql(f'r{t}', t, DUCK)})" for t in range(n_rounds + 1)
-    ]
-    return (
-        "with " + ", ".join(ctes)
-        + " select * from " + " union all select * from ".join(selects)
-    )
+    return stages_sql(*_hanf_stages(DUCK, f"select doc_id from {table}", n_rounds))
 
 
 # ---------------------------------------------------------------------------
@@ -619,8 +570,10 @@ def modularity_sql(d: str, table: str = "documents", n_rounds: int = 3) -> str:
 
     Newman modularity terms of the LPA partition — integer numerators,
     global Q one division away."""
+    # plain CTEs: modularity is one SQL text, its LPA rounds are not staged
+    lpa = _lpa_stages(d, f"select doc_id from {table}", n_rounds)
     return f"""
-        with {_lpa_ctes(d, table, n_rounds)},
+        with {", ".join(f"{n} as ({q})" for n, q in lpa)},
         lab as (select v as doc_id, cast(lbl as bigint) as community from l{n_rounds}),
         ue as (
             select distinct least(u, w) as a, greatest(u, w) as b from adj

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text as tx
 from ..functions.portable import DUCK, SPARK
+from ..functions.stages import run_stages, stages_sql
 
 # tiny built-in stopword inventories (n-gram/stopword heuristic lang-ID)
 STOPWORDS = {
@@ -404,6 +405,60 @@ def lexical_diversity_oracle_sql(
         from {table} b left join agg a on a.doc_id = b.{id_col}"""
 
 
+def _bpe_stages(d: str, docs, k_merges: int, top_n: int, text_col: str):
+    from ..functions import text as _tx
+
+    toks = _tx.tokens(text_col, d)
+    if d == SPARK:
+        tok_rows = f"select explode({toks}) as w from __bpe_docs"
+        wrap = "regexp_replace(w, '(.)', '|$1|')"
+        syms = "transform(split(e, '\\\\|\\\\|'), s -> replace(s, '|', ''))"
+        pair_rows = (
+            "select freq, explode(transform(sequence(1, size(sy) - 1), i -> "
+            "concat('|', sy[i - 1], '||', sy[i], '|'))) as pair "
+            "from (select freq, {syms} as sy from {prev}) z where size(sy) > 1"
+        )
+        tok_out = "select freq, explode({syms}) as token from {prev}"
+    else:
+        tok_rows = f"select unnest({toks}) as w from __bpe_docs"
+        wrap = "regexp_replace(w, '(.)', '|\\1|', 'g')"
+        syms = "list_transform(string_split(e, '||'), s -> replace(s, '|', ''))"
+        pair_rows = (
+            "select freq, unnest(list_transform(generate_series(1, len(sy) - 1), i -> "
+            "concat('|', sy[i], '||', sy[i + 1], '|'))) as pair "
+            "from (select freq, {syms} as sy from {prev}) z where len(sy) > 1"
+        )
+        tok_out = "select freq, unnest({syms}) as token from {prev}"
+
+    def merge(r: int) -> list:
+        # the argmax pair of round r, then its literal replace in every word
+        prev = f"__bpe_v{r - 1}"
+        pat = f"coalesce((select pair from __bpe_m{r}), '|~miss~|')"
+        return [
+            (f"__bpe_m{r}", f"""
+                select pair from ({pair_rows.format(syms=syms, prev=prev)}) pz
+                group by pair order by sum(freq) desc, pair asc limit 1"""),
+            (f"__bpe_v{r}", f"""
+                select w, freq, replace(e, {pat}, replace({pat}, '||', '')) as e
+                from {prev}"""),
+        ]
+
+    final = tok_out.format(syms=syms, prev=f"__bpe_v{int(k_merges)}")
+    return [
+        ("__bpe_docs", docs),
+        ("__bpe_v0", f"""
+            select w, freq, {wrap} as e
+            from (select w, cast(count(*) as bigint) as freq
+                  from ({tok_rows}) tk group by w) vv"""),
+        *(stage for r in range(1, int(k_merges) + 1) for stage in merge(r)),
+    ], f"""
+        select token, cast(sum(freq) as bigint) as token_count
+        from ({final}) f
+        group by token
+        order by token_count desc, token asc
+        limit {int(top_n)}"""
+
+
 def bpe_encode_sql(
     d: str,
     table: str = "documents",
@@ -411,13 +466,13 @@ def bpe_encode_sql(
     top_n: int = 100,
     text_col: str = "text",
 ) -> str:
-    """BPE tokenizer, trained AND applied in one dual-dialect SQL string:
-    ``k_merges`` unrolled merge rounds (Sennrich et al. 2016), each round
-    counting adjacent symbol pairs over the VOCABULARY weighted by word
-    frequency, picking the argmax (count desc, pair asc — deterministic
-    tiebreak) as a scalar subquery, and applying it to every word's symbol
-    string; the output is the post-merge subword vocabulary
-    (token, token_count), top ``top_n``.
+    """BPE tokenizer, trained AND applied over ``k_merges`` merge rounds
+    (Sennrich et al. 2016), as DuckDB materialized CTEs; :func:`bpe_encode`
+    runs the same stages on Spark.  Each round counts adjacent symbol
+    pairs over the VOCABULARY weighted by word frequency, picks the argmax
+    (count desc, pair asc — deterministic tiebreak) and applies it to
+    every word's symbol string; the output is the post-merge subword
+    vocabulary (token, token_count), top ``top_n``.
 
     Symbol representation: each symbol is wrapped as ``|sym|`` and words
     are the concatenation, so a merge is a LITERAL string replace of
@@ -434,67 +489,8 @@ def bpe_encode_sql(
     the final token count is again vocab-sized.  The unroll depth is the
     merge count, a tokenizer-training constant, not a data-dependent loop.
     """
-    from ..functions import text as _tx
-
-    toks = _tx.tokens(text_col, d)
-    if d == SPARK:
-        tok_rows = f"select explode({toks}) as w from {table}"
-        wrap = "regexp_replace(w, '(.)', '|$1|')"
-        syms = (
-            "transform(split(e, '\\\\|\\\\|'), s -> replace(s, '|', ''))"
-        )
-        pair_rows = (
-            "select freq, explode(transform(sequence(1, size(sy) - 1), i -> "
-            "concat('|', sy[i - 1], '||', sy[i], '|'))) as pair "
-            "from (select freq, {syms} as sy from {prev}) z where size(sy) > 1"
-        )
-        tok_out = (
-            "select freq, explode({syms}) as token from {prev}"
-        )
-    else:
-        tok_rows = f"select unnest({toks}) as w from {table}"
-        wrap = "regexp_replace(w, '(.)', '|\\1|', 'g')"
-        syms = (
-            "list_transform(string_split(e, '||'), s -> replace(s, '|', ''))"
-        )
-        pair_rows = (
-            "select freq, unnest(list_transform(generate_series(1, len(sy) - 1), i -> "
-            "concat('|', sy[i], '||', sy[i + 1], '|'))) as pair "
-            "from (select freq, {syms} as sy from {prev}) z where len(sy) > 1"
-        )
-        tok_out = "select freq, unnest({syms}) as token from {prev}"
-    ctes = [
-        f"""v0 as (
-            select w, freq, {wrap} as e
-            from (select w, cast(count(*) as bigint) as freq
-                  from ({tok_rows}) tk group by w) vv
-        )"""
-    ]
-    for r in range(1, int(k_merges) + 1):
-        prev = f"v{r - 1}"
-        pr = pair_rows.format(syms=syms, prev=prev)
-        ctes.append(
-            f"""m{r} as (
-            select pair from ({pr}) pz
-            group by pair order by sum(freq) desc, pair asc limit 1
-        )"""
-        )
-        pat = f"coalesce((select pair from m{r}), '|~miss~|')"
-        ctes.append(
-            f"""v{r} as (
-            select w, freq, replace(e, {pat}, replace({pat}, '||', '')) as e
-            from {prev}
-        )"""
-        )
-    final = tok_out.format(syms=syms, prev=f"v{int(k_merges)}")
-    return (
-        "with " + ",\n".join(ctes) + f"""
-        select token, cast(sum(freq) as bigint) as token_count
-        from ({final}) f
-        group by token
-        order by token_count desc, token asc
-        limit {int(top_n)}"""
-    )
+    docs = f"select {text_col} from {table}"
+    return stages_sql(*_bpe_stages(d, docs, k_merges, top_n, text_col))
 
 
 def bpe_encode(
@@ -503,49 +499,14 @@ def bpe_encode(
     top_n: int = 100,
     text_col: str = "text",
 ) -> DataFrame:
-    """Engine execution of :func:`bpe_encode_sql`'s semantics, round by
-    round with a lazy localCheckpoint per merge (the sssp discipline).
-
-    Why not one WITH-query like the oracle: DuckDB materializes CTEs, but
-    Spark INLINES them — round r's vocab feeds both the argmax subquery and
-    the merge apply, so inlining doubles the tree per round and v0
-    (corpus tokenization) is re-evaluated 2^k times (measured 42 s at
-    sf0.1 for k=6; this form ~3 s, same rows)."""
-    from ..functions import text as _tx
-
-    spark = docs.sparkSession
-    docs.createOrReplaceTempView("__bpe_docs")
-    toks = _tx.tokens(text_col, SPARK)
-    wrap = "regexp_replace(w, '(.)', '|$1|')"
-    syms = "transform(split(e, '\\\\|\\\\|'), s -> replace(s, '|', ''))"
-    v = spark.sql(
-        f"""select w, freq, {wrap} as e
-            from (select w, cast(count(*) as bigint) as freq
-                  from (select explode({toks}) as w from __bpe_docs) tk
-                  group by w) vv"""
-    )
-    for r in range(1, int(k_merges) + 1):
-        v.localCheckpoint(eager=False).createOrReplaceTempView(f"__bpe_v{r - 1}")
-        spark.sql(
-            f"""select pair from (
-                select freq, explode(transform(sequence(1, size(sy) - 1), i ->
-                    concat('|', sy[i - 1], '||', sy[i], '|'))) as pair
-                from (select freq, {syms} as sy from __bpe_v{r - 1}) z
-                where size(sy) > 1) pz
-            group by pair order by sum(freq) desc, pair asc limit 1"""
-        ).createOrReplaceTempView(f"__bpe_m{r}")
-        pat = f"coalesce((select pair from __bpe_m{r}), '|~miss~|')"
-        v = spark.sql(
-            f"""select w, freq, replace(e, {pat}, replace({pat}, '||', '')) as e
-            from __bpe_v{r - 1}"""
-        )
-    v.createOrReplaceTempView("__bpe_vfinal")
-    return spark.sql(
-        f"""select token, cast(sum(freq) as bigint) as token_count
-        from (select freq, explode({syms}) as token from __bpe_vfinal) f
-        group by token
-        order by token_count desc, token asc
-        limit {int(top_n)}"""
+    """Engine execution of :func:`bpe_encode_sql`'s semantics, each merge
+    round's argmax and apply a stage (the sssp discipline).  Round r's
+    vocab feeds both the argmax subquery and the merge apply, so one
+    Spark WITH-query, which inlines its CTEs, would double the tree per
+    round and re-evaluate v0 (corpus tokenization) 2^k times (measured
+    42 s at sf0.1 for k=6; the staged form ~3 s, same rows)."""
+    return run_stages(
+        docs.sparkSession, *_bpe_stages(SPARK, docs.select(text_col), k_merges, top_n, text_col)
     )
 
 

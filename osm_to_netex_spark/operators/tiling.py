@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import geo
-from ..functions.portable import SPARK, flit
+from ..functions.portable import DUCK, SPARK, flit
+from ..functions.stages import rounds, run_stages, stages_sql
 
 
 def assign_point_cells(
@@ -1167,6 +1168,23 @@ def _service_area_iter_sql(edges: str, prev: str) -> str:
     )
 
 
+def _service_area_stages(
+    d: str, res: int, n_rounds: int, seed_mod: int, budget_mm: int | None, points_table: str
+):
+    last = _service_area_iter_sql("__sa_edges", f"__sa_d{n_rounds - 1}")
+    where = f" where dist <= {int(budget_mm)}" if budget_mm is not None else ""
+    return [
+        ("__sa_cells", _service_area_cells_sql(d, res, points_table, seed_mod)),
+        ("__sa_edges", _service_area_edges_sql(d, "__sa_cells")),
+        *rounds(
+            "__sa_d",
+            "select ix, iy, cast(0 as bigint) as dist from __sa_cells where seed = 1",
+            lambda p: _service_area_iter_sql("__sa_edges", p),
+            n_rounds - 1,
+        ),
+    ], f"select ix, iy, dist from ({last}) t{where}"
+
+
 def service_area(
     spark,
     res: int = 9,
@@ -1181,29 +1199,15 @@ def service_area(
     stop' product query, grid-discretized.
 
     Same scale shape as graph.sssp: the frontier is sparse, each round is
-    one equi-join + one map-side-combined min-agg, rounds are
-    localCheckpoint-bounded so the plan stays linear in K; integer weights
+    one equi-join + one map-side-combined min-agg, rounds are staged
+    (functions.stages) so the plan stays linear in K; integer weights
     make every round order-free and both engines bit-identical.  The edge
     join is an occupied-cells self-join under a ±1 band predicate —
     cell-table-sized, never corpus-sized.  ``budget_mm`` filters to the
     iso-contour (None keeps every reached cell with its distance)."""
-    from ..functions.portable import SPARK as _S
-
-    spark.sql(
-        _service_area_cells_sql(_S, res, points_table, seed_mod)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__sa_cells")
-    spark.sql(_service_area_edges_sql(_S, "__sa_cells")).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("__sa_edges")
-    cur = spark.sql(
-        "select ix, iy, cast(0 as bigint) as dist from __sa_cells where seed = 1"
+    return run_stages(
+        spark, *_service_area_stages(SPARK, res, n_rounds, seed_mod, budget_mm, points_table)
     )
-    for t in range(n_rounds):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__sa_d{t}")
-        cur = spark.sql(_service_area_iter_sql("__sa_edges", f"__sa_d{t}"))
-    if budget_mm is not None:
-        cur = cur.where(f"dist <= {int(budget_mm)}")
-    return cur
 
 
 def service_area_oracle_sql(
@@ -1213,20 +1217,9 @@ def service_area_oracle_sql(
     budget_mm: int | None = None,
     points_table: str = "geo_points",
 ) -> str:
-    """Unrolled-CTE DuckDB replay of service_area."""
-    from ..functions.portable import DUCK
-
-    ctes = [
-        f"c0 as ({_service_area_cells_sql(DUCK, res, points_table, seed_mod)})",
-        f"e0 as ({_service_area_edges_sql(DUCK, 'c0')})",
-        "s0 as (select ix, iy, cast(0 as bigint) as dist from c0 where seed = 1)",
-    ]
-    for t in range(n_rounds):
-        ctes.append(f"s{t + 1} as ({_service_area_iter_sql('e0', f's{t}')})")
-    where = f" where dist <= {int(budget_mm)}" if budget_mm is not None else ""
-    return (
-        "with " + ", ".join(ctes)
-        + f" select ix, iy, dist from s{n_rounds}{where}"
+    """The same stages as materialized CTEs (DuckDB dialect)."""
+    return stages_sql(
+        *_service_area_stages(DUCK, res, n_rounds, seed_mod, budget_mm, points_table)
     )
 
 

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ...functions.portable import DUCK, SPARK, concat_str, flit, phash60
+from ...functions.stages import run_stages, stages_sql
 
 
 BBOX = (59.4, 60.2, 9.6, 10.6)
@@ -115,8 +116,8 @@ def sql_query(
 ) -> tuple[Callable[[SparkSession, str], DataFrame], Callable[[], str]]:
     """The ``(builder, oracle)`` registry entry of a query that is one SQL
     text in two dialects: the builder registers the sf views and runs
-    ``sql(SPARK)``, the oracle returns ``sql(DUCK)``.  A builder that stages
-    work before its SQL is written out by hand instead."""
+    ``sql(SPARK)``, the oracle returns ``sql(DUCK)``.  A query that runs in
+    rounds is a :func:`staged_query`."""
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_geometry_views(spark, sf_dir)
@@ -124,6 +125,24 @@ def sql_query(
 
     def oracle() -> str:
         return sql(DUCK)
+
+    return build, oracle
+
+
+def staged_query(
+    stages: Callable[[str], tuple[list[tuple[str, str]], str]],
+) -> tuple[Callable[[SparkSession, str], DataFrame], Callable[[], str]]:
+    """The ``(builder, oracle)`` registry entry of a query declared as
+    ``stages(d) -> (stages, final)`` (functions.stages): the builder
+    registers the sf views and runs the stages with ``run_stages``, the
+    oracle is their ``stages_sql`` text."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_geometry_views(spark, sf_dir)
+        return run_stages(spark, *stages(SPARK))
+
+    def oracle() -> str:
+        return stages_sql(*stages(DUCK))
 
     return build, oracle
 

@@ -7,10 +7,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ...functions.portable import DUCK, SPARK
+from ...functions.portable import SPARK
 from ...operators import graph
 from ...operators.graph import edges_sql, undirected_edges_sql
-from .corpus import register_geometry_views, sql_query
+from ...functions.stages import rounds
+from .corpus import sql_query, staged_query
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,7 +156,7 @@ def _hc_final_sql(last: str) -> str:
     )
 
 
-def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _harmonic_stages(d: str):
     """(doc_id, n_reached, harmonic_q6): harmonic centrality Σ 1/d(u,v)
     within radius K=4 on the deterministic undirected link graph, for the
     sampled source set doc_id % 7 == 0 — the bounded-radius sampled form
@@ -165,38 +166,18 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is (src, node) pairs — sparse frontier bounded by
     |sources|·|K-ball|; one join + one map-side-combined min per round,
-    localCheckpoint keeps plans linear in K (the sssp discipline,
-    operators/graph.py:267)."""
-    register_geometry_views(spark, sf_dir)
-    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    ).createOrReplaceTempView("__hc_docs")
+    staged rounds keep plans linear in K (the sssp discipline,
+    operators/graph.py)."""
     n_expr = "(select count(*) from __hc_docs)"
-    spark.sql(
-        undirected_edges_sql(SPARK, "__hc_docs", n_expr)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__hc_edges")
-    cur = spark.sql(
+    seed = (
         f"select doc_id as src, doc_id, cast(0 as bigint) as dist "
         f"from __hc_docs where doc_id % {_HC_MOD} = 0"
     )
-    for t in range(_HC_ROUNDS):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__hc_d{t}")
-        cur = spark.sql(_hc_iter_sql("__hc_edges", f"__hc_d{t}"))
-    cur.localCheckpoint(eager=False).createOrReplaceTempView("__hc_last")
-    return spark.sql(_hc_final_sql("__hc_last"))
-
-
-def q_harmonic_centrality_oracle() -> str:
-    n_expr = "(select count(*) from d0)"
-    ctes = [
-        "d0 as (select doc_id from documents)",
-        f"e0 as ({undirected_edges_sql(DUCK, 'd0', n_expr)})",
-        f"s0 as (select doc_id as src, doc_id, cast(0 as bigint) as dist "
-        f"from d0 where doc_id % {_HC_MOD} = 0)",
-    ]
-    for t in range(_HC_ROUNDS):
-        ctes.append(f"s{t + 1} as ({_hc_iter_sql('e0', f's{t}')})")
-    return "with " + ", ".join(ctes) + " " + _hc_final_sql(f"s{_HC_ROUNDS}")
+    return [
+        ("__hc_docs", "select doc_id from documents"),
+        ("__hc_edges", undirected_edges_sql(d, "__hc_docs", n_expr)),
+        *rounds("__hc_d", seed, lambda p: _hc_iter_sql("__hc_edges", p), _HC_ROUNDS),
+    ], _hc_final_sql(f"__hc_d{_HC_ROUNDS}")
 
 
 # ---------------------------------------------------------------------------
@@ -312,7 +293,28 @@ _HITS_ROUNDS = 3
 _HITS_SCALE = 1000000
 
 
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hits_round(t: int, d: str) -> list[tuple[str, str]]:
+    """Round t: raw authority sums from the hubs of round t, max-normalised,
+    then raw hub sums from those authorities, max-normalised."""
+    idiv = "div" if d == SPARK else "//"
+
+    def norm(raw: str) -> str:
+        return (
+            f"select node, cast(raw * {_HITS_SCALE} {idiv} "
+            f"(select max(raw) from {raw}) as bigint) as s from {raw}"
+        )
+
+    return [
+        (f"__hits_ra{t}", f"select e.dst as node, cast(sum(h.s) as bigint) as raw "
+                          f"from __hits_e e join __hits_h{t} h on h.node = e.src group by e.dst"),
+        (f"__hits_a{t}", norm(f"__hits_ra{t}")),
+        (f"__hits_rh{t}", f"select e.src as node, cast(sum(a.s) as bigint) as raw "
+                          f"from __hits_e e join __hits_a{t} a on a.node = e.dst group by e.src"),
+        (f"__hits_h{t + 1}", norm(f"__hits_rh{t}")),
+    ]
+
+
+def _hits_stages(d: str):
     """(doc_id, hub_q6, auth_q6): Kleinberg HITS on the directed link
     graph — hubs point at good authorities, authorities are pointed at
     by good hubs — run 3 synchronous rounds with integer max-
@@ -320,97 +322,23 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-reproducible, the pagerank integer discipline).
 
     Scale: each half-round is one join + map-side-combined sum on the
-    edge relation + a 1-row max broadcast; rounds iterate with
-    localCheckpoint (never one SQL text — the 2^K re-inline lesson)."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
+    edge relation + a 1-row max broadcast; every half-round is a stage
+    (never one SQL text — the 2^K re-inline lesson)."""
     n_expr = "(select count(*) from documents)"
-    spark.sql(
-        f"select distinct src, dst from ({edges_sql(SPARK, 'documents', n_expr)}) "
-        f"where src <> dst"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__hits_e")
-    spark.sql(
-        f"select doc_id as node, cast({_HITS_SCALE} as bigint) as s "
-        f"from documents"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__hits_h0")
-    hubs = "__hits_h0"
-    for t in range(_HITS_ROUNDS):
-        raw_a = spark.sql(
-            f"select e.dst as node, cast(sum(h.s) as bigint) as raw "
-            f"from __hits_e e join {hubs} h on h.node = e.src group by e.dst"
-        ).localCheckpoint(eager=False)
-        raw_a.createOrReplaceTempView(f"__hits_ra{t}")
-        spark.sql(
-            f"select node, cast(raw * {_HITS_SCALE} div "
-            f"(select max(raw) from __hits_ra{t}) as bigint) as s "
-            f"from __hits_ra{t}"
-        ).localCheckpoint(eager=False).createOrReplaceTempView(
-            f"__hits_a{t}"
-        )
-        raw_h = spark.sql(
-            f"select e.src as node, cast(sum(a.s) as bigint) as raw "
-            f"from __hits_e e join __hits_a{t} a on a.node = e.dst "
-            f"group by e.src"
-        ).localCheckpoint(eager=False)
-        raw_h.createOrReplaceTempView(f"__hits_rh{t}")
-        spark.sql(
-            f"select node, cast(raw * {_HITS_SCALE} div "
-            f"(select max(raw) from __hits_rh{t}) as bigint) as s "
-            f"from __hits_rh{t}"
-        ).localCheckpoint(eager=False).createOrReplaceTempView(
-            f"__hits_h{t + 1}"
-        )
-        hubs = f"__hits_h{t + 1}"
-    return spark.sql(f"""
+    return [
+        ("__hits_e", f"select distinct src, dst from "
+                     f"({edges_sql(d, 'documents', n_expr)}) where src <> dst"),
+        ("__hits_h0", f"select doc_id as node, cast({_HITS_SCALE} as bigint) as s "
+                      f"from documents"),
+        *(stage for t in range(_HITS_ROUNDS) for stage in _hits_round(t, d)),
+    ], f"""
         select d.doc_id,
                cast(coalesce(h.s, 0) as bigint) as hub_q6,
                cast(coalesce(a.s, 0) as bigint) as auth_q6
         from documents d
-        left join {hubs} h on h.node = d.doc_id
+        left join __hits_h{_HITS_ROUNDS} h on h.node = d.doc_id
         left join __hits_a{_HITS_ROUNDS - 1} a on a.node = d.doc_id
-        where coalesce(h.s, 0) > 0 or coalesce(a.s, 0) > 0""")
-
-
-def q_hits_oracle() -> str:
-    n_expr = "(select count(*) from documents)"
-    ctes = [
-        f"e0 as materialized (select distinct src, dst from "
-        f"({edges_sql(DUCK, 'documents', n_expr)}) where src <> dst)",
-        f"h0 as materialized (select doc_id as node, "
-        f"cast({_HITS_SCALE} as bigint) as s from documents)",
-    ]
-    hubs = "h0"
-    for t in range(_HITS_ROUNDS):
-        ctes.append(
-            f"ra{t} as materialized (select e.dst as node, "
-            f"cast(sum(h.s) as bigint) as raw from e0 e "
-            f"join {hubs} h on h.node = e.src group by e.dst)"
-        )
-        ctes.append(
-            f"a{t} as materialized (select node, cast(raw * {_HITS_SCALE} "
-            f"// (select max(raw) from ra{t}) as bigint) as s from ra{t})"
-        )
-        ctes.append(
-            f"rh{t} as materialized (select e.src as node, "
-            f"cast(sum(a.s) as bigint) as raw from e0 e "
-            f"join a{t} a on a.node = e.dst group by e.src)"
-        )
-        ctes.append(
-            f"h{t + 1} as materialized (select node, cast(raw * {_HITS_SCALE}"
-            f" // (select max(raw) from rh{t}) as bigint) as s from rh{t})"
-        )
-        hubs = f"h{t + 1}"
-    return (
-        "with " + ", ".join(ctes)
-        + f""" select d.doc_id,
-               cast(coalesce(h.s, 0) as bigint) as hub_q6,
-               cast(coalesce(a.s, 0) as bigint) as auth_q6
-        from documents d
-        left join {hubs} h on h.node = d.doc_id
-        left join a{_HITS_ROUNDS - 1} a on a.node = d.doc_id
         where coalesce(h.s, 0) > 0 or coalesce(a.s, 0) > 0"""
-    )
 
 
 QUERIES = {
@@ -423,8 +351,8 @@ QUERIES = {
     "k_core": (q_k_core, q_k_core_oracle),
     "label_prop": (q_label_prop, q_label_prop_oracle),
     "link_predict": sql_query(_link_predict_sql),
-    "harmonic_centrality": (q_harmonic_centrality, q_harmonic_centrality_oracle),
+    "harmonic_centrality": staged_query(_harmonic_stages),
     "rich_club": sql_query(_rich_club_sql),
     "degree_assortativity": sql_query(_assortativity_sql),
-    "hits_scores": (q_hits, q_hits_oracle),
+    "hits_scores": staged_query(_hits_stages),
 }

@@ -23,6 +23,7 @@ from ...sources import layout
 from .corpus import (
     COSLAT0, DLAT, DLON, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, _pr,
     duck_geometry_ctes, points_sql, polys_sql, register_geometry_views, sql_query,
+    staged_query,
 )
 
 
@@ -2478,33 +2479,31 @@ def _fs_base_sql(d: str) -> str:
         )"""
 
 
-def _fs_round_oracle(t: int) -> str:
-    """One greedy round as oracle CTEs: count coverage over uncovered
-    points, argmax by (count desc, cx, cy), accumulate the covered set."""
-    return f"""
-        gain{t} as materialized (
+def _fs_round(t: int) -> list[tuple[str, str]]:
+    """One greedy round: coverage counted over the still-uncovered points,
+    the argmax site by (count desc, cx, cy), the covered set grown."""
+    return [
+        (f"__fs_gain{t}", f"""
             select c.cx, c.cy, cast(count(*) as bigint) as g
-            from cover c
-            where not exists (select 1 from cov{t} z
+            from __fs_cover c
+            where not exists (select 1 from __fs_cov{t} z
                               where z.point_id = c.point_id)
-            group by c.cx, c.cy
-        ),
-        pick{t} as materialized (
+            group by c.cx, c.cy"""),
+        (f"__fs_pick{t}", f"""
             select cx, cy, g from (
                 select cx, cy, g, row_number() over (
                     order by g desc, cx asc, cy asc) as rn
-                from gain{t}
-            ) s where rn = 1
-        ),
-        cov{t + 1} as materialized (
-            select point_id from cov{t}
+                from __fs_gain{t}
+            ) s where rn = 1"""),
+        (f"__fs_cov{t + 1}", f"""
+            select point_id from __fs_cov{t}
             union
-            select c.point_id from cover c
-            join pick{t} p on p.cx = c.cx and p.cy = c.cy
-        )"""
+            select c.point_id from __fs_cover c
+            join __fs_pick{t} p on p.cx = c.cx and p.cy = c.cy"""),
+    ]
 
 
-def q_facility_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _facility_select_stages(d: str):
     """(rank, cx, cy, n_new, n_total): greedy maximal-covering facility
     placement — k=3 sites from the occupied-cell candidate set, each
     round picking the site covering the most still-uncovered points
@@ -2514,72 +2513,20 @@ def q_facility_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the cover relation builds ONCE (constant 9-offset band join —
     complete since cell ≥ radius) and persists across rounds; each round
     is one anti-join + one map-side-combined count + a candidate-sized
-    argmax — k rounds, localCheckpoint-bounded."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(
-        f"with {_fs_base_sql(SPARK)} select cx, cy, point_id from cover"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__fs_cover")
-    spark.sql(
-        "select cast(point_id as bigint) as point_id from __fs_cover "
-        "where 1 = 0"
-    ).createOrReplaceTempView("__fs_cov0")
-    picks = []
-    for t in range(_FS_K):
-        gain = spark.sql(f"""
-            select c.cx, c.cy, cast(count(*) as bigint) as g
-            from __fs_cover c
-            where not exists (select 1 from __fs_cov{t} z
-                              where z.point_id = c.point_id)
-            group by c.cx, c.cy""")
-        gain.localCheckpoint(eager=False).createOrReplaceTempView(
-            f"__fs_gain{t}"
-        )
-        pick = spark.sql(f"""
-            select cx, cy, g from (
-                select cx, cy, g, row_number() over (
-                    order by g desc, cx asc, cy asc) as rn
-                from __fs_gain{t}
-            ) s where rn = 1""")
-        pick.localCheckpoint(eager=False).createOrReplaceTempView(
-            f"__fs_pick{t}"
-        )
-        picks.append(f"__fs_pick{t}")
-        spark.sql(f"""
-            select point_id from __fs_cov{t}
-            union
-            select c.point_id from __fs_cover c
-            join __fs_pick{t} p on p.cx = c.cx and p.cy = c.cy""").localCheckpoint(
-            eager=False
-        ).createOrReplaceTempView(f"__fs_cov{t + 1}")
-    sel = " union all ".join(
-        f"select cast({t + 1} as bigint) as rank, cx, cy, g as n_new, "
-        f"(select cast(count(*) as bigint) from __fs_cov{t + 1}) as n_total "
-        f"from {v}"
-        for t, v in enumerate(picks)
-    )
-    return spark.sql(sel).selectExpr(
-        "rank", "cast(cx as bigint) as cx", "cast(cy as bigint) as cy",
-        "n_new", "n_total"
-    )
-
-
-def q_facility_select_oracle() -> str:
-    ctes = [
-        duck_geometry_ctes().replace("with ", "", 1),
-        _fs_base_sql(DUCK),
-        "cov0 as materialized (select cast(point_id as bigint) as point_id "
-        "from cover where 1 = 0)",
-    ]
-    for t in range(_FS_K):
-        ctes.append(_fs_round_oracle(t))
+    argmax — k rounds, each a stage."""
+    geometry = "with" if d == SPARK else f"{duck_geometry_ctes()},"
     sel = " union all ".join(
         f"select cast({t + 1} as bigint) as rank, cast(cx as bigint) as cx, "
         f"cast(cy as bigint) as cy, g as n_new, "
-        f"(select cast(count(*) as bigint) from cov{t + 1}) as n_total "
-        f"from pick{t}"
+        f"(select cast(count(*) as bigint) from __fs_cov{t + 1}) as n_total "
+        f"from __fs_pick{t}"
         for t in range(_FS_K)
     )
-    return "with " + ", ".join(ctes) + " " + sel
+    return [
+        ("__fs_cover", f"{geometry} {_fs_base_sql(d)} select cx, cy, point_id from cover"),
+        ("__fs_cov0", "select cast(point_id as bigint) as point_id from __fs_cover where 1 = 0"),
+        *(stage for t in range(_FS_K) for stage in _fs_round(t)),
+    ], sel
 
 
 _LQ_RES = 9
@@ -2721,7 +2668,7 @@ QUERIES = {
     "areal_interp": (q_areal_interp, q_areal_interp_oracle),
     "densify": sql_query(_densify_sql),
     "spatial_qa": (q_spatial_qa, q_spatial_qa_oracle),
-    "facility_select": (q_facility_select, q_facility_select_oracle),
+    "facility_select": staged_query(_facility_select_stages),
     "location_quotient": sql_query(_lq_sql),
     "beta_diversity": sql_query(_beta_sql),
 }

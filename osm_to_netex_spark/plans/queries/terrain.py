@@ -12,10 +12,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ...functions import geo
 from ...functions.portable import DUCK, SPARK, concat_str, flit, phash60
+from ...functions.stages import rounds, run_stages, stages_sql
 from ...operators import raster
 from .corpus import (
     BBOX, COSLAT0, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, duck_geometry_ctes,
-    register_geometry_views, sql_query,
+    register_geometry_views, sql_query, staged_query,
 )
 
 
@@ -343,6 +344,23 @@ _ACCUM_ROUNDS = 8  # covers drainage paths up to 2^8 cells — > any path on
 # longest drainage path L_max (SCALE.md row)
 
 
+def _fdir_stage(d: str) -> tuple[str, str]:
+    """The ``fdir(ix, iy, flow_dir)`` stage the drainage queries share."""
+    return "fdir", f"with {_flow_dir_sql(d)} select ix, iy, flow_dir from fdir"
+
+
+def _doubling_sql(prev: str) -> str:
+    """One pointer-doubling round T ∪ T∘T over (src, dst) cell pairs: after
+    t rounds over a functional graph's edges every ancestor pair up to
+    path length 2^t is present."""
+    return f"""
+        select src_ix, src_iy, dst_ix, dst_iy from {prev}
+        union
+        select a.src_ix, a.src_iy, b.dst_ix, b.dst_iy
+        from {prev} a join {prev} b
+          on b.src_ix = a.dst_ix and b.src_iy = a.dst_iy"""
+
+
 def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(ix, iy, accum): D8 flow accumulation — 1 + the number of upstream
     cells whose drainage path passes through the cell.  The flow graph is
@@ -350,34 +368,22 @@ def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ancestor relation is its transitive closure, computed by pointer
     doubling: T₀ = E, T_{i+1} = T_i ∪ (T_i ∘ T_i) — all path lengths up
     to 2^i covered after i rounds, ⌈log₂ L⌉ rounds total (the alternating-
-    star / hyperanf round discipline, localCheckpoint-bounded plans).
+    star / hyperanf round discipline, staged rounds).
 
     Scale: each round is one self-join + distinct keyed on the lattice
     cell; the closure is Θ(Σ path length) rows — the documented cost of
     exact accumulation (same posture class as the exact PPJoin verifiers);
-    the raster itself never re-scans after the fdir CTE materializes."""
+    the raster itself never re-scans after the fdir stage materializes."""
     register_geometry_views(spark, sf_dir)
-    edges = spark.sql(
-        f"with {_flow_dir_sql(SPARK)} {_flow_edges_sql(SPARK)}"
-    ).localCheckpoint(eager=False)
-    edges.createOrReplaceTempView("__fa_t0")
-    cur = "__fa_t0"
-    for i in range(_ACCUM_ROUNDS):
-        nxt = spark.sql(f"""
-            select src_ix, src_iy, dst_ix, dst_iy from {cur}
-            union
-            select a.src_ix, a.src_iy, b.dst_ix, b.dst_iy
-            from {cur} a join {cur} b
-              on b.src_ix = a.dst_ix and b.src_iy = a.dst_iy
-        """).localCheckpoint(eager=False)
-        cur = f"__fa_t{i + 1}"
-        nxt.createOrReplaceTempView(cur)
-    return spark.sql(f"""
-        with {_flow_dir_sql(SPARK)},
-        anc as (
+    stages = [
+        _fdir_stage(SPARK),
+        *rounds("__fa_t", _flow_edges_sql(SPARK), _doubling_sql, _ACCUM_ROUNDS),
+    ]
+    return run_stages(spark, stages, f"""
+        with anc as (
             select dst_ix as ix, dst_iy as iy,
                    cast(count(*) as bigint) as n_upstream
-            from {cur} group by dst_ix, dst_iy
+            from __fa_t{_ACCUM_ROUNDS} group by dst_ix, dst_iy
         )
         select cast(f.ix as bigint) as ix, cast(f.iy as bigint) as iy,
                cast(1 + coalesce(a.n_upstream, 0) as bigint) as accum
@@ -564,7 +570,18 @@ _CD_SRC = (
 )
 
 
-def q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cost_stages(d: str, k: int) -> list[tuple[str, str]]:
+    """The raster, its edges and the cost rounds ``__cd_d0..__cd_d{k}``
+    from the minimum-elevation cell (shared by cost_distance and
+    lcp_path)."""
+    return [
+        ("ras", _raster(d)),
+        ("__cd_edges", _cd_edges_sql(d)),
+        *rounds("__cd_d", _CD_SRC, lambda p: _cd_iter_sql("__cd_edges", p), k),
+    ]
+
+
+def _cost_distance_stages(d: str):
     """(ix, iy, cost_q3): least-cost-path distance from the raster's
     minimum-elevation cell under slope-weighted 8-neighbor traversal —
     the cost-surface primitive under service-area and corridor analyses.
@@ -572,45 +589,13 @@ def q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter settle every cell exactly (Bellman-Ford on a nonnegative
     grid); integer edge weights make every round order-free.
 
-    Scale: the sssp discipline (operators/graph.py:267) — sparse label
-    table, one join + one map-side-combined min per round,
-    localCheckpoint keeps plans linear in K; the edge table is 8×raster,
-    built once."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(_raster(SPARK)).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("ras")
-    spark.sql(_cd_edges_sql(SPARK)).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("__cd_edges")
-    cur = spark.sql(_CD_SRC)
-    for t in range(_CD_ROUNDS):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__cd_d{t}")
-        cur = spark.sql(_cd_iter_sql("__cd_edges", f"__cd_d{t}"))
-    return cur.selectExpr(
-        "cast(ix as bigint) as ix",
-        "cast(iy as bigint) as iy",
-        "cast(cost as bigint) as cost_q3",
-    )
-
-
-def q_cost_distance_oracle() -> str:
-    # every s{t} feeds TWO branches of s{t+1} (carry + relax): without a
-    # materialization barrier DuckDB's CTE inlining re-evaluates the chain
-    # 2^K times — AS MATERIALIZED is the oracle-side localCheckpoint
-    ctes = [
-        f"ras as materialized ({_raster(DUCK)})",
-        f"e0 as materialized ({_cd_edges_sql(DUCK)})",
-        f"s0 as materialized ({_CD_SRC})",
-    ]
-    for t in range(_CD_ROUNDS):
-        ctes.append(
-            f"s{t + 1} as materialized ({_cd_iter_sql('e0', f's{t}')})"
-        )
-    return (
-        "with " + ", ".join(ctes)
-        + f" select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
-        f"cast(cost as bigint) as cost_q3 from s{_CD_ROUNDS}"
+    Scale: the sssp discipline (operators/graph.py) — sparse label
+    table, one join + one map-side-combined min per round, staged rounds
+    keep plans linear in K; the edge table is 8×raster, built once."""
+    last = _cd_iter_sql("__cd_edges", f"__cd_d{_CD_ROUNDS - 1}")
+    return _cost_stages(d, _CD_ROUNDS - 1), (
+        "select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
+        f"cast(cost as bigint) as cost_q3 from ({last}) t"
     )
 
 
@@ -885,7 +870,7 @@ _ST_LEAVES = (
 )
 
 
-def q_strahler(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _strahler_stages(d: str):
     """(ix, iy, strahler_order): Strahler stream order over the D8
     drainage forest — leaves (no upstream cell) are order 1; a cell's
     order is its children's max, +1 when ≥2 children tie at that max.
@@ -896,39 +881,15 @@ def q_strahler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is two grouped equi-joins on the lattice key over
     the (sparse) unsettled frontier — the sssp round discipline with a
-    leaf-up direction; localCheckpoint bounds the plan per round."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(f"with {_flow_dir_sql(SPARK)} select ix, iy, flow_dir from fdir").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("fdir")
-    spark.sql(_flow_edges_sql(SPARK)).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("e0")
-    cur = spark.sql(_ST_LEAVES)
-    for t in range(_ST_ROUNDS):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__st_{t}")
-        cur = spark.sql(_st_round_sql("e0", f"__st_{t}"))
-    return cur.selectExpr(
-        "cast(ix as bigint) as ix",
-        "cast(iy as bigint) as iy",
-        "cast(o as bigint) as strahler_order",
-    )
-
-
-def q_strahler_oracle() -> str:
-    ctes = [
-        f"{_flow_dir_sql(DUCK)}",
-        f"e0 as materialized ({_flow_edges_sql(DUCK)})",
-        f"s0 as materialized ({_ST_LEAVES})",
-    ]
-    for t in range(_ST_ROUNDS):
-        ctes.append(
-            f"s{t + 1} as materialized ({_st_round_sql('e0', f's{t}')})"
-        )
-    return (
-        "with " + ", ".join(ctes)
-        + f" select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
-        f"cast(o as bigint) as strahler_order from s{_ST_ROUNDS}"
+    leaf-up direction; each round is a stage."""
+    last = _st_round_sql("e0", f"__st_{_ST_ROUNDS - 1}")
+    return [
+        _fdir_stage(d),
+        ("e0", _flow_edges_sql(d)),
+        *rounds("__st_", _ST_LEAVES, lambda p: _st_round_sql("e0", p), _ST_ROUNDS - 1),
+    ], (
+        "select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
+        f"cast(o as bigint) as strahler_order from ({last}) t"
     )
 
 
@@ -956,28 +917,24 @@ def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the left-join coalesce.
 
     Scale: one self-equi-join per round on the lattice key — O(n) rows
-    per round, log rounds total, localCheckpoint-bounded: the watershed
+    per round, log rounds total, each round a stage: the watershed
     transform at DEM scale without any per-path walk."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"with {_flow_dir_sql(SPARK)} select ix, iy, flow_dir from fdir").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("fdir")
-    edges = spark.sql(_flow_edges_sql(SPARK)).localCheckpoint(eager=False)
-    edges.createOrReplaceTempView("__ws_e")
-    cur = spark.sql("""
+    seed = """
         select f.ix, f.iy,
                coalesce(e.dst_ix, f.ix) as rx, coalesce(e.dst_iy, f.iy) as ry
         from fdir f
-        left join __ws_e e on e.src_ix = f.ix and e.src_iy = f.iy""")
-    for t in range(_WS_ROUNDS):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(f"__ws_{t}")
-        cur = spark.sql(_ws_round_sql(f"__ws_{t}"))
-    return cur.selectExpr(
-        "cast(ix as bigint) as ix",
-        "cast(iy as bigint) as iy",
-        "cast(rx as bigint) as basin_ix",
-        "cast(ry as bigint) as basin_iy",
-    )
+        left join __ws_e e on e.src_ix = f.ix and e.src_iy = f.iy"""
+    stages = [
+        _fdir_stage(SPARK),
+        ("__ws_e", _flow_edges_sql(SPARK)),
+        *rounds("__ws_", seed, _ws_round_sql, _WS_ROUNDS - 1),
+    ]
+    return run_stages(spark, stages, (
+        "select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
+        "cast(rx as bigint) as basin_ix, cast(ry as bigint) as basin_iy "
+        f"from ({_ws_round_sql(f'__ws_{_WS_ROUNDS - 1}')}) t"
+    ))
 
 
 def q_watershed_oracle() -> str:
@@ -1125,88 +1082,17 @@ def _edge_profiles_sql(d: str) -> str:
 _LCP_ROUNDS = 8  # doubling: 2^8 ≥ any path length on the bounded raster
 
 
-def _lcp_pred_sql(d: str) -> str:
-    """CTE chain ending in ``pred(ix, iy, p_ix, p_iy, cost)``: the
-    shortest-path-tree predecessor of every non-source cell — the
-    neighbor n minimizing cost(n) + w(n→c), ties broken by (cost, ix,
-    iy) through one packed-bigint min (no nondeterministic arg_min)."""
-    mat = " materialized" if d == DUCK else ""
-    ctes = [
-        f"ras as{mat} ({_raster(d)})",
-        f"e0 as{mat} ({_cd_edges_sql(d)})",
-        f"s0 as{mat} ({_CD_SRC})",
-    ]
-    for t in range(_CD_ROUNDS):
-        ctes.append(f"s{t + 1} as{mat} ({_cd_iter_sql('e0', f's{t}')})")
-    fin = f"s{_CD_ROUNDS}"
-    # packed argmin: cand_cost·1e10 + src_ix·1e5 + src_iy (all positive,
-    # cand_cost ≤ ~1e9 ⇒ packed ≤ 1e19?  no: cost ≤ 6e8 ⇒ ≤ 6.1e18, safe)
-    ctes.append(f"""cand as{mat} (
-            select e.dst_ix as ix, e.dst_iy as iy,
-                   (p.cost + e.w) * 10000000000 + e.src_ix * 100000
-                       + e.src_iy as packed
-            from e0 e join {fin} p on p.ix = e.src_ix and p.iy = e.src_iy
-        )""")
+def _lcp_pred_sql(d: str, cost: str) -> str:
+    """``(ix, iy, p_ix, p_iy, cost)``: the shortest-path-tree predecessor
+    of every non-source cell over the cost stage ``cost`` — the neighbor
+    n minimizing cost(n) + w(n→c), ties broken by (cost, ix, iy) through
+    one packed-bigint min (no nondeterministic arg_min)."""
     idiv = "div" if d == SPARK else "//"
-    ctes.append(f"""pred as{mat} (
-            select c.ix, c.iy,
-                   cast((min(c.packed) % 10000000000) {idiv} 100000
-                        as bigint) as p_ix,
-                   cast((min(c.packed) % 100000) as bigint) as p_iy,
-                   s.cost
-            from cand c
-            join {fin} s on s.ix = c.ix and s.iy = c.iy
-            where not (c.ix = (select ix from s0) and c.iy = (select iy from s0))
-            group by c.ix, c.iy, s.cost
-        )""")
-    return ", ".join(ctes)
-
-
-def _lcp_target_sql() -> str:
-    # the hardest-to-reach cell, ties by coordinates
-    return (
-        "select ix, iy from (select ix, iy, row_number() over "
-        "(order by cost desc, ix asc, iy asc) as rn from pred) t "
-        "where rn = 1"
-    )
-
-
-def q_lcp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(ix, iy, cost_q3, step): the least-cost PATH from the cost
-    surface's source to its hardest-to-reach cell — the corridor the
-    `cost_distance` surface implies, reconstructed from the
-    shortest-path-tree predecessor pointers (packed-integer argmin, so
-    the tree is deterministic), then the target's ancestor chain resolved
-    by pointer doubling in ⌈log₂ L⌉ rounds (the watershed machinery —
-    no per-step walk).  Steps number 0..L along the path by cost order
-    (edge weights are strictly positive, so cost is strictly increasing
-    along the chain).
-
-    Scale: the cost rounds run iteratively with localCheckpoint barriers
-    (the cost_distance discipline — a single SQL text would let Catalyst
-    re-inline the K-round chain 2^K times); the predecessor table is one
-    grouped argmin over the edge relation; the chain resolves in log
-    rounds of lattice self-joins."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(_raster(SPARK)).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("ras")
-    spark.sql(_cd_edges_sql(SPARK)).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("__lcp_e0")
-    spark.sql(_CD_SRC.replace("from ras", "from ras")).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("__lcp_src")
-    cur = spark.table("__lcp_src")
-    for t in range(_CD_ROUNDS):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(
-            f"__lcp_s{t}"
-        )
-        cur = spark.sql(_cd_iter_sql("__lcp_e0", f"__lcp_s{t}"))
-    cur.localCheckpoint(eager=False).createOrReplaceTempView("__lcp_cost")
-    spark.sql("""
+    # packed argmin: cand_cost·1e10 + src_ix·1e5 + src_iy (all positive,
+    # cost ≤ 6e8 ⇒ packed ≤ 6.1e18, safe in bigint)
+    return f"""
         select c.ix, c.iy,
-               cast((min(c.packed) % 10000000000) div 100000 as bigint)
+               cast((min(c.packed) % 10000000000) {idiv} 100000 as bigint)
                    as p_ix,
                cast((min(c.packed) % 100000) as bigint) as p_iy,
                s.cost
@@ -1214,45 +1100,30 @@ def q_lcp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             select e.dst_ix as ix, e.dst_iy as iy,
                    (p.cost + e.w) * 10000000000 + e.src_ix * 100000
                        + e.src_iy as packed
-            from __lcp_e0 e
-            join __lcp_cost p on p.ix = e.src_ix and p.iy = e.src_iy
+            from __cd_edges e
+            join {cost} p on p.ix = e.src_ix and p.iy = e.src_iy
         ) c
-        join __lcp_cost s on s.ix = c.ix and s.iy = c.iy
-        where not exists (select 1 from __lcp_src z
-                          where z.ix = c.ix and z.iy = c.iy)
-        group by c.ix, c.iy, s.cost""").localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("__lcp_pred")
-    spark.sql(
-        "select ix, iy from (select ix, iy, row_number() over "
-        "(order by cost desc, ix asc, iy asc) as rn from __lcp_pred) t "
-        "where rn = 1"
-    ).localCheckpoint(eager=False).createOrReplaceTempView("__lcp_tgt")
-    # ancestor closure of the predecessor forest by pointer DOUBLING
-    # (T_{i+1} = T_i ∪ T_i∘T_i — all ancestor pairs after ⌈log₂ L⌉
-    # rounds, the flow_accum machinery), then the target's chain
-    cur = spark.sql(
-        "select ix as cx, iy as cy, p_ix as ax, p_iy as ay from __lcp_pred"
-    )
-    for t in range(_LCP_ROUNDS):
-        cur.localCheckpoint(eager=False).createOrReplaceTempView(
-            f"__lcp_{t}"
-        )
-        cur = spark.sql(f"""
-            select cx, cy, ax, ay from __lcp_{t}
-            union
-            select a.cx, a.cy, b.ax, b.ay
-            from __lcp_{t} a
-            join __lcp_{t} b on b.cx = a.ax and b.cy = a.ay""")
-    cur.localCheckpoint(eager=False).createOrReplaceTempView("__lcp_anc")
-    return spark.sql("""
-        with onpath as (
-            select t.ix, t.iy from __lcp_tgt t
-            union
-            select a.ax as ix, a.ay as iy
-            from __lcp_anc a
-            join __lcp_tgt t on t.ix = a.cx and t.iy = a.cy
-        ),
+        join {cost} s on s.ix = c.ix and s.iy = c.iy
+        where not (c.ix = (select ix from __cd_d0)
+                   and c.iy = (select iy from __cd_d0))
+        group by c.ix, c.iy, s.cost"""
+
+
+def _lcp_stages(d: str) -> list[tuple[str, str]]:
+    """Cost rounds, the predecessor tree ``__lcp_pred`` and the target
+    ``__lcp_tgt``: the hardest-to-reach cell, ties by coordinates."""
+    return [
+        *_cost_stages(d, _CD_ROUNDS),
+        ("__lcp_pred", _lcp_pred_sql(d, f"__cd_d{_CD_ROUNDS}")),
+        ("__lcp_tgt", (
+            "select ix, iy from (select ix, iy, row_number() over "
+            "(order by cost desc, ix asc, iy asc) as rn from __lcp_pred) t "
+            "where rn = 1"
+        )),
+    ]
+
+
+_LCP_COSTS = """
         costs as (
             select o.ix, o.iy, coalesce(p.cost, 0) as cost
             from onpath o
@@ -1262,30 +1133,53 @@ def q_lcp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
                cast(cost as bigint) as cost_q3,
                cast(row_number() over (order by cost asc, ix asc, iy asc)
                     - 1 as bigint) as step
-        from costs""")
+        from costs"""
+
+
+def q_lcp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ix, iy, cost_q3, step): the least-cost PATH from the cost
+    surface's source to its hardest-to-reach cell — the corridor the
+    `cost_distance` surface implies, reconstructed from the
+    shortest-path-tree predecessor pointers (packed-integer argmin, so
+    the tree is deterministic), then the target's ancestor chain resolved
+    by pointer doubling in ⌈log₂ L⌉ rounds (the flow_accum machinery —
+    no per-step walk).  Steps number 0..L along the path by cost order
+    (edge weights are strictly positive, so cost is strictly increasing
+    along the chain).
+
+    Scale: the cost rounds are stages (the cost_distance discipline — a
+    single SQL text would let Catalyst re-inline the K-round chain 2^K
+    times); the predecessor table is one grouped argmin over the edge
+    relation; the chain resolves in log rounds of lattice self-joins."""
+    register_geometry_views(spark, sf_dir)
+    seed = (
+        "select ix as src_ix, iy as src_iy, p_ix as dst_ix, p_iy as dst_iy "
+        "from __lcp_pred"
+    )
+    stages = [
+        *_lcp_stages(SPARK),
+        *rounds("__lcp_anc", seed, _doubling_sql, _LCP_ROUNDS),
+    ]
+    return run_stages(spark, stages, f"""
+        with onpath as (
+            select t.ix, t.iy from __lcp_tgt t
+            union
+            select a.dst_ix as ix, a.dst_iy as iy
+            from __lcp_anc{_LCP_ROUNDS} a
+            join __lcp_tgt t on t.ix = a.src_ix and t.iy = a.src_iy
+        ),{_LCP_COSTS}""")
 
 
 def q_lcp_path_oracle() -> str:
-    return f"""
-        with recursive {_lcp_pred_sql(DUCK)},
-        tgt as ({_lcp_target_sql()}),
-        chain(ix, iy) as (
-            select ix, iy from tgt
+    """Recursive-CTE walk up the predecessor pointers from the target."""
+    return stages_sql(_lcp_stages(DUCK), f"""select * from (
+        with recursive chain(ix, iy) as (
+            select ix, iy from __lcp_tgt
             union all
             select p.p_ix, p.p_iy
-            from chain c join pred p on p.ix = c.ix and p.iy = c.iy
+            from chain c join __lcp_pred p on p.ix = c.ix and p.iy = c.iy
         ),
-        onpath as (select distinct ix, iy from chain),
-        costs as (
-            select o.ix, o.iy, coalesce(p.cost, 0) as cost
-            from onpath o
-            left join pred p on p.ix = o.ix and p.iy = o.iy
-        )
-        select cast(ix as bigint) as ix, cast(iy as bigint) as iy,
-               cast(cost as bigint) as cost_q3,
-               cast(row_number() over (order by cost asc, ix asc, iy asc)
-                    - 1 as bigint) as step
-        from costs"""
+        onpath as (select distinct ix, iy from chain),{_LCP_COSTS}) r""")
 
 
 # ---------------------------------------------------------------------------
@@ -1351,11 +1245,11 @@ QUERIES = {
     "flow_dir": (q_flow_dir, q_flow_dir_oracle),
     "flow_accum": (q_flow_accum, q_flow_accum_oracle),
     "viewshed": (q_viewshed, q_viewshed_oracle),
-    "cost_distance": (q_cost_distance, q_cost_distance_oracle),
+    "cost_distance": staged_query(_cost_distance_stages),
     "way_split": sql_query(_way_split_sql),
     "local_moran": sql_query(_local_moran_sql),
     "spatial_structure": sql_query(_spatial_structure_sql),
-    "strahler": (q_strahler, q_strahler_oracle),
+    "strahler": staged_query(_strahler_stages),
     "watershed": (q_watershed, q_watershed_oracle),
     "terrain_indices": sql_query(_terrain_sql),
     "edge_profiles": sql_query(_edge_profiles_sql),

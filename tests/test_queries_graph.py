@@ -75,6 +75,14 @@ def _edges():
     return edges
 
 
+def test_sssp_leaves_the_session_views_as_it_found_them(spark):
+    before = sorted(t.name for t in spark.catalog.listTables())
+    dist = Q.QUERIES["sssp"][0](spark, SF)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    # the frame holds its staged rounds, not their dropped view names
+    assert dist.where("dist = 0").count() > 0
+
+
 def test_rich_club_matches_python_replay(spark):
     got = {
         r["k"]: (r["n_k"], r["e_k"])

@@ -229,6 +229,15 @@ def test_cost_distance_matches_python_dijkstra(spark):
     assert len(got) == len(ras)
 
 
+def test_cost_distance_leaves_the_session_views_as_it_found_them(spark):
+    CORPUS.register_geometry_views(spark, SF)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    surface = Q.QUERIES["cost_distance"][0](spark, SF)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    # the frame holds its staged rounds, not their dropped view names
+    assert surface.count() == len(_raster())
+
+
 def _python_ways():
     ix_lo, ix_hi, iy_lo, iy_hi = TERRAIN._grid_bounds()
     ways = {}

@@ -115,6 +115,71 @@ def test_single_sql_queries_use_sql_query():
     assert not {k: v for k, v in found.items() if v}
 
 
+PACKAGE = PKG.parents[1]  # osm_to_netex_spark
+# unrolled CTE chains whose engine side is no checkpointed round loop: one
+# SQL text in both engines (stationary distribution, logistic GD, MMR, PCA,
+# IPF) or a loop of its own (k-means, PQ, simplify and funnel iterate in the
+# DataFrame API, pagerank's round views are not checkpointed, the
+# trajectory DPs run anti-diagonals); staging them would change their plans
+_CTE_LOOPS_KEPT = {
+    "operators/clustering.py:kmeans_oracle_sql",
+    "operators/graph.py:pagerank_oracle_sql",
+    "operators/regression.py:logreg_gd_sql",
+    "operators/similarity.py:topk_pq_adc_oracle_sql",
+    "operators/simplify.py:simplify_dp_oracle_sql",
+    "operators/temporal.py:funnel_oracle_sql",
+    "operators/trajectory.py:gravity_ipf_sql",
+    "operators/trajsim.py:_dp_oracle_sql",
+    "plans/queries/retrieval.py:_mmr_sql",
+    "plans/queries/retrieval.py:_pca_body",
+    "plans/queries/stats.py:_stationary_sql",
+}
+
+
+def _attr_calls(node: ast.AST, attr: str) -> list[ast.Call]:
+    return [
+        n for n in ast.walk(node)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == attr
+    ]
+
+
+def _hand_staged(tree: ast.Module) -> set[str]:
+    """Functions that register a ``localCheckpoint`` frame as a temp view,
+    or append to a ``ctes`` list in a loop: a K-round query written out by
+    hand instead of through functions.stages."""
+    found = set()
+    for fn in (n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)):
+        checkpointed = {
+            t.id
+            for a in ast.walk(fn) if isinstance(a, ast.Assign) and _attr_calls(a.value, "localCheckpoint")
+            for t in a.targets if isinstance(t, ast.Name)
+        }
+        for call in _attr_calls(fn, "createOrReplaceTempView"):
+            view = call.func.value
+            if _attr_calls(view, "localCheckpoint") or getattr(view, "id", None) in checkpointed:
+                found.add(fn.name)
+        for loop in (n for n in ast.walk(fn) if isinstance(n, (ast.For, ast.While))):
+            grows = [c.func.value for c in _attr_calls(loop, "append")] + [
+                a.target for a in ast.walk(loop) if isinstance(a, ast.AugAssign)
+            ]
+            if any(getattr(g, "id", None) == "ctes" for g in grows):
+                found.add(fn.name)
+    return found
+
+
+def test_k_round_queries_use_the_stage_runner():
+    """Rounds are staged by functions.stages (run_stages / stages_sql), the
+    one place that registers checkpointed views and writes materialized
+    CTEs; the one-off checkpoints that register no view are not rounds."""
+    found = {
+        f"{path.relative_to(PACKAGE).as_posix()}:{name}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "functions" / "stages.py"
+        for name in _hand_staged(ast.parse(path.read_text()))
+    }
+    assert found == _CTE_LOOPS_KEPT
+
+
 def _imported_test_modules(tree: ast.AST) -> list[str]:
     """Import targets naming a test module: ``tests.test_x``, ``test_x`` or
     ``.test_x``, with or without a trailing member."""
