@@ -180,13 +180,6 @@ def profile_sql(
     )
 
 
-def profile(spark, table: str, numeric_cols: list[str], string_cols: list[str]):
-    """Engine entry for profile_sql (see there)."""
-    from ..functions.portable import SPARK
-
-    return spark.sql(profile_sql(SPARK, table, numeric_cols, string_cols))
-
-
 # ---------------------------------------------------------------------------
 # k-anonymity generalization ladder (privacy audit before data release)
 # ---------------------------------------------------------------------------
@@ -235,10 +228,3 @@ def kanon_ladder_sql(d: str, table: str = "customer", k: int = 5) -> str:
         join s1 on s1.c_nationkey = q.c_nationkey and s1.g1 = q.g1
         join s2 on s2.c_nationkey = q.c_nationkey and s2.g2 = q.g2
         join s3 on s3.c_nationkey = q.c_nationkey"""
-
-
-def kanon_ladder(spark, table: str = "customer", k: int = 5):
-    """Engine entry for kanon_ladder_sql (see there)."""
-    from ..functions.portable import SPARK
-
-    return spark.sql(kanon_ladder_sql(SPARK, table=table, k=k))

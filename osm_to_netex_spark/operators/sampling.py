@@ -359,7 +359,7 @@ def corpus_shuffle_oracle_sql(
 # ---------------------------------------------------------------------------
 # Temperature-scaled source mixing (training-mixture curriculum)
 # ---------------------------------------------------------------------------
-def _temp_mix_sql(
+def temperature_mix_sql(
     d: str,
     temperature: float,
     target_frac: float,
@@ -367,7 +367,8 @@ def _temp_mix_sql(
     source_col: str = "source",
     id_col: str = "doc_id",
 ) -> str:
-    """Shared dual-dialect SQL for temperature mixing.
+    """Deterministic temperature-scaled mixture over a registered table,
+    one SQL text for Spark and DuckDB.
 
     Mixture weight per source: w_s = c_s^(1/T) — T=1 keeps natural
     proportions, T→∞ flattens to uniform (the multilingual-training
@@ -379,7 +380,9 @@ def _temp_mix_sql(
     engines, so rates are bit-identical; other T use pow() (documented
     last-ulp risk at the accept boundary, measure-zero under the 60-bit u).
     The rate table is one tiny agg joined back broadcast; the corpus never
-    shuffles."""
+    shuffles: at 10^12 docs it is touched twice (count, filter), and the
+    id-hash acceptance makes the sample reproducible across cluster
+    sizes."""
     if temperature == 2.0:
         w = "sqrt(cast(c as double))"
     elif temperature == 1.0:
@@ -405,27 +408,6 @@ def _temp_mix_sql(
         from {table} t join __rates r on t.{source_col} = r.src
         where ({u}) < r.rate
     """
-
-
-def temperature_mix(
-    spark,
-    temperature: float = 2.0,
-    target_frac: float = 0.5,
-    table: str = "documents",
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic temperature-scaled mixture over a registered table
-    (see _temp_mix_sql).  The rate dimension is a per-source aggregate that
-    Spark broadcasts into the corpus scan — at 10^12 docs the corpus is
-    touched twice (count, filter) and shuffled never; the id-hash acceptance
-    makes the sample reproducible across cluster sizes."""
-    return spark.sql(
-        _temp_mix_sql(
-            SPARK, temperature, target_frac,
-            table=table, source_col=source_col, id_col=id_col,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -464,9 +446,3 @@ def rendezvous_sql(
     else:
         pick = f"list_max({arr}).s"
     return f"select {id_col} as {id_col}, {pick} as shard from {table}"
-
-
-def rendezvous_assign(spark, shards: list[str], table: str = "documents",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Engine entry for rendezvous_sql (see there)."""
-    return spark.sql(rendezvous_sql(SPARK, shards, table=table, id_col=id_col))

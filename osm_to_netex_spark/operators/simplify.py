@@ -100,11 +100,9 @@ def simplify_dp_oracle_sql(
     eps_deg: float,
     k_rounds: int = 4,
     line_id: str = "zone_id",
-    with_prefix: bool = True,
 ) -> str:
     """DuckDB replay: the same ``k_rounds`` unrolled as chained CTEs over a
-    CTE named ``lines_cte`` with (line_id, pos_list) columns.  Pass
-    ``with_prefix=False`` to splice after an existing WITH clause."""
+    CTE named ``lines_cte`` with (line_id, pos_list) columns."""
     eps2 = float(eps_deg) * float(eps_deg)
     m = _metric("pl", DUCK)
     ctes = [
@@ -136,7 +134,6 @@ def simplify_dp_oracle_sql(
             f"where u.e > u.s + 1)"
         )
     return (
-        ("with " if with_prefix else ", ")
-        + ", ".join(ctes)
+        "with " + ", ".join(ctes)
         + f" select lid as {line_id}, v as vertex_idx from kept{k_rounds}"
     )

@@ -586,11 +586,6 @@ def headway_sql(d: str, table: str = "events") -> str:
     """
 
 
-def headways(spark, table: str = "events") -> DataFrame:
-    """Engine entry for headway_sql (see there)."""
-    return spark.sql(headway_sql("spark", table=table))
-
-
 # ---------------------------------------------------------------------------
 # CUSUM changepoint detection (one-sided, integer-exact)
 # ---------------------------------------------------------------------------
@@ -651,10 +646,3 @@ def cusum_sql(
                cast(s_q - least(smin_q, 0) as bigint) as cusum_q,
                (s_q - least(smin_q, 0)) > {int(threshold_q)} as alarm
         from r"""
-
-
-def cusum(spark, table: str = "events", slack_q: int = 50_000,
-          threshold_q: int = 2_000_000) -> DataFrame:
-    """Engine entry for cusum_sql (see there)."""
-    return spark.sql(cusum_sql("spark", table=table, slack_q=slack_q,
-                               threshold_q=threshold_q))

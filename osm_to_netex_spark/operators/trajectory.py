@@ -930,11 +930,6 @@ def flow_rose_sql(d: str, res: int = 9, traj_table: str = "geo_traj") -> str:
     """
 
 
-def flow_rose(spark: SparkSession, res: int = 9, traj_table: str = "geo_traj") -> DataFrame:
-    """Engine entry for flow_rose_sql (see there)."""
-    return spark.sql(flow_rose_sql(SPARK, res=res, traj_table=traj_table))
-
-
 # ---------------------------------------------------------------------------
 # Gravity model fit via IPF (iterative proportional fitting)
 # ---------------------------------------------------------------------------
@@ -1028,12 +1023,6 @@ def gravity_ipf_sql(
         "with " + ", ".join(ctes)
         + f" select o_cell, d_cell, m as t_nano from {prev}"
     )
-
-
-def gravity_ipf(spark: SparkSession, res: int = 10, rounds: int = 2,
-                traj_table: str = "geo_traj") -> DataFrame:
-    """Engine entry for gravity_ipf_sql (see there)."""
-    return spark.sql(gravity_ipf_sql(SPARK, res=res, rounds=rounds, traj_table=traj_table))
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ value-hash gate is a real verification, not an echo.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,8 +93,37 @@ def polys_sql(d: str, table: str = "supplier") -> str:
     )
 
 
+_MM_STEPS = 6  # fixes per geo_traj track
+
+
+def traj_sql(d: str) -> str:
+    """Deterministic GPS tracks: one 6-step trajectory per polygon, each
+    fix = polygon vertex j jittered by a hash-derived offset (≈ ±250 m) —
+    tracks genuinely follow a polyline, so stay/switch transitions are both
+    exercised.  Identical expression text in both dialects."""
+    eps = flit(0.0045)
+    jla = _pr(["'mm:lat:'", "zone_id", "':'", "j"], d)
+    jlo = _pr(["'mm:lon:'", "zone_id", "':'", "j"], d)
+    if d == SPARK:
+        # Spark [] subscripts are 0-based; element_at is the 1-based form
+        la = f"element_at(pos_list, cast(2*j + 1 as int)) + ({jla} - 0.5e0) * {eps}"
+        lo = f"element_at(pos_list, cast(2*j + 2 as int)) + ({jlo} - 0.5e0) * {eps}"
+        return (
+            f"select zone_id as traj_id, j as step, {la} as lat, {lo} as lon "
+            f"from (select zone_id, pos_list, "
+            f"explode(sequence(0, {_MM_STEPS - 1})) as j from geo_polys)"
+        )
+    la = f"pos_list[2*t.j + 1] + ({jla} - 0.5e0) * {eps}"
+    lo = f"pos_list[2*t.j + 2] + ({jlo} - 0.5e0) * {eps}"
+    return (
+        f"select zone_id as traj_id, t.j as step, {la} as lat, {lo} as lon "
+        f"from geo_polys, unnest(generate_series(0, {_MM_STEPS - 1})) t(j)"
+    )
+
+
 def register_geometry_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata tables + derived geometry as temp views.
+    """Register the testdata tables + derived geometry (geo_points,
+    geo_polys, geo_traj) as temp views.
 
     Memoized per (session, sf_dir): every query builder calls this, and the
     6 parquet schema reads cost ~0.8 s per call — pure setup, not engine
@@ -108,6 +138,7 @@ def register_geometry_views(spark: SparkSession, sf_dir: str) -> None:
         spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
     spark.sql(f"create or replace temp view geo_points as {points_sql(SPARK)}")
     spark.sql(f"create or replace temp view geo_polys as {polys_sql(SPARK)}")
+    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
     spark._graft_geo_views = sf_dir
 
 
@@ -147,12 +178,28 @@ def staged_query(
     return build, oracle
 
 
-def duck_geometry_ctes() -> str:
-    """WITH-clause text for oracle queries (testdata views pre-registered)."""
-    return (
-        f"with geo_points as ({points_sql(DUCK)}), "
-        f"geo_polys as ({polys_sql(DUCK)})"
-    )
+_WITH = re.compile(r"\s*with( recursive)?(?=\s)")
+
+
+def with_fixtures(sql: str, d: str) -> str:
+    """``sql``, a query over the derived geometry (geo_points, geo_polys,
+    geo_traj), in dialect ``d``.
+
+    On Spark the fixtures are views (register_geometry_views), so ``sql``
+    runs as written, with only its own ``with`` clause.  On DuckDB the
+    fixtures are CTEs ahead of the query's own: ``with [recursive]
+    geo_points as (…), geo_polys as (…)[, geo_traj as (…)],`` followed by
+    the rest of ``sql``'s ``with`` clause, or by ``sql`` itself when it has
+    none.  geo_traj is emitted only when ``sql`` reads it."""
+    if d == SPARK:
+        return sql
+    ctes = f"geo_points as ({points_sql(DUCK)}), geo_polys as ({polys_sql(DUCK)})"
+    if "geo_traj" in sql:
+        ctes += f", geo_traj as ({traj_sql(DUCK)})"
+    m = _WITH.match(sql)
+    if m is None:
+        return f"with {ctes}" + ("" if sql[:1].isspace() else " ") + sql
+    return f"{m.group(0)} {ctes},{sql[m.end():]}"
 
 
 # equirectangular squared distance in deg² — trig-free, exact cross-engine.

@@ -22,8 +22,7 @@ from ...operators.tiling import cover_cells
 from ...sources import layout
 from .corpus import (
     COSLAT0, DLAT, DLON, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, _pr,
-    duck_geometry_ctes, points_sql, polys_sql, register_geometry_views, sql_query,
-    staged_query,
+    points_sql, polys_sql, register_geometry_views, sql_query, staged_query, with_fixtures,
 )
 
 
@@ -54,7 +53,7 @@ def q_tile_assign_oracle() -> str:
     for r in (7, 8, 9):
         exprs.append(f"{geo.hex_cell('lat', 'lon', r, DUCK)} as hex_r{r}")
         exprs.append(f"{geo.quad_cell('lat', 'lon', r, DUCK)} as quad_r{r}")
-    return f"{duck_geometry_ctes()} select point_id, {', '.join(exprs)} from geo_points"
+    return with_fixtures(f"select point_id, {', '.join(exprs)} from geo_points", DUCK)
 
 
 def q_polyfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,23 +83,16 @@ def q_polyfill_oracle() -> str:
                 f"select zone_id, '{scheme}' as scheme, {r} as res, "
                 f"unnest({fn('pos_list', r, DUCK)}) as cell from geo_polys"
             )
-    return f"{duck_geometry_ctes()} " + " union all ".join(parts)
+    return with_fixtures(" union all ".join(parts), DUCK)
 
 
-def q_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _kring_sql(d: str) -> str:
     """Hex k-ring expansion (k=2) as exploded rows."""
-    register_geometry_views(spark, sf_dir)
-    cell = geo.hex_cell("lat", "lon", 8, SPARK)
-    return spark.sql(
-        f"select point_id, explode({geo.hex_kring(cell, 8, 2, SPARK)}) as ring_cell from geo_points"
-    )
-
-
-def q_kring_oracle() -> str:
-    cell = geo.hex_cell("lat", "lon", 8, DUCK)
-    return (
-        f"{duck_geometry_ctes()} select point_id, "
-        f"unnest({geo.hex_kring(cell, 8, 2, DUCK)}) as ring_cell from geo_points"
+    cell = geo.hex_cell("lat", "lon", 8, d)
+    explode = "explode" if d == SPARK else "unnest"
+    return with_fixtures(
+        f"select point_id, {explode}({geo.hex_kring(cell, 8, 2, d)}) as ring_cell from geo_points",
+        d,
     )
 
 
@@ -114,10 +106,10 @@ def q_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pip_oracle() -> str:
     pred = geo.point_in_polygon("p.lat", "p.lon", "z.pos_list", DUCK)
-    return (
-        f"{duck_geometry_ctes()} "
+    return with_fixtures(
         f"select distinct p.point_id as point_id, z.zone_id as zone_id "
-        f"from geo_points p cross join geo_polys z where {pred}"
+        f"from geo_points p cross join geo_polys z where {pred}",
+        DUCK,
     )
 
 
@@ -199,14 +191,14 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_oracle() -> str:
     d2 = dist2("q.lat", "q.lon", "s.lat", "s.lon")
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         cand as (
             select q.point_id as quay_id, s.point_id as stop_id, {d2} as d2,
                    row_number() over (partition by q.point_id order by {d2} asc, s.point_id asc) as rn
             from geo_points q cross join geo_points s
             where q.point_id % 10 = 0 and s.point_id % 10 <> 0
         )
-        select quay_id, stop_id, rn, round(d2, 12) as d2r from cand where rn <= 3"""
+        select quay_id, stop_id, rn, round(d2, 12) as d2r from cand where rn <= 3""", DUCK)
 
 
 def q_polyfill_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,24 +217,18 @@ def q_polyfill_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_polyfill_refined_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()} "
+    return with_fixtures(
         f"select zone_id, unnest({geo.quad_cover_refined('pos_list', 9, DUCK)}) as cell "
-        f"from geo_polys"
+        f"from geo_polys",
+        DUCK,
     )
 
 
-def q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cell_rollup_sql(d: str) -> str:
     """Hierarchical rollup: per-cell point counts at res 9 aggregated to the
     parent cells at res 8 and 7 via the strict cell hierarchy (quad_parent) —
     the hypertable-rollup pattern: coarse tiles are aggregations of fine
     tiles, never a re-scan of the points."""
-    register_geometry_views(spark, sf_dir)
-    ctes, sel = _rollup_parts(SPARK)
-    return spark.sql(f"with {ctes} {sel}")
-
-
-def _rollup_parts(d: str) -> tuple[str, str]:
     c9 = geo.quad_cell("lat", "lon", 12, d)
     p8 = geo.quad_parent("c9", 12, d)
     p7 = geo.quad_parent("p8", 11, d)
@@ -253,12 +239,7 @@ def _rollup_parts(d: str) -> tuple[str, str]:
         f7 as (select 10 as res, p7 as cell, count(*) as n_points
                from (select {p7} as p7 from (select {p8} as p8 from c) t) t2 group by p7)"""
     sel = "select * from f9 union all select * from f8 union all select * from f7"
-    return ctes, sel
-
-
-def q_cell_rollup_oracle() -> str:
-    ctes, sel = _rollup_parts(DUCK)
-    return f"{duck_geometry_ctes()}, {ctes} {sel}"
+    return with_fixtures(f"with {ctes} {sel}", d)
 
 
 # --- reference-parity operators over derived relational fixtures -----------
@@ -283,7 +264,7 @@ def q_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_assemble_oracle() -> str:
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         verts as (
             select zone_id, pos,
                    pos_list[2 * pos - 1] as lat, pos_list[2 * pos] as lon
@@ -295,7 +276,7 @@ def q_assemble_oracle() -> str:
             from verts group by zone_id
         )
         select way_id, t.i - 1 as pos_idx, a.pos_list[t.i] as coord
-        from asm a, unnest(generate_series(1, len(a.pos_list))) t(i)"""
+        from asm a, unnest(generate_series(1, len(a.pos_list))) t(i)""", DUCK)
 
 
 def q_zone_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,7 +318,7 @@ def q_zone_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_zone_mapping_oracle() -> str:
-    return f"""{duck_geometry_ctes()}
+    return with_fixtures(f"""
         select concat('BRA', ':', 'TariffZone', ':', cast(zone_id as varchar)) as zone_id,
                concat('Zone-', cast(zone_id as varchar)) as name,
                case when zone_id % 3 = 0 then 'nor'
@@ -349,7 +330,7 @@ def q_zone_mapping_oracle() -> str:
                case when zone_id % 4 = 0 then '2021-02-01'
                     when zone_id % 4 = 1 then '2021-02-01' end as valid_from,
                case when zone_id % 4 = 0 then '2031-02-01' end as valid_to
-        from geo_polys"""
+        from geo_polys""", DUCK)
 
 
 def q_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,56 +346,36 @@ def q_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_radius_join_oracle() -> str:
     dist = haversine_m("a.lat", "a.lon", "b.lat", "b.lon", DUCK)
-    return f"""{duck_geometry_ctes()}
+    return with_fixtures(f"""
         select a.point_id as point_id_a, b.point_id as point_id_b,
                round({dist}, 6) as dist_m
         from geo_points a cross join geo_points b
-        where a.point_id < b.point_id and {dist} <= 2000.0e0"""
+        where a.point_id < b.point_id and {dist} <= 2000.0e0""", DUCK)
 
 
-def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _zorder_key_sql(d: str) -> str:
     """Z-order (Morton) clustering key at quad res 14 — the write-layout key
     (sources.layout.write_zordered) as a value-gated formula: parallel-prefix
     bit spread + interleave, portable SQL in both engines."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(
-        f"select point_id, {layout.zorder_expr('lat', 'lon', 14, SPARK)} as z "
-        "from geo_points"
+    return with_fixtures(
+        f"select point_id, {layout.zorder_expr('lat', 'lon', 14, d)} as z from geo_points", d
     )
 
 
-def q_zorder_key_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()} select point_id, "
-        f"{layout.zorder_expr('lat', 'lon', 14, DUCK)} as z from geo_points"
-    )
-
-
-def q_zone_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _zone_stats_sql(d: str) -> str:
     """Vector zonal statistics: shoelace area, centroid, perimeter, vertex
     count per polygon — pure projection (scan-parallel at any scale), one
     formula source for both dialects."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(
+    size = "size" if d == SPARK else "len"
+    return with_fixtures(
         "select zone_id, "
-        f"cast(size(pos_list) / 2 - 1 as bigint) as n_vertices, "
-        f"round({geo.poly_area('pos_list', SPARK)}, 9) as area_deg2, "
-        f"round({geo.poly_centroid_lat('pos_list', SPARK)}, 9) as centroid_lat, "
-        f"round({geo.poly_centroid_lon('pos_list', SPARK)}, 9) as centroid_lon, "
-        f"round({geo.poly_perimeter_deg('pos_list', SPARK)}, 9) as perimeter_deg "
-        "from geo_polys"
-    )
-
-
-def q_zone_stats_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()} select zone_id, "
-        f"cast(len(pos_list) / 2 - 1 as bigint) as n_vertices, "
-        f"round({geo.poly_area('pos_list', DUCK)}, 9) as area_deg2, "
-        f"round({geo.poly_centroid_lat('pos_list', DUCK)}, 9) as centroid_lat, "
-        f"round({geo.poly_centroid_lon('pos_list', DUCK)}, 9) as centroid_lon, "
-        f"round({geo.poly_perimeter_deg('pos_list', DUCK)}, 9) as perimeter_deg "
-        "from geo_polys"
+        f"cast({size}(pos_list) / 2 - 1 as bigint) as n_vertices, "
+        f"round({geo.poly_area('pos_list', d)}, 9) as area_deg2, "
+        f"round({geo.poly_centroid_lat('pos_list', d)}, 9) as centroid_lat, "
+        f"round({geo.poly_centroid_lon('pos_list', d)}, 9) as centroid_lon, "
+        f"round({geo.poly_perimeter_deg('pos_list', d)}, 9) as perimeter_deg "
+        "from geo_polys",
+        d,
     )
 
 
@@ -433,11 +394,11 @@ def q_poly_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_poly_overlap_oracle() -> str:
     pred = geo.polygons_overlap("a.pos_list", "b.pos_list", DUCK)
-    return (
-        f"{duck_geometry_ctes()} "
+    return with_fixtures(
         f"select a.zone_id as id_a, b.zone_id as id_b "
         f"from geo_polys a cross join geo_polys b "
-        f"where a.zone_id < b.zone_id and {pred}"
+        f"where a.zone_id < b.zone_id and {pred}",
+        DUCK,
     )
 
 
@@ -458,7 +419,7 @@ def q_cover_compact_oracle() -> str:
     pow_res = 2**geo.QUAD_RES_BITS
     p9 = geo.quad_parent("cell", 9, DUCK)
     p8 = geo.quad_parent("cell", 8, DUCK)
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         cov as (
             select zone_id, unnest({geo.quad_cover_refined('pos_list', 9, DUCK)}) as cell
             from geo_polys
@@ -485,7 +446,7 @@ def q_cover_compact_oracle() -> str:
         )
         select zone_id, cell from s9 where cell // {pow_res} != 8
         union all
-        select zone_id, cell from s8"""
+        select zone_id, cell from s8""", DUCK)
 
 
 def q_snap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -503,7 +464,7 @@ def q_snap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_snap_join_oracle() -> str:
     dist = distjoin.seg_dist_m("p.lat", "p.lon", "s.say", "s.sax", "s.sby", "s.sbx", DUCK)
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         segs as (
             select zone_id, t.i as seg_idx,
                    pos_list[2*t.i - 1] as say, pos_list[2*t.i] as sax,
@@ -517,25 +478,14 @@ def q_snap_join_oracle() -> str:
         select point_id, zone_id, seg_idx, round(d, 6) as dist_m
         from (select *, row_number() over (partition by point_id order by d, zone_id, seg_idx) as rn
               from cand where d <= 2000.0e0)
-        where rn = 1"""
+        where rn = 1""", DUCK)
 
 
-def q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _geohash_sql(d: str) -> str:
     """Standard geohash (base32) of every point at precision 8 — interchange
     cell encoding with free hierarchical prefix containment."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(
-        "select point_id, "
-        + layout.geohash_expr("lat", "lon", 8, SPARK)
-        + " as gh from geo_points"
-    )
-
-
-def q_geohash_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()} select point_id, "
-        + layout.geohash_expr("lat", "lon", 8, DUCK)
-        + " as gh from geo_points"
+    return with_fixtures(
+        f"select point_id, {layout.geohash_expr('lat', 'lon', 8, d)} as gh from geo_points", d
     )
 
 
@@ -551,7 +501,7 @@ def q_adaptive_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_adaptive_cells_oracle() -> str:
     cells = {r: geo.quad_cell("lat", "lon", r, DUCK) for r in (9, 10, 11)}
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         pts as (select point_id, {cells[9]} as c9, {cells[10]} as c10, {cells[11]} as c11
                 from geo_points),
         n9 as (select c9, count(*) as k9 from pts group by c9),
@@ -559,7 +509,7 @@ def q_adaptive_cells_oracle() -> str:
         select point_id,
                case when k9 <= 100 then c9 when k10 <= 100 then c10 else c11 end as cell,
                case when k9 <= 100 then 9 when k10 <= 100 then 10 else 11 end as res
-        from pts join n9 using (c9) join n10 using (c10)"""
+        from pts join n9 using (c9) join n10 using (c10)""", DUCK)
 
 
 def stations_sql(d: str, table: str = "supplier") -> str:
@@ -590,7 +540,7 @@ def q_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_idw_oracle() -> str:
     hav = haversine_m("p.lat", "p.lon", "s.lat", "s.lon", DUCK)
     w = "1.0e0 / (greatest(dist_m, 1.0e0) * greatest(dist_m, 1.0e0))"
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         stations as ({stations_sql(DUCK)}),
         pairs as (
             select p.point_id as pid, s.station_id as sid,
@@ -613,7 +563,7 @@ def q_idw_oracle() -> str:
             from contrib group by pid
         )
         select pid as point_id, round(swv / sw, 6) as idw_value, n_stations
-        from per"""
+        from per""", DUCK)
 
 
 def q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,8 +576,8 @@ def q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simplify_oracle() -> str:
-    return duck_geometry_ctes() + simplify.simplify_dp_oracle_sql(
-        "geo_polys", eps_deg=0.005, k_rounds=4, with_prefix=False
+    return with_fixtures(
+        simplify.simplify_dp_oracle_sql("geo_polys", eps_deg=0.005, k_rounds=4), DUCK
     )
 
 
@@ -647,7 +597,7 @@ def q_line_intersect_oracle() -> str:
         "(select * from geo_polys where zone_id % 2 = 1)",
         "(select * from geo_polys where zone_id % 2 = 0)",
     )
-    return f"{duck_geometry_ctes()} {body}"
+    return with_fixtures(f" {body}", DUCK)
 
 
 def q_smooth_density(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -712,11 +662,7 @@ def q_grid_bfs_oracle() -> str:
     body = graph.grid_bfs_oracle_sql(
         _bfs_sources_sql(DUCK, res), _bfs_blocked_sql(DUCK, res), max_dist=k, res=res
     )
-    # graph.grid_bfs_oracle_sql opens its own `with recursive`; splice the
-    # geometry CTEs into it
-    return body.replace(
-        "with recursive", f"{duck_geometry_ctes().replace('with ', 'with recursive ')},", 1
-    )
+    return with_fixtures(body, DUCK)
 
 
 _LABEL_RES = 12
@@ -774,7 +720,7 @@ def q_label_point_oracle() -> str:
         " * 1000.0e0",
         DUCK,
     )
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         cov as (
             select zone_id, pos_list,
                    unnest({geo.quad_cover_bbox('pos_list', r, DUCK)}) as cell
@@ -804,7 +750,7 @@ def q_label_point_oracle() -> str:
                        order by clearance_mm desc, cell asc
                    ) as rn
             from d
-        ) t where rn = 1"""
+        ) t where rn = 1""", DUCK)
 
 
 def q_pip_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -836,7 +782,7 @@ def q_pip_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pip_best_oracle() -> str:
     pred = geo.point_in_polygon("p.lat", "p.lon", "z.pos_list", DUCK)
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         m as (
             select p.point_id, z.zone_id,
                    abs({geo.poly_cross_sum('pos_list', DUCK)}) as area2
@@ -849,7 +795,7 @@ def q_pip_best_oracle() -> str:
                        partition by point_id order by area2 asc, zone_id asc
                    ) as rn
             from m
-        ) t where rn = 1"""
+        ) t where rn = 1""", DUCK)
 
 
 def _decayed_density_sql(d: str, res: int = 12, halflife_s: int = 86400) -> str:
@@ -899,7 +845,7 @@ def q_corridor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_corridor_join_oracle() -> str:
     dist = distjoin.seg_dist_m("p.lat", "p.lon", "s.say", "s.sax", "s.sby", "s.sbx", DUCK)
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         segs as (
             select zone_id, t.i as seg_idx,
                    pos_list[2*t.i - 1] as say, pos_list[2*t.i] as sax,
@@ -908,7 +854,7 @@ def q_corridor_join_oracle() -> str:
         )
         select p.point_id, s.zone_id, s.seg_idx, round({dist}, 6) as dist_m
         from geo_points p cross join segs s
-        where {dist} <= 2000.0e0"""
+        where {dist} <= 2000.0e0""", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -943,22 +889,13 @@ def q_hull_oracle() -> str:
 # ---------------------------------------------------------------------------
 # Hilbert-curve layout key
 # ---------------------------------------------------------------------------
-def q_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hilbert_key_sql(d: str) -> str:
     """Hilbert clustering key at quad res 10 — zorder_key's
     locality-superior sibling (consecutive indices are always grid
     neighbors): res unrolled let-binding levels of pure integer SQL, bit
     identical across engines (sources.layout.hilbert_expr)."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(
-        f"select point_id, {layout.hilbert_expr('lat', 'lon', 10, SPARK)} as h "
-        "from geo_points"
-    )
-
-
-def q_hilbert_key_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()} select point_id, "
-        f"{layout.hilbert_expr('lat', 'lon', 10, DUCK)} as h from geo_points"
+    return with_fixtures(
+        f"select point_id, {layout.hilbert_expr('lat', 'lon', 10, d)} as h from geo_points", d
     )
 
 
@@ -1011,12 +948,12 @@ def q_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dissolve_oracle() -> str:
-    ctes = duck_geometry_ctes().replace("with ", "with recursive ", 1)
     # MATERIALIZED: without it DuckDB inlines the shrink transform into the
     # O(n²) overlap predicate and re-evaluates the centroid fold per pair
-    return (
-        f"{ctes}, geo_polys_shrunk as materialized ({shrunk_polys_sql(DUCK)}), "
-        f"{overlap.dissolve_oracle_sql('geo_polys_shrunk')}"
+    return with_fixtures(
+        f"with recursive geo_polys_shrunk as materialized ({shrunk_polys_sql(DUCK)}), "
+        f"{overlap.dissolve_oracle_sql('geo_polys_shrunk')}",
+        DUCK,
     )
 
 
@@ -1063,7 +1000,7 @@ def q_mk_trend_oracle() -> str:
     inner = tiling.mk_trend_oracle_sql(
         f"select * from ({_mk_points_sql(DUCK)}) _p", n_buckets=_MK_T, res=11
     )
-    return f"{duck_geometry_ctes()}, __res as ({inner}) select * from __res"
+    return with_fixtures(f"with __res as ({inner}) select * from __res", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1080,11 +1017,8 @@ def q_ripley(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ripley_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, __r as ("
-        + tiling.ripley_k_oracle_sql("select * from geo_points", _RIPLEY_RADII)
-        + ") select * from __r"
-    )
+    body = tiling.ripley_k_oracle_sql("select * from geo_points", _RIPLEY_RADII)
+    return with_fixtures(f"with __r as ({body}) select * from __r", DUCK)
 
 
 def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1096,9 +1030,8 @@ def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pyramid_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, "
-        f"{tiling.tile_pyramid_oracle_sql('geo_points', res_hi=13, res_lo=9)}"
+    return with_fixtures(
+        f"with {tiling.tile_pyramid_oracle_sql('geo_points', res_hi=13, res_lo=9)}", DUCK
     )
 
 
@@ -1114,11 +1047,11 @@ def q_zone_stats_sph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_zone_stats_sph_oracle() -> str:
-    return f"""{duck_geometry_ctes()}
+    return with_fixtures(f"""
         select zone_id,
                round({geo.poly_area_sph_m2('pos_list', DUCK)}, 3) as area_m2,
                round({geo.poly_perimeter_m('pos_list', DUCK)}, 3) as perimeter_m
-        from geo_polys"""
+        from geo_polys""", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1164,11 +1097,8 @@ def q_ring_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ring_validity_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, __v as ("
-        + validity.ring_validity_oracle_sql(corrupt_polys_sql(DUCK))
-        + ") select * from __v"
-    )
+    body = validity.ring_validity_oracle_sql(corrupt_polys_sql(DUCK))
+    return with_fixtures(f"with __v as ({body}) select * from __v", DUCK)
 
 
 def q_ring_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,11 +1112,8 @@ def q_ring_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ring_repair_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, __r as ("
-        + validity.repair_rings_oracle_sql(corrupt_polys_sql(DUCK))
-        + ") select * from __r"
-    )
+    body = validity.repair_rings_oracle_sql(corrupt_polys_sql(DUCK))
+    return with_fixtures(f"with __r as ({body}) select * from __r", DUCK)
 
 
 def q_cell_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,7 +1161,7 @@ def q_cell_boundary_oracle() -> str:
                       from geo_points)
             ) cross join unnest(generate_series(1, {nv})) t(v)
         """)
-    return f"{duck_geometry_ctes()} " + " union all ".join(parts)
+    return with_fixtures(" " + " union all ".join(parts), DUCK)
 
 
 def q_tile_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1247,9 +1174,10 @@ def q_tile_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_tile_cut_oracle() -> str:
     body = vectortile.tile_cut_sql(DUCK, res=7, extent=256, cover_table="__tcc")
-    return (
-        f"{duck_geometry_ctes()}, __tcc as ({vectortile.duck_cover_cte(res=7)}), "
-        f"__out as ({body}) select * from __out"
+    return with_fixtures(
+        f"with __tcc as ({vectortile.duck_cover_cte(res=7)}), "
+        f"__out as ({body}) select * from __out",
+        DUCK,
     )
 
 
@@ -1263,7 +1191,7 @@ def q_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_contour_oracle() -> str:
     body = tiling.contour_sql(DUCK, res=12, threshold=3)
-    return f"{duck_geometry_ctes()}, __ct as ({body}) select * from __ct"
+    return with_fixtures(f"with __ct as ({body}) select * from __ct", DUCK)
 
 
 def q_service_area(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1276,7 +1204,7 @@ def q_service_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_service_area_oracle() -> str:
     body = tiling.service_area_oracle_sql(res=12, n_rounds=4, seed_mod=9)
-    return f"{duck_geometry_ctes()}, __sa as ({body}) select * from __sa"
+    return with_fixtures(f"with __sa as ({body}) select * from __sa", DUCK)
 
 
 def _locate_along_sql(d: str) -> str:
@@ -1315,7 +1243,7 @@ def _locate_along_sql(d: str) -> str:
         f"({haversine_m('sy1', 'sx1', 'sy2', 'sx2', d)}) * 1000.0e0", d
     )
     t = "(cast(g.target_mm - s.prefix_mm as double) / cast(s.seg_len_mm as double))"
-    return f"""
+    return with_fixtures(f"""
         with segs as ({seg_src}),
         seg_tab as (
             select zone_id, i, sy1, sx1, sy2, sx2,
@@ -1345,16 +1273,7 @@ def _locate_along_sql(d: str) -> str:
         join seg_tab s
           on s.zone_id = g.zone_id
          and s.prefix_mm <= g.target_mm
-         and g.target_mm < s.prefix_mm + s.seg_len_mm"""
-
-
-def q_locate_along(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_locate_along_sql(SPARK))
-
-
-def q_locate_along_oracle() -> str:
-    return f"{duck_geometry_ctes()}, x as ({_locate_along_sql(DUCK)}) select * from x"
+         and g.target_mm < s.prefix_mm + s.seg_len_mm""", d)
 
 
 _G_RADII = [250.0, 500.0, 1000.0, 2000.0]
@@ -1369,11 +1288,8 @@ def q_g_function(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_g_function_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, __g as ("
-        + tiling.g_function_oracle_sql("select * from geo_points", _G_RADII)
-        + ") select * from __g"
-    )
+    body = tiling.g_function_oracle_sql("select * from geo_points", _G_RADII)
+    return with_fixtures(f"with __g as ({body}) select * from __g", DUCK)
 
 
 def _zorder_ranges_sql(d: str, res: int = 9) -> str:
@@ -1395,7 +1311,7 @@ def _zorder_ranges_sql(d: str, res: int = 9) -> str:
     )
     ix, iy = geo.quad_unpack("cell", res, d)
     z = layout.morton_key(f"({ix})", f"({iy})", d)
-    return f"""
+    return with_fixtures(f"""
         with cov as ({ex}),
         keyed as (
             select zone_id, cast({z} as bigint) as zkey from cov
@@ -1410,16 +1326,7 @@ def _zorder_ranges_sql(d: str, res: int = 9) -> str:
                cast(min(zkey) as bigint) as z_lo,
                cast(max(zkey) as bigint) as z_hi,
                cast(count(*) as bigint) as n_cells
-        from ranked group by zone_id, island"""
-
-
-def q_zorder_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_zorder_ranges_sql(SPARK))
-
-
-def q_zorder_ranges_oracle() -> str:
-    return f"{duck_geometry_ctes()}, __zr as ({_zorder_ranges_sql(DUCK)}) select * from __zr"
+        from ranked group by zone_id, island""", d)
 
 
 def _cell_entropy_sql(d: str, res: int = 11) -> str:
@@ -1480,7 +1387,7 @@ def _skew_report_sql(d: str, res: int = 8) -> str:
     Scale: one scan → cell counts (map-side combine); every statistic runs
     over the cell table, never the corpus."""
     cell = geo.quad_cell("lat", "lon", res, d)
-    return f"""
+    return with_fixtures(f"""
         with c as (
             select {cell} as cell, cast(count(*) as bigint) as n
             from geo_points group by 1
@@ -1502,16 +1409,7 @@ def _skew_report_sql(d: str, res: int = 8) -> str:
                      / cast(max(tot) as double), 9) as top10_share,
                round(cast(2 * sum(i * n) - (max(k) + 1) * max(tot) as double)
                      / cast(max(k) * max(tot) as double), 9) as load_gini
-        from ranked"""
-
-
-def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_skew_report_sql(SPARK))
-
-
-def q_skew_report_oracle() -> str:
-    return f"{duck_geometry_ctes()}, __sk as ({_skew_report_sql(DUCK)}) select * from __sk"
+        from ranked""", d)
 
 
 def q_linear_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1529,7 +1427,7 @@ def q_linear_ref_oracle() -> str:
     dist = distjoin.seg_dist_m("p.lat", "p.lon", "s.say", "s.sax", "s.sby", "s.sbx", DUCK)
     t = distjoin.seg_t_expr("p2.lat", "p2.lon", "st.say", "st.sax", "st.sby", "st.sbx", DUCK)
     seg_len = f"cast(round(({haversine_m('say', 'sax', 'sby', 'sbx', DUCK)}) * 1000.0e0) as bigint)"
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         segs as (
             select zone_id, t.i as seg_idx,
                    pos_list[2*t.i - 1] as say, pos_list[2*t.i] as sax,
@@ -1563,7 +1461,7 @@ def q_linear_ref_oracle() -> str:
         from snapped sn
         join seg_tab st on sn.zone_id = st.zone_id and sn.seg_idx = st.seg_idx
         join geo_points p2 on sn.point_id = p2.point_id
-    """
+    """, DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1582,7 +1480,6 @@ def _gearys_c_sql(d: str, res: int = 11) -> str:
     Scale: identical shape to moran/hotspot — corpus collapses to the cell
     table once; ring join + 1-row aggregate run over CELLS."""
     ix, iy = geo.quad_ixy("lat", "lon", res, d)
-    pts = "geo_points" if d == SPARK else f"({points_sql(DUCK)})"
     ring = (
         "select cx + dx as tx, cy + dy as ty, cnt as xj from (select cx, cy, cnt,"
         " explode(sequence(-1, 1)) as dx from counts) a"
@@ -1592,8 +1489,8 @@ def _gearys_c_sql(d: str, res: int = 11) -> str:
         " unnest(generate_series(-1, 1)) dx(x), unnest(generate_series(-1, 1)) dy(y)"
         " where dx.x <> 0 or dy.y <> 0"
     )
-    return f"""
-        with pts as (select lat, lon from {pts}),
+    return with_fixtures(f"""
+        with pts as (select lat, lon from geo_points),
         counts as (select {ix} as cx, {iy} as cy, cast(count(*) as bigint) as cnt
                    from pts group by 1, 2),
         ring as ({ring}),
@@ -1615,7 +1512,7 @@ def _gearys_c_sql(d: str, res: int = 11) -> str:
                               * (cast(nn as double) * cast(sxx as double)
                                  - cast(sx as double) * cast(sx as double)),
                               0.0e0), 9) as geary_c
-        from pairs cross join gstats"""
+        from pairs cross join gstats""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -1697,7 +1594,7 @@ def _f_function_sql(d: str, radii=None, grid: int = _F_GRID) -> str:
                round(cast((rc).n_within as double) / cast(n_probes as double), 9)
                    as f_hat
         from staged"""
-    return f"""bbox as (
+    return with_fixtures(f"""with bbox as (
             select min(lat) as lat_lo, max(lat) as lat_hi,
                    min(lon) as lon_lo, max(lon) as lon_hi
             from geo_points
@@ -1712,16 +1609,7 @@ def _f_function_sql(d: str, radii=None, grid: int = _F_GRID) -> str:
             group by p.i, p.j
         ),
         cnt as (select {sums} from nn),
-        {tail}"""
-
-
-def q_f_function(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_f_function_sql(SPARK)}")
-
-
-def q_f_function_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_f_function_sql(DUCK)}"
+        {tail}""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -1766,7 +1654,7 @@ def _clark_evans_sql(d: str, r_max_m: float = 2000.0) -> str:
             "from cells, unnest(generate_series(-1, 1)) dx(x), "
             "unnest(generate_series(-1, 1)) dy(y)"
         )
-    return f"""cells as (
+    return with_fixtures(f"""with cells as (
             select point_id, lat, lon, {ix} as cx, {iy} as cy from geo_points
         ),
         ringed as ({ring}),
@@ -1803,16 +1691,7 @@ def _clark_evans_sql(d: str, r_max_m: float = 2000.0) -> str:
                       - 0.5e0 / sqrt(cast(t.n_all as double) / (b.dy_m * b.dx_m)))
                      / (0.26136e0 / sqrt(cast(t.n_all as double)
                         * cast(t.n_all as double) / (b.dy_m * b.dx_m))), 9) as z
-        from obs o cross join tot t cross join bbox b"""
-
-
-def q_clark_evans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_clark_evans_sql(SPARK)}")
-
-
-def q_clark_evans_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_clark_evans_sql(DUCK)}"
+        from obs o cross join tot t cross join bbox b""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -1830,7 +1709,7 @@ def _quadrat_sql(d: str, res: int = 13) -> str:
 
     Scale: corpus → cell counts (map-side combined) → 1-row aggregate."""
     ix, iy = geo.quad_ixy("lat", "lon", res, d)
-    return f"""cells as (
+    return with_fixtures(f"""with cells as (
             select {ix} as cx, {iy} as cy, cast(count(*) as bigint) as c
             from geo_points group by 1, 2
         ),
@@ -1853,16 +1732,7 @@ def _quadrat_sql(d: str, res: int = 13) -> str:
                       - cast(n as double) * cast(n as double)
                         / cast(nx * ny as double))
                      / (cast(n as double) / cast(nx * ny as double)), 9) as chi2
-        from agg"""
-
-
-def q_quadrat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_quadrat_sql(SPARK)}")
-
-
-def q_quadrat_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_quadrat_sql(DUCK)}"
+        from agg""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -1888,7 +1758,7 @@ def _centrography_sql(d: str) -> str:
     dx = f"((lon - c.clon) * {k} * {m_per_deg})"
     dy = f"((lat - c.clat) * {m_per_deg})"
     q3 = "cast(floor({} * 1.0e3 + 0.5e0) as bigint)"
-    return f"""cent as (
+    return with_fixtures(f"""with cent as (
             select cast(count(*) as bigint) as n,
                    cast(sum({q9.format('lat')}) as bigint) as slat,
                    cast(sum({q9.format('lon')}) as bigint) as slon
@@ -1924,16 +1794,7 @@ def _centrography_sql(d: str) -> str:
                              * ((cast(sxx as double) - cast(syy as double)) / 2.0e0)
                              + cast(sxy as double) * cast(sxy as double)))
                      / 1.0e3 / cast(n as double), 0.0e0)), 6) as sigma_minor_m
-        from moments"""
-
-
-def q_centrography(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_centrography_sql(SPARK)}")
-
-
-def q_centrography_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_centrography_sql(DUCK)}"
+        from moments""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -1983,7 +1844,7 @@ def _emerging_sql(d: str, res: int = 11) -> str:
         " - cast(ni as double) * cast(ni as double))"
         " / (cast(nn as double) - 1.0e0)), 0.0e0)"
     )
-    return f"""counts as (
+    return with_fixtures(f"""with counts as (
             select {ix} as cx, {iy} as cy, bucket as t,
                    cast(count(*) as bigint) as cnt
             from ({pts}) p group by 1, 2, 3
@@ -2040,16 +1901,7 @@ def _emerging_sql(d: str, res: int = 11) -> str:
                          then 'diminishing'
                     when h.n_hot > 0 then 'sporadic'
                     else 'none' end as pattern
-        from hot h join mk m on m.cx = h.cx and m.cy = h.cy"""
-
-
-def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_emerging_sql(SPARK)}")
-
-
-def q_emerging_hotspots_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_emerging_sql(DUCK)}"
+        from hot h join mk m on m.cx = h.cx and m.cy = h.cy""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -2073,7 +1925,6 @@ def _line_raster_sql(d: str, res: int = _LR_RES) -> str:
     street-scale segments at the res knob."""
     n = 2 ** res
     cw, ch = 360.0 / n, 180.0 / n
-    polys = "geo_polys" if d == SPARK else f"({polys_sql(DUCK)})"
     if d == SPARK:
         segs = (
             f"select zone_id, element_at(pos_list, cast(2*i - 1 as int)) as ay,"
@@ -2081,13 +1932,13 @@ def _line_raster_sql(d: str, res: int = _LR_RES) -> str:
             f" element_at(pos_list, cast(2*i + 1 as int)) as by_,"
             f" element_at(pos_list, cast(2*i + 2 as int)) as bx"
             f" from (select zone_id, pos_list,"
-            f" explode(sequence(1, size(pos_list) div 2 - 1)) as i from {polys})"
+            f" explode(sequence(1, size(pos_list) div 2 - 1)) as i from geo_polys)"
         )
     else:
         segs = (
             f"select zone_id, pos_list[2*t.i - 1] as ay, pos_list[2*t.i] as ax,"
             f" pos_list[2*t.i + 1] as by_, pos_list[2*t.i + 2] as bx"
-            f" from {polys}, unnest(generate_series(1, len(pos_list) // 2 - 1)) t(i)"
+            f" from geo_polys, unnest(generate_series(1, len(pos_list) // 2 - 1)) t(i)"
         )
     ix_lo, iy_lo = geo.quad_ixy("least(ay, by_)", "least(ax, bx)", res, d)
     ix_hi, iy_hi = geo.quad_ixy("greatest(ay, by_)", "greatest(ax, bx)", res, d)
@@ -2121,13 +1972,13 @@ def _line_raster_sql(d: str, res: int = _LR_RES) -> str:
     # the pure-vertical/-horizontal cases above skip the OTHER axis's slab:
     # restore it by re-checking the bbox explode already bounds that axis
     cell = geo.quad_pack("cx", "cy", res)
-    return f"""
+    return with_fixtures(f"""
         select {cell} as cell,
                cast(count(*) as bigint) as n_segs,
                cast(count(distinct zone_id) as bigint) as n_zones
         from ({cells}) c
         where {slab}
-        group by 1"""
+        group by 1""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -2302,7 +2153,7 @@ def _areal_interp_sql(d: str) -> str:
         "cast(floor(s_acctbal * 1.0e2 + 0.5e0) as bigint) as val_q2 "
         "from supplier"
     )
-    return f"""cover as ({cover}),
+    return with_fixtures(f"""with cover as ({cover}),
         ncell as (
             select zone_id, cast(count(*) as bigint) as n_cells
             from cover group by zone_id
@@ -2319,17 +2170,7 @@ def _areal_interp_sql(d: str) -> str:
                cast(count(*) as bigint) as n_zones,
                cast(sum(share_q2) as bigint) as total_q2
         from spread
-        group by cell"""
-
-
-def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_areal_interp_sql(SPARK)}")
-
-
-def q_areal_interp_oracle() -> str:
-    # geo_polys is a temp view Spark-side; the oracle inlines it as a CTE
-    return f"{duck_geometry_ctes()}, {_areal_interp_sql(DUCK)}"
+        group by cell""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -2349,7 +2190,6 @@ def _densify_sql(d: str) -> str:
 
     Scale: segment explode keyed by zone (the line_raster segs shape) +
     one zone-keyed map-side-combined aggregate; no lattice, no join."""
-    polys = "geo_polys" if d == SPARK else f"({polys_sql(DUCK)})"
     if d == SPARK:
         segs = (
             f"select zone_id, element_at(pos_list, cast(2*i - 1 as int)) as ay,"
@@ -2357,13 +2197,13 @@ def _densify_sql(d: str) -> str:
             f" element_at(pos_list, cast(2*i + 1 as int)) as by_,"
             f" element_at(pos_list, cast(2*i + 2 as int)) as bx"
             f" from (select zone_id, pos_list,"
-            f" explode(sequence(1, size(pos_list) div 2 - 1)) as i from {polys})"
+            f" explode(sequence(1, size(pos_list) div 2 - 1)) as i from geo_polys)"
         )
     else:
         segs = (
             f"select zone_id, pos_list[2*t.i - 1] as ay, pos_list[2*t.i] as ax,"
             f" pos_list[2*t.i + 1] as by_, pos_list[2*t.i + 2] as bx"
-            f" from {polys}, unnest(generate_series(1, len(pos_list) // 2 - 1)) t(i)"
+            f" from geo_polys, unnest(generate_series(1, len(pos_list) // 2 - 1)) t(i)"
         )
     div = "div" if d == SPARK else "//"
     step_mm = int(_DN_STEP_M * 1000)
@@ -2371,7 +2211,7 @@ def _densify_sql(d: str) -> str:
         f"cast(floor({haversine_m('ay', 'ax', 'by_', 'bx', d)} * 1.0e3"
         f" + 0.5e0) as bigint)"
     )
-    return f"""
+    return with_fixtures(f"""
         with segs as ({segs}),
         lens as (
             select zone_id, {leg_mm} as leg_mm,
@@ -2383,7 +2223,7 @@ def _densify_sql(d: str) -> str:
                cast(sum(leg_mm) as bigint) as len_mm,
                cast(sum(greatest(k, 1) - 1) as bigint) as n_inserted
         from lens
-        group by zone_id"""
+        group by zone_id""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -2400,7 +2240,7 @@ def _spatial_qa_sql(d: str) -> str:
     Scale: at audit scale the predicate join IS the pip cell-pruned join
     (this audit composes its result); counts are map-side-combined."""
     pred = geo.point_in_polygon("p.lat", "p.lon", "z.pos_list", d)
-    return f"""hits as (
+    return with_fixtures(f"""with hits as (
             select p.point_id, z.zone_id
             from geo_points p join geo_polys z on {pred}
         ),
@@ -2425,16 +2265,7 @@ def _spatial_qa_sql(d: str) -> str:
                 as n_ambiguous_points,
             cast((select count(*) from per_zone where np = 0) as bigint)
                 as n_empty_zones,
-            cast((select count(*) from hits) as bigint) as n_assignments"""
-
-
-def q_spatial_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_spatial_qa_sql(SPARK)}")
-
-
-def q_spatial_qa_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_spatial_qa_sql(DUCK)}"
+            cast((select count(*) from hits) as bigint) as n_assignments""", d)
 
 
 _FS_RES = 13
@@ -2514,7 +2345,6 @@ def _facility_select_stages(d: str):
     complete since cell ≥ radius) and persists across rounds; each round
     is one anti-join + one map-side-combined count + a candidate-sized
     argmax — k rounds, each a stage."""
-    geometry = "with" if d == SPARK else f"{duck_geometry_ctes()},"
     sel = " union all ".join(
         f"select cast({t + 1} as bigint) as rank, cast(cx as bigint) as cx, "
         f"cast(cy as bigint) as cy, g as n_new, "
@@ -2523,7 +2353,9 @@ def _facility_select_stages(d: str):
         for t in range(_FS_K)
     )
     return [
-        ("__fs_cover", f"{geometry} {_fs_base_sql(d)} select cx, cy, point_id from cover"),
+        ("__fs_cover", with_fixtures(
+            f"with {_fs_base_sql(d)} select cx, cy, point_id from cover", d
+        )),
         ("__fs_cov0", "select cast(point_id as bigint) as point_id from __fs_cover where 1 = 0"),
         *(stage for t in range(_FS_K) for stage in _fs_round(t)),
     ], sel
@@ -2609,21 +2441,21 @@ def _beta_sql(d: str) -> str:
 QUERIES = {
     "tile_assign": (q_tile_assign, q_tile_assign_oracle),
     "polyfill": (q_polyfill, q_polyfill_oracle),
-    "kring": (q_kring, q_kring_oracle),
+    "kring": sql_query(_kring_sql),
     "pip": (q_pip, q_pip_oracle),
     "pip_celljoin": (q_pip_celljoin, q_pip_oracle),
     "knn": (q_knn, q_knn_oracle),
     "assemble_poslist": (q_assemble, q_assemble_oracle),
     "zone_mapping": (q_zone_mapping, q_zone_mapping_oracle),
     "polyfill_refined": (q_polyfill_refined, q_polyfill_refined_oracle),
-    "cell_rollup": (q_cell_rollup, q_cell_rollup_oracle),
-    "zone_stats": (q_zone_stats, q_zone_stats_oracle),
+    "cell_rollup": sql_query(_cell_rollup_sql),
+    "zone_stats": sql_query(_zone_stats_sql),
     "radius_join": (q_radius_join, q_radius_join_oracle),
-    "zorder_key": (q_zorder_key, q_zorder_key_oracle),
+    "zorder_key": sql_query(_zorder_key_sql),
     "poly_overlap": (q_poly_overlap, q_poly_overlap_oracle),
     "cover_compact": (q_cover_compact, q_cover_compact_oracle),
     "snap_join": (q_snap_join, q_snap_join_oracle),
-    "geohash": (q_geohash, q_geohash_oracle),
+    "geohash": sql_query(_geohash_sql),
     "adaptive_cells": (q_adaptive_cells, q_adaptive_cells_oracle),
     "idw": (q_idw, q_idw_oracle),
     "simplify": (q_simplify, q_simplify_oracle),
@@ -2636,7 +2468,7 @@ QUERIES = {
     "decayed_density": sql_query(_decayed_density_sql),
     "corridor_join": (q_corridor_join, q_corridor_join_oracle),
     "hull": (q_hull, q_hull_oracle),
-    "hilbert_key": (q_hilbert_key, q_hilbert_key_oracle),
+    "hilbert_key": sql_query(_hilbert_key_sql),
     "hotspot": (q_hotspot, q_hotspot_oracle),
     "dissolve": (q_dissolve, q_dissolve_oracle),
     "moran": (q_moran, q_moran_oracle),
@@ -2650,24 +2482,24 @@ QUERIES = {
     "tile_cut": (q_tile_cut, q_tile_cut_oracle),
     "contour": (q_contour, q_contour_oracle),
     "service_area": (q_service_area, q_service_area_oracle),
-    "locate_along": (q_locate_along, q_locate_along_oracle),
+    "locate_along": sql_query(_locate_along_sql),
     "g_function": (q_g_function, q_g_function_oracle),
-    "zorder_ranges": (q_zorder_ranges, q_zorder_ranges_oracle),
+    "zorder_ranges": sql_query(_zorder_ranges_sql),
     "cell_entropy": sql_query(_cell_entropy_sql),
-    "skew_report": (q_skew_report, q_skew_report_oracle),
+    "skew_report": sql_query(_skew_report_sql),
     "linear_ref": (q_linear_ref, q_linear_ref_oracle),
     "gearys_c": sql_query(_gearys_c_sql),
-    "f_function": (q_f_function, q_f_function_oracle),
-    "clark_evans": (q_clark_evans, q_clark_evans_oracle),
-    "quadrat": (q_quadrat, q_quadrat_oracle),
-    "centrography": (q_centrography, q_centrography_oracle),
-    "emerging_hotspots": (q_emerging_hotspots, q_emerging_hotspots_oracle),
+    "f_function": sql_query(_f_function_sql),
+    "clark_evans": sql_query(_clark_evans_sql),
+    "quadrat": sql_query(_quadrat_sql),
+    "centrography": sql_query(_centrography_sql),
+    "emerging_hotspots": sql_query(_emerging_sql),
     "line_raster": sql_query(_line_raster_sql),
     "polyline_encode": sql_query(_polyline_encode_sql),
     "polyline_roundtrip": sql_query(_polyline_roundtrip_sql),
-    "areal_interp": (q_areal_interp, q_areal_interp_oracle),
+    "areal_interp": sql_query(_areal_interp_sql),
     "densify": sql_query(_densify_sql),
-    "spatial_qa": (q_spatial_qa, q_spatial_qa_oracle),
+    "spatial_qa": sql_query(_spatial_qa_sql),
     "facility_select": staged_query(_facility_select_stages),
     "location_quotient": sql_query(_lq_sql),
     "beta_diversity": sql_query(_beta_sql),

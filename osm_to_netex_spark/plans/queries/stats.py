@@ -766,9 +766,13 @@ def _rolling_stats_sql(d: str) -> str:
 # ---------------------------------------------------------------------------
 # multivariate ridge regression via exact normal equations
 # ---------------------------------------------------------------------------
-def _ridge_sql() -> str:
+def _ridge_fit_sql(d: str) -> str:
+    """Per-returnflag linear model price_cents ~ quantity + discount + tax:
+    exact integer moment matrix in ONE map-side-combined aggregate, Cramer
+    solve generated as fixed-order IEEE arithmetic (operators/regression.py)
+    — the d-feature generalization of trend_fit."""
     return regression.ridge_fit_sql(
-        SPARK,  # text is dialect-shared
+        d,
         "lineitem",
         "l_returnflag",
         [
@@ -781,47 +785,20 @@ def _ridge_sql() -> str:
     )
 
 
-def q_ridge_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-returnflag linear model price_cents ~ quantity + discount + tax:
-    exact integer moment matrix in ONE map-side-combined aggregate, Cramer
-    solve generated as fixed-order IEEE arithmetic (operators/regression.py)
-    — the d-feature generalization of trend_fit."""
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(_ridge_sql())
-
-
-def q_ridge_fit_oracle() -> str:
-    return _ridge_sql()
-
-
-def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _profile_sql(d: str) -> str:
     """One-scan column profiler over events: nulls / exact distincts /
-    numeric extremes / string content-hash extremes (curation.profile)."""
-    register_geometry_views(spark, sf_dir)
-    return curation.profile(
-        spark, "events",
-        numeric_cols=["event_id", "user_id", "value"],
-        string_cols=["event_type", "props"],
-    )
-
-
-def q_profile_oracle() -> str:
+    numeric extremes / string content-hash extremes (curation.profile_sql)."""
     return curation.profile_sql(
-        DUCK, "events",
+        d, "events",
         numeric_cols=["event_id", "user_id", "value"],
         string_cols=["event_type", "props"],
     )
 
 
-def q_headways(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _headways_sql(d: str) -> str:
     """Service-frequency headways per (event_type, hour): integer-micros
-    gaps via one keyed lag window (temporal.headways)."""
-    register_geometry_views(spark, sf_dir)
-    return temporal.headways(spark)
-
-
-def q_headways_oracle() -> str:
-    return temporal.headway_sql(DUCK)
+    gaps via one keyed lag window (temporal.headway_sql)."""
+    return temporal.headway_sql(d)
 
 
 def _return_gaps_sql(d: str) -> str:
@@ -1595,26 +1572,16 @@ def _cramers_v_sql(d: str) -> str:
         from chi cross join n"""
 
 
-def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cusum_sql(d: str) -> str:
     """Per-user one-sided CUSUM changepoint detector over the event stream,
     closed-form window formulation (operators.temporal.cusum_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return temporal.cusum(spark)
+    return temporal.cusum_sql(d)
 
 
-def q_cusum_oracle() -> str:
-    return temporal.cusum_sql(DUCK)
-
-
-def q_kanon(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _kanon_sql(d: str) -> str:
     """Minimal-generalization k-anonymity audit over the customer
     quasi-identifiers (operators.curation.kanon_ladder_sql)."""
-    register_geometry_views(spark, sf_dir)
-    return curation.kanon_ladder(spark, k=5)
-
-
-def q_kanon_oracle() -> str:
-    return curation.kanon_ladder_sql(DUCK, k=5)
+    return curation.kanon_ladder_sql(d, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -3083,9 +3050,9 @@ QUERIES = {
     "transitions": sql_query(_transitions_sql),
     "interval_merge": (q_interval_merge, q_interval_merge_oracle),
     "rolling_stats": sql_query(_rolling_stats_sql),
-    "ridge_fit": (q_ridge_fit, q_ridge_fit_oracle),
-    "profile": (q_profile, q_profile_oracle),
-    "headways": (q_headways, q_headways_oracle),
+    "ridge_fit": sql_query(_ridge_fit_sql),
+    "profile": sql_query(_profile_sql),
+    "headways": sql_query(_headways_sql),
     "return_gaps": sql_query(_return_gaps_sql),
     "quantile_rank": sql_query(_quantile_rank_sql),
     "benford": sql_query(_benford_sql),
@@ -3103,8 +3070,8 @@ QUERIES = {
     "seasonal": sql_query(_seasonal_sql),
     "peaks": sql_query(_peaks_sql),
     "cramers_v": sql_query(_cramers_v_sql),
-    "cusum": (q_cusum, q_cusum_oracle),
-    "kanon": (q_kanon, q_kanon_oracle),
+    "cusum": sql_query(_cusum_sql),
+    "kanon": sql_query(_kanon_sql),
     "spearman": sql_query(_spearman_sql),
     "mannwhitney": sql_query(_mannwhitney_sql),
     "jsd_drift": sql_query(_jsd_sql),

@@ -15,8 +15,8 @@ from ...functions.portable import DUCK, SPARK, concat_str, flit, phash60
 from ...functions.stages import rounds, run_stages, stages_sql
 from ...operators import raster
 from .corpus import (
-    BBOX, COSLAT0, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, duck_geometry_ctes,
-    register_geometry_views, sql_query, staged_query,
+    BBOX, COSLAT0, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, register_geometry_views,
+    sql_query, staged_query, with_fixtures,
 )
 
 
@@ -42,7 +42,7 @@ def q_raster_zonal_oracle() -> str:
     w = ix_hi - ix_lo + 1
     total = (iy_hi - iy_lo + 1) * w
     h = phash60(concat_str(["'42:ras:'", "iy", "':'", "ix"], DUCK), DUCK)
-    return f"""{duck_geometry_ctes()},
+    return with_fixtures(f"""with
         raster as (
             select {geo.quad_pack('ix', 'iy', res)} as cell,
                    round(({h} / {flit(float(2**60))}) * 2000.0e0, 3) as value
@@ -56,7 +56,7 @@ def q_raster_zonal_oracle() -> str:
         select zone_id, round(avg(value), 6) as avg_value, round(min(value), 6) as min_value,
                round(max(value), 6) as max_value, count(*) as n_cells
         from cover join raster using (cell)
-        group by zone_id"""
+        group by zone_id""", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -107,7 +107,7 @@ def _raster_slope_sql(d: str, res: int = 12) -> str:
     m_per_deg = 111194.92664455873
     cell_y_m = 180.0 / n * m_per_deg
     cell_x_m = 360.0 / n * m_per_deg * COSLAT0
-    return f"""ras as ({_raster_cte(d, res)}),
+    return f"""with ras as ({_raster_cte(d, res)}),
         grad as (
             select c.ix, c.iy,
                    (e.value - w.value) / {2.0 * cell_x_m!r}e0 as gx,
@@ -124,15 +124,6 @@ def _raster_slope_sql(d: str, res: int = 12) -> str:
         from grad"""
 
 
-def q_raster_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_raster_slope_sql(SPARK)}")
-
-
-def q_raster_slope_oracle() -> str:
-    return f"with {_raster_slope_sql(DUCK)}"
-
-
 def _zonal_majority_sql(d: str, res: int = 12, band_m: float = 200.0) -> str:
     """Zonal MAJORITY (modal elevation band per polygon) — the categorical
     zonal statistic avg/min/max can't express (land-cover class, dominant
@@ -145,7 +136,7 @@ def _zonal_majority_sql(d: str, res: int = 12, band_m: float = 200.0) -> str:
         if d == SPARK
         else f"select zone_id, unnest({geo.quad_cover_bbox('pos_list', res, d)}) as cell from geo_polys"
     )
-    return f"""ras as ({_raster_cte(d, res)}),
+    return with_fixtures(f"""with ras as ({_raster_cte(d, res)}),
         cover as ({cover}),
         bands as (
             select c.zone_id,
@@ -160,16 +151,7 @@ def _zonal_majority_sql(d: str, res: int = 12, band_m: float = 200.0) -> str:
                    row_number() over (partition by zone_id
                                       order by n_cells desc, band asc) as rn
             from bands
-        ) r where rn = 1"""
-
-
-def q_zonal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_zonal_majority_sql(SPARK)}")
-
-
-def q_zonal_majority_oracle() -> str:
-    return f"{duck_geometry_ctes()}, {_zonal_majority_sql(DUCK)}"
+        ) r where rn = 1""", d)
 
 
 _RES = 12
@@ -206,7 +188,7 @@ def _hillshade_sql(d: str, azimuth_deg: float = 315.0, altitude_deg: float = 45.
     sin_alt, ca_sa = math.sin(alt), math.cos(alt) * math.sin(az)
     ca_ca = math.cos(alt) * math.cos(az)
     shade = f"(({sin_alt!r}e0 - {ca_sa!r}e0 * gx - {ca_ca!r}e0 * gy) / sqrt(1.0e0 + gx * gx + gy * gy))"
-    return f"""ras as ({_raster_cte(d, _RES)}),
+    return f"""with ras as ({_raster_cte(d, _RES)}),
         grad as (
             select c.ix, c.iy,
                    ((ne.value + 2.0e0 * e.value + se.value)
@@ -233,15 +215,6 @@ def _hillshade_sql(d: str, azimuth_deg: float = 315.0, altitude_deg: float = 45.
         from grad"""
 
 
-def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_hillshade_sql(SPARK)}")
-
-
-def q_hillshade_oracle() -> str:
-    return f"with {_hillshade_sql(DUCK)}"
-
-
 # ---------------------------------------------------------------------------
 # D8 flow direction (steepest-descent drainage pointer)
 # ---------------------------------------------------------------------------
@@ -257,7 +230,7 @@ def _d8_offsets() -> list[tuple[int, int, int, float]]:
     ]
 
 
-def _flow_dir_sql(d: str) -> str:
+def _fdir_ctes(d: str) -> str:
     """CTE chain ending in ``fdir(ix, iy, flow_dir, drop_q9)``: per
     interior cell, the D8 steepest-descent direction — argmax over the 8
     neighbors of (elevation drop / metric distance), positive drops only,
@@ -302,18 +275,11 @@ def _flow_dir_sql(d: str) -> str:
         )"""
 
 
-def q_flow_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(
-        f"with {_flow_dir_sql(SPARK)} "
-        f"select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
-        f"flow_dir, packed_q9 from fdir"
-    )
-
-
-def q_flow_dir_oracle() -> str:
+def _flow_dir_sql(d: str) -> str:
+    """(ix, iy, flow_dir, packed_q9): the D8 direction raster of
+    :func:`_fdir_ctes`."""
     return (
-        f"with {_flow_dir_sql(DUCK)} "
+        f"with {_fdir_ctes(d)} "
         f"select cast(ix as bigint) as ix, cast(iy as bigint) as iy, "
         f"flow_dir, packed_q9 from fdir"
     )
@@ -346,7 +312,7 @@ _ACCUM_ROUNDS = 8  # covers drainage paths up to 2^8 cells — > any path on
 
 def _fdir_stage(d: str) -> tuple[str, str]:
     """The ``fdir(ix, iy, flow_dir)`` stage the drainage queries share."""
-    return "fdir", f"with {_flow_dir_sql(d)} select ix, iy, flow_dir from fdir"
+    return "fdir", f"with {_fdir_ctes(d)} select ix, iy, flow_dir from fdir"
 
 
 def _doubling_sql(prev: str) -> str:
@@ -395,7 +361,7 @@ def q_flow_accum_oracle() -> str:
     """Recursive-CTE walk down the drainage pointers (the closure the
     doubling rounds compute), counted per target cell."""
     return f"""
-        with recursive {_flow_dir_sql(DUCK)},
+        with recursive {_fdir_ctes(DUCK)},
         e as ({_flow_edges_sql(DUCK)}),
         walk(src_ix, src_iy, ix, iy) as (
             select src_ix, src_iy, dst_ix, dst_iy from e
@@ -494,7 +460,7 @@ def _viewshed_sql(d: str) -> str:
         f" >= (b.value - obs.z) * {dist('b.cx', 'b.cy')}"
         f" then 1 else 0 end"
     )
-    return f"""ras as ({_raster(d)}),
+    return f"""with ras as ({_raster(d)}),
         obs as (select value + {_OBS_H!r}e0 as z from ras
                 where ix = {ox} and iy = {oy}),
         tgt as (select ix, iy, value from ras
@@ -518,15 +484,6 @@ def _viewshed_sql(d: str) -> str:
         from tgt t
         cross join obs
         left join blockers k on k.ix = t.ix and k.iy = t.iy"""
-
-
-def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    return spark.sql(f"with {_viewshed_sql(SPARK)}")
-
-
-def q_viewshed_oracle() -> str:
-    return f"with {_viewshed_sql(DUCK)}"
 
 
 # ---------------------------------------------------------------------------
@@ -941,7 +898,7 @@ def q_watershed_oracle() -> str:
     """Recursive-CTE walk down each cell's drainage pointers to the
     terminal — the closure the doubling rounds compute."""
     return f"""
-        with recursive {_flow_dir_sql(DUCK)},
+        with recursive {_fdir_ctes(DUCK)},
         e as materialized ({_flow_edges_sql(DUCK)}),
         walk(ix, iy, cx, cy) as (
             select f.ix, f.iy, f.ix, f.iy from fdir f
@@ -1239,12 +1196,12 @@ def _anisotropy_sql(d: str) -> str:
 
 QUERIES = {
     "raster_zonal": (q_raster_zonal, q_raster_zonal_oracle),
-    "raster_slope": (q_raster_slope, q_raster_slope_oracle),
-    "zonal_majority": (q_zonal_majority, q_zonal_majority_oracle),
-    "hillshade": (q_hillshade, q_hillshade_oracle),
-    "flow_dir": (q_flow_dir, q_flow_dir_oracle),
+    "raster_slope": sql_query(_raster_slope_sql),
+    "zonal_majority": sql_query(_zonal_majority_sql),
+    "hillshade": sql_query(_hillshade_sql),
+    "flow_dir": sql_query(_flow_dir_sql),
     "flow_accum": (q_flow_accum, q_flow_accum_oracle),
-    "viewshed": (q_viewshed, q_viewshed_oracle),
+    "viewshed": sql_query(_viewshed_sql),
     "cost_distance": staged_query(_cost_distance_stages),
     "way_split": sql_query(_way_split_sql),
     "local_moran": sql_query(_local_moran_sql),

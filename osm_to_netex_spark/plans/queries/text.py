@@ -556,42 +556,27 @@ def q_line_dedup_oracle() -> str:
     )
 
 
-def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dup_spans_sql(d: str) -> str:
     """Exact substring dedup, span detection (Lee et al. 2022 shape): token
     runs covered by any 8-token window occurring >= 2 times corpus-wide;
     windows travel the count shuffle as 60-bit hashes, runs merged per doc
     via gaps-and-islands (dedup.dup_spans)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return dedup.dup_spans(docs, min_len=8, min_count=2)
+    return dedup.dup_spans_sql(d, "documents", min_len=8, min_count=2)
 
 
-def q_dup_spans_oracle() -> str:
-    return dedup.dup_spans_sql(DUCK, "documents", min_len=8, min_count=2)
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pack_sequences_sql(d: str) -> str:
     """Cross-document sequence packing: the corpus as one deterministic
     token stream cut at 512-token boundaries; hierarchical prefix sum
     (bucket totals take the only global window), scan-parallel fragment
     explode (chunking.pack_sequences)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return chunking.pack_sequences(docs, capacity=512, bucket=64)
+    return chunking.pack_sequences_sql(d, "documents", capacity=512, bucket=64)
 
 
-def q_pack_sequences_oracle() -> str:
-    return chunking.pack_sequences_sql(DUCK, "documents", capacity=512, bucket=64)
-
-
-def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _span_corruption_sql(d: str) -> str:
     """T5-style span corruption: one hash-placed 3-token mask per full
     24-token block, sentinel rewrite as a zero-shuffle HOF projection
     (chunking.span_corruption)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return chunking.span_corruption(docs, block=24, span_len=3)
-
-
-def q_span_corruption_oracle() -> str:
-    return chunking.span_corruption_sql(DUCK, "documents", block=24, span_len=3)
+    return chunking.span_corruption_sql(d, "documents", block=24, span_len=3)
 
 
 # ---------------------------------------------------------------------------
@@ -679,17 +664,12 @@ def q_media_phash_pairs_oracle() -> str:
     """
 
 
-def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _temperature_mix_sql(d: str) -> str:
     """Temperature-flattened source mixture (T=2, target 50%): the
     multilingual-rebalancing sampling rule, deterministic by id hash
-    (sampling.temperature_mix; rates via sqrt so both engines round
+    (sampling.temperature_mix_sql; rates via sqrt so both engines round
     identically)."""
-    register_geometry_views(spark, sf_dir)
-    return sampling.temperature_mix(spark, temperature=2.0, target_frac=0.5)
-
-
-def q_temperature_mix_oracle() -> str:
-    return sampling._temp_mix_sql(DUCK, 2.0, 0.5)
+    return sampling.temperature_mix_sql(d, 2.0, 0.5)
 
 
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,15 +707,10 @@ def q_lsh_recall_oracle() -> str:
     """
 
 
-def q_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _rendezvous_sql(d: str) -> str:
     """Consistent HRW shard assignment of the corpus to 5 shards
-    (sampling.rendezvous_assign) — zero-shuffle projection."""
-    register_geometry_views(spark, sf_dir)
-    return sampling.rendezvous_assign(spark, [f"shard-{i}" for i in range(5)])
-
-
-def q_rendezvous_oracle() -> str:
-    return sampling.rendezvous_sql(DUCK, [f"shard-{i}" for i in range(5)])
+    (sampling.rendezvous_sql) — zero-shuffle projection."""
+    return sampling.rendezvous_sql(d, [f"shard-{i}" for i in range(5)])
 
 
 def _sn_blocking_sql(d: str, w: int = 3) -> str:
@@ -1032,15 +1007,10 @@ def _term_mi_sql(d: str, top_v: int = 30, top_k: int = 20) -> str:
         ) t where rn <= {int(top_k)}"""
 
 
-def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _zipf_fit_sql(d: str) -> str:
     """Zipf slope/intercept of the corpus term distribution, integer-exact
     OLS in log-log space (textstats.zipf_fit)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return textstats.zipf_fit(docs, top_n=200)
-
-
-def q_zipf_fit_oracle() -> str:
-    return textstats.zipf_fit_sql(DUCK, top_n=200)
+    return textstats.zipf_fit_sql(d, top_n=200)
 
 
 def q_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1663,18 +1633,18 @@ QUERIES = {
     "nb_langid": sql_query(classify.nb_langid_sql),
     "cosine_pairs": (q_cosine_pairs, q_cosine_pairs_oracle),
     "line_dedup": (q_line_dedup, q_line_dedup_oracle),
-    "dup_spans": (q_dup_spans, q_dup_spans_oracle),
-    "pack_sequences": (q_pack_sequences, q_pack_sequences_oracle),
-    "span_corruption": (q_span_corruption, q_span_corruption_oracle),
+    "dup_spans": sql_query(_dup_spans_sql),
+    "pack_sequences": sql_query(_pack_sequences_sql),
+    "span_corruption": sql_query(_span_corruption_sql),
     "dsir": (q_dsir, q_dsir_oracle),
     "lm_score": sql_query(classify.ngram_lm_sql),
     "bpe_encode": (q_bpe_encode, q_bpe_encode_oracle),
     "lexdiv": (q_lexdiv, q_lexdiv_oracle),
     "corpus_shuffle": (q_corpus_shuffle, q_corpus_shuffle_oracle),
     "media_phash_pairs": (q_media_phash_pairs, q_media_phash_pairs_oracle),
-    "temperature_mix": (q_temperature_mix, q_temperature_mix_oracle),
+    "temperature_mix": sql_query(_temperature_mix_sql),
     "lsh_recall": (q_lsh_recall, q_lsh_recall_oracle),
-    "rendezvous": (q_rendezvous, q_rendezvous_oracle),
+    "rendezvous": sql_query(_rendezvous_sql),
     "sn_blocking": sql_query(_sn_blocking_sql),
     "containment": (q_containment, q_containment_oracle),
     "cosine_pairs_capped": (q_cosine_pairs_capped, q_cosine_pairs_capped_oracle),
@@ -1682,7 +1652,7 @@ QUERIES = {
     "lsh_band_stats": (q_lsh_band_stats, q_lsh_band_stats_oracle),
     "ks_drift": sql_query(_ks_drift_sql),
     "term_mi": sql_query(_term_mi_sql),
-    "zipf_fit": (q_zipf_fit, q_zipf_fit_oracle),
+    "zipf_fit": sql_query(_zipf_fit_sql),
     "pmi_cooc": sql_query(textstats.pmi_cooc_sql),
     "ngram_overlap": sql_query(textstats.ngram_overlap_sql),
     "keep_best": (q_keep_best, q_keep_best_oracle),

@@ -12,55 +12,35 @@ from ...functions.portable import DUCK, SPARK, concat_str, flit, haversine_m, pr
 from ...operators import clustering, mapmatch, pip, trajectory, trajsim
 from ...operators.trajectory import _ep
 from .corpus import (
-    COSLAT0, DLAT, DLON, LAT_LO, LON_LO, _pr, duck_geometry_ctes, points_sql,
-    register_geometry_views,
+    COSLAT0, DLAT, DLON, LAT_LO, LON_LO, _MM_STEPS, _pr, points_sql,
+    register_geometry_views, sql_query, traj_sql, with_fixtures,
 )
 
 
-def q_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _trips_sql(d: str) -> str:
     """Trajectory trip segmentation + movement stats (path via order-free
     sorted leg fold, endpoints via struct min/max)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.trip_stats(spark, ev)
+    return trajectory.trip_stats_sql(d, "events")
 
 
-def q_trips_oracle() -> str:
-    return trajectory.trip_stats_sql(DUCK, "events")
-
-
-def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _stay_points_sql(d: str) -> str:
     """Stay-point detection (stop/move segmentation, Li et al. 2008 shape):
     distance-rule runs + duration/count gates, integer-fold centroids."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.stay_points(spark, ev)
+    return trajectory.stay_points_sql(d, "events")
 
 
-def q_stay_points_oracle() -> str:
-    return trajectory.stay_points_sql(DUCK, "events")
-
-
-def q_encounters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _encounters_sql(d: str) -> str:
     """Space-time co-location join: user pairs within 100 m AND 30 min,
     pruned by (quad cell ring × time-bucket) equi join before exact
     haversine/Δt verify (trajectory.encounters)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.encounters(spark, ev)
+    return trajectory.encounters_sql(d, "events")
 
 
-def q_encounters_oracle() -> str:
-    return trajectory.encounters_sql(DUCK, "events")
-
-
-def q_speed_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _speed_filter_sql(d: str) -> str:
     """GPS spike filter: a fix is an outlier iff every available adjacent
     leg implies speed > 40 m/s; teleport-injecting fixture
     (trajectory.speed_filter)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.speed_filter(spark, ev)
-
-
-def q_speed_filter_oracle() -> str:
-    return trajectory.speed_filter_sql(DUCK, "events")
+    return trajectory.speed_filter_sql(d, "events")
 
 
 def gf_fixes_sql(d: str) -> str:
@@ -91,43 +71,18 @@ def q_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geofence_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, gf_fixes as ({gf_fixes_sql(DUCK)}), "
-        f"{trajectory.geofence_events_oracle_sql('gf_fixes', 'geo_polys')}"
+    return with_fixtures(
+        f"with gf_fixes as ({gf_fixes_sql(DUCK)}), "
+        f"{trajectory.geofence_events_oracle_sql('gf_fixes', 'geo_polys')}",
+        DUCK,
     )
 
 
 # ---------------------------------------------------------------------------
 # HMM (Viterbi) map-matching
 # ---------------------------------------------------------------------------
-_MM_STEPS = 6
 _MM_RADIUS = 600.0
 _MM_PENALTY = 150_000  # 150 m switch penalty in mm
-
-
-def traj_sql(d: str) -> str:
-    """Deterministic GPS tracks: one 6-step trajectory per polygon, each
-    fix = polygon vertex j jittered by a hash-derived offset (≈ ±250 m) —
-    tracks genuinely follow a polyline, so stay/switch transitions are both
-    exercised.  Identical expression text in both dialects."""
-    eps = flit(0.0045)
-    jla = _pr(["'mm:lat:'", "zone_id", "':'", "j"], d)
-    jlo = _pr(["'mm:lon:'", "zone_id", "':'", "j"], d)
-    if d == SPARK:
-        # Spark [] subscripts are 0-based; element_at is the 1-based form
-        la = f"element_at(pos_list, cast(2*j + 1 as int)) + ({jla} - 0.5e0) * {eps}"
-        lo = f"element_at(pos_list, cast(2*j + 2 as int)) + ({jlo} - 0.5e0) * {eps}"
-        return (
-            f"select zone_id as traj_id, j as step, {la} as lat, {lo} as lon "
-            f"from (select zone_id, pos_list, "
-            f"explode(sequence(0, {_MM_STEPS - 1})) as j from geo_polys)"
-        )
-    la = f"pos_list[2*t.j + 1] + ({jla} - 0.5e0) * {eps}"
-    lo = f"pos_list[2*t.j + 2] + ({jlo} - 0.5e0) * {eps}"
-    return (
-        f"select zone_id as traj_id, t.j as step, {la} as lat, {lo} as lon "
-        f"from geo_polys, unnest(generate_series(0, {_MM_STEPS - 1})) t(j)"
-    )
 
 
 def q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,7 +90,6 @@ def q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (integer mm emissions + flat switch penalty, operators/mapmatch.py);
     greedy nearest-segment snap would zigzag, the DP stays put."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
     return mapmatch.map_match(
         spark.table("geo_traj"),
         spark.table("geo_polys"),
@@ -153,7 +107,7 @@ def q_map_match_oracle() -> str:
         k_unroll=_MM_STEPS - 1,
         switch_penalty_mm=_MM_PENALTY,
     )
-    return f"{duck_geometry_ctes()}, geo_traj as ({traj_sql(DUCK)}), {body}"
+    return with_fixtures(f"with {body}", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -167,7 +121,6 @@ def q_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
     geo_traj fixture: padded-bbox cover prefilter + exact HOF refine
     (operators/trajsim.py)."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
     return trajsim.hausdorff_join(spark.table("geo_traj"), radius_m=_HAUS_R, res=12)
 
 
@@ -175,7 +128,7 @@ def q_hausdorff_oracle() -> str:
     body = trajsim.hausdorff_join_oracle_sql(
         f"select * from ({traj_sql(DUCK)}) _t", radius_m=_HAUS_R
     )
-    return f"{duck_geometry_ctes()}, __h as ({body}) select * from __h"
+    return with_fixtures(f"with __h as ({body}) select * from __h", DUCK)
 
 
 _DTW_C = 30000.0  # total alignment cost budget (m)
@@ -186,7 +139,6 @@ def q_dtw_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bbox-cover candidates (complete: DTW >= d(A1,B1)) + mm-integer
     anti-diagonal-unrolled DP (trajsim.dtw_join)."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
     return trajsim.dtw_join(
         spark.table("geo_traj"), max_cost_m=_DTW_C, n_steps=_MM_STEPS, res=12
     )
@@ -196,84 +148,44 @@ def q_dtw_join_oracle() -> str:
     body = trajsim.dtw_join_oracle_sql(
         f"select * from ({traj_sql(DUCK)}) _t", max_cost_m=_DTW_C, n_steps=_MM_STEPS
     )
-    return f"{duck_geometry_ctes()}, __d as ({body}) select * from __d"
+    return with_fixtures(f"with __d as ({body}) select * from __d", DUCK)
 
 
-def q_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _geometric_median_sql(d: str) -> str:
     """Per-user Weiszfeld geometric median, 5 unrolled rounds over the fix
     arrays in one shuffle; trig-free metric keeps every float op identical
     across engines (trajectory.geometric_median)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.geometric_median(spark, ev, k_iters=5)
+    return trajectory.geometric_median_sql(d, "events", k_iters=5)
 
 
-def q_geometric_median_oracle() -> str:
-    return trajectory.geometric_median_sql(DUCK, "events", k_iters=5)
-
-
-def q_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _resample_sql(d: str) -> str:
     """Fixed-interval track resampling: per-user linear interpolation at
     6-hour grid ticks, pure-integer grid arithmetic + one fused float
     interpolation per tick (trajectory.resample_track)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.resample_track(spark, ev, step_s=21600)
-
-
-def q_resample_oracle() -> str:
-    return trajectory.resample_track_sql(DUCK, "events", step_s=21600)
+    return trajectory.resample_track_sql(d, "events", step_s=21600)
 
 
 # ---------------------------------------------------------------------------
 # OD flow matrix + deterministic corpus shuffle
 # ---------------------------------------------------------------------------
-def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _od_matrix_sql(d: str) -> str:
     """Origin→destination trip flows at res 10 with k=2 anonymity
     suppression over the geo_traj tracks (trajectory.od_matrix_sql)."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
-    return spark.sql(trajectory.od_matrix_sql(SPARK, res=10, k_anon=2))
+    return with_fixtures(trajectory.od_matrix_sql(d, res=10, k_anon=2), d)
 
 
-def q_od_matrix_oracle() -> str:
-    body = trajectory.od_matrix_sql(DUCK, res=10, k_anon=2, traj_table="geo_traj")
-    return (
-        f"{duck_geometry_ctes()}, geo_traj as ({traj_sql(DUCK)}), "
-        f"__od as ({body}) select * from __od"
-    )
-
-
-def q_flow_rose(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _flow_rose_sql(d: str) -> str:
     """Per-cell 8-sector direction rose over the geo_traj tracks: trig-free
     tan(22.5°)-comparison octants, integer-mm leg lengths
-    (trajectory.flow_rose)."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
-    return trajectory.flow_rose(spark, res=9)
+    (trajectory.flow_rose_sql)."""
+    return with_fixtures(trajectory.flow_rose_sql(d, res=9), d)
 
 
-def q_flow_rose_oracle() -> str:
-    body = trajectory.flow_rose_sql(DUCK, res=9, traj_table="geo_traj")
-    return (
-        f"{duck_geometry_ctes()}, geo_traj as ({traj_sql(DUCK)}), "
-        f"__fr as ({body}) select * from __fr"
-    )
-
-
-def q_gravity_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _gravity_ipf_sql(d: str) -> str:
     """Gravity-model OD fit: 2 IPF rounds over the origin×destination
     support, integer-nano state, impedance 1/(1+dist²)
-    (trajectory.gravity_ipf)."""
-    register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
-    return trajectory.gravity_ipf(spark, res=10, rounds=2)
-
-
-def q_gravity_ipf_oracle() -> str:
-    body = trajectory.gravity_ipf_sql(DUCK, res=10, rounds=2, traj_table="geo_traj")
-    return (
-        f"{duck_geometry_ctes()}, geo_traj as ({traj_sql(DUCK)}), "
-        f"__g as ({body}) select * from __g"
-    )
+    (trajectory.gravity_ipf_sql)."""
+    return with_fixtures(trajectory.gravity_ipf_sql(d, res=10, rounds=2), d)
 
 
 def q_zone_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,8 +218,7 @@ def q_zone_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zone_dwell_oracle() -> str:
     stays = trajectory.stay_points_sql(DUCK, "events")
     pred = geo.point_in_polygon("s.lat", "s.lon", "z.pos_list", DUCK)
-    return f"""
-        {duck_geometry_ctes()},
+    return "\n        " + with_fixtures(f"""with
         stays as (
             select user_id * 100000 + stop_seq as point_id,
                    clat as lat, clon as lon,
@@ -320,18 +231,13 @@ def q_zone_dwell_oracle() -> str:
         from stays s cross join geo_polys z
         where {pred}
         group by z.zone_id
-    """
+    """, DUCK)
 
 
-def q_turn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _turn_points_sql(d: str) -> str:
     """Heading-change corners (>45°) per user track, trig-free integer test
     (operators.trajectory.turn_points_sql)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return trajectory.turn_points(spark, ev)
-
-
-def q_turn_points_oracle() -> str:
-    return trajectory.turn_points_sql(DUCK, "events")
+    return trajectory.turn_points_sql(d, "events")
 
 
 # ---------------------------------------------------------------------------
@@ -353,7 +259,7 @@ def _radius_gyration_sql(d: str) -> str:
     q9 = "cast(floor({} * 1.0e9 + 0.5e0) as bigint)"
     dist = haversine_m("f.lat", "f.lon", "c.clat", "c.clon", d)
     d2q = f"cast(floor(round({dist}, 6) * round({dist}, 6) * 1.0e3 + 0.5e0) as bigint)"
-    return f"""cent as (
+    return with_fixtures(f"""with cent as (
             select traj_id,
                    cast(count(*) as bigint) as n_fix,
                    cast(sum({q9.format('lat')}) as bigint) as slat,
@@ -375,20 +281,7 @@ def _radius_gyration_sql(d: str) -> str:
         select traj_id, n_fix,
                round(sqrt(cast(sd2 as double) / cast(n_fix as double) / 1.0e3), 6)
                    as rg_m
-        from folded"""
-
-
-def q_radius_gyration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
-    return spark.sql(f"with {_radius_gyration_sql(SPARK)}")
-
-
-def q_radius_gyration_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, geo_traj as ({traj_sql(DUCK)}), "
-        f"{_radius_gyration_sql(DUCK)}"
-    )
+        from folded""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -407,7 +300,7 @@ def _bearing_stats_sql(d: str) -> str:
     Scale: one lag window partitioned by traj_id + one groupBy — single
     traj_id shuffle."""
     k = f"{COSLAT0!r}e0"
-    return f"""steps as (
+    return with_fixtures(f"""with steps as (
             select traj_id,
                    (lat - lag(lat) over (partition by traj_id order by step asc))
                        as dy,
@@ -438,20 +331,7 @@ def _bearing_stats_sql(d: str) -> str:
                round(1.0e0 - sqrt(cast(sx as double) * cast(sx as double)
                           + cast(sy as double) * cast(sy as double))
                      / cast(n_steps as double) / 1.0e9, 9) as circ_var
-        from folded"""
-
-
-def q_bearing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
-    return spark.sql(f"with {_bearing_stats_sql(SPARK)}")
-
-
-def q_bearing_stats_oracle() -> str:
-    return (
-        f"{duck_geometry_ctes()}, geo_traj as ({traj_sql(DUCK)}), "
-        f"{_bearing_stats_sql(DUCK)}"
-    )
+        from folded""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -467,7 +347,6 @@ def q_edr_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     0/1-thresholded integer anti-diagonal DP as one nested-let_ expression
     (trajsim.edr_join) — completes the DTW/Hausdorff/EDR similarity trio."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
     return trajsim.edr_join(
         spark.table("geo_traj"), eps_m=_EDR_EPS_M, max_edr=_EDR_MAX,
         n_steps=_MM_STEPS, res=12,
@@ -479,7 +358,7 @@ def q_edr_join_oracle() -> str:
         f"select * from ({traj_sql(DUCK)}) _t", eps_m=_EDR_EPS_M,
         max_edr=_EDR_MAX, n_steps=_MM_STEPS,
     )
-    return f"{duck_geometry_ctes()}, __d as ({body}) select * from __d"
+    return with_fixtures(f"with __d as ({body}) select * from __d", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -493,7 +372,6 @@ def q_frechet_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (complete: F >= d(A1,B1)) + mm-integer anti-diagonal DP
     with the DTW staging's + swapped for max (trajsim.frechet_join)."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view geo_traj as {traj_sql(SPARK)}")
     return trajsim.frechet_join(
         spark.table("geo_traj"), max_dist_m=_FRECHET_R, n_steps=_MM_STEPS, res=12
     )
@@ -505,7 +383,7 @@ def q_frechet_join_oracle() -> str:
         max_dist_m=_FRECHET_R,
         n_steps=_MM_STEPS,
     )
-    return f"{duck_geometry_ctes()}, __f as ({body}) select * from __f"
+    return with_fixtures(f"with __f as ({body}) select * from __f", DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -610,23 +488,23 @@ def q_match_quality_oracle() -> str:
 
 
 QUERIES = {
-    "trips": (q_trips, q_trips_oracle),
-    "stay_points": (q_stay_points, q_stay_points_oracle),
-    "encounters": (q_encounters, q_encounters_oracle),
-    "speed_filter": (q_speed_filter, q_speed_filter_oracle),
+    "trips": sql_query(_trips_sql),
+    "stay_points": sql_query(_stay_points_sql),
+    "encounters": sql_query(_encounters_sql),
+    "speed_filter": sql_query(_speed_filter_sql),
     "geofence": (q_geofence, q_geofence_oracle),
     "map_match": (q_map_match, q_map_match_oracle),
     "hausdorff_join": (q_hausdorff, q_hausdorff_oracle),
     "dtw_join": (q_dtw_join, q_dtw_join_oracle),
-    "geometric_median": (q_geometric_median, q_geometric_median_oracle),
-    "resample": (q_resample, q_resample_oracle),
-    "od_matrix": (q_od_matrix, q_od_matrix_oracle),
-    "flow_rose": (q_flow_rose, q_flow_rose_oracle),
-    "gravity_ipf": (q_gravity_ipf, q_gravity_ipf_oracle),
+    "geometric_median": sql_query(_geometric_median_sql),
+    "resample": sql_query(_resample_sql),
+    "od_matrix": sql_query(_od_matrix_sql),
+    "flow_rose": sql_query(_flow_rose_sql),
+    "gravity_ipf": sql_query(_gravity_ipf_sql),
     "zone_dwell": (q_zone_dwell, q_zone_dwell_oracle),
-    "turn_points": (q_turn_points, q_turn_points_oracle),
-    "radius_gyration": (q_radius_gyration, q_radius_gyration_oracle),
-    "bearing_stats": (q_bearing_stats, q_bearing_stats_oracle),
+    "turn_points": sql_query(_turn_points_sql),
+    "radius_gyration": sql_query(_radius_gyration_sql),
+    "bearing_stats": sql_query(_bearing_stats_sql),
     "edr_join": (q_edr_join, q_edr_join_oracle),
     "frechet_join": (q_frechet_join, q_frechet_join_oracle),
     "st_dbscan": (q_st_dbscan, q_st_dbscan_oracle),

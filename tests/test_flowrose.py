@@ -1,6 +1,7 @@
 """Flow rose: known-direction legs classify to the right octants, diagonal
 and degenerate legs behave deterministically."""
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 
@@ -13,7 +14,9 @@ def _mk(spark, fixes):
 def _rose(spark):
     return {
         (r["cell"], r["octant"]): (r["n_legs"], r["total_mm"])
-        for r in trajectory.flow_rose(spark, res=3, traj_table="rose_traj").collect()
+        for r in spark.sql(
+            trajectory.flow_rose_sql(SPARK, res=3, traj_table="rose_traj")
+        ).collect()
     }
 
 

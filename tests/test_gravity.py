@@ -6,6 +6,7 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 
@@ -29,7 +30,9 @@ def fitted(spark):
     spark.createDataFrame(
         rows, "traj_id: long, step: long, lat: double, lon: double"
     ).createOrReplaceTempView("grav_traj")
-    out = trajectory.gravity_ipf(spark, res=10, rounds=3, traj_table="grav_traj")
+    out = spark.sql(
+        trajectory.gravity_ipf_sql(SPARK, res=10, rounds=3, traj_table="grav_traj")
+    )
     return out.collect()
 
 

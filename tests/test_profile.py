@@ -1,5 +1,6 @@
 """Column profiler: known stats on a hand-built table, single-scan plan."""
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import curation
 
 
@@ -10,7 +11,7 @@ def test_profile_known_values(spark):
     ).createOrReplaceTempView("prof_t")
     got = {
         r["col"]: r
-        for r in curation.profile(spark, "prof_t", ["id", "v"], ["s"]).collect()
+        for r in spark.sql(curation.profile_sql(SPARK, "prof_t", ["id", "v"], ["s"])).collect()
     }
     assert got["id"]["n_rows"] == 4 and got["id"]["n_null"] == 1
     assert got["id"]["n_distinct"] == 3
@@ -28,7 +29,7 @@ def test_profile_is_single_scan(spark):
     spark.range(100).selectExpr(
         "id", "cast(id % 7 as double) as v", "cast(id % 3 as string) as s"
     ).createOrReplaceTempView("prof_scan")
-    df = curation.profile(spark, "prof_scan", ["id", "v"], ["s"])
+    df = spark.sql(curation.profile_sql(SPARK, "prof_scan", ["id", "v"], ["s"]))
     plan = df._jdf.queryExecution().executedPlan().toString()
     # one Range source feeding an Expand (the count-distinct rewrite), never
     # k separate scans unioned

@@ -1,5 +1,6 @@
 """Trajectory-domain registry queries (plans/queries/trajectory.py) vs
-exact Python replays: map-match quality.
+exact Python replays: map-match quality; and the temp views the
+builders leave behind.
 
 Oracle agreement (tools/verify_oracle.py) proves cross-engine consistency;
 these replays prove the math on the sf0.001 corpus (LANDING.md step 5)."""
@@ -8,7 +9,7 @@ from collections import defaultdict
 
 import pytest
 
-from osm_to_netex_spark.plans.queries import trajectory as TRAJECTORY
+from osm_to_netex_spark.plans.queries import corpus as CORPUS, trajectory as TRAJECTORY
 from tests.support import SF
 
 pytestmark = pytest.mark.usefixtures("fresh_views")
@@ -39,3 +40,14 @@ def test_match_quality_invariants(spark):
         for r in TRAJECTORY.q_match_quality(spark, SF).collect()
     }
     assert got == want
+
+
+def test_builders_leave_no_temp_views(spark):
+    """Builders read the registered sf views (geo_traj among them) and
+    register none of their own: building trips, od_matrix and map_match
+    leaves the session's tables as it found them."""
+    CORPUS.register_geometry_views(spark, SF)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    for name in ("trips", "od_matrix", "map_match"):
+        TRAJECTORY.QUERIES[name][0](spark, SF)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before

@@ -3,6 +3,7 @@ module of the package imports its root, every domain query is registered
 exactly once, and the driver-checked window leads the registry."""
 
 import ast
+import copy
 import importlib
 import importlib.util
 import pkgutil
@@ -55,19 +56,20 @@ def _body(fn: ast.FunctionDef) -> list[ast.stmt]:
     return fn.body[1:] if doc else fn.body
 
 
-def _dialect_call(node: ast.AST, dialect: str) -> str | None:
-    """``"f"`` when ``node`` is ``f(<dialect>)``, for a name or dotted ``f``."""
-    if (
-        isinstance(node, ast.Call) and len(node.args) == 1 and not node.keywords
-        and isinstance(node.args[0], ast.Name) and node.args[0].id == dialect
-    ):
-        return ast.unparse(node.func)
-    return None
+def _creates_view(stmt: ast.stmt) -> bool:
+    """``stmt`` is ``spark.sql("create or replace temp view …")``."""
+    call = stmt.value if isinstance(stmt, ast.Expr) else None
+    return (
+        isinstance(call, ast.Call) and ast.unparse(call.func) == "spark.sql" and len(call.args) == 1
+        and ast.unparse(call.args[0]).lstrip("f'\"").startswith("create or replace temp view")
+    )
 
 
 def _registers_sf_views(stmt: ast.stmt, fns: dict[str, ast.FunctionDef]) -> bool:
     """``stmt`` only reads sf tables and registers them as temp views,
     directly or through a module helper that does only that."""
+    if _creates_view(stmt):
+        return True
     for call in (n for n in ast.walk(stmt) if isinstance(n, ast.Call)):
         name = getattr(call.func, "id", getattr(call.func, "attr", None))
         if name in fns:
@@ -80,10 +82,70 @@ def _registers_sf_views(stmt: ast.stmt, fns: dict[str, ast.FunctionDef]) -> bool
     return True
 
 
+_DIALECTS = {"SPARK": "spark", "DUCK": "duckdb"}
+
+
+class _Template(ast.NodeTransformer):
+    """One side of a builder/oracle pair as a dialect-free template: the
+    dialect (``SPARK``/``"spark"`` or ``DUCK``/``"duckdb"``) becomes ``D``,
+    ``with_fixtures(x, d)`` becomes ``x``, and the DuckDB geometry prefix
+    (``{duck_geometry_ctes()}`` and a ``geo_traj`` CTE after it) is
+    dropped, as on Spark, where those fixtures are views."""
+
+    def __init__(self, dialect: str):
+        self.dialect = dialect
+        self.found = False
+
+    def visit_Name(self, node):
+        if node.id == self.dialect:
+            self.found = True
+            return ast.Name("D")
+        return node
+
+    def visit_Constant(self, node):
+        if node.value == _DIALECTS[self.dialect]:
+            self.found = True
+            return ast.Name("D")
+        return node
+
+    def visit_Call(self, node):
+        if ast.unparse(node.func) == "with_fixtures" and len(node.args) == 2:
+            self.visit(node.args[1])
+            return self.visit(node.args[0])
+        return self.generic_visit(node)
+
+    def visit_JoinedStr(self, node):
+        parts = node.values
+        if parts and ast.unparse(parts[0]) == "{duck_geometry_ctes()}":
+            rest = parts[1:]
+            if (
+                len(rest) > 2 and isinstance(rest[0], ast.Constant)
+                and rest[0].value.startswith(", geo_traj as (")
+                and ast.unparse(rest[1].value).startswith("traj_sql(")
+            ):
+                rest = [ast.Constant("," + rest[2].value[2:]), *rest[3:]]
+            head = rest[0].value if rest and isinstance(rest[0], ast.Constant) else None
+            if head is not None:
+                head = "with" + head[1:] if head.startswith(",") else head.removeprefix(" ")
+                parts = [ast.Constant(head), *rest[1:]]
+        node = ast.JoinedStr([p if isinstance(p, ast.Constant) else self.visit(p) for p in parts])
+        if all(isinstance(p, ast.Constant) for p in node.values):
+            return ast.Constant("".join(p.value for p in node.values))
+        return node
+
+
+def _template(node: ast.AST, dialect: str) -> str | None:
+    """The template of ``node`` in ``dialect``; None when it names no dialect."""
+    t = _Template(dialect)
+    out = ast.unparse(t.visit(copy.deepcopy(node)))
+    return out if t.found else None
+
+
 def _single_sql_wrappers(tree: ast.Module) -> list[str]:
-    """Builders ``q_x`` whose ``q_x_oracle`` only returns ``f(DUCK)`` and
-    which only register sf views before returning ``spark.sql(f(SPARK))``:
-    the pair ``sql_query(f)`` declares."""
+    """Builders ``q_x`` that only register sf views before returning
+    ``spark.sql(T(SPARK))`` while ``q_x_oracle`` only returns ``T(DUCK)``,
+    for one template ``T`` around the dialect, with or without the DuckDB
+    geometry prefix: the pair ``sql_query`` declares."""
     fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
     found = []
     for name, oracle in fns.items():
@@ -93,11 +155,11 @@ def _single_sql_wrappers(tree: ast.Module) -> list[str]:
         returns, (*head, last) = _body(oracle), _body(build) or [None]
         if len(returns) != 1 or not isinstance(returns[0], ast.Return):
             continue
-        sql = _dialect_call(returns[0].value, "DUCK")
+        sql = _template(returns[0].value, "DUCK")
         run = last.value if isinstance(last, ast.Return) else None
         if (
             sql is not None and isinstance(run, ast.Call) and ast.unparse(run.func) == "spark.sql"
-            and len(run.args) == 1 and _dialect_call(run.args[0], "SPARK") == sql
+            and len(run.args) == 1 and _template(run.args[0], "SPARK") == sql
             and all(_registers_sf_views(s, fns) for s in head)
         ):
             found.append(build.name)
@@ -113,6 +175,31 @@ def test_single_sql_queries_use_sql_query():
         for path in sorted(PKG.glob("*.py"))
     }
     assert not {k: v for k, v in found.items() if v}
+
+
+def _passes_sql_through(fn: ast.FunctionDef) -> bool:
+    """``fn`` only returns ``spark.sql(x_sql(SPARK, …))`` (imports aside)."""
+    body = [s for s in _body(fn) if not isinstance(s, (ast.Import, ast.ImportFrom))]
+    run = body[0].value if len(body) == 1 and isinstance(body[0], ast.Return) else None
+    if not (isinstance(run, ast.Call) and ast.unparse(run.func) == "spark.sql" and len(run.args) == 1):
+        return False
+    sql = run.args[0]
+    return isinstance(sql, ast.Call) and bool(sql.args) and ast.unparse(sql.args[0]) in (
+        "SPARK", "'spark'",
+    )
+
+
+def test_no_operator_entry_only_runs_its_sql():
+    """An operator entry that only runs ``spark.sql(x_sql(SPARK, …))`` adds
+    nothing to ``x_sql``: the registry runs ``x_sql`` through ``sql_query``
+    and tests call ``spark.sql(x_sql(SPARK, …))`` themselves."""
+    found = [
+        f"{path.name}:{fn.name}"
+        for path in sorted((PACKAGE / "operators").glob("*.py"))
+        for fn in ast.walk(ast.parse(path.read_text()))
+        if isinstance(fn, ast.FunctionDef) and _passes_sql_through(fn)
+    ]
+    assert not found
 
 
 PACKAGE = PKG.parents[1]  # osm_to_netex_spark

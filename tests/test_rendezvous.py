@@ -1,6 +1,7 @@
 """HRW sharding: minimal movement on shard add/remove, balance, order
 independence."""
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import sampling
 
 
@@ -8,7 +9,7 @@ def _assign(spark, shards, n=600):
     spark.range(n).selectExpr("id as doc_id").createOrReplaceTempView("hrw_t")
     return {
         r["doc_id"]: r["shard"]
-        for r in sampling.rendezvous_assign(spark, shards, table="hrw_t").collect()
+        for r in spark.sql(sampling.rendezvous_sql(SPARK, shards, table="hrw_t")).collect()
     }
 
 

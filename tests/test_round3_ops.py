@@ -83,7 +83,7 @@ def test_cusum_closed_form_equals_recursion(spark):
     ev.createOrReplaceTempView("events")
     got = {
         (int(r["user_id"]), int(r["event_id"])): (int(r["cusum_q"]), bool(r["alarm"]))
-        for r in temporal.cusum(spark).collect()
+        for r in spark.sql(temporal.cusum_sql(SPARK)).collect()
     }
     rows = ev.select("user_id", "event_id", "ts", "value").collect()
     by_user = defaultdict(list)
@@ -194,7 +194,7 @@ def test_kanon_ladder_minimal_level(spark):
     k = 5
     got = {
         int(r["c_custkey"]): (int(r["anon_level"]), int(r["class_size"]))
-        for r in curation.kanon_ladder(spark, k=k).collect()
+        for r in spark.sql(curation.kanon_ladder_sql(SPARK, k=k)).collect()
     }
     rows = cust.select("c_custkey", "c_nationkey", "c_acctbal").collect()
     qs = [
@@ -531,7 +531,7 @@ def test_turn_points_angle_threshold(spark):
 
     got = {
         (int(r["user_id"]), int(r["event_id"])): (int(r["dot_q"]), int(r["a2"]), int(r["b2"]))
-        for r in TRAJECTORY.q_turn_points(spark, SF).collect()
+        for r in TRAJECTORY.QUERIES["turn_points"][0](spark, SF).collect()
     }
     ev = spark.read.parquet(f"{SF}/events.parquet").collect()
 
@@ -594,7 +594,7 @@ def test_locate_along_endpoints_and_monotone(spark):
     degenerates to the midpoint."""
     from osm_to_netex_spark.plans.queries import spatial as SPATIAL
 
-    rows = SPATIAL.q_locate_along(spark, SF).collect()
+    rows = SPATIAL.QUERIES["locate_along"][0](spark, SF).collect()
     assert len(rows) == 30  # 10 zones x 3 fractions
     polys = {r["zone_id"]: list(r["pos_list"]) for r in spark.table("geo_polys").collect()}
     by_zone = defaultdict(dict)
@@ -784,7 +784,7 @@ def test_zorder_ranges_cover_exactly(spark):
     from osm_to_netex_spark.sources import layout
 
     ranges = defaultdict(list)
-    for r in SPATIAL.q_zorder_ranges(spark, SF).collect():
+    for r in SPATIAL.QUERIES["zorder_ranges"][0](spark, SF).collect():
         ranges[r["zone_id"]].append((int(r["z_lo"]), int(r["z_hi"]), int(r["n_cells"])))
     ix, iy = geo.quad_unpack("cell", 9, "spark")
     keys = defaultdict(set)
@@ -1261,7 +1261,7 @@ def test_skew_report_python_replay(spark):
     from osm_to_netex_spark.plans.queries import spatial as SPATIAL
     from osm_to_netex_spark.functions import geo
 
-    r = SPATIAL.q_skew_report(spark, SF).collect()[0]
+    r = SPATIAL.QUERIES["skew_report"][0](spark, SF).collect()[0]
     cells = Counter(
         int(x["c"])
         for x in spark.sql(

@@ -11,11 +11,7 @@ from collections import Counter, defaultdict
 import pytest
 
 from osm_to_netex_spark.plans import queries as Q
-from osm_to_netex_spark.plans.queries import (
-    corpus as CORPUS,
-    spatial as SPATIAL,
-    trajectory as TRAJECTORY,
-)
+from osm_to_netex_spark.plans.queries import corpus as CORPUS, spatial as SPATIAL
 from tests.support import SF, SF0_01
 
 # some tests replace the memoized `documents`/`events` temp views with tiny
@@ -320,7 +316,6 @@ def test_f_function_matches_python_replay(spark):
 
 def test_radius_gyration_matches_python_replay(spark):
     CORPUS.register_geometry_views(spark, SF)
-    spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
         fixes[int(r["traj_id"])].append((r["lat"], r["lon"]))
@@ -346,7 +341,6 @@ def test_radius_gyration_matches_python_replay(spark):
 
 def test_bearing_stats_matches_python_replay(spark):
     CORPUS.register_geometry_views(spark, SF)
-    spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
         fixes[int(r["traj_id"])].append((int(r["step"]), r["lat"], r["lon"]))
@@ -524,7 +518,6 @@ def _edr_python(A, B, eps_mm):
 
 def test_edr_join_matches_python_replay(spark):
     CORPUS.register_geometry_views(spark, SF0_01)
-    spark.sql(f"create or replace temp view geo_traj as {TRAJECTORY.traj_sql('spark')}")
     fixes = defaultdict(list)
     for r in spark.table("geo_traj").collect():
         fixes[int(r["traj_id"])].append((int(r["step"]), r["lat"], r["lon"]))
@@ -957,7 +950,7 @@ def test_zonal_majority_is_modal_band(spark):
     from osm_to_netex_spark.plans.queries.terrain import _raster_cte, _zonal_majority_sql
 
     full = spark.sql(
-        "with " + _zonal_majority_sql("spark").replace(
+        _zonal_majority_sql("spark").replace(
             "where rn = 1", "where rn >= 1"
         )
     ).collect()

@@ -40,11 +40,13 @@ def test_od_matrix_suppression(spark):
     rows += [(9, 0, 5.0, 5.0), (9, 1, 6.0, 6.0)]
     spark.createDataFrame(
         rows, ["traj_id", "step", "lat", "lon"]
-    ).createOrReplaceTempView("geo_traj")
+    ).createOrReplaceTempView("od_traj")
     try:
-        out = spark.sql(trajectory.od_matrix_sql(SPARK, res=10, k_anon=2)).collect()
+        out = spark.sql(
+            trajectory.od_matrix_sql(SPARK, res=10, k_anon=2, traj_table="od_traj")
+        ).collect()
     finally:
-        spark.catalog.dropTempView("geo_traj")
+        spark.catalog.dropTempView("od_traj")
     got = {(r.o_cell, r.d_cell): r.n_trips for r in out}
     sup = got.pop((-1, -1))
     assert sup == 1

@@ -3,6 +3,7 @@
 import pyspark.sql.functions as F
 import pytest
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import sampling
 
 
@@ -28,9 +29,9 @@ def _shares(df):
 
 
 def test_flattens_toward_uniform(spark, skewed):
-    out = sampling.temperature_mix(
-        spark, temperature=2.0, target_frac=0.4, table="mixdocs"
-    )
+    out = spark.sql(sampling.temperature_mix_sql(
+        SPARK, 2.0, 0.4, table="mixdocs"
+    ))
     before = _shares(skewed)
     after = _shares(out)
     # the dominant source's share shrinks, the rare source's share grows
@@ -39,9 +40,9 @@ def test_flattens_toward_uniform(spark, skewed):
 
 
 def test_target_size_approximate(spark, skewed):
-    out = sampling.temperature_mix(
-        spark, temperature=2.0, target_frac=0.4, table="mixdocs"
-    )
+    out = spark.sql(sampling.temperature_mix_sql(
+        SPARK, 2.0, 0.4, table="mixdocs"
+    ))
     n = out.count()
     # rare sources cap at rate 1; the realized size is near but at most
     # loosely around the target — assert the sane envelope
@@ -49,9 +50,9 @@ def test_target_size_approximate(spark, skewed):
 
 
 def test_t1_keeps_proportions(spark, skewed):
-    out = sampling.temperature_mix(
-        spark, temperature=1.0, target_frac=0.5, table="mixdocs"
-    )
+    out = spark.sql(sampling.temperature_mix_sql(
+        SPARK, 1.0, 0.5, table="mixdocs"
+    ))
     before = _shares(skewed)
     after = _shares(out)
     for s in before:
@@ -61,15 +62,15 @@ def test_t1_keeps_proportions(spark, skewed):
 def test_deterministic_and_partition_invariant(spark, skewed):
     a = sorted(
         tuple(r)
-        for r in sampling.temperature_mix(
-            spark, temperature=2.0, target_frac=0.4, table="mixdocs"
-        ).collect()
+        for r in spark.sql(sampling.temperature_mix_sql(
+            SPARK, 2.0, 0.4, table="mixdocs"
+        )).collect()
     )
     skewed.repartition(9).createOrReplaceTempView("mixdocs2")
     b = sorted(
         tuple(r)
-        for r in sampling.temperature_mix(
-            spark, temperature=2.0, target_frac=0.4, table="mixdocs2"
-        ).collect()
+        for r in spark.sql(sampling.temperature_mix_sql(
+            SPARK, 2.0, 0.4, table="mixdocs2"
+        )).collect()
     )
     assert a == b and len(a) > 0

@@ -14,7 +14,8 @@ bench (VERDICT r3 "What's wrong" #1/#2).
 Budget: warn when a query exceeds BUDGET seconds (15 s — generous; the
 production median at sf0.1 is <1 s) and exit nonzero so CI/recipe checks
 fail loudly.  Runs on every CPU of the affinity mask; use `taskset` to
-run on fewer.
+run on fewer.  Each query's name is printed, flushed, before it is timed,
+so a run that stalls names the stalled query.
 """
 
 from __future__ import annotations
@@ -44,18 +45,19 @@ def main() -> int:
     over: list[str] = []
     for name in names:
         if name not in Q.QUERIES and name not in Q.ROWS_ONLY:
-            print(f"{name:26s} UNKNOWN (not in registry)")
+            print(f"{name:26s} UNKNOWN (not in registry)", flush=True)
             over.append(name)
             continue
         builder = Q.QUERIES[name][0] if name in Q.QUERIES else Q.ROWS_ONLY[name]
+        print(f"{name:26s} ...", flush=True)
         dt = round(time_query(spark, builder, sf_dir), 3)
         timings[name] = dt
         flag = "  OVER-BUDGET" if dt > BUDGET else ""
-        print(f"{name:26s} {dt:8.3f} s{flag}")
+        print(f"{name:26s} {dt:8.3f} s{flag}", flush=True)
         if dt > BUDGET:
             over.append(name)
     spark.stop()
-    print(json.dumps({"sf_dir": sf_dir, "budget_s": BUDGET, "timings": timings}))
+    print(json.dumps({"sf_dir": sf_dir, "budget_s": BUDGET, "timings": timings}), flush=True)
     return 1 if over else 0
 
 
