@@ -24,9 +24,9 @@ temporal surface at all; this is engine-side (SURVEY §2.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from ..functions.portable import DUCK, SPARK, concat_str, flit, haversine_m, prand
+from ..functions.portable import DUCK, SPARK, flit, haversine_m
 
 
 def _ep(d: str):
@@ -37,21 +37,10 @@ def _ep(d: str):
     return lambda c: f"epoch({c})"
 
 
-def trip_stats_sql(
-    d: str,
-    events_table: str = "events",
-    gap_s: float = 1800.0,
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-) -> str:
+def trip_stats_sql(d: str, fixes: str, gap_s: float = 1800.0) -> str:
     """(user_id, trip, n_points, duration_s, path_m, displacement_m,
-    sinuosity) — trips are 1-based per user in time order.
-
-    Coordinates are synthesized deterministically from event_id (portable
-    hash into ``bbox``) so the same SQL is a complete, engine-independent
-    workload; swap the ``pts`` CTE for a real (user, ts, lat, lon) stream."""
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
-    plat = prand(concat_str(["'tr:lat:'", "event_id"], d), d)
-    plon = prand(concat_str(["'tr:lon:'", "event_id"], d), d)
+    sinuosity) of the fixes (user_id, event_id, ts, lat, lon) in relation
+    ``fixes`` — trips are 1-based per user in time order."""
     ep = _ep(d)
     gap = f"{ep('ts')} - {ep('lag(ts) over w')}"
     leg = haversine_m(
@@ -75,10 +64,7 @@ def trip_stats_sql(
     disp = haversine_m("f0.lat", "f0.lon", "l0.lat", "l0.lon", d)
     return f"""
         with pts as (
-            select user_id, event_id, ts,
-                   {flit(lat_lo)} + {plat} * {flit(lat_hi - lat_lo)} as lat,
-                   {flit(lon_lo)} + {plon} * {flit(lon_hi - lon_lo)} as lon
-            from {events_table}
+            select user_id, event_id, ts, lat, lon from {fixes}
         ),
         flagged as (
             select user_id, event_id, ts, lat, lon,
@@ -111,22 +97,12 @@ def trip_stats_sql(
         from agg"""
 
 
-def trip_stats(
-    spark: SparkSession, events: DataFrame, gap_s: float = 1800.0
-) -> DataFrame:
-    events.createOrReplaceTempView("__traj_events")
-    return spark.sql(trip_stats_sql(SPARK, "__traj_events", gap_s))
-
-
 def stay_points_sql(
     d: str,
-    events_table: str = "events",
+    fixes: str,
     radius_m: float = 50.0,
     min_duration_s: float = 86400.0,
     min_points: int = 3,
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-    dwell_len: int = 6,
-    synthesize: bool = True,
 ) -> str:
     """Stay-point (stop/move segmentation) detection — the mobility primitive
     between raw fixes and trips (Li et al. 2008, "Mining user similarity
@@ -142,56 +118,24 @@ def stay_points_sql(
       (break flag + running sum, ONE window partition per user);
     * centroids fold as bigint 1e-9-degree units (order-free integer sums),
       one double division at the end — partition-invariant like every other
-      float fold in the engine;
-    * fixes are synthesized deterministically from events: each user's
-      timeline is cut into ``dwell_len``-fix phases, each phase anchored at a
-      hash-keyed point in ``bbox`` with ±1e-4 deg jitter (~±11 m) — so
-      intra-phase legs are ≤ ~25 m (well under radius_m) and inter-phase
-      jumps are km-scale (well over), keeping the threshold off the
-      haversine last-ulp boundary (see haversine_m's libm-vs-java caveat).
+      float fold in the engine.
 
-    Output: (user_id, stop_seq, n_points, duration_s, clat, clon,
-    start_eps, end_eps), stop_seq 1-based per user in time order.
+    Input: the fixes (user_id, event_id, ts, lat, lon) in relation
+    ``fixes``.  Output: (user_id, stop_seq, n_points, duration_s, clat,
+    clon, start_eps, end_eps), stop_seq 1-based per user in time order.
 
     Scale shape: one shuffle on user_id for the windows, one map-side
     combined groupBy (user, run); the renumber window runs over the
     aggregated stop table (≪ corpus). The reference has no temporal or
     mobility surface; this is engine-side (SURVEY §2.3).
     """
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
     ep = _ep(d)
-    idiv = "div" if d == SPARK else "//"
-    anchor_key_lat = concat_str(["'sp:alat:'", "user_id", "':'", "bucket"], d)
-    anchor_key_lon = concat_str(["'sp:alon:'", "user_id", "':'", "bucket"], d)
-    jit_lat = prand(concat_str(["'sp:jlat:'", "event_id"], d), d)
-    jit_lon = prand(concat_str(["'sp:jlon:'", "event_id"], d), d)
     leg = haversine_m("lag(lat) over w", "lag(lon) over w", "lat", "lon", d)
     q = "cast(round({} * 1.0e9) as bigint)"
-    if synthesize:
-        pts_ctes = f"""
-        seqd as (
-            select user_id, event_id, ts,
-                   (row_number() over (partition by user_id
-                                       order by ts asc, event_id asc) - 1)
-                       {idiv} {dwell_len} as bucket
-            from {events_table}
-        ),
-        pts as (
-            select user_id, event_id, ts,
-                   {flit(lat_lo)} + {prand(anchor_key_lat, d)} * {flit(lat_hi - lat_lo)}
-                       + ({jit_lat} - 0.5e0) * 2.0e-4 as lat,
-                   {flit(lon_lo)} + {prand(anchor_key_lon, d)} * {flit(lon_hi - lon_lo)}
-                       + ({jit_lon} - 0.5e0) * 2.0e-4 as lon
-            from seqd
-        )"""
-    else:
-        # the table already carries real fixes (user_id, event_id, ts, lat, lon)
-        pts_ctes = f"""
-        pts as (
-            select user_id, event_id, ts, lat, lon from {events_table}
-        )"""
     return f"""
-        with {pts_ctes},
+        with pts as (
+            select user_id, event_id, ts, lat, lon from {fixes}
+        ),
         flagged as (
             select user_id, event_id, ts, lat, lon, {ep('ts')} as eps,
                    case when ({leg}) is null or ({leg}) > {flit(radius_m)}
@@ -230,29 +174,6 @@ def stay_points_sql(
                n_points, duration_s, clat, clon, start_eps, end_eps
         from stops
     """
-
-
-def stay_points(
-    spark: SparkSession,
-    events: DataFrame,
-    radius_m: float = 50.0,
-    min_duration_s: float = 86400.0,
-    min_points: int = 3,
-    synthesize: bool = True,
-) -> DataFrame:
-    """``synthesize=False`` expects real fixes (user_id, event_id, ts, lat,
-    lon); ``True`` derives deterministic fixes from an events timeline."""
-    events.createOrReplaceTempView("__stay_events")
-    return spark.sql(
-        stay_points_sql(
-            SPARK,
-            "__stay_events",
-            radius_m=radius_m,
-            min_duration_s=min_duration_s,
-            min_points=min_points,
-            synthesize=synthesize,
-        )
-    )
 
 
 def od_matrix_sql(d: str, res: int = 10, k_anon: int = 2, traj_table: str = "geo_traj") -> str:
@@ -302,14 +223,10 @@ def od_matrix_sql(d: str, res: int = 10, k_anon: int = 2, traj_table: str = "geo
 
 def encounters_sql(
     d: str,
-    events_table: str = "events",
+    fixes: str,
     radius_m: float = 100.0,
     tau_s: float = 1800.0,
     res: int = 15,
-    n_venues: int = 24,
-    phase_s: float = 21600.0,
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-    synthesize: bool = True,
 ) -> str:
     """Space-time co-location (encounter) join — pairs of DISTINCT users
     with fixes within ``radius_m`` meters AND ``tau_s`` seconds of each
@@ -326,14 +243,8 @@ def encounters_sql(
     exactly once (strict user_a < user_b; the build side keeps its single
     true (cell, bucket)).
 
-    Fixture (``synthesize=True``): users dwell at hash-chosen venues —
-    vid = phash60(user, 6h-phase) mod ``n_venues``, position = venue
-    anchor ± ~28 m jitter — so same-venue-same-phase users genuinely
-    encounter and cross-venue fixes are km apart, keeping both thresholds
-    far from float boundaries.  ``synthesize=False`` expects real fixes
-    (user_id, event_id, ts, lat, lon).
-
-    Output: (user_a, user_b, n_encounters, first_eps, last_eps).
+    Input: the fixes (user_id, event_id, ts, lat, lon) in relation
+    ``fixes``.  Output: (user_a, user_b, n_encounters, first_eps, last_eps).
 
     Scale shape: scan-parallel 27× fan-out on the probe side only, one
     shuffle each side keyed (cell, bucket) — dense-venue skew is an AQE
@@ -342,41 +253,8 @@ def encounters_sql(
     (SURVEY §2.3).
     """
     from ..functions import geo
-    from ..functions.portable import phash60
 
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
     ep = _ep(d)
-    vid_key = concat_str(["'enc:v:'", "user_id", "':'", "phase"], d)
-    vlat = prand(concat_str(["'enc:vlat:'", "vid"], d), d)
-    vlon = prand(concat_str(["'enc:vlon:'", "vid"], d), d)
-    jla = prand(concat_str(["'enc:jla:'", "event_id"], d), d)
-    jlo = prand(concat_str(["'enc:jlo:'", "event_id"], d), d)
-    if synthesize:
-        fixes_ctes = f"""
-        ev as (
-            select user_id, event_id, {ep('ts')} as eps,
-                   cast(floor({ep('ts')} / {flit(phase_s)}) as bigint) as phase
-            from {events_table}
-        ),
-        vn as (
-            select user_id, event_id, eps,
-                   {phash60(vid_key, d)} % {int(n_venues)} as vid
-            from ev
-        ),
-        fixes as (
-            select user_id, event_id, eps,
-                   {flit(lat_lo)} + {vlat} * {flit(lat_hi - lat_lo)}
-                       + ({jla} - 0.5e0) * 5.0e-4 as lat,
-                   {flit(lon_lo)} + {vlon} * {flit(lon_hi - lon_lo)}
-                       + ({jlo} - 0.5e0) * 5.0e-4 as lon
-            from vn
-        )"""
-    else:
-        fixes_ctes = f"""
-        fixes as (
-            select user_id, event_id, {ep('ts')} as eps, lat, lon
-            from {events_table}
-        )"""
     cell = geo.quad_cell("lat", "lon", res, d)
     kring = geo.quad_kring("cell", res, 1, d)
     hav = haversine_m("a.lat", "a.lon", "b.lat", "b.lon", d)
@@ -395,7 +273,9 @@ def encounters_sql(
         )
         cand_from = "from expanded, unnest(jkeys) t(j)"
     return f"""
-        with {fixes_ctes},
+        with fixes as (
+            select user_id, event_id, {ep('ts')} as eps, lat, lon from {fixes}
+        ),
         cells as (
             select user_id, event_id, eps, lat, lon,
                    {cell} as cell,
@@ -427,36 +307,7 @@ def encounters_sql(
     """
 
 
-def encounters(
-    spark: SparkSession,
-    events: DataFrame,
-    radius_m: float = 100.0,
-    tau_s: float = 1800.0,
-    res: int = 15,
-    synthesize: bool = True,
-) -> DataFrame:
-    """DataFrame wrapper for :func:`encounters_sql` (Spark dialect)."""
-    events.createOrReplaceTempView("__enc_events")
-    return spark.sql(
-        encounters_sql(
-            SPARK,
-            "__enc_events",
-            radius_m=radius_m,
-            tau_s=tau_s,
-            res=res,
-            synthesize=synthesize,
-        )
-    )
-
-
-def speed_filter_sql(
-    d: str,
-    events_table: str = "events",
-    vmax_ms: float = 40.0,
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-    teleport_mod: int = 7,
-    synthesize: bool = True,
-) -> str:
+def speed_filter_sql(d: str, fixes: str, vmax_ms: float = 40.0) -> str:
     """GPS spike (teleport) filter — the standard trajectory-cleaning pass
     before any mobility analytics: a fix is an outlier iff EVERY available
     adjacent leg implies speed > ``vmax_ms`` (interior fixes need both legs
@@ -468,51 +319,22 @@ def speed_filter_sql(
     frame), speeds = haversine leg / Δt with Δt=0 guarded to null, and
     null-speed legs count as exceeding (missing evidence can't save a fix
     that the other leg convicts) — all decisions are boolean comparisons,
-    so the gate is exact as long as speeds stay off the threshold (the
-    fixture's jitter legs are ~0.1 m/s and its teleports ~300+ m/s).
+    so the gate is exact as long as speeds stay off the threshold.
 
-    Fixture (``synthesize=True``): each user random-walks ±28 m around a
-    per-user anchor at their real event times, except every fix whose
-    60-bit hash ≡ 0 (mod ``teleport_mod``) teleports ~1° north — a classic
-    spike that must be flagged while its neighbors survive.
-    ``synthesize=False`` expects (user_id, event_id, ts, lat, lon).
-
-    Output: (user_id, event_id, eps, is_outlier).  Scale shape: one shuffle
-    on user_id, one window, zero joins.  Engine-side (SURVEY §2.3).
+    Input: the fixes (user_id, event_id, ts, lat, lon) in relation
+    ``fixes``.  Output: (user_id, event_id, eps, is_outlier).  Scale
+    shape: one shuffle on user_id, one window, zero joins.  Engine-side
+    (SURVEY §2.3).
     """
-    from ..functions.portable import phash60
-
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
     ep = _ep(d)
-    if synthesize:
-        alat = prand(concat_str(["'spd:alat:'", "user_id"], d), d)
-        alon = prand(concat_str(["'spd:alon:'", "user_id"], d), d)
-        jla = prand(concat_str(["'spd:jla:'", "event_id"], d), d)
-        jlo = prand(concat_str(["'spd:jlo:'", "event_id"], d), d)
-        tp_key = concat_str(["'spd:tp:'", "event_id"], d)
-        tele = f"({phash60(tp_key, d)} % {int(teleport_mod)} = 0)"
-        fixes_cte = f"""
-        fixes as (
-            select user_id, event_id, {ep('ts')} as eps,
-                   {flit(lat_lo)} + {alat} * {flit(lat_hi - lat_lo)}
-                       + ({jla} - 0.5e0) * 5.0e-4
-                       + case when {tele} then 1.0e0 else 0.0e0 end as lat,
-                   {flit(lon_lo)} + {alon} * {flit(lon_hi - lon_lo)}
-                       + ({jlo} - 0.5e0) * 5.0e-4 as lon
-            from {events_table}
-        )"""
-    else:
-        fixes_cte = f"""
-        fixes as (
-            select user_id, event_id, {ep('ts')} as eps, lat, lon
-            from {events_table}
-        )"""
     leg_prev = haversine_m("lag(lat) over w", "lag(lon) over w", "lat", "lon", d)
     leg_next = haversine_m("lat", "lon", "lead(lat) over w", "lead(lon) over w", d)
     sp_prev = f"(({leg_prev}) / nullif(eps - (lag(eps) over w), 0.0e0))"
     sp_next = f"(({leg_next}) / nullif((lead(eps) over w) - eps, 0.0e0))"
     return f"""
-        with {fixes_cte},
+        with fixes as (
+            select user_id, event_id, {ep('ts')} as eps, lat, lon from {fixes}
+        ),
         sp as (
             select user_id, event_id, eps,
                    {sp_prev} as sp_prev, {sp_next} as sp_next,
@@ -527,21 +349,6 @@ def speed_filter_sql(
                end as is_outlier
         from sp
     """
-
-
-def speed_filter(
-    spark: SparkSession,
-    events: DataFrame,
-    vmax_ms: float = 40.0,
-    synthesize: bool = True,
-) -> DataFrame:
-    """DataFrame wrapper for :func:`speed_filter_sql` (Spark dialect)."""
-    events.createOrReplaceTempView("__spd_events")
-    return spark.sql(
-        speed_filter_sql(
-            SPARK, "__spd_events", vmax_ms=vmax_ms, synthesize=synthesize
-        )
-    )
 
 
 def geofence_events(
@@ -595,14 +402,13 @@ def geofence_events(
         .groupBy("user_id", "event_id", "eps")
         .agg(F.min(F.when(F.expr(inside), F.col("zone_id"))).alias("zone"))
     )
-    seq.createOrReplaceTempView("__gf_seq")
     return fixes.sparkSession.sql(
         """
         with win as (
             select user_id, event_id, eps, zone,
                    lag(zone) over w as prev_zone,
                    row_number() over w as rn
-            from __gf_seq
+            from {seq}
             window w as (partition by user_id order by eps asc, event_id asc)
         )
         select user_id, event_id, round(eps, 6) as eps,
@@ -614,7 +420,8 @@ def geofence_events(
         from win
         where (rn = 1 and zone is not null)
            or (rn > 1 and not (zone <=> prev_zone))
-        """
+        """,
+        seq=seq,
     )
 
 
@@ -656,13 +463,7 @@ def geofence_events_oracle_sql(
     """
 
 
-def geometric_median_sql(
-    d: str,
-    events_table: str = "events",
-    k_iters: int = 5,
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-    synthesize: bool = True,
-) -> str:
+def geometric_median_sql(d: str, fixes: str, k_iters: int = 5) -> str:
     """Per-user geometric median (Weiszfeld 1937) — the robust "home
     location" estimator: unlike the centroid, one teleport outlier barely
     moves it.  ``k_iters`` fixed-point rounds, UNROLLED as chained
@@ -677,7 +478,8 @@ def geometric_median_sql(
     DuckDB and the gate is exact.  Zero-distance fixes are smoothed with a
     1e-9-degree floor (standard Weiszfeld regularization).
 
-    Output: (user_id, n_fixes, mlat, mlon).  Scale shape: ONE shuffle
+    Input: the fixes (user_id, event_id, ts, lat, lon) in relation
+    ``fixes``.  Output: (user_id, n_fixes, mlat, mlon).  Scale shape: ONE shuffle
     (groupBy user collecting the fix arrays, map-side combined); all
     iterations are per-row expressions over the arrays — no joins, no
     driver loop, no per-iteration jobs.  Per-user state is that user's
@@ -685,19 +487,7 @@ def geometric_median_sql(
     """
     from ..functions.portable import reduce_, transform as tr
 
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
     COS0 = 0.5225  # fixed equirectangular lon scale, matches plans.queries
-    if synthesize:
-        plat = prand(concat_str(["'gm:lat:'", "event_id"], d), d)
-        plon = prand(concat_str(["'gm:lon:'", "event_id"], d), d)
-        fixes = (
-            f"select user_id, event_id, "
-            f"{flit(lat_lo)} + {plat} * {flit(lat_hi - lat_lo)} as lat, "
-            f"{flit(lon_lo)} + {plon} * {flit(lon_hi - lon_lo)} as lon "
-            f"from {events_table}"
-        )
-    else:
-        fixes = f"select user_id, event_id, lat, lon from {events_table}"
     if d == SPARK:
         las = "transform(array_sort(collect_list(struct(event_id as e, lat as v))), x -> x.v)"
         los = "transform(array_sort(collect_list(struct(event_id as e, lon as v))), x -> x.v)"
@@ -738,7 +528,7 @@ def geometric_median_sql(
         stages_sql += f", st{s} as (select *, {', '.join(cols)} from {prev})\n"
         prev = f"st{s}"
     return f"""
-        with fixes as ({fixes}),
+        with fixes as (select user_id, event_id, lat, lon from {fixes}),
         agg as (
             select user_id, cast(count(*) as bigint) as n,
                    {las} as las, {los} as los,
@@ -758,28 +548,7 @@ def geometric_median_sql(
     """
 
 
-def geometric_median(
-    spark: SparkSession,
-    events: DataFrame,
-    k_iters: int = 5,
-    synthesize: bool = True,
-) -> DataFrame:
-    """DataFrame wrapper for :func:`geometric_median_sql` (Spark dialect)."""
-    events.createOrReplaceTempView("__gm_events")
-    return spark.sql(
-        geometric_median_sql(
-            SPARK, "__gm_events", k_iters=k_iters, synthesize=synthesize
-        )
-    )
-
-
-def resample_track_sql(
-    d: str,
-    events_table: str = "events",
-    step_s: int = 21600,
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-    synthesize: bool = True,
-) -> str:
+def resample_track_sql(d: str, fixes: str, step_s: int = 21600) -> str:
     """Fixed-interval trajectory resampling — the time-normalization pass
     every mobility pipeline runs before comparing tracks (irregular GPS
     fixes → one position per grid tick): for each consecutive fix pair
@@ -796,12 +565,12 @@ def resample_track_sql(
     fixes contribute no window (t1 > t0 filter) and can never divide by
     zero.
 
-    Output: (user_id, tick, gts, rlat, rlon) where gts = tick·step epoch
+    Input: the fixes (user_id, event_id, ts, lat, lon) in relation
+    ``fixes``.  Output: (user_id, tick, gts, rlat, rlon) where gts = tick·step epoch
     seconds.  Scale shape: ONE shuffle (the per-user lead window); the
     grid explode is scan-parallel, zero joins; per-key state is one fix
     pair, never a whole track.  Engine-side (SURVEY §2.3).
     """
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
     step_us = int(step_s) * 1_000_000
     if d == SPARK:
         tus = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', ts)"
@@ -809,20 +578,6 @@ def resample_track_sql(
     else:
         tus = "epoch_us(ts)"
         idiv = lambda a: f"({a} // {step_us})"
-    if synthesize:
-        plat = prand(concat_str(["'rs:lat:'", "event_id"], d), d)
-        plon = prand(concat_str(["'rs:lon:'", "event_id"], d), d)
-        fixes = (
-            f"select user_id, event_id, {tus} as tus, "
-            f"{flit(lat_lo)} + {plat} * {flit(lat_hi - lat_lo)} as lat, "
-            f"{flit(lon_lo)} + {plon} * {flit(lon_hi - lon_lo)} as lon "
-            f"from {events_table}"
-        )
-    else:
-        fixes = (
-            f"select user_id, event_id, {tus} as tus, lat, lon "
-            f"from {events_table}"
-        )
     frac = f"(cast(k * {step_us} - t0 as double) / cast(t1 - t0 as double))"
     if d == SPARK:
         grid_src = (
@@ -836,7 +591,9 @@ def resample_track_sql(
             "where k_lo <= k_hi"
         )
     return f"""
-        with fixes as ({fixes}),
+        with fixes as (
+            select user_id, event_id, {tus} as tus, lat, lon from {fixes}
+        ),
         seg as (
             select user_id, tus as t0, lead(tus) over w as t1,
                    lat as la0, lon as lo0,
@@ -854,19 +611,6 @@ def resample_track_sql(
         from grid
         where t1 > t0
     """
-
-
-def resample_track(
-    spark: SparkSession,
-    events: DataFrame,
-    step_s: int = 21600,
-    synthesize: bool = True,
-) -> DataFrame:
-    """DataFrame wrapper for :func:`resample_track_sql` (Spark dialect)."""
-    events.createOrReplaceTempView("__rs_events")
-    return spark.sql(
-        resample_track_sql(SPARK, "__rs_events", step_s=step_s, synthesize=synthesize)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1028,13 +772,9 @@ def gravity_ipf_sql(
 # ---------------------------------------------------------------------------
 # turn-point detection (heading-change corners, trig-free)
 # ---------------------------------------------------------------------------
-def turn_points_sql(
-    d: str,
-    events_table: str = "events",
-    bbox: tuple[float, float, float, float] = (59.4, 9.6, 60.2, 10.6),
-    coslat: float = 0.5225,
-) -> str:
-    """Corners in each user's track: points where the heading change
+def turn_points_sql(d: str, fixes: str, coslat: float = 0.5225) -> str:
+    """Corners in each user's track of fixes (user_id, event_id, ts, lat,
+    lon) in relation ``fixes``: points where the heading change
     between the incoming and outgoing leg exceeds 45° — the maneuver /
     route-decision extractor map-matching and compression both feed on.
 
@@ -1043,22 +783,16 @@ def turn_points_sql(
     integer vectors, and the 45° test is the integer comparison
     ``dot < 0 OR 2·dot² < |a|²·|b|²`` — no acos, no floats, immune to
     engine libm differences.  Degenerate (zero-length) legs are excluded.
-    Magnitude bound: |delta| ≤ ~1.3e4 units inside the bbox ⇒ dot² ≤ 1.2e17
-    < 2^63.
+    Magnitude bound: |delta| ≤ ~1.3e4 units for fixes inside a 1° box ⇒
+    dot² ≤ 1.2e17 < 2^63.
 
     Scale: one window (lag/lead) over ONE per-user sort — the sessionize
     shape; the corner test is a scan-parallel projection."""
-    lat_lo, lon_lo, lat_hi, lon_hi = bbox
-    plat = prand(concat_str(["'tr:lat:'", "event_id"], d), d)
-    plon = prand(concat_str(["'tr:lon:'", "event_id"], d), d)
     xq = f"cast(floor((lon * {coslat!r}e0) * 1.0e4 + 0.5e0) as bigint)"
     yq = "cast(floor(lat * 1.0e4 + 0.5e0) as bigint)"
     return f"""
         with pts as (
-            select user_id, event_id, ts,
-                   {flit(lat_lo)} + {plat} * {flit(lat_hi - lat_lo)} as lat,
-                   {flit(lon_lo)} + {plon} * {flit(lon_hi - lon_lo)} as lon
-            from {events_table}
+            select user_id, event_id, ts, lat, lon from {fixes}
         ),
         q as (
             select user_id, event_id, ts, {xq} as x, {yq} as y from pts
@@ -1086,8 +820,3 @@ def turn_points_sql(
         where a2 > 0 and b2 > 0
           and (dotq < 0 or 2 * dotq * dotq < a2 * b2)"""
 
-
-def turn_points(spark: SparkSession, events: DataFrame) -> DataFrame:
-    """Engine entry for turn_points_sql (see there)."""
-    events.createOrReplaceTempView("__turn_events")
-    return spark.sql(turn_points_sql(SPARK, "__turn_events"))

@@ -22,6 +22,11 @@ from ...functions.portable import DUCK, SPARK, concat_str, flit, phash60
 from ...functions.stages import run_stages, stages_sql
 
 
+SF_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
 BBOX = (59.4, 60.2, 9.6, 10.6)
 LAT_LO, LAT_HI, LON_LO, LON_HI = BBOX
 DLAT, DLON = LAT_HI - LAT_LO, LON_HI - LON_LO
@@ -121,6 +126,21 @@ def traj_sql(d: str) -> str:
     )
 
 
+def event_fixes_sql(d: str, salt: str) -> str:
+    """The sf events with a GPS fix each (every events column, then lat,
+    lon): the events carry no coordinates, so each event gets one point
+    placed uniformly in BBOX by the hash of ``salt`` and its event_id.
+    Identical text in both dialects."""
+    la = _pr([f"'{salt}:lat:'", "event_id"], d)
+    lo = _pr([f"'{salt}:lon:'", "event_id"], d)
+    return (
+        f"select *, "
+        f"{flit(LAT_LO)} + {la} * {flit(DLAT)} as lat, "
+        f"{flit(LON_LO)} + {lo} * {flit(DLON)} as lon "
+        f"from events"
+    )
+
+
 def register_geometry_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the testdata tables + derived geometry (geo_points,
     geo_polys, geo_traj) as temp views.
@@ -131,10 +151,7 @@ def register_geometry_views(spark: SparkSession, sf_dir: str) -> None:
     object; a different sf_dir re-registers (views are replaced)."""
     if getattr(spark, "_graft_geo_views", None) == sf_dir:
         return
-    for name in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    for name in SF_TABLES:
         spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
     spark.sql(f"create or replace temp view geo_points as {points_sql(SPARK)}")
     spark.sql(f"create or replace temp view geo_polys as {polys_sql(SPARK)}")

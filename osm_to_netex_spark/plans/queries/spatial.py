@@ -10,8 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ...functions import geo
 from ...functions.portable import (
-    DUCK, SPARK, concat_str, flit, haversine_m, prand, round_half, seq,
-    transform as transform_,
+    DUCK, SPARK, flit, haversine_m, round_half, seq, transform as transform_,
 )
 from ...operators import (
     assemble, clustering, distjoin, graph, hull, overlap, pip, raster as R,
@@ -21,8 +20,8 @@ from ...operators.distjoin import _segments, seg_dist_m
 from ...operators.tiling import cover_cells
 from ...sources import layout
 from .corpus import (
-    COSLAT0, DLAT, DLON, LAT_HI, LAT_LO, LON_HI, LON_LO, _M_PER_DEG, _pr,
-    points_sql, polys_sql, register_geometry_views, sql_query, staged_query, with_fixtures,
+    COSLAT0, DLAT, DLON, LAT_LO, LON_LO, _M_PER_DEG, _pr, event_fixes_sql,
+    points_sql, register_geometry_views, sql_query, staged_query, with_fixtures,
 )
 
 
@@ -1993,6 +1992,12 @@ def _polyline_encode_sql(d: str) -> str:
     routes in, as a pure scan-parallel projection.
 
     Scale: zone-table-sized; zero joins, zero shuffles beyond the scan."""
+    return with_fixtures(_polylines_sql(d), d)
+
+
+def _polylines_sql(d: str) -> str:
+    """(zone_id, n_pts, polyline) over geo_polys, without the fixture
+    prefix: _polyline_roundtrip_sql reads it as a CTE of its own."""
     if d == SPARK:
         chunk = (
             "case when i = 0 or shiftright(v, 5*i) > 0 then "
@@ -2041,7 +2046,7 @@ def _polyline_encode_sql(d: str) -> str:
               select zone_id, pos_list,
                      list_transform(pos_list, x ->
                        cast(floor(x * 1.0e5 + 0.5e0) as bigint)) as qq
-              from ({polys_sql(DUCK)}) geo_polys)))"""
+              from geo_polys)))"""
 
 
 def _polyline_roundtrip_sql(d: str) -> str:
@@ -2054,7 +2059,6 @@ def _polyline_roundtrip_sql(d: str) -> str:
 
     Scale: string explode is ∝ encoded length over the zone DIMENSION;
     windows partition by zone; the corpus is never touched."""
-    enc = _polyline_encode_sql(d)
     if d == SPARK:
         chars = (
             "select zone_id, i, ascii(substring(polyline, i, 1)) - 63 as code "
@@ -2077,13 +2081,12 @@ def _polyline_roundtrip_sql(d: str) -> str:
         shift = "(cast(1 as bigint) << cast(5 * (i - min_i) as integer))"
         dv = "//"
         orig = (
-            f"select zone_id, cast((t.k - 1) as bigint) // 2 as pt, (t.k - 1) % 2 as axis, "
-            f"cast(floor(pos_list[t.k] * 1.0e5 + 0.5e0) as bigint) as q5 "
-            f"from ({polys_sql(DUCK)}) geo_polys, "
-            f"unnest(generate_series(1, len(pos_list))) t(k)"
+            "select zone_id, cast((t.k - 1) as bigint) // 2 as pt, (t.k - 1) % 2 as axis, "
+            "cast(floor(pos_list[t.k] * 1.0e5 + 0.5e0) as bigint) as q5 "
+            "from geo_polys, unnest(generate_series(1, len(pos_list))) t(k)"
         )
-    return f"""
-        with enc as ({enc}),
+    return with_fixtures(f"""
+        with enc as ({_polylines_sql(d)}),
         chars as ({chars}),
         grp as (
             select zone_id, i, code,
@@ -2120,7 +2123,7 @@ def _polyline_roundtrip_sql(d: str) -> str:
         )
         select zone_id, cast(count(*) as bigint) as n_vals,
                cast(max(err) as bigint) as max_abs_err
-        from joined group by zone_id"""
+        from joined group by zone_id""", d)
 
 
 # ---------------------------------------------------------------------------
@@ -2366,17 +2369,13 @@ _LQ_RES = 9
 
 def _cell_type_sql(d: str) -> str:
     """(cell, event_type, n) counts of events per res-9 cell — events
-    carry no coordinates, so position derives from the same deterministic
-    event_id hash the trajectory family uses (trip_stats convention)."""
-    plat = prand(concat_str(["'tr:lat:'", "cast(event_id as string)"], d), d)
-    plon = prand(concat_str(["'tr:lon:'", "cast(event_id as string)"], d), d)
-    lat = f"({LAT_LO!r}e0 + {plat} * {LAT_HI - LAT_LO!r}e0)"
-    lon = f"({LON_LO!r}e0 + {plon} * {LON_HI - LON_LO!r}e0)"
-    ix, iy = geo.quad_ixy(lat, lon, _LQ_RES, d)
+    carry no coordinates, so each is placed by the same event fixes the
+    trips query reads (``event_fixes_sql(d, 'tr')``)."""
+    ix, iy = geo.quad_ixy("lat", "lon", _LQ_RES, d)
     cell = geo.quad_pack(ix, iy, _LQ_RES)
     return (
         f"select {cell} as cell, event_type, "
-        f"cast(count(*) as bigint) as n from events "
+        f"cast(count(*) as bigint) as n from ({event_fixes_sql(d, 'tr')}) fx "
         f"group by {cell}, event_type"
     )
 

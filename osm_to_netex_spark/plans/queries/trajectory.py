@@ -8,53 +8,129 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ...functions import geo
-from ...functions.portable import DUCK, SPARK, concat_str, flit, haversine_m, prand
+from ...functions.portable import DUCK, SPARK, concat_str, flit, haversine_m, phash60
 from ...operators import clustering, mapmatch, pip, trajectory, trajsim
 from ...operators.trajectory import _ep
 from .corpus import (
-    COSLAT0, DLAT, DLON, LAT_LO, LON_LO, _MM_STEPS, _pr, points_sql,
+    COSLAT0, DLAT, DLON, LAT_LO, LON_LO, _MM_STEPS, _pr, event_fixes_sql,
     register_geometry_views, sql_query, traj_sql, with_fixtures,
 )
+
+# ---------------------------------------------------------------------------
+# GPS fixtures over the sf events (user_id, event_id, ts, lat, lon): the
+# events carry no coordinates, so each fixture places them by hash, shaped
+# for the operator it feeds; corpus.event_fixes_sql is the uniform one
+# ---------------------------------------------------------------------------
+_DWELL_LEN = 6  # fixes per dwell phase
+_N_VENUES = 24
+_VENUE_PHASE_S = 21600.0  # a user stays at one venue per 6-hour phase
+_TELEPORT_MOD = 7  # one fix in ~7 teleports
+
+
+def dwell_fixes_sql(d: str) -> str:
+    """Dwell-phase fixes: each user's timeline is cut into 6-fix phases,
+    each phase anchored at a hash-keyed point in BBOX with ±1e-4 deg
+    jitter (~±11 m) — so intra-phase legs are ≤ ~25 m (well under the
+    50 m stay radius) and inter-phase jumps are km-scale (well over),
+    keeping the threshold off the haversine last-ulp boundary (see
+    haversine_m's libm-vs-java caveat)."""
+    idiv = "div" if d == SPARK else "//"
+    alat = _pr(["'sp:alat:'", "user_id", "':'", "bucket"], d)
+    alon = _pr(["'sp:alon:'", "user_id", "':'", "bucket"], d)
+    jlat = _pr(["'sp:jlat:'", "event_id"], d)
+    jlon = _pr(["'sp:jlon:'", "event_id"], d)
+    return f"""
+        select user_id, event_id, ts,
+               {flit(LAT_LO)} + {alat} * {flit(DLAT)} + ({jlat} - 0.5e0) * 2.0e-4 as lat,
+               {flit(LON_LO)} + {alon} * {flit(DLON)} + ({jlon} - 0.5e0) * 2.0e-4 as lon
+        from (
+            select user_id, event_id, ts,
+                   (row_number() over (partition by user_id
+                                       order by ts asc, event_id asc) - 1)
+                       {idiv} {_DWELL_LEN} as bucket
+            from events
+        ) seqd"""
+
+
+def venue_fixes_sql(d: str) -> str:
+    """Venue fixes: users dwell at hash-chosen venues — vid =
+    phash60(user, 6h-phase) mod 24, position = venue anchor ± ~28 m jitter
+    — so same-venue-same-phase users genuinely encounter and cross-venue
+    fixes are km apart, keeping the 100 m / 30 min encounter thresholds
+    far from float boundaries."""
+    ep = _ep(d)
+    vid = phash60(concat_str(["'enc:v:'", "user_id", "':'", "phase"], d), d)
+    vlat = _pr(["'enc:vlat:'", "vid"], d)
+    vlon = _pr(["'enc:vlon:'", "vid"], d)
+    jla = _pr(["'enc:jla:'", "event_id"], d)
+    jlo = _pr(["'enc:jlo:'", "event_id"], d)
+    return f"""
+        select user_id, event_id, ts,
+               {flit(LAT_LO)} + {vlat} * {flit(DLAT)} + ({jla} - 0.5e0) * 5.0e-4 as lat,
+               {flit(LON_LO)} + {vlon} * {flit(DLON)} + ({jlo} - 0.5e0) * 5.0e-4 as lon
+        from (
+            select user_id, event_id, ts, {vid} % {_N_VENUES} as vid
+            from (
+                select user_id, event_id, ts,
+                       cast(floor({ep('ts')} / {flit(_VENUE_PHASE_S)}) as bigint) as phase
+                from events
+            ) ev
+        ) vn"""
+
+
+def teleport_fixes_sql(d: str) -> str:
+    """Teleport fixes: each user random-walks ±28 m around a per-user
+    anchor at their real event times, except every fix whose 60-bit hash
+    ≡ 0 (mod 7) teleports ~1° north — a classic spike the speed filter
+    must flag while its neighbors survive (jitter legs are ~0.1 m/s,
+    teleports ~300+ m/s, both far from the 40 m/s threshold)."""
+    alat = _pr(["'spd:alat:'", "user_id"], d)
+    alon = _pr(["'spd:alon:'", "user_id"], d)
+    jla = _pr(["'spd:jla:'", "event_id"], d)
+    jlo = _pr(["'spd:jlo:'", "event_id"], d)
+    tp = phash60(concat_str(["'spd:tp:'", "event_id"], d), d)
+    tele = f"({tp} % {_TELEPORT_MOD} = 0)"
+    return f"""
+        select user_id, event_id, ts,
+               {flit(LAT_LO)} + {alat} * {flit(DLAT)} + ({jla} - 0.5e0) * 5.0e-4
+                   + case when {tele} then 1.0e0 else 0.0e0 end as lat,
+               {flit(LON_LO)} + {alon} * {flit(DLON)} + ({jlo} - 0.5e0) * 5.0e-4 as lon
+        from events"""
 
 
 def _trips_sql(d: str) -> str:
     """Trajectory trip segmentation + movement stats (path via order-free
     sorted leg fold, endpoints via struct min/max)."""
-    return trajectory.trip_stats_sql(d, "events")
+    return trajectory.trip_stats_sql(d, f"({event_fixes_sql(d, 'tr')}) fx")
 
 
 def _stay_points_sql(d: str) -> str:
     """Stay-point detection (stop/move segmentation, Li et al. 2008 shape):
     distance-rule runs + duration/count gates, integer-fold centroids."""
-    return trajectory.stay_points_sql(d, "events")
+    return trajectory.stay_points_sql(d, f"({dwell_fixes_sql(d)}) fx")
 
 
 def _encounters_sql(d: str) -> str:
     """Space-time co-location join: user pairs within 100 m AND 30 min,
     pruned by (quad cell ring × time-bucket) equi join before exact
-    haversine/Δt verify (trajectory.encounters)."""
-    return trajectory.encounters_sql(d, "events")
+    haversine/Δt verify (trajectory.encounters_sql)."""
+    return trajectory.encounters_sql(d, f"({venue_fixes_sql(d)}) fx")
 
 
 def _speed_filter_sql(d: str) -> str:
     """GPS spike filter: a fix is an outlier iff every available adjacent
-    leg implies speed > 40 m/s; teleport-injecting fixture
-    (trajectory.speed_filter)."""
-    return trajectory.speed_filter_sql(d, "events")
+    leg implies speed > 40 m/s, over the teleport fixture
+    (trajectory.speed_filter_sql)."""
+    return trajectory.speed_filter_sql(d, f"({teleport_fixes_sql(d)}) fx")
 
 
-def gf_fixes_sql(d: str) -> str:
-    """Deterministic geofence fixes: one uniform hash-placed point per event
-    (zone coverage density is SF-constant by the polys fixture design, so
-    fixes flip in/out of zones constantly).  Identical text both dialects."""
-    plat = prand(concat_str(["'gf:lat:'", "event_id"], d), d)
-    plon = prand(concat_str(["'gf:lon:'", "event_id"], d), d)
-    ep = _ep(d)
+def _gf_fixes_sql(d: str) -> str:
+    """Geofence fixes (user_id, event_id, eps, lat, lon): one uniform
+    hash-placed point per event (zone coverage density is SF-constant by
+    the polys fixture design, so fixes flip in/out of zones constantly)."""
     return (
-        f"select user_id, event_id, {ep('ts')} as eps, "
-        f"{flit(LAT_LO)} + {plat} * {flit(DLAT)} as lat, "
-        f"{flit(LON_LO)} + {plon} * {flit(DLON)} as lon "
-        f"from events"
+        f"select user_id, event_id, {_ep(d)('ts')} as eps, lat, lon "
+        f"from ({event_fixes_sql(d, 'gf')}) fx"
     )
 
 
@@ -66,13 +142,13 @@ def q_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
     geofence_events); the oracle binds zones with a brute cross-join
     ray-cast — an independent spatial plan."""
     register_geometry_views(spark, sf_dir)
-    fixes = spark.sql(gf_fixes_sql(SPARK))
+    fixes = spark.sql(_gf_fixes_sql(SPARK))
     return trajectory.geofence_events(fixes, spark.table("geo_polys"), res=14)
 
 
 def q_geofence_oracle() -> str:
     return with_fixtures(
-        f"with gf_fixes as ({gf_fixes_sql(DUCK)}), "
+        f"with gf_fixes as ({_gf_fixes_sql(DUCK)}), "
         f"{trajectory.geofence_events_oracle_sql('gf_fixes', 'geo_polys')}",
         DUCK,
     )
@@ -154,15 +230,15 @@ def q_dtw_join_oracle() -> str:
 def _geometric_median_sql(d: str) -> str:
     """Per-user Weiszfeld geometric median, 5 unrolled rounds over the fix
     arrays in one shuffle; trig-free metric keeps every float op identical
-    across engines (trajectory.geometric_median)."""
-    return trajectory.geometric_median_sql(d, "events", k_iters=5)
+    across engines (trajectory.geometric_median_sql)."""
+    return trajectory.geometric_median_sql(d, f"({event_fixes_sql(d, 'gm')}) fx", k_iters=5)
 
 
 def _resample_sql(d: str) -> str:
     """Fixed-interval track resampling: per-user linear interpolation at
     6-hour grid ticks, pure-integer grid arithmetic + one fused float
-    interpolation per tick (trajectory.resample_track)."""
-    return trajectory.resample_track_sql(d, "events", step_s=21600)
+    interpolation per tick (trajectory.resample_track_sql)."""
+    return trajectory.resample_track_sql(d, f"({event_fixes_sql(d, 'rs')}) fx", step_s=21600)
 
 
 # ---------------------------------------------------------------------------
@@ -195,8 +271,7 @@ def q_zone_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition a transit analyst runs on top of stop/move segmentation.
     A stay inside overlapping zones counts toward each (PIP semantics)."""
     register_geometry_views(spark, sf_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stays = trajectory.stay_points(spark, ev).selectExpr(
+    stays = spark.sql(_stay_points_sql(SPARK)).selectExpr(
         "user_id * 100000 + stop_seq as point_id",
         "clat as lat", "clon as lon",
         "cast(round(duration_s * 1000000.0e0) as bigint) as dwell_us",
@@ -216,7 +291,7 @@ def q_zone_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_zone_dwell_oracle() -> str:
-    stays = trajectory.stay_points_sql(DUCK, "events")
+    stays = _stay_points_sql(DUCK)
     pred = geo.point_in_polygon("s.lat", "s.lon", "z.pos_list", DUCK)
     return "\n        " + with_fixtures(f"""with
         stays as (
@@ -237,7 +312,7 @@ def q_zone_dwell_oracle() -> str:
 def _turn_points_sql(d: str) -> str:
     """Heading-change corners (>45°) per user track, trig-free integer test
     (operators.trajectory.turn_points_sql)."""
-    return trajectory.turn_points_sql(d, "events")
+    return trajectory.turn_points_sql(d, f"({event_fixes_sql(d, 'tr')}) fx")
 
 
 # ---------------------------------------------------------------------------
@@ -412,9 +487,8 @@ def q_st_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-place different-week points no longer chain
     (operators/clustering.py st_dbscan)."""
     register_geometry_views(spark, sf_dir)
-    spark.sql(f"create or replace temp view st_points as {st_points_sql(SPARK)}")
     return clustering.st_dbscan(
-        spark.table("st_points"),
+        spark.sql(st_points_sql(SPARK)),
         eps_m=_STDB_EPS_M,
         eps_t_s=_STDB_EPS_T,
         min_pts=_STDB_MIN_PTS,
@@ -423,14 +497,13 @@ def q_st_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_st_dbscan_oracle() -> str:
-    pts = f"select * from ({points_sql(DUCK)}) __gp"
-    st = st_points_sql(DUCK).replace("from geo_points", f"from ({pts}) geo_points")
-    return clustering.dbscan_oracle_sql(
-        st,
+    body = clustering.dbscan_oracle_sql(
+        st_points_sql(DUCK),
         eps_m=_STDB_EPS_M,
         min_pts=_STDB_MIN_PTS,
         extra_pair_pred=f"and abs(p.t_s - q.t_s) <= {_STDB_EPS_T}",
     )
+    return with_fixtures(body, DUCK)
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,13 @@
-"""Space-time co-location join semantics on explicit fixes
-(synthesize=False): exact agreement with a Python brute force, both-axes
-pruning correctness (near-in-space-far-in-time and vice versa), pair
-uniqueness, and partition invariance."""
+"""Space-time co-location join semantics on explicit fixes: exact
+agreement with a Python brute force, both-axes pruning correctness
+(near-in-space-far-in-time and vice versa), pair uniqueness, and partition
+invariance."""
 
 import math
 from datetime import datetime, timedelta
 from itertools import combinations
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
@@ -45,9 +46,8 @@ def _brute(rows, radius_m, tau_s):
 
 
 def _run(spark, rows, radius_m=100.0, tau_s=1800.0):
-    out = trajectory.encounters(
-        spark, _df(spark, rows), radius_m=radius_m, tau_s=tau_s, synthesize=False
-    ).collect()
+    sql = trajectory.encounters_sql(SPARK, "{fixes}", radius_m=radius_m, tau_s=tau_s)
+    out = spark.sql(sql, fixes=_df(spark, rows)).collect()
     return {(r.user_a, r.user_b): r.n_encounters for r in out}
 
 
@@ -104,16 +104,7 @@ def test_partition_invariance(spark):
     for i in range(30):
         rows.append(_fix(1 + (i % 5), i, i * 7, 60.0 + (i % 4) * 3e-4, 10.0))
     df = _df(spark, rows)
-    base = sorted(
-        map(
-            tuple,
-            trajectory.encounters(spark, df, synthesize=False).collect(),
-        )
-    )
-    rep = sorted(
-        map(
-            tuple,
-            trajectory.encounters(spark, df.repartition(7), synthesize=False).collect(),
-        )
-    )
+    sql = trajectory.encounters_sql(SPARK, "{fixes}")
+    base = sorted(map(tuple, spark.sql(sql, fixes=df).collect()))
+    rep = sorted(map(tuple, spark.sql(sql, fixes=df.repartition(7)).collect()))
     assert base == rep and base

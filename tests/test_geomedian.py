@@ -1,7 +1,7 @@
-"""Geometric-median semantics on explicit fixes (synthesize=False): exact
-Python Weiszfeld replay, outlier robustness vs the centroid, and partition
-invariance."""
+"""Geometric-median semantics on explicit fixes: exact Python Weiszfeld
+replay, outlier robustness vs the centroid, and partition invariance."""
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 COS0 = 0.5225
@@ -31,6 +31,10 @@ def _df(spark, rows):
     )
 
 
+def _median(spark, fixes):
+    return spark.sql(trajectory.geometric_median_sql(SPARK, "{fixes}"), fixes=fixes).collect()
+
+
 def test_matches_python_weiszfeld_exactly(spark):
     rows = []
     pts_by_user = {}
@@ -40,7 +44,7 @@ def test_matches_python_weiszfeld_exactly(spark):
         rows += [(u, i, la, lo) for i, (la, lo) in enumerate(pts)]
     out = {
         r.user_id: (r.mlat, r.mlon, r.n_fixes)
-        for r in trajectory.geometric_median(spark, _df(spark, rows), synthesize=False).collect()
+        for r in _median(spark, _df(spark, rows))
     }
     for u, pts in pts_by_user.items():
         mlat, mlon = _py_median(pts)
@@ -51,7 +55,7 @@ def test_robust_to_outlier_unlike_centroid(spark):
     # nine fixes at ~(60, 10), one teleport at (70, 20)
     pts = [(60.0 + 1e-4 * i, 10.0 + 1e-4 * i) for i in range(9)] + [(70.0, 20.0)]
     rows = [(1, i, la, lo) for i, (la, lo) in enumerate(pts)]
-    r = trajectory.geometric_median(spark, _df(spark, rows), synthesize=False).collect()[0]
+    r = _median(spark, _df(spark, rows))[0]
     centroid_lat = sum(p[0] for p in pts) / len(pts)  # dragged to ~61
     assert abs(r.mlat - 60.0) < 0.05  # median stays at the cluster
     assert centroid_lat > 60.9
@@ -63,11 +67,6 @@ def test_partition_invariance(spark):
         for i in range(45)
     ]
     df = _df(spark, rows)
-    a = sorted(map(tuple, trajectory.geometric_median(spark, df, synthesize=False).collect()))
-    b = sorted(
-        map(
-            tuple,
-            trajectory.geometric_median(spark, df.repartition(7), synthesize=False).collect(),
-        )
-    )
+    a = sorted(map(tuple, _median(spark, df)))
+    b = sorted(map(tuple, _median(spark, df.repartition(7))))
     assert a == b and len(a) == 3

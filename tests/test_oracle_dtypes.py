@@ -15,10 +15,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from osm_to_netex_spark.plans.queries.corpus import SF_TABLES
 from tests.support import SF
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 FORBIDDEN = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
@@ -26,7 +24,7 @@ FORBIDDEN = ("HUGEINT", "UHUGEINT", "DECIMAL")
 @pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
-    for t in TABLES:
+    for t in SF_TABLES:
         c.sql(
             f"create or replace view {t} as "
             f"select * from read_parquet('{SF}/{t}.parquet')"

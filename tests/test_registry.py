@@ -203,6 +203,53 @@ def test_no_operator_entry_only_runs_its_sql():
 
 
 PACKAGE = PKG.parents[1]  # osm_to_netex_spark
+
+
+def test_operators_read_the_fixes_they_are_given():
+    """An operator computes on the coordinates its input carries: no
+    function under operators/ takes a ``synthesize`` switch, and
+    operators/trajectory.py makes up no coordinates (no ``prand``) and
+    registers no view of its input.  GPS fixtures of the sf events live
+    with the queries (plans/queries/)."""
+    switched = [
+        f"{path.name}:{fn.name}"
+        for path in sorted((PACKAGE / "operators").glob("*.py"))
+        for fn in ast.walk(ast.parse(path.read_text()))
+        if isinstance(fn, ast.FunctionDef)
+        and "synthesize" in {a.arg for a in fn.args.args + fn.args.kwonlyargs}
+    ]
+    assert not switched
+    tree = ast.parse((PACKAGE / "operators" / "trajectory.py").read_text())
+    called = {
+        ast.unparse(n.func).rpartition(".")[2] for n in ast.walk(tree) if isinstance(n, ast.Call)
+    }
+    assert not called & {"prand", "createOrReplaceTempView", "createTempView"}
+    assert not [
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and "temp view" in n.value
+    ]
+
+
+def _registry_digest():
+    spec = importlib.util.spec_from_file_location(
+        "registry_digest", PACKAGE.parent / "tools" / "registry_digest.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_spark_digest_hashes_no_view_registration():
+    """tools/registry_digest.py hashes the last SQL text a builder sends;
+    the sf-view registration is not the builder's, so a DataFrame builder
+    that sends no SQL of its own is left out rather than hashed as the
+    last view register_geometry_views created."""
+    texts = _registry_digest().spark_texts()
+    assert len(texts) > 150
+    assert not sorted(
+        name for name, text in texts.items()
+        if text.lstrip().lower().startswith("create or replace temp view")
+    )
 # unrolled CTE chains whose engine side is no checkpointed round loop: one
 # SQL text in both engines (stationary distribution, logistic GD, MMR, PCA,
 # IPF) or a loop of its own (k-means, PQ, simplify and funnel iterate in the

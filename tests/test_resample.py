@@ -1,9 +1,10 @@
-"""Fixed-interval resampling semantics on explicit fixes (synthesize=False):
-exact Python replay, half-open tick ownership, on-fix tick reproduction,
+"""Fixed-interval resampling semantics on explicit fixes: exact Python
+replay, half-open tick ownership, on-fix tick reproduction,
 duplicate-time safety, and partition invariance."""
 
 from datetime import datetime, timedelta
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 T0 = datetime(2024, 1, 1)
@@ -13,6 +14,11 @@ def _df(spark, rows):
     return spark.createDataFrame(
         rows, "user_id bigint, event_id bigint, ts timestamp, lat double, lon double"
     )
+
+
+def _resample(spark, fixes, step_s):
+    sql = trajectory.resample_track_sql(SPARK, "{fixes}", step_s=step_s)
+    return spark.sql(sql, fixes=fixes).collect()
 
 
 def _py_resample(fixes, step_s):
@@ -49,9 +55,7 @@ def test_matches_python_replay_exactly(spark):
         fixes.append((_us(ts), la, lo))
     got = sorted(
         (r.tick, r.gts, r.rlat, r.rlon)
-        for r in trajectory.resample_track(
-            spark, _df(spark, rows), step_s=3600, synthesize=False
-        ).collect()
+        for r in _resample(spark, _df(spark, rows), 3600)
     )
     assert got == _py_resample(fixes, 3600) and len(got) >= 40
 
@@ -65,9 +69,7 @@ def test_tick_on_fix_reproduces_fix(spark):
     ]
     out = {
         r.tick: (r.rlat, r.rlon)
-        for r in trajectory.resample_track(
-            spark, _df(spark, rows), step_s=3600, synthesize=False
-        ).collect()
+        for r in _resample(spark, _df(spark, rows), 3600)
     }
     k_on_fix = _us(T0 + timedelta(hours=2)) // 3_600_000_000
     assert out[k_on_fix] == (60.5, 10.5)
@@ -82,9 +84,7 @@ def test_duplicate_time_fixes_are_safe(spark):
         (1, 2, T0 + timedelta(hours=1), 99.0, 99.0),  # duplicate ts, later event_id
         (1, 3, T0 + timedelta(hours=2), 60.4, 10.4),
     ]
-    out = trajectory.resample_track(
-        spark, _df(spark, rows), step_s=3600, synthesize=False
-    ).collect()
+    out = _resample(spark, _df(spark, rows), 3600)
     # no division-by-zero rows, and the h+2 tick interpolates FROM the
     # duplicate fix (99,99) — order (tus, event_id) makes it the segment start
     ticks = sorted(r.tick for r in out)
@@ -105,18 +105,6 @@ def test_partition_invariance(spark):
         for i in range(60)
     ]
     df = _df(spark, rows)
-    a = sorted(
-        map(
-            tuple,
-            trajectory.resample_track(spark, df, step_s=1800, synthesize=False).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            trajectory.resample_track(
-                spark, df.repartition(7), step_s=1800, synthesize=False
-            ).collect(),
-        )
-    )
+    a = sorted(map(tuple, _resample(spark, df, 1800)))
+    b = sorted(map(tuple, _resample(spark, df.repartition(7), 1800)))
     assert a == b and len(a) > 20

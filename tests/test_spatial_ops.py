@@ -393,12 +393,17 @@ def test_adaptive_partition_bounds_and_levels(spark):
     out.unpersist()
 
 
+@pytest.mark.usefixtures("fresh_views")
 def test_trip_stats_partition_invariant_and_sane(spark):
+    from osm_to_netex_spark.functions.portable import SPARK
     from osm_to_netex_spark.operators import trajectory
+    from osm_to_netex_spark.plans.queries import corpus
 
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    a = trajectory.trip_stats(spark, ev).collect()
-    b = trajectory.trip_stats(spark, ev.repartition(17, "event_id")).collect()
+    corpus.register_geometry_views(spark, SF)
+    fixes = spark.sql(corpus.event_fixes_sql(SPARK, "tr"))
+    sql = trajectory.trip_stats_sql(SPARK, "{fixes}")
+    a = spark.sql(sql, fixes=fixes).collect()
+    b = spark.sql(sql, fixes=fixes.repartition(17, "event_id")).collect()
     key = lambda rows: {(r["user_id"], r["trip"]): tuple(r) for r in rows}
     assert key(a) == key(b) and len(a) > 0
     for r in a:

@@ -1,9 +1,10 @@
-"""GPS spike-filter semantics on explicit fixes (synthesize=False): the
+"""GPS spike-filter semantics on explicit fixes: the
 both-legs rule, endpoint single-leg rule, fast-genuine-leg neutrality,
 singleton immunity, and partition invariance."""
 
 from datetime import datetime, timedelta
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
@@ -17,7 +18,7 @@ def _run(spark, rows, vmax=40.0):
     df = spark.createDataFrame(
         rows, "user_id bigint, event_id bigint, ts timestamp, lat double, lon double"
     )
-    out = trajectory.speed_filter(spark, df, vmax_ms=vmax, synthesize=False).collect()
+    out = spark.sql(trajectory.speed_filter_sql(SPARK, "{fixes}", vmax_ms=vmax), fixes=df).collect()
     return {(r.user_id, r.event_id): r.is_outlier for r in out}
 
 
@@ -69,8 +70,7 @@ def test_partition_invariance(spark):
     df = spark.createDataFrame(
         rows, "user_id bigint, event_id bigint, ts timestamp, lat double, lon double"
     )
-    a = sorted(map(tuple, trajectory.speed_filter(spark, df, synthesize=False).collect()))
-    b = sorted(
-        map(tuple, trajectory.speed_filter(spark, df.repartition(7), synthesize=False).collect())
-    )
+    sql = trajectory.speed_filter_sql(SPARK, "{fixes}")
+    a = sorted(map(tuple, spark.sql(sql, fixes=df).collect()))
+    b = sorted(map(tuple, spark.sql(sql, fixes=df.repartition(7)).collect()))
     assert a == b and any(r[3] for r in a)

@@ -1,9 +1,10 @@
-"""Stay-point detection semantics on explicit fixes (synthesize=False):
+"""Stay-point detection semantics on explicit fixes:
 run splitting by the distance rule, duration/count gates, centroid fold,
 and partition invariance."""
 
 from datetime import datetime, timedelta
 
+from osm_to_netex_spark.functions.portable import SPARK
 from osm_to_netex_spark.operators import trajectory
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
@@ -35,13 +36,11 @@ def test_stay_point_detected_and_gates_applied(spark):
         _fix(2, 2, 2, 59.9 + jitter, 10.2),
         _fix(2, 3, 5, 59.9, 10.2 + jitter),
     ]
-    out = trajectory.stay_points(
-        spark,
-        _df(spark, rows),
-        radius_m=50.0,
-        min_duration_s=900.0,
-        min_points=3,
-        synthesize=False,
+    out = spark.sql(
+        trajectory.stay_points_sql(
+            SPARK, "{fixes}", radius_m=50.0, min_duration_s=900.0, min_points=3
+        ),
+        fixes=_df(spark, rows),
     ).collect()
     assert len(out) == 1
     sp = out[0]
@@ -57,16 +56,20 @@ def test_consecutive_distance_rule_splits_runs(spark):
     # so one run even though first->last is far beyond the radius
     step = 40.0 / (111320.0 * 0.5)  # ~40 m of longitude at lat 60
     rows = [_fix(1, i, i * 10, 60.0, 10.0 + i * step) for i in range(6)]
-    out = trajectory.stay_points(
-        spark, _df(spark, rows), radius_m=50.0, min_duration_s=600.0,
-        min_points=3, synthesize=False,
+    out = spark.sql(
+        trajectory.stay_points_sql(
+            SPARK, "{fixes}", radius_m=50.0, min_duration_s=600.0, min_points=3
+        ),
+        fixes=_df(spark, rows),
     ).collect()
     assert len(out) == 1 and out[0].n_points == 6
     # double the step: every leg breaks -> singleton runs -> nothing passes
     rows2 = [_fix(1, i, i * 10, 60.0, 10.0 + 2 * i * step) for i in range(6)]
-    out2 = trajectory.stay_points(
-        spark, _df(spark, rows2), radius_m=50.0, min_duration_s=600.0,
-        min_points=3, synthesize=False,
+    out2 = spark.sql(
+        trajectory.stay_points_sql(
+            SPARK, "{fixes}", radius_m=50.0, min_duration_s=600.0, min_points=3
+        ),
+        fixes=_df(spark, rows2),
     ).collect()
     assert out2 == []
 
@@ -80,20 +83,17 @@ def test_stop_seq_orders_stays_and_is_partition_invariant(spark):
             for i in range(4)
         ]
     df = _df(spark, rows)
+    sql = trajectory.stay_points_sql(
+        SPARK, "{fixes}", radius_m=50.0, min_duration_s=900.0, min_points=3
+    )
     out = sorted(
-        trajectory.stay_points(
-            spark, df, radius_m=50.0, min_duration_s=900.0,
-            min_points=3, synthesize=False,
-        ).collect(),
+        spark.sql(sql, fixes=df).collect(),
         key=lambda r: r.stop_seq,
     )
     assert [r.stop_seq for r in out] == [1, 2]
     assert out[0].start_eps < out[1].start_eps
     again = sorted(
-        trajectory.stay_points(
-            spark, df.repartition(7), radius_m=50.0, min_duration_s=900.0,
-            min_points=3, synthesize=False,
-        ).collect(),
+        spark.sql(sql, fixes=df.repartition(7)).collect(),
         key=lambda r: r.stop_seq,
     )
     assert [tuple(r) for r in again] == [tuple(r) for r in out]

@@ -7,9 +7,11 @@ Usage:
 
 The oracle digest hashes every registry name with its DuckDB oracle SQL.
 The Spark-side digest calls every builder with a recording stub session and
-hashes the last ``spark.sql`` text per name; builders that need a live
-session raise under the stub and are left out (the count says how many
-were hashed).  Before hashing, the absolute path of the committed convert
+hashes the last ``spark.sql`` text per name.  The stub's views count as
+registered, so ``register_geometry_views`` sends nothing: a DataFrame
+builder that sends no SQL of its own, and a builder that needs a live
+session (it raises under the stub), is left out, and the count says how
+many were hashed.  Before hashing, the absolute path of the committed convert
 fixture (``FIXTURE_CORPUS``, embedded by the queries that read it) is
 replaced with a fixed token, so two checkouts of one commit print the same
 digests wherever they live.  A change that only moves query code leaves
@@ -36,6 +38,9 @@ def _sha(obj) -> str:
     return hashlib.sha256(repr(obj).encode()).hexdigest()
 
 
+_SF = "/sf"  # the sf directory builders are called with
+
+
 class _Inert:  # every attribute and call returns itself
     def __getattr__(self, name):
         return self
@@ -46,6 +51,7 @@ class _Inert:  # every attribute and call returns itself
 
 class _Stub:  # .sql records its text; .read/.table/.catalog/.sparkContext are inert
     read = table = catalog = sparkContext = _Inert()
+    _graft_geo_views = _SF  # register_geometry_views' memo: the sf views are registered
 
     def __init__(self):
         self.texts = []
@@ -64,7 +70,7 @@ def spark_texts() -> dict[str, str]:
     for name, (build, _oracle) in Q.QUERIES.items():
         stub = _Stub()
         try:
-            build(stub, "/sf")
+            build(stub, _SF)
         except Exception:
             continue
         if stub.texts:

@@ -15,11 +15,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from osm_to_netex_spark.operators.dedup import unpersist_intermediates  # noqa: E402
+from osm_to_netex_spark.plans.queries.corpus import SF_TABLES  # noqa: E402
 from osm_to_netex_spark.session import get_spark  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 import math
@@ -65,7 +63,7 @@ def main():
     only = set(sys.argv[2:])
     spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SF_TABLES:
         con.sql(f"create or replace view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')")
 
     qs = entry_mod.queries()
@@ -81,14 +79,12 @@ def main():
         if name not in oracles:
             df = builder(spark, sf_dir)
             n = df.count()
-            from osm_to_netex_spark.operators.dedup import unpersist_intermediates
             unpersist_intermediates(df)
             print(f"{name:26s} rows-only  rows={n}")
             continue
         try:
             built = builder(spark, sf_dir)
             sdf = built.toPandas()
-            from osm_to_netex_spark.operators.dedup import unpersist_intermediates
             unpersist_intermediates(built)  # release caller-owned caches
             duck = con.sql(oracles[name]).fetchdf()
         except Exception as e:
