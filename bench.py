@@ -32,8 +32,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from osm_to_netex_spark.session import get_spark  # noqa: E402
-from perfbench.harness import host_facts, materialize, mem_available_bytes  # noqa: E402
+from osm_to_netex_spark.session import get_spark, mem_available_bytes  # noqa: E402
+from perfbench.harness import host_facts, materialize  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = sorted(os.sched_getaffinity(0))
@@ -53,6 +53,11 @@ SCALE_REPS = 2
 # same per-core share — a fixed shared heap would hand the low-parallelism
 # run 4× the per-core GC budget and understate scaling
 MAX_GB_PER_CORE = 0.75
+# the bench times steady state (warm passes first), where session.JIT_POLICY's
+# late C2 costs: with it the flagship headline read slower in 3 of 3
+# interleaved pairs and tools/bench_query.py rows in 14 of 16 (ROADMAP,
+# "Cold-start JIT policy"), so the bench's JVMs keep the JDK's JIT defaults
+JDK_JIT = {"spark.driver.defaultJavaOptions": ""}
 
 
 BENCH_BBOX = (55.0, 63.0, 5.0, 15.0)  # country-scale extent: realistic zone density
@@ -190,6 +195,7 @@ def _flagship_subprocess_body(cores: int, gb_per_core: float, corpus_path: str,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": f"{max(2, int(gb_per_core * cores))}g",
+            **JDK_JIT,
         },
     )
     # warm Catalyst codegen (tiny corpus) AND the JVM JIT (one full-size
@@ -340,7 +346,7 @@ def main():
         )
 
     # per-query rows AFTER the headline/scaling measurements
-    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false", **JDK_JIT})
     host.update(provenance(spark, host))
     timings = per_query_timings(spark)
     spark.stop()

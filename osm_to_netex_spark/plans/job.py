@@ -3,10 +3,16 @@
 Reference: OsmToNetexApp.main parses -osmFile/-netexOutputFile/-targetEntity
 (OsmToNetexApp.java:43-87).  Engine form:
 
-    spark-submit --py-files engine.zip -m osm_to_netex_spark.plans.job \
+    spark-submit --driver-java-options \
+        "$(python -c 'from osm_to_netex_spark.session import JIT_POLICY; print(JIT_POLICY)')" \
+        --py-files engine.zip -m osm_to_netex_spark.plans.job \
         --input /path/docs_parquet --input-format documents|osm-xml \
         --target TopographicPlace --output /warehouse --run-tag r1 \
         [--xml-out out.xml] [--tile-res 7 8 9] [--cores N]
+
+Under spark-submit the driver JVM starts before ``get_spark`` runs, so the
+``DEFAULT_CONF`` JVM options cannot apply: the first line reads
+``session.JIT_POLICY`` and passes it on the command line.
 
 Reads documents (or OSM XML), runs the conversion + tile index, commits the
 outputs to the snapshot catalog with lineage columns, optionally renders the

@@ -346,6 +346,26 @@ def test_no_test_module_imports_another():
     assert not {k: v for k, v in found.items() if v}
 
 
+def test_sessions_launch_through_get_spark():
+    """Every session starts through session.get_spark, so every launcher
+    (bench.py, tools, tests, job.main, perfbench) gets its JVM policy: no
+    Python file of the repository outside session.py uses
+    SparkSession.builder."""
+    repo = TESTS.parent
+    found = [
+        str(path.relative_to(repo))
+        for path in sorted(repo.rglob("*.py"))
+        if not any(p.startswith(".") for p in path.relative_to(repo).parts)
+        and path != repo / "osm_to_netex_spark" / "session.py"
+        and any(
+            isinstance(n, ast.Attribute) and n.attr == "builder"
+            and ast.unparse(n.value).endswith("SparkSession")
+            for n in ast.walk(ast.parse(path.read_text()))
+        )
+    ]
+    assert not found
+
+
 def test_testdata_paths_live_in_support():
     """The testdata directory is named once, in tests/support.py; every
     other test module reaches a corpus through its constants."""

@@ -1,14 +1,19 @@
 """True `spark-submit --py-files` deployment smoke (the north rule's run
 mode): the package shipped as a zip, the CLI job run in a fresh JVM via the
-real spark-submit binary — not an in-process job.main call."""
+real spark-submit binary — not an in-process job.main call.  The driver JVM
+is up before get_spark runs, so the JIT policy goes in with
+--driver-java-options; the runner reads it back from the live VM."""
 
 import os
 import shutil
 import subprocess
 import zipfile
 
+from osm_to_netex_spark.session import JIT_POLICY
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE = os.path.join(REPO, "tests/fixtures/convert_corpus.parquet")
+JIT_FLAGS = dict(f.removeprefix("-XX:").split("=") for f in JIT_POLICY.split())
 
 
 def _build_zip(path):
@@ -38,6 +43,11 @@ def test_spark_submit_py_files(tmp_path):
         f"res = job.main(['--input', {FIXTURE!r}, '--target', 'TariffZone',"
         f" '--output', {out!r}, '--xml-out', {xml!r}, '--run-tag', 'submit1'])\n"
         "print('SUBMIT_RESULT', res['n_zones'], bool(res['zones_snapshot']))\n"
+        "from pyspark import SparkContext\n"
+        "jvm = SparkContext._jvm  # job.main stopped its session; the gateway stays up\n"
+        "bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(\n"
+        "    jvm.java.lang.Class.forName('com.sun.management.HotSpotDiagnosticMXBean'))\n"
+        f"print('SUBMIT_JIT', *[bean.getVMOption(n).getValue() for n in {list(JIT_FLAGS)!r}])\n"
     )
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be the ONLY way to the package
@@ -45,6 +55,7 @@ def test_spark_submit_py_files(tmp_path):
         [spark_submit, "--master", "local[4]",
          "--conf", "spark.sql.shuffle.partitions=8",
          "--conf", "spark.ui.enabled=false",
+         "--driver-java-options", JIT_POLICY,
          "--py-files", engine_zip, str(runner)],
         capture_output=True, text=True, timeout=600, cwd=str(tmp_path), env=env,
     )
@@ -52,6 +63,8 @@ def test_spark_submit_py_files(tmp_path):
     marker = [l for l in proc.stdout.splitlines() if l.startswith("SUBMIT_RESULT")]
     assert marker, proc.stdout[-2000:]
     _tag, n_zones, has_snapshot = marker[0].split()
+    jit = [l.split()[1:] for l in proc.stdout.splitlines() if l.startswith("SUBMIT_JIT")]
+    assert jit == [list(JIT_FLAGS.values())], proc.stdout[-2000:]
     assert int(n_zones) > 0 and has_snapshot == "True"
     content = open(xml).read()
     assert "<TariffZone version=" in content and "gml:posList" in content

@@ -6,7 +6,8 @@ Usage:
 Times each query with bench.time_query, the timer of bench.py's per-query
 rows (warm run compiles codegen, then one timed fresh plan materialised to
 a noop sink; caller-owned caches released between runs), so a reading here
-predicts the full-bench row.  Landing recipe step: no operator ships
+predicts the full-bench row; its session keeps the JDK's JIT defaults, as
+the bench's do.  Landing recipe step: no operator ships
 without a recorded timing from this tool at sf0.1 — lsh_band_stats reached
 the round-3 benchmark at 172.7 s because the last five commits never saw a
 bench (VERDICT r3 "What's wrong" #1/#2).
@@ -26,7 +27,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import time_query  # noqa: E402
+from bench import JDK_JIT, time_query  # noqa: E402
 from osm_to_netex_spark.session import get_spark  # noqa: E402
 
 BUDGET = 15.0
@@ -38,7 +39,7 @@ def main() -> int:
         return 2
     sf_dir, names = sys.argv[1], sys.argv[2:]
 
-    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false", **JDK_JIT})
     from osm_to_netex_spark.plans import queries as Q
 
     timings: dict[str, float] = {}
