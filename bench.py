@@ -32,7 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from osm_to_netex_spark.session import get_spark, mem_available_bytes  # noqa: E402
+from osm_to_netex_spark.session import get_spark, mem_available_bytes, stop_session  # noqa: E402
 from perfbench.harness import host_facts, materialize  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -312,7 +312,7 @@ def main():
         prep = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
         prepare_corpus(prep, corpus_path, N_DOCS)
         prepare_corpus(prep, warm_path, 2000)
-        prep.stop()
+        stop_session(prep)  # the per-query session below then launches its own JVM
 
     # headline throughput: the full corpus on every CPU (median of N_RUNS;
     # best-case min kept alongside)

@@ -79,6 +79,11 @@ def _similarity_join(
         F.min("lon").alias("lo0"), F.max("lon").alias("lo1"),
     ).persist()  # consumed by both cover sides + the refine join back
 
+    # a pad wider than 64 lat cells per side is coarsened until it is not:
+    # a world-wide pad (max_dist_m=1e9) would cover all 16.7M res-12 cells of
+    # every track; coarser cells keep the cover complete and the refine exact
+    while res > 0 and pad_deg * 2**res > 64 * 180.0:
+        res -= 1
     bbox = ("la0", "la1", "lo0", "lo1")
     a_cells = quad_bbox_cover(rows, [traj_id], bbox, res, pad_deg, "__cell")
     b_cells = quad_bbox_cover(rows, [traj_id], bbox, res, 0.0, "__cell")

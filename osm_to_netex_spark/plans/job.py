@@ -12,7 +12,10 @@ Reference: OsmToNetexApp.main parses -osmFile/-netexOutputFile/-targetEntity
 
 Under spark-submit the driver JVM starts before ``get_spark`` runs, so the
 ``DEFAULT_CONF`` JVM options cannot apply: the first line reads
-``session.JIT_POLICY`` and passes it on the command line.
+``session.JIT_POLICY`` and passes it on the command line. Such a launch maps
+no class archive either (``session`` docstring, "Class-data sharing"); run as
+``python -m osm_to_netex_spark.plans.job …`` it maps this host's archive, or
+records it once and publishes it at exit.
 
 Reads documents (or OSM XML), runs the conversion + tile index, commits the
 outputs to the snapshot catalog with lineage columns, optionally renders the
